@@ -1,43 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // fail fast on a non-numeric setting: the raw string is interpolated
-    // unquoted into the artifact JSON ("cpus":N), so a local[*]-style
-    // value would silently emit invalid JSON (the parsed:null failure
-    // mode) instead of erroring here
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // nanos-timestamp parquet (events) read as raw long at every entry
-      // point, not as a loader side effect — see Tables.events.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // local-scratch checkpoints bypass the fork-prone Hadoop local FS
-      // metadata-write path (no libhadoop in this sandbox) -- see
-      // NioCheckpointFileManager
-      .config("spark.sql.streaming.checkpointFileManagerClass",
-        "graft.NioCheckpointFileManager")
-      // batch-write commits: direct task commit (algorithm 2) and no
-      // _SUCCESS markers -- per-batch output dirs are re-read by path,
-      // markers are filtered as debris everywhere (see Maintenance)
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-      // compiled-plan (Janino) cache, default 100 entries: one app
-      // running 166 distinct queries holds far more generated classes
-      // than that, so every timed pass was RE-COMPILING virtually every
-      // plan — pure driver fixed cost billed to each query (~10-50 ms
-      // per generated class), and exactly what a long-lived production
-      // driver running a query mix pays at any data scale. Static conf,
-      // so it must land here at session build; sized to hold the whole
-      // query suite's codegen with room (class metadata is the only
-      // cost). Results are unaffected — this caches compilation, never
-      // data. (guide §1.2 step 2: per-task/driver work, not algorithm)
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
-      .getOrCreate()
+    val cpus = GraftSession.cpus()
+    val spark = GraftSession.build(cpus)
     spark.sparkContext.setLogLevel("WARN")
     // Two untimed warmup passes, then the timed pass — measuring
     // steady-state throughput, not first-touch costs:
@@ -76,57 +42,15 @@ object Bench {
     // real compute (the near-dup operators persist their
     // shingle/fingerprint inputs — see Dedup's lifecycle note); warmup
     // above is for JIT + page cache only.
-    def loadavg(): String =
-      try new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get("/proc/loadavg"))).trim.split(" ").take(3).mkString(" ")
-      catch { case _: Throwable => "unavailable" }
-    def load1(): Double =
-      try loadavg().split(" ").head.toDouble catch { case _: Throwable => -1.0 }
-    // Loadavg GATE before the timed passes: a bench recorded under heavy
-    // sibling-process contention is not a measurement (round 8's artifact
-    // started at loadavg 15.27 on a 32-core box and showed 6-30x phantom
-    // "regressions" on untouched code; the same build re-ran clean at
-    // 75.8 s vs the recorded 273.9 s). If the 1-minute load exceeds
-    // ~1/4 of the benched CPU count, sleep and re-check a bounded number
-    // of times; every decision lands in the artifact's "load_gate" field
-    // so the number is self-describing. If contention never clears we
-    // still run (an artifact must exist) but the field says "gave_up" —
-    // an explicit do-not-trust marker.
-    val gate = sys.env.get("SPARK_GRAFT_LOAD_GATE").map(_.toDouble)
-      .getOrElse(math.max(2.0, cpus.toDouble / 4.0))
-    val maxWaits = sys.env.get("SPARK_GRAFT_LOAD_RETRIES").map(_.toInt).getOrElse(10)
-    val gateLog = new scala.collection.mutable.ArrayBuffer[String]
-    var waits = 0
-    while (load1() > gate && waits < maxWaits) {
-      gateLog += f"wait:${load1()}%.2f"
-      waits += 1
-      Thread.sleep(60000L)
-    }
-    gateLog += (if (load1() > gate) f"gave_up:${load1()}%.2f"
-                else f"ok:${load1()}%.2f")
-    // parallel-capacity gate (optional, SPARK_GRAFT_SCAN_GATE seconds —
-    // BenchScale's): loadavg cannot see a noisy neighbor on shared
-    // cores; the 32-thread scan probe can. Wait for it to come back
-    // under the gate, bounded by the loadavg gate's retry budget.
-    sys.env.get("SPARK_GRAFT_SCAN_GATE").map(_.toDouble).foreach { g =>
-      var w = 0
-      var s = (1 to 2).map(_ => Calib.scanAll(spark, sfDir)).min
-      while (s > g && w < maxWaits) {
-        w += 1
-        gateLog += f"scan_wait:$s%.3f"
-        Thread.sleep(60000L)
-        s = (1 to 2).map(_ => Calib.scanAll(spark, sfDir)).min
-      }
-      // every gate decision lands in the artifact — a gave-up marker is
-      // the do-not-trust flag
-      gateLog += (if (s > g) f"scan_gave_up:$s%.3f" else f"scan_ok:$s%.3f")
-    }
+    // every gate decision lands in the artifact's load_gate field, so
+    // the number is self-describing ([[Calib.gate]])
+    val gateNote = Calib.gate(spark, sfDir, cpus)
     // CHANNEL CALIBRATION ([[Calib]]): pinned CPU-bound probes recorded
     // in every artifact so cross-channel seconds can be normalized —
     // run AFTER the load gate so the probes measure the same conditions
     // as the timed passes.
     val calib = Calib.json(spark, sfDir)
-    val loadBefore = loadavg()
+    val loadBefore = Calib.loadavg()
     val names = SparkEntry.queries.toSeq.sortBy(_._1)
     val passes = (1 to 2).map { _ =>
       spark.catalog.clearCache()
@@ -137,7 +61,7 @@ object Bench {
         (name, (System.nanoTime() - t0) / 1e9, ok)
       }
     }
-    val loadAfter = loadavg()
+    val loadAfter = Calib.loadavg()
     // min over SUCCESSFUL passes only: a failed pass aborts fast, and its
     // duration would understate the query (and the total) while the ok
     // flag says failed. Both-failed rows keep the max as the honest upper
@@ -156,7 +80,7 @@ object Bench {
     val failed = results.collect { case (k, _, false) => "\"" + k + "\"" }
       .mkString("[", ",", "]")
     val total = results.map(_._2).sum
-    val full = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failed,"sf":"$sfDir","passes":2,"agg":"min","loadavg_before":"$loadBefore","loadavg_after":"$loadAfter","load_gate":"${gateLog.mkString(",")}","calib_sec":$calib,"cpus":$cpus}"""
+    val full = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failed,"sf":"$sfDir","passes":2,"agg":"min","loadavg_before":"$loadBefore","loadavg_after":"$loadAfter","load_gate":"$gateNote","calib_sec":$calib,"cpus":$cpus}"""
     println(full)
     // The full line above can exceed a log tail's capture window (round 6
     // recorded parsed:null after the driver's tail cut off its head). Tails

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Per-JOB decomposition of a single query's wall time — the diagnostic
   * behind the composed-ingest fixed-cost work (SURVEY's q160 replay,
@@ -17,35 +16,7 @@ object BenchProbe {
     val name = args.headOption.getOrElse("q166_decontaminated_quota_ingest")
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // local-scratch checkpoints bypass the fork-prone Hadoop local FS
-      // metadata-write path (no libhadoop in this sandbox) -- see
-      // NioCheckpointFileManager
-      // SPARK_GRAFT_CFM=default re-enables the stock manager for a
-      // same-channel A/B of the checkpoint-path cost
-      .config("spark.sql.streaming.checkpointFileManagerClass",
-        sys.env.get("SPARK_GRAFT_CFM") match {
-          case Some("default") => "org.apache.spark.sql.execution.streaming" +
-            ".checkpointing.FileContextBasedCheckpointFileManager"
-          case Some(cls) => cls
-          case None => "graft.NioCheckpointFileManager"
-        })
-      // batch-write commits: direct task commit (algorithm 2) and no
-      // _SUCCESS markers -- per-batch output dirs are re-read by path,
-      // markers are filtered as debris everywhere (see Maintenance)
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-      // compiled-plan cache sized to the query suite (see Bench.scala)
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .getOrCreate()
+    val spark = GraftSession.build(GraftSession.cpus())
     spark.sparkContext.setLogLevel("WARN")
     val fn = SparkEntry.queries(name)
     // warmup: JIT + page cache + per-JVM standing artifacts

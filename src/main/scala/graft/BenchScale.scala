@@ -139,29 +139,8 @@ object BenchScale {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val replicas = sys.env.getOrElse("SPARK_GRAFT_SCALE", "10").toInt
-    // .toInt fails fast on a non-numeric setting — the value is
-    // interpolated unquoted into the artifact JSON (Bench has the same
-    // guard)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // local-scratch checkpoints bypass the fork-prone Hadoop local FS
-      // metadata-write path (no libhadoop in this sandbox) -- see
-      // NioCheckpointFileManager
-      .config("spark.sql.streaming.checkpointFileManagerClass",
-        "graft.NioCheckpointFileManager")
-      // batch-write commits: direct task commit (algorithm 2) and no
-      // _SUCCESS markers -- per-batch output dirs are re-read by path,
-      // markers are filtered as debris everywhere (see Maintenance)
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-      // compiled-plan cache sized to the query suite (see Bench.scala)
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
-      .getOrCreate()
+    val cpus = GraftSession.cpus()
+    val spark = GraftSession.build(cpus)
     spark.sparkContext.setLogLevel("WARN")
 
     // ---- synthesize the blown-up documents table ----
@@ -468,49 +447,10 @@ object BenchScale {
         }.toMap
       }.reduce((a, b) => a.map { case (k, v) => k -> math.min(v, b(k)) })
 
-    // loadavg gate before the timed passes (Bench's discipline): a
-    // scale artifact recorded under sibling-process contention reads
-    // phantom super-linear ratios on untouched operators
-    def load1(): Double =
-      try new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get("/proc/loadavg"))).trim
-        .split(" ").head.toDouble
-      catch { case _: Throwable => -1.0 }
-    val gate = sys.env.get("SPARK_GRAFT_LOAD_GATE").map(_.toDouble)
-      .getOrElse(math.max(2.0, cpus.toDouble / 4.0))
-    val maxWaits =
-      sys.env.get("SPARK_GRAFT_LOAD_RETRIES").map(_.toInt).getOrElse(10)
-    val gateLog = new scala.collection.mutable.ArrayBuffer[String]
-    var waits = 0
-    while (load1() > gate && waits < maxWaits) {
-      waits += 1
-      gateLog += f"wait:${load1()}%.2f"
-      Thread.sleep(60000L)
-    }
-    gateLog += (if (load1() > gate) f"gave_up:${load1()}%.2f"
-                else f"ok:${load1()}%.2f")
-
-    // parallel-capacity gate (optional, SPARK_GRAFT_SCAN_GATE seconds):
-    // loadavg cannot see a noisy neighbor stealing shared cores — the
-    // 32-thread scan probe can (round 19: spin1 stayed 0.75 s across
-    // four runs while scan32 drifted 0.103 → 0.132 s, inflating every
-    // saturation-bound scaled ratio ~25% with loadavg reading "idle").
-    // Wait for the parallel probe to come back under the gate before
-    // the timed passes; give up after the loadavg gate's retry budget.
-    sys.env.get("SPARK_GRAFT_SCAN_GATE").map(_.toDouble).foreach { g =>
-      var w = 0
-      var s = (1 to 2).map(_ => Calib.scanAll(spark, sfDir)).min
-      while (s > g && w < maxWaits) {
-        w += 1
-        gateLog += f"scan_wait:$s%.3f"
-        Thread.sleep(60000L)
-        s = (1 to 2).map(_ => Calib.scanAll(spark, sfDir)).min
-      }
-      // every gate decision lands in the artifact — a gave-up marker is
-      // the do-not-trust flag the loadavg gate established
-      gateLog += (if (s > g) f"scan_gave_up:$s%.3f" else f"scan_ok:$s%.3f")
-    }
-    val gateNote = gateLog.mkString(",")
+    // the gate before the timed passes (Bench's discipline): a scale
+    // artifact recorded under sibling-process contention reads phantom
+    // super-linear ratios on untouched operators
+    val gateNote = Calib.gate(spark, sfDir, cpus)
     // channel calibration ([[Calib]]) — lets the next reader normalize
     // this artifact's absolute seconds against any other channel's
     val calib = Calib.json(spark, sfDir)

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Prints the bench's calibration probes (Calib.json) and exits — a
   * cheap channel-health check before committing to a full gated bench
@@ -7,12 +6,7 @@ import org.apache.spark.sql.SparkSession
 object CalibMain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = GraftSession.build(GraftSession.cpus())
     spark.sparkContext.setLogLevel("WARN")
     // one untouched-by-cache warmup scan, then the recorded probes
     Calib.scanAll(spark, sfDir)

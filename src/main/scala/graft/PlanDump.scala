@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` for named queries to files — the
   * optimization-round plan evidence (plans/rNN/<query>_{before,after}.txt).
   *
@@ -18,25 +16,7 @@ object PlanDump {
     val suffix = args(1)
     val names = args(2).split(',').map(_.trim).filter(_.nonEmpty)
     val sfDir = if (args.length > 3) args(3) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // local-scratch checkpoints bypass the fork-prone Hadoop local FS
-      // metadata-write path (no libhadoop in this sandbox) -- see
-      // NioCheckpointFileManager
-      .config("spark.sql.streaming.checkpointFileManagerClass",
-        "graft.NioCheckpointFileManager")
-      // batch-write commits: direct task commit (algorithm 2) and no
-      // _SUCCESS markers -- per-batch output dirs are re-read by path,
-      // markers are filtered as debris everywhere (see Maintenance)
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
-      .getOrCreate()
+    val spark = GraftSession.build(GraftSession.cpus())
     spark.sparkContext.setLogLevel("WARN")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { name =>

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Work-unit decomposition for the 10× scale stress's worst wall-clock
@@ -54,28 +53,8 @@ object ScalePairsProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val replicas = sys.env.getOrElse("SPARK_GRAFT_SCALE", "10").toInt
-    // fail fast on a non-numeric CPU setting (a raw interpolation would
-    // otherwise silently emit invalid JSON — the Bench.scala lesson)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // local-scratch checkpoints bypass the fork-prone Hadoop local FS
-      // metadata-write path (no libhadoop in this sandbox) -- see
-      // NioCheckpointFileManager
-      .config("spark.sql.streaming.checkpointFileManagerClass",
-        "graft.NioCheckpointFileManager")
-      // batch-write commits: direct task commit (algorithm 2) and no
-      // _SUCCESS markers -- per-batch output dirs are re-read by path,
-      // markers are filtered as debris everywhere (see Maintenance)
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-      // compiled-plan cache sized to the query suite (see Bench.scala)
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
-      .getOrCreate()
+    val cpus = GraftSession.cpus()
+    val spark = GraftSession.build(cpus)
     spark.sparkContext.setLogLevel("WARN")
     val scaledRoot = graft.streaming.EventStreams.scratchDir("graft_pairs_")
     BenchScale.stageScaledDocuments(spark, sfDir, replicas, scaledRoot, cpus)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.SnapshotPipeline
@@ -28,24 +27,7 @@ object SnapshotRunner {
     val Array(battlesPath, leaderboardPath, metaPath, outDir) = args.take(4)
     val topN = if (args.length > 4) args(4).toInt else 1000
 
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      // nanos-timestamp parquet read as raw long at every entry point,
-      // not as a loader side effect — see Tables.events.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // local-scratch checkpoints bypass the fork-prone Hadoop local FS
-      // metadata-write path (no libhadoop in this sandbox) -- see
-      // NioCheckpointFileManager
-      .config("spark.sql.streaming.checkpointFileManagerClass",
-        "graft.NioCheckpointFileManager")
-      // batch-write commits: direct task commit (algorithm 2) and no
-      // _SUCCESS markers -- per-batch output dirs are re-read by path,
-      // markers are filtered as debris everywhere (see Maintenance)
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-      .getOrCreate()
+    val spark = GraftSession.build(GraftSession.cpus())
     spark.sparkContext.setLogLevel("WARN")
 
     val battles = Tables.readBattlesJson(spark, battlesPath)

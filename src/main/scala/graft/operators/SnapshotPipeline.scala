@@ -53,20 +53,11 @@ object SnapshotPipeline {
 
     /** Snapshot-mode load: overwrite per table — TRUNCATE+reload semantics
       * (etl_snapshot_topn.py:162-182; S6/S7/S8 degenerate to overwrite
-      * after upstream dedup, SURVEY §2.1).
-      *
-      * `partitionFacts` lays the per-type rollups out partitioned by
-      * deck_type — the storage-level replacement for the reference's
-      * secondary indexes (db/schema.sql:159-180): dashboard queries
-      * filtered to one archetype then prune to that partition's files. */
-    def write(outDir: String, partitionFacts: Boolean = false): Unit = {
-      val partitioned = Set("meta_type_deck_ids", "meta_type_cards", "meta_type_matchups")
+      * after upstream dedup, SURVEY §2.1). */
+    def write(outDir: String): Unit =
       all.foreach { case (name, df) =>
-        val w = df.write.mode("overwrite")
-        if (partitionFacts && partitioned(name)) w.partitionBy("deck_type").parquet(s"$outDir/$name")
-        else w.parquet(s"$outDir/$name")
+        df.write.mode("overwrite").parquet(s"$outDir/$name")
       }
-    }
   }
 
   /** Per-side observation frame: one row per (deduped match, side).

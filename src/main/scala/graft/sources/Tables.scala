@@ -76,10 +76,10 @@ object Tables {
     * failure mode where every event collapses into 1970 and windowed
     * results are wrong without an error — fail loudly per row instead.
     *
-    * NOTE: the legacy nanos conf is session-wide. Every session entry point
-    * (Bench, Verify, SnapshotRunner, the test base) sets it at build time
-    * so behavior never depends on loader call order; the set here is a
-    * belt-and-braces for ad-hoc sessions. It cannot be unset before the
+    * NOTE: the legacy nanos conf is session-wide. [[graft.GraftSession]],
+    * which builds every entry point's session and the test base's, sets
+    * it at build time so behavior never depends on loader call order; the
+    * set here is a belt-and-braces for ad-hoc sessions. It cannot be unset before the
     * (lazy) scan executes, so any OTHER nanos-timestamp parquet in the
     * session reads as LongType instead of erroring — every nanos table
     * this engine touches must go through an explicit converting loader

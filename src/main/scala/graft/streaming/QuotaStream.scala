@@ -114,13 +114,12 @@ object QuotaStream {
     // empty distinct set is a ZERO-ROW state table (a legacy empty-batch
     // merge) — no evidence of a budget, treated as absent.
     state.foreach { st =>
-      // a table WITHOUT the p_cap column: construction-time / migration
-      // evidence written with a markers-only schema (primeMarkerEvidence,
-      // acknowledgeEmptyLegacySession) — tolerated when zero-row (no
-      // budget evidence; crashing here would be unrecoverable, the
-      // migration refuses to re-run once the table exists). A ROW-carrying
-      // table without p_cap is a pre-parameter legacy state under an
-      // unknown budget and still fails fast.
+      // a table WITHOUT the p_cap column: construction-time evidence
+      // written with a markers-only schema (primeMarkerEvidence) —
+      // tolerated when zero-row (no budget evidence; crashing here would
+      // be unrecoverable, priming never rewrites an existing table). A
+      // ROW-carrying table without p_cap is a pre-parameter legacy state
+      // under an unknown budget and still fails fast.
       val caps =
         if (!st.columns.contains("p_cap")) {
           require(st.isEmpty,

@@ -133,11 +133,7 @@ object StateFold {
         "lost (a prior session died before its construction-time " +
         "evidence write, or the table was removed), and committed " +
         "landing files are never re-presented; restart from a fresh " +
-        "statePath + checkpointDir (re-presenting all landing files) — " +
-        "or, ONLY if the prior session is known to have ended cleanly " +
-        "having folded nothing (a checkpoint from a build predating " +
-        "construction-time priming), record its committed ids with " +
-        "StateFold.acknowledgeEmptyLegacySession")
+        "statePath + checkpointDir (re-presenting all landing files)")
   }
 
   /** Construction-time marker evidence for a DURABLE-checkpoint session:
@@ -164,41 +160,4 @@ object StateFold {
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
           schema).coalesce(1),
         Set.empty)((_, updates) => updates)
-
-  /** LEGACY-artifact migration: a durable checkpoint written by a
-    * build that predates [[primeMarkerEvidence]] can hold committed
-    * batch ids with NO state table at all — a pre-prime session whose
-    * batches all folded nothing ended cleanly without ever creating the
-    * table (the old doFlush skipped only-empty sessions), which the
-    * missing-table branch of [[requireNoLostFolds]] now reads as total
-    * loss. When the operator has VERIFIED that the prior session ended
-    * cleanly having folded nothing (the only benign way a commit log
-    * can outrun a missing table), this writes the zero-row table WITH
-    * the checkpoint's committed ids as applied markers, after which the
-    * restart's guard accepts the continuation. Acknowledging a session
-    * that actually died mid-fold converts a loud permanent loss into a
-    * silent one — hence a separate, explicitly-invoked verb rather than
-    * a guard relaxation. Refuses to touch an existing table (markers
-    * there are real evidence; rewriting them would forge it).
-    *
-    * `schema` should be the fold's FULL flushed schema, including
-    * fold-embedded parameter columns (quota: (source, admitted, p_cap))
-    * — the restarted fold reads its parameter fail-fast off the table.
-    * The quota fold tolerates a markers-only ZERO-ROW table (no budget
-    * evidence) for migrations that passed a narrower schema, but the
-    * full schema is the contract. */
-  def acknowledgeEmptyLegacySession(
-      spark: org.apache.spark.sql.SparkSession, statePath: String,
-      ckptDir: String,
-      schema: org.apache.spark.sql.types.StructType): Unit = {
-    require(!graft.operators.Fs.exists(statePath),
-      s"state table at $statePath exists — its applied markers are real " +
-        "evidence; this migration is only for the legacy " +
-        "committed-batches-but-no-table layout")
-    Upsert.mergeParquetBatches(spark, statePath,
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        schema).coalesce(1),
-      committedBatchIds(ckptDir))((_, updates) => updates)
-  }
 }

@@ -137,25 +137,6 @@ class SnapshotPipelineSpec extends SparkSpecBase {
     }
   }
 
-  test("partitioned snapshot write prunes by deck_type and reads back equal") {
-    val out = java.nio.file.Files.createTempDirectory("graft_snap_").toString
-    snap.write(out, partitionFacts = true)
-    // physical layout: one dir per archetype under the partitioned rollup
-    val parts = new java.io.File(s"$out/meta_type_cards").listFiles()
-      .filter(_.getName.startsWith("deck_type=")).map(_.getName).toSet
-    parts shouldBe Set("deck_type=Siege", "deck_type=Hybrid")
-    // contents survive the partitioned roundtrip
-    val back = spark.read.parquet(s"$out/meta_type_cards")
-      .select("deck_type", "card_id", "card_variant", "uses", "wins")
-    back.exceptAll(snap.metaTypeCards
-      .select("deck_type", "card_id", "card_variant", "uses", "wins")).count() shouldBe 0L
-    // and a single-archetype filter prunes at the partition level (shows
-    // up as PartitionFilters on the scan, not a data filter)
-    val plan = back.filter(col("deck_type") === "Siege")
-      .queryExecution.executedPlan.toString
-    plan should include regex "PartitionFilters: \\[.*deck_type.* = Siege"
-  }
-
   test("cards dim covers every observed card id with a non-empty name") {
     val ids = snap.cards.select("card_id").collect().map(_.getLong(0)).toSet
     ids shouldBe (1L to 16L).toSet

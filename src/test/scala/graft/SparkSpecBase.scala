@@ -8,27 +8,7 @@ import org.scalatest.matchers.should.Matchers
   * test wall-clock otherwise). */
 object SharedSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh_").toString)
-      .config("spark.ui.enabled", "false")
-      // nanos-timestamp parquet read as raw long at every entry point,
-      // not as a loader side effect — see Tables.events.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // local-scratch checkpoints bypass the fork-prone Hadoop local FS
-      // metadata-write path (no libhadoop in this sandbox) -- see
-      // NioCheckpointFileManager
-      .config("spark.sql.streaming.checkpointFileManagerClass",
-        "graft.NioCheckpointFileManager")
-      // batch-write commits: direct task commit (algorithm 2) and no
-      // _SUCCESS markers -- per-batch output dirs are re-read by path,
-      // markers are filtered as debris everywhere (see Maintenance)
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-      .getOrCreate()
+    val s = GraftSession.build(cpus = 4)
     s.sparkContext.setLogLevel("ERROR")
     s
   }

@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.streaming.{CardStream, QuotaStream, StateFold}
 
@@ -230,6 +231,13 @@ class StateFoldSpec extends SparkSpecBase {
       // fold under the same cap constructs cleanly
       QuotaStream.quotaFold(spark, state, root.resolve("out2").toString,
         capPerSource = 2L, flushEvery = StateFold.DefaultFlushEvery)
+      // so does one over zero-row evidence primed with a markers-only
+      // schema (no p_cap column)
+      val narrow = root.resolve("narrow").toString
+      StateFold.primeMarkerEvidence(spark, narrow, StructType(Seq(
+        StructField("source", StringType), StructField("admitted", LongType))))
+      QuotaStream.quotaFold(spark, narrow, root.resolve("out3").toString,
+        capPerSource = 2L)
       ()
     } finally graft.operators.Maintenance.rmTree(root.toFile)
   }
@@ -261,49 +269,6 @@ class StateFoldSpec extends SparkSpecBase {
       QuotaStream.quotaFold(spark, s, root.resolve("so").toString,
         capPerSource = 2L)
       graft.operators.Fs.exists(s) shouldBe false
-    } finally graft.operators.Maintenance.rmTree(root.toFile)
-  }
-
-  test("acknowledgeEmptyLegacySession migrates a pre-prime empty-session " +
-      "checkpoint; refuses to forge markers onto an existing table") {
-    val root = Files.createTempDirectory("graft_sf_legacy_")
-    try {
-      val state = root.resolve("state").toString
-      val ckpt = root.resolve("ckpt")
-      Files.createDirectories(ckpt.resolve("commits"))
-      Seq("0", "1").foreach(n =>
-        Files.writeString(ckpt.resolve("commits").resolve(n), "{}"))
-      // the legacy layout: committed batches, no table (a pre-prime
-      // session whose batches all folded nothing ended cleanly)
-      val e = intercept[IllegalArgumentException] {
-        StateFold.requireNoLostFolds(state, ckpt.toString, "quota")
-      }
-      e.getMessage should include("acknowledgeEmptyLegacySession")
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("source",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("admitted",
-          org.apache.spark.sql.types.LongType)))
-      StateFold.acknowledgeEmptyLegacySession(spark, state,
-        ckpt.toString, schema)
-      // the migration wrote the committed ids as applied markers over a
-      // zero-row table — the restart guard now accepts the continuation
-      graft.operators.Upsert.appliedBatches(state) shouldBe Set(0L, 1L)
-      spark.read.parquet(state).count() shouldBe 0L
-      StateFold.requireNoLostFolds(state, ckpt.toString, "quota")
-      // the schema above omits the fold-embedded p_cap column (the full
-      // flushed schema is (source, admitted, p_cap)) — a restarted
-      // quotaFold must tolerate the markers-only ZERO-ROW table (no
-      // budget evidence) rather than crash on select(p_cap): the
-      // migration cannot re-run once the table exists (r20 ADVICE)
-      QuotaStream.quotaFold(spark, state,
-        root.resolve("mig_out").toString, capPerSource = 2L)
-      // an existing table's markers are real evidence — never rewritten
-      val e2 = intercept[IllegalArgumentException] {
-        StateFold.acknowledgeEmptyLegacySession(spark, state,
-          ckpt.toString, schema)
-      }
-      e2.getMessage should include("exists")
     } finally graft.operators.Maintenance.rmTree(root.toFile)
   }
 
