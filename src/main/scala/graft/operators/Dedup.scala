@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 import graft.functions.{Hashing, TextFunctions => T, VectorFunctions => V}
 
 /** Deduplication operators for training-data pipelines, exact and
@@ -76,7 +78,7 @@ object Dedup {
   private[operators] def boundedBuckets(exploded: DataFrame, key: String,
       idc: String, cap: Long, outCol: String): DataFrame = {
     import org.apache.spark.sql.{Encoders, functions => F}
-    import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
+    import org.apache.spark.sql.types.{IntegerType, StringType}
     val agg =
       if (cap > Int.MaxValue.toLong) collect_list(col(idc))
       else exploded.schema(idc).dataType match {
@@ -92,12 +94,66 @@ object Dedup {
       .filter(size(col(outCol)) <= cap)
   }
 
-  /** The per-document hashing passes (minhash signatures, SimHash mixes)
+  /** The token staging every shingle-based operator starts from:
+    * (doc_id, carry…, toks) with the tokens in their OWN projection and
+    * the emptiness guard on tokens — the HOF re-eval traps explained in
+    * [[nearDupIndex]]'s scaladoc. The input is spread first: the
+    * per-document hashing passes (minhash signatures, SimHash mixes)
     * are the dominant cost of every near-dup operator and must never
     * serialize on a single input split — see [[Parallelism]] (q37's
     * signature pass ran on 1/32 cores at sf0.1 before this guard). */
-  private def ensureParallelism(df: DataFrame, id: Column): DataFrame =
-    Parallelism.ensureMinPartitions(df, id)
+  private def nonEmptyTokens(df: DataFrame, id: Column, text: Column,
+      carry: Column*): DataFrame = {
+    val staged = Parallelism.ensureMinPartitions(
+      df.select((id.as("doc_id") +: carry) :+ text.as("txt"): _*), col("doc_id"))
+    staged.select(staged.columns.init.map(col) :+
+        T.tokens(lower(col("txt"))).as("toks"): _*)
+      .filter(size(col("toks")) > 0)
+  }
+
+  /** Exact shingle-set Jaccard |A∩B| / |A∪B| — the one verify measure
+    * of every banded path, cast to double before the division. */
+  private def jaccard(a: Column, b: Column): Column =
+    size(array_intersect(a, b)).cast("double") /
+      size(array_union(a, b)).cast("double")
+
+  /** The candidate verify join: attach each candidate's two shingle
+    * sets (column `sh` of `docsA`/`docsB`, keyed by `doc_id`) and keep
+    * (carry…, a, b, jaccard) for pairs whose exact Jaccard ≥
+    * `threshold`. `carry` columns ride out of `docsA`. */
+  private def verifyJaccard(cand: DataFrame, docsA: DataFrame,
+      docsB: DataFrame, sh: String, threshold: Double, a: String = "id_a",
+      b: String = "id_b", carry: Seq[String] = Nil): DataFrame =
+    cand
+      .join(docsA.select((col("doc_id").as(a) +: carry.map(col)) :+
+        col(sh).as("sh_a"): _*), Seq(a))
+      .join(docsB.select(col("doc_id").as(b), col(sh).as("sh_b")), Seq(b))
+      .select((carry :+ a :+ b).map(col) :+
+        jaccard(col("sh_a"), col("sh_b")).as("jaccard"): _*)
+      .filter(col("jaccard") >= threshold)
+
+  /** Distinct (id_a < id_b) candidate pairs from an exploded
+    * (band, doc_id) index. With a `maxBandDf` ceiling each bucket is ONE
+    * row per band ([[boundedBuckets]] — a single shuffle whose per-band
+    * memory is bounded by the cap, oversized buckets dropped whole) and
+    * ordered pairs stream out of two chained generators; without one,
+    * bucket sizes are unbounded, so the band SELF-JOIN form stays — it
+    * pairs giant buckets without ever holding one in a single row. */
+  private def bandCandidates(exploded: DataFrame,
+      maxBandDf: Option[Long]): DataFrame =
+    (maxBandDf match {
+      case Some(cap) =>
+        boundedBuckets(exploded, "band", "doc_id", cap, "ids")
+          .select(explode(col("ids")).as("id_a"), col("ids"))
+          .select(col("id_a"), explode(col("ids")).as("id_b"))
+          .filter(col("id_a") < col("id_b"))
+      case None =>
+        exploded.select(col("band"), col("doc_id").as("id_a"))
+          .join(exploded.select(col("band"), col("doc_id").as("id_b")),
+            Seq("band"))
+          .filter(col("id_a") < col("id_b"))
+          .select(col("id_a"), col("id_b"))
+    }).distinct()
 
   /** Exact dedup by content hash: keeps the lowest-id row per distinct
     * content. GroupBy on md5 — uniform key, perfectly balanced shuffle;
@@ -108,18 +164,6 @@ object Dedup {
       .groupBy("content_hash")
       .agg(min("keep_id").as("keep_id"), count(lit(1)).as("copies"))
 
-  /** MinHash + LSH near-duplicate candidate pairs over a text column.
-    *
-    * shingle(n) → k MinHashes → bands of r rows → explode band keys →
-    * self-join on band key → distinct (a < b) pairs → exact n-gram Jaccard
-    * verification ≥ `threshold`.
-    *
-    * Scale: the self-join shuffles on band-key md5 (uniform); candidate
-    * volume is bounded by bucket sizes — degenerate giant buckets (empty /
-    * boilerplate docs) are the classic skew source, so callers should
-    * pre-filter trivial docs. Verification cost is per-candidate-pair only,
-    * never all-pairs.
-    */
   /** The cached (doc_id, sh, bands) frame every MinHash path starts
     * from. Shingling is the per-doc heavy pass and the frame is
     * referenced several times (band index + verification joins) —
@@ -130,7 +174,7 @@ object Dedup {
   private def shingleBandFrame(df: DataFrame, id: Column, text: Column,
       shingleN: Int, k: Int, rowsPerBand: Int): DataFrame =
     nearDupIndex(df, id, text, shingleN, k, rowsPerBand)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(StorageLevel.MEMORY_AND_DISK)
 
   /** The MATERIALIZABLE near-dup signature index: (doc_id, sh, bands) —
     * per-document distinct shingle sets plus LSH band keys, the frame
@@ -161,9 +205,7 @@ object Dedup {
     * the signature pass from the cache. */
   def nearDupIndex(df: DataFrame, id: Column, text: Column,
       shingleN: Int = 3, k: Int = 16, rowsPerBand: Int = 4): DataFrame =
-    ensureParallelism(df.select(id.as("doc_id"), text.as("txt")), col("doc_id"))
-      .select(col("doc_id"), T.tokens(lower(col("txt"))).as("toks"))
-      .filter(size(col("toks")) > 0)
+    nonEmptyTokens(df, id, text)
       .select(col("doc_id"), T.tokenShingles(col("toks"), shingleN).as("sh"))
       .select(col("doc_id"), col("sh"), T.minhashSignature(col("sh"), k).as("sig"))
       .select(col("doc_id"), col("sh"),
@@ -191,28 +233,6 @@ object Dedup {
       shingleBandFrame(indexDf, id, text, shingleN, k, rowsPerBand),
       threshold, broadcastNew)
 
-  /** [[admitNewDocs]] against a PRECOMPUTED [[nearDupIndex]] frame — the
-    * cross-job ingest path: the standing corpus's (doc_id, sh, bands)
-    * artifact is reloaded from parquet (no re-shingle of corpus text);
-    * only the new batch is hashed here, under the SAME
-    * (shingleN, k, rowsPerBand) the index was built with. When the
-    * artifact carries its build parameters (every [[nearDupIndex]]
-    * since they were embedded), a mismatch throws here — one bounded
-    * collect of the DISTINCT parameter triples (RLE'd constants,
-    * map-side combined: rows ∝ artifact generations, not index size) —
-    * instead of producing silently wrong admissions; parameter-less
-    * legacy artifacts (or legacy FILES inside a mixed-schema dir,
-    * surfacing null params) skip the check (the caller's contract
-    * stands).
-    *
-    * The index frame is consumed as-is (twice: band probe + shingle
-    * verify), both reads column-pruned, so a PARQUET-BACKED index costs
-    * two pruned scans of sketch-sized data, never corpus text. A caller
-    * passing a freshly COMPUTED (non-source-backed) frame must persist
-    * or materialize it first — otherwise the full corpus re-shingles
-    * twice, exactly what this path exists to avoid; the PATH overload
-    * (indexPath: String) is immune by construction and should be the
-    * default choice outside tests. */
   /** The [[admitNewDocsWithIndex]] parameter fail-fast, exposed so a
     * LOOPING caller (the streaming admission, probing a growing index
     * once per micro-batch under fixed parameters) can validate once up
@@ -223,16 +243,10 @@ object Dedup {
     * sampled file's. A mixed-schema dir (legacy parameter-less files
     * read alongside new batches — exactly what a seeded AdmissionStream
     * index is) surfaces the legacy rows as nulls: no evidence, skipped
-    * — not an NPE on getInt. */
-  private[graft] def validateIndexParams(indexFrame: DataFrame,
-      shingleN: Int, k: Int, rowsPerBand: Int): Unit = {
-    validateIndexParamsAndCount(indexFrame, shingleN, k, rowsPerBand,
-      needCount = false)
-    ()
-  }
-
-  /** [[validateIndexParams]] fused with the tree's row count in ONE
-    * aggregate job — the session-prologue consolidation: the
+    * — not an NPE on getInt.
+    *
+    * Fused with the tree's row count in ONE aggregate job — the
+    * session-prologue consolidation: the
     * tombstone-pressure policy needs the standing row count and the
     * fail-fast needs the distinct parameter evidence, and both are a
     * map-side-collapsed pass over the same tree, so paying two scans
@@ -268,8 +282,8 @@ object Dedup {
     * the batch hashing, over an ALREADY-HASHED batch frame (a
     * [[nearDupIndex]] of the new batch, pinned by the caller) — the
     * one-hash-pass-per-batch ingest shape for a loop that already ran
-    * [[validateIndexParams]] once up front: the admission LOOP needs the
-    * batch's signatures twice (the probe here, the index fold-back
+    * [[validateIndexParamsAndCount]] once up front: the admission LOOP
+    * needs the batch's signatures twice (the probe here, the index fold-back
     * after), and building them inside this call would shingle the batch
     * once per use. The caller hashes once, checkpoints, probes through
     * this, and folds back the SAME rows filtered to the admitted ids. */
@@ -278,11 +292,34 @@ object Dedup {
     admitCore(newSigs.select(col("doc_id"), col("sh"), col("bands")),
       indexFrame.select(col("doc_id"), col("sh"), col("bands")), threshold)
 
+  /** [[admitNewDocs]] against a PRECOMPUTED [[nearDupIndex]] frame — the
+    * cross-job ingest path: the standing corpus's (doc_id, sh, bands)
+    * artifact is reloaded from parquet (no re-shingle of corpus text);
+    * only the new batch is hashed here, under the SAME
+    * (shingleN, k, rowsPerBand) the index was built with. When the
+    * artifact carries its build parameters (every [[nearDupIndex]]
+    * since they were embedded), a mismatch throws here — one bounded
+    * collect of the DISTINCT parameter triples (RLE'd constants,
+    * map-side combined: rows ∝ artifact generations, not index size) —
+    * instead of producing silently wrong admissions; parameter-less
+    * legacy artifacts (or legacy FILES inside a mixed-schema dir,
+    * surfacing null params) skip the check (the caller's contract
+    * stands).
+    *
+    * The index frame is consumed as-is (twice: band probe + shingle
+    * verify), both reads column-pruned, so a PARQUET-BACKED index costs
+    * two pruned scans of sketch-sized data, never corpus text. A caller
+    * passing a freshly COMPUTED (non-source-backed) frame must persist
+    * or materialize it first — otherwise the full corpus re-shingles
+    * twice, exactly what this path exists to avoid; the PATH overload
+    * (indexPath: String) is immune by construction and should be the
+    * default choice outside tests. */
   def admitNewDocsWithIndex(newDf: DataFrame, indexFrame: DataFrame,
       id: Column, text: Column, shingleN: Int = 3, k: Int = 16,
       rowsPerBand: Int = 4, threshold: Double = 0.5,
       broadcastNew: Boolean = true): DataFrame = {
-    validateIndexParams(indexFrame, shingleN, k, rowsPerBand)
+    validateIndexParamsAndCount(indexFrame, shingleN, k, rowsPerBand,
+      needCount = false)
     admitCore(shingleBandFrame(newDf, id, text, shingleN, k, rowsPerBand),
       indexFrame.select(col("doc_id"), col("sh"), col("bands")),
       threshold, broadcastNew)
@@ -512,33 +549,20 @@ object Dedup {
 
   /** The probe → survivor → in-batch-pair chain shared by [[admitCore]]
     * and [[admitPrehashedBounded]]: returns (sv, pairs) where `sv` is
-    * the PINNED (localCheckpoint) survivor frame — docs that matched
-    * nothing in the index — and `pairs` the verified in-batch near-dup
-    * edges among them (both endpoints survivors). See [[admitCore]]'s
+    * the UNPINNED survivor frame — docs that matched nothing in the
+    * index — and `pairs` builds the verified in-batch near-dup edges
+    * among a (pinned or persisted) survivor frame (both endpoints
+    * survivors). The caller pins: the batch [[admitCore]] shape
+    * localCheckpoints eagerly (its components loop needs the pinned
+    * frame at once), [[boundedAdmit]] persists instead (its ONE bounded
+    * take then materializes probe + cache in the same job). See the
     * inline notes for the join-strategy reasoning; the split exists so
     * the streaming loop can evaluate survivors + pairs in ONE bounded
     * collect instead of admitCore's checkpoint + collect + label-join
     * chain. */
-  /** Exact shingle-set Jaccard ≥ threshold — the verify predicate every
-    * banded candidate pair passes through (shared by [[survivorPairs]]
-    * and [[admitPrehashedBounded]]'s candidate-only verify join; ONE
-    * definition so the two paths cannot drift). */
-  private def jaccardAtLeast(a: Column, b: Column,
-      threshold: Double): Column =
-    (size(array_intersect(a, b)).cast("double") /
-      size(array_union(a, b)).cast("double")) >= threshold
-
-  /** `pinSurvivors = false` hands back an UNPINNED survivor frame — the
-    * [[admitPrehashedBounded]] fast path persists it instead (its ONE
-    * bounded take then materializes probe + cache in the same job,
-    * where the eager checkpoint was a separate per-batch action);
-    * `true` keeps the eager localCheckpoint (the batch [[admitCore]]
-    * shape, whose components loop needs the pinned frame at once). */
   private def survivorPairs(nw: DataFrame, ix: DataFrame,
-      threshold: Double, broadcastNew: Boolean,
-      pinSurvivors: Boolean = true): (DataFrame, DataFrame) = {
-    def jaccardOk(a: Column, b: Column): Column =
-      jaccardAtLeast(a, b, threshold)
+      threshold: Double,
+      broadcastNew: Boolean): (DataFrame, DataFrame => DataFrame) = {
     def bcast(df: DataFrame): DataFrame =
       if (broadcastNew) broadcast(df) else df
     // new-vs-index: one band join, (band, id) pairs only; shingles join
@@ -575,7 +599,7 @@ object Dedup {
     // profile.
     val matched = withShN
       .join(ix.select(col("doc_id").as("id_o"), col("sh").as("sh_o")), Seq("id_o"))
-      .filter(jaccardOk(col("sh_n"), col("sh_o")))
+      .filter(jaccard(col("sh_n"), col("sh_o")) >= threshold)
       .select(col("id_n")).distinct()
     // survivors of the index check, deduped among themselves. The
     // index-probe above (band join + Jaccard verify — the expensive
@@ -589,181 +613,166 @@ object Dedup {
     // every frame below is batch-bounded (survivors ⊆ the new batch), so
     // the same hint keeps the whole in-batch dedup shuffle-free past the
     // auto-broadcast threshold
-    val sv0 = nw.join(bcast(matched), nw("doc_id") === matched("id_n"),
+    val sv = nw.join(bcast(matched), nw("doc_id") === matched("id_n"),
       "left_anti")
-    val sv = if (pinSurvivors) sv0.localCheckpoint(true) else sv0
-    val svb = sv.select(explode(col("bands")).as("band"), col("doc_id"))
-    val pairs = svb.select(col("band"), col("doc_id").as("id_a"))
-      .join(bcast(svb.select(col("band"), col("doc_id").as("id_b"))),
-        Seq("band"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b")).distinct()
-      .join(bcast(sv.select(col("doc_id").as("id_a"), col("sh").as("sh_a"))),
-        Seq("id_a"))
-      .join(bcast(sv.select(col("doc_id").as("id_b"), col("sh").as("sh_b"))),
-        Seq("id_b"))
-      .filter(jaccardOk(col("sh_a"), col("sh_b")))
-      .select(col("id_a"), col("id_b"))
+    def pairs(sv: DataFrame): DataFrame = {
+      val svb = sv.select(explode(col("bands")).as("band"), col("doc_id"))
+      svb.select(col("band"), col("doc_id").as("id_a"))
+        .join(bcast(svb.select(col("band"), col("doc_id").as("id_b"))),
+          Seq("band"))
+        .filter(col("id_a") < col("id_b"))
+        .select(col("id_a"), col("id_b")).distinct()
+        .join(bcast(sv.select(col("doc_id").as("id_a"), col("sh").as("sh_a"))),
+          Seq("id_a"))
+        .join(bcast(sv.select(col("doc_id").as("id_b"), col("sh").as("sh_b"))),
+          Seq("id_b"))
+        .filter(jaccard(col("sh_a"), col("sh_b")) >= threshold)
+        .select(col("id_a"), col("id_b"))
+    }
     (sv, pairs)
   }
 
   private def admitCore(nw: DataFrame, ix: DataFrame,
       threshold: Double, broadcastNew: Boolean = true): DataFrame = {
     val (sv, pairs) = survivorPairs(nw, ix, threshold, broadcastNew)
-    val comps = boundedComponents(pairs, col("id_a"), col("id_b"))
-    sv.select(col("doc_id"))
-      .join(comps, sv("doc_id") === comps("id"), "left")
-      .filter(col("comp").isNull || col("comp") === col("doc_id"))
-      .select(col("doc_id"))
+    keepRepresentatives(sv.localCheckpoint(true), pairs, "doc_id")
   }
 
-  /** [[admitPrehashed]] with the admitted ids returned DRIVER-SIDE when
-    * bounded — the streaming admission loop's fused shape (the
-    * QuotaStream AdmitCollectCap / [[InBatchPairCap]] discipline): ONE
-    * bounded take ([[takeBounded]], one parallel job) materializes the
-    * index probe and brings back the survivors' (doc_id, bands) rows —
-    * band keys only, fixed bytes per row, never the shingle payload —
-    * the in-batch CANDIDATE pairs are derived driver-side from the band
-    * buckets (≡ the svb self-join: same band equality, a < b,
-    * distinct), only the candidates verify distributively against the
-    * cached survivor shingles (zero extra jobs when a batch has no
-    * in-batch candidates — the common case), the exact min-label
-    * union-find runs on the driver, and the admitted set — survivors
-    * that are their component's min-id representative — comes back as a
-    * sorted local Seq the loop turns into a LocalRelation. The
-    * per-batch admitted/fold-back/observer semi-joins then build their
-    * broadcast side from local rows with NO broadcast-exchange job, the
-    * separate admitted-frame checkpoint job disappears, and so do the
-    * survivor self-join's distinct exchange and broadcast builds:
-    * jobs-per-micro-batch is the composed-ingest floor
-    * (r18–r21 BenchProbe decompositions). Bounded: the take is capped
-    * at `cap` + 1 rows AND the band buckets' quadratic term is counted
-    * before any pair materializes (a degenerate band shared by every
-    * survivor routes to the fallback exactly like a past-cap collect
-    * did); past either cap, or for non-long ids (the local min must
-    * reproduce Spark's ordering — guaranteed for integrals; the landing
-    * contract is long doc_ids), the distributed [[admitCore]] tail runs
-    * unchanged and the caller gets the admitted-ids FRAME (Right).
-    * Label-equivalence of local vs distributed components is pinned by
-    * AdmitCoreComponentsSpec; AdmissionStreamSpec pins the loop end to
-    * end. */
-  private[graft] def admitPrehashedBounded(newSigs: DataFrame,
-      indexFrame: DataFrame, threshold: Double,
-      cap: Int = InBatchPairCap): Either[Seq[Long], DataFrame] = {
-    val nw = newSigs.select(col("doc_id"), col("sh"), col("bands"))
-    val ix = indexFrame.select(col("doc_id"), col("sh"), col("bands"))
-    def distributedOver(sv: DataFrame, pairs: DataFrame): DataFrame = {
-      val comps = boundedComponents(pairs, col("id_a"), col("id_b"))
-      sv.select(col("doc_id"))
-        .join(comps, sv("doc_id") === comps("id"), "left")
-        .filter(col("comp").isNull || col("comp") === col("doc_id"))
-        .select(col("doc_id"))
-    }
-    if (nw.schema("doc_id").dataType !=
-        org.apache.spark.sql.types.LongType) {
-      // non-long ids: the pre-r21 distributed shape unchanged (pinned
-      // survivor frame; the local min-label ordering guarantee is
-      // integral-only)
-      val (sv, pairs) = survivorPairs(nw, ix, threshold, broadcastNew = true)
-      return Right(distributedOver(sv, pairs))
-    }
-    // ---- fast path: ONE bounded take + driver-side candidates ----
-    // The survivor frame is PERSISTED, not checkpointed: the bounded
-    // take below materializes the index probe AND populates the cache
-    // in the same job (runJob covers every partition), where the eager
-    // checkpoint was a separate per-batch action. The take carries
-    // (doc_id, bands) — band keys are k/rowsPerBand fixed-size hashes
-    // per row (≈ 20 MB at the cap), never the shingle payload, which is
-    // what made collecting survivor rows whole bytes-unbounded. The
-    // in-batch candidate pairs (same band key, id_a < id_b, distinct)
-    // then fall out of a driver-side hash group — the svb self-join,
-    // its distinct exchange and its broadcast builds disappear from the
-    // per-batch plan — and only the CANDIDATES (quadratic-term-capped
-    // like the collect) verify distributively, against the cached
-    // survivor shingles, through the SAME [[jaccardAtLeast]] predicate.
-    // Most micro-batches carry zero in-batch candidates and pay exactly
-    // one job here.
-    val (sv, pairs) = survivorPairs(nw, ix, threshold, broadcastNew = true,
-      pinSurvivors = false)
-    sv.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  /** The survivors that are their component's min-id representative:
+    * components over the in-batch pairs of `sv` ([[boundedComponents]] —
+    * the bounded driver union-find, distributed star past the cap),
+    * left-joined back so pair-free survivors keep themselves. */
+  private def keepRepresentatives(sv: DataFrame,
+      pairs: DataFrame => DataFrame, id: String): DataFrame = {
+    val comps = boundedComponents(pairs(sv), col("id_a"), col("id_b"))
+    sv.select(col(id))
+      .join(comps, sv(id) === comps("id"), "left")
+      .filter(col("comp").isNull || col("comp") === col(id))
+      .select(col(id))
+  }
+
+  /** The driver-side admission core shared by [[admitPrehashedBounded]]
+    * and [[admitNewVecsPreassignedBounded]] — the streaming admission
+    * loops' fused shape (the QuotaStream AdmitCollectCap /
+    * [[InBatchPairCap]] discipline). `sv` is the unpinned survivor frame
+    * and `pairs` its distributed in-batch pair builder (the caller's
+    * probe chain); `blockKeys` is an array column of the blocking keys
+    * two survivors must share to be an in-batch candidate (MinHash
+    * bands, or the one IVF cell); `payload` are the columns `verify`
+    * reads, attached per candidate side as `<col>_a` / `<col>_b`.
+    *
+    * ONE bounded take ([[takeBounded]], one parallel job) materializes
+    * the index probe and brings back the survivors' (id, block keys)
+    * rows — fixed bytes per row, never the shingle or embedding payload
+    * (≈ 20 MB of band keys at the cap). The survivor frame is
+    * PERSISTED, not checkpointed: the take populates the cache in the
+    * same job (runJob covers every partition), where an eager checkpoint
+    * was a separate per-batch action. The in-batch CANDIDATE pairs (same
+    * block key, id_a < id_b, distinct) then fall out of a driver-side
+    * hash group — the survivor self-join, its distinct exchange and its
+    * broadcast builds disappear from the per-batch plan — and only the
+    * candidates verify distributively against the cached survivor
+    * payload (build side = candidates with side a attached —
+    * batch-bounded, the in-batch analogue of admitCore's bcast-hinted
+    * self-join sides), through the caller's SAME verify predicate. Most
+    * micro-batches carry zero in-batch candidates and pay exactly one
+    * job here. The exact min-label union-find runs on the driver, and
+    * the admitted set — survivors that are their component's min-id
+    * representative — comes back as a sorted local Seq (Left), which
+    * [[admittedIdsFrame]] turns into a LocalRelation: the per-batch
+    * admitted/fold-back/observer semi-joins then build their broadcast
+    * side from local rows with NO broadcast-exchange job, and the
+    * separate admitted-frame checkpoint job disappears — jobs-per-micro-
+    * batch is the composed-ingest floor (r18–r21 BenchProbe
+    * decompositions).
+    *
+    * Bounded: the take is capped at `cap` + 1 rows AND the buckets'
+    * quadratic term is counted before any pair materializes (a
+    * degenerate key shared by every survivor routes to the fallback
+    * exactly like a past-cap collect did); past either cap the
+    * distributed [[keepRepresentatives]] tail runs over the cached
+    * survivors and comes back EAGER (Right), so the cache can be released
+    * before returning. Non-long ids (the local min must reproduce Spark's
+    * ordering — guaranteed for integrals; the landing contract is long
+    * ids) take the batch shape unchanged: pinned survivors, lazy
+    * distributed frame (Right). Label-equivalence of local vs distributed
+    * components is pinned by AdmitCoreComponentsSpec; AdmissionStreamSpec
+    * and SemanticAdmissionSpec pin the loops end to end. */
+  private def boundedAdmit(sv: DataFrame, pairs: DataFrame => DataFrame,
+      id: String, blockKeys: Column, payload: Seq[String], verify: Column,
+      cap: Int): Either[Seq[Long], DataFrame] = {
+    if (sv.schema(id).dataType != LongType)
+      return Right(keepRepresentatives(sv.localCheckpoint(true), pairs, id))
+    sv.persist(StorageLevel.MEMORY_AND_DISK)
     def distributedTail(): DataFrame = {
-      // rare path (cap exceeded): hand back an EAGER frame so the cache
-      // can be released before returning
-      val out = distributedOver(sv, pairs).localCheckpoint(true)
+      val out = keepRepresentatives(sv, pairs, id).localCheckpoint(true)
       sv.unpersist(false)
       out
     }
-    val svRows = takeBounded(sv.select(col("doc_id"), col("bands")), cap)
+    val svRows = takeBounded(sv.select(col(id), blockKeys), cap)
     if (svRows.length > cap) return Right(distributedTail())
     val ids = svRows.map(_.getLong(0))
-    // candidate generation ≡ the svb self-join: group survivor ids by
-    // band key, all (a < b) pairs within a bucket, distinct across
-    // buckets — with the quadratic term counted BEFORE materializing
-    // (a degenerate band shared by every survivor must route to the
-    // distributed fallback, exactly like a past-cap collect did)
-    val byBand = new java.util.HashMap[String, scala.collection.mutable.ArrayBuffer[Long]]
-    svRows.foreach { r =>
-      val id = r.getLong(0)
-      val bands: Seq[String] =
-        if (r.isNullAt(1)) Seq.empty else r.getSeq[String](1)
-      bands.foreach { b =>
-        var bucket = byBand.get(b)
-        if (bucket == null) {
-          bucket = new scala.collection.mutable.ArrayBuffer[Long]
-          byBand.put(b, bucket)
-          ()
-        }
-        bucket += id
-      }
-    }
-    var quad = 0L
-    val bucketIt = byBand.values.iterator
-    while (bucketIt.hasNext && quad <= cap) {
-      val n = bucketIt.next().length.toLong
-      quad += n * (n - 1) / 2
-    }
-    if (quad > cap) return Right(distributedTail())
-    val cand = scala.collection.mutable.HashSet.empty[(Long, Long)]
-    byBand.values.forEach { bucket =>
-      var i = 0
-      while (i < bucket.length) {
-        var j = i + 1
-        while (j < bucket.length) {
-          val (a, b) = (bucket(i), bucket(j))
-          if (a < b) cand += ((a, b))
-          else if (b < a) cand += ((b, a))
-          j += 1
-        }
-        i += 1
-      }
-    }
-    val edges: Seq[(Long, Long)] =
+    val buckets = svRows.toSeq.flatMap { r =>
+      val keys = if (r.isNullAt(1)) Nil else r.getSeq[Any](1)
+      keys.map(_ -> r.getLong(0))
+    }.groupMap(_._1)(_._2).values
+    if (buckets.map(b => b.length.toLong * (b.length - 1) / 2).sum > cap)
+      return Right(distributedTail())
+    val cand = (for {
+      b <- buckets; i <- b.indices; j <- i + 1 until b.length
+      if b(i) != b(j)
+    } yield (b(i) min b(j), b(i) max b(j))).toSet
+    val edges =
       if (cand.isEmpty) Nil
       else {
-        val schema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("id_a",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("id_b",
-            org.apache.spark.sql.types.LongType)))
-        val rows: java.util.List[org.apache.spark.sql.Row] =
-          java.util.Arrays.asList(cand.toSeq.sorted.map { case (a, b) =>
-            org.apache.spark.sql.Row(a, b) }: _*)
-        val candDf = sv.sparkSession.createDataFrame(rows, schema)
-        // verify ONLY the candidates: the local pair list broadcast-
-        // joins the cached survivor shingles (build side = candidates
-        // with sh_a attached — batch-bounded, the in-batch analogue of
-        // admitCore's bcast-hinted self-join sides)
-        sv.select(col("doc_id").as("id_b"), col("sh").as("sh_b"))
-          .join(broadcast(candDf.join(
-            sv.select(col("doc_id").as("id_a"), col("sh").as("sh_a")),
-            Seq("id_a"))), Seq("id_b"))
-          .filter(jaccardAtLeast(col("sh_a"), col("sh_b"), threshold))
+        def side(s: String) = sv.select(col(id).as(s"id_$s") +:
+          payload.map(c => col(c).as(s"${c}_$s")): _*)
+        side("b")
+          .join(broadcast(longFrame(sv.sparkSession, Seq("id_a", "id_b"),
+            cand.toSeq.sorted.map { case (a, b) => Row(a, b) })
+            .join(side("a"), Seq("id_a"))), Seq("id_b"))
+          .filter(verify)
           .select(col("id_a"), col("id_b"))
           .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
       }
     sv.unpersist(false)
     val comp = localMinLabelComponents(edges)
-    Left(ids.filter(id => comp.get(id).forall(_ == id)).sorted.toSeq)
+    Left(ids.filter(x => comp.get(x).forall(_ == x)).sorted.toSeq)
+  }
+
+  /** A local (LocalRelation) frame of long columns — the bounded driver
+    * results handed back to the plan. */
+  private def longFrame(spark: SparkSession, names: Seq[String],
+      rows: Seq[Row]): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*),
+      StructType(names.map(StructField(_, LongType))))
+
+  /** A bounded admission's result as the admitted-ids frame (`id`) the
+    * streaming loops semi-join against: the driver-side ids as a
+    * broadcast LocalRelation (no broadcast-exchange job), or the
+    * distributed frame pinned once (its consumers would each re-run the
+    * probe). */
+  private[graft] def admittedIdsFrame(spark: SparkSession,
+      admitted: Either[Seq[Long], DataFrame], id: String): DataFrame =
+    admitted match {
+      case Left(ids) => broadcast(longFrame(spark, Seq(id), ids.map(Row(_))))
+      case Right(df) => df.localCheckpoint(true)
+    }
+
+  /** [[admitPrehashed]] with the admitted ids returned DRIVER-SIDE when
+    * bounded — [[boundedAdmit]] over the MinHash probe chain: band keys
+    * block the in-batch candidates (≡ the svb self-join: same band
+    * equality, a < b, distinct) and the SAME exact-Jaccard predicate
+    * verifies them. */
+  private[graft] def admitPrehashedBounded(newSigs: DataFrame,
+      indexFrame: DataFrame, threshold: Double,
+      cap: Int = InBatchPairCap): Either[Seq[Long], DataFrame] = {
+    val (sv, pairs) = survivorPairs(
+      newSigs.select(col("doc_id"), col("sh"), col("bands")),
+      indexFrame.select(col("doc_id"), col("sh"), col("bands")), threshold,
+      broadcastNew = true)
+    boundedAdmit(sv, pairs, "doc_id", col("bands"), Seq("sh"),
+      jaccard(col("sh_a"), col("sh_b")) >= threshold, cap)
   }
 
   /** Components over the in-batch survivor pair graph, driver-side when
@@ -781,6 +790,16 @@ object Dedup {
     * AdmitCoreComponentsSpec pins local ≡ star on random pair graphs. */
   private[graft] val InBatchPairCap = 131072
 
+  /** [[connectedComponentsAuto]]'s edge budget — larger than the
+    * admission loop's [[InBatchPairCap]] because a BATCH clean's
+    * components collect happens once per pipeline run, not once per
+    * micro-batch: 2²⁰ (id, id) rows ≈ 16 MB through the driver, and the
+    * union-find on them is milliseconds. Sized so a fixture-scale
+    * verified near-dup graph (df-ceiling-bounded) stays on the fast
+    * path while a genuinely corpus-scale graph still falls back to the
+    * distributed star loop. */
+  private[graft] val BatchCleanPairCap = 1 << 20
+
   /** [[connectedComponentsStar]] with the micro-graph fast path: when
     * the pair graph is integral-keyed and holds ≤ [[InBatchPairCap]]
     * edges, ONE bounded collect + exact union-find replaces the
@@ -794,16 +813,6 @@ object Dedup {
     * (cap exceeded) still gets the distributed loop. The returned
     * frame is broadcast-hinted on the fast path, so the survivor label
     * join never shuffles for it. */
-  /** [[connectedComponentsAuto]]'s edge budget — larger than the
-    * admission loop's [[InBatchPairCap]] because a BATCH clean's
-    * components collect happens once per pipeline run, not once per
-    * micro-batch: 2²⁰ (id, id) rows ≈ 16 MB through the driver, and the
-    * union-find on them is milliseconds. Sized so a fixture-scale
-    * verified near-dup graph (df-ceiling-bounded) stays on the fast
-    * path while a genuinely corpus-scale graph still falls back to the
-    * distributed star loop. */
-  private[graft] val BatchCleanPairCap = 1 << 20
-
   def connectedComponentsAuto(pairs: DataFrame, idA: Column,
       idB: Column, maxIter: Int = 25): DataFrame =
     boundedComponents(pairs, idA, idB, materializeEdges = true,
@@ -849,18 +858,11 @@ object Dedup {
       return connectedComponentsStar(probeSrc, col("u"), col("v"),
         maxIter) // unbounded: stay distributed
     val comp = localMinLabelComponents(head)
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("comp",
-        org.apache.spark.sql.types.LongType)))
-    val rows: java.util.List[org.apache.spark.sql.Row] =
-      java.util.Arrays.asList(comp.toSeq.sortBy(_._1).map { case (id, c) =>
-        org.apache.spark.sql.Row(id, c) }: _*)
     // bounded by the cap — hint the label join's build side so the
     // survivor frame never shuffles for it (the fallback branch's star
     // output is pair-graph-sized and stays unhinted)
-    broadcast(spark.createDataFrame(rows, schema))
+    broadcast(longFrame(spark, Seq("id", "comp"),
+      comp.toSeq.sortBy(_._1).map { case (id, c) => Row(id, c) }))
   }
 
   /** Collect up to `cap` + 1 rows in ONE fully-parallel job — the
@@ -988,19 +990,22 @@ object Dedup {
           .select(explode(col("left_ids")).as("left_id"), col("right_ids"))
           .select(col("left_id"), explode(col("right_ids")).as("right_id"))
     }).distinct()
-    cand
-      .join(li.select(col("doc_id").as("left_id"), col("sh").as("sh_l")),
-        Seq("left_id"))
-      .join(ri.select(col("doc_id").as("right_id"), col("sh").as("sh_r")),
-        Seq("right_id"))
-      .select(col("left_id"), col("right_id"),
-        (size(array_intersect(col("sh_l"), col("sh_r"))).cast("double") /
-          size(array_union(col("sh_l"), col("sh_r"))).cast("double"))
-          .as("jaccard"))
-      .filter(col("jaccard") >= threshold)
+    verifyJaccard(cand, li, ri, "sh", threshold, "left_id", "right_id")
   }
 
-  /** `maxBandDf`: drop band buckets holding more than this many docs
+  /** MinHash + LSH near-duplicate candidate pairs over a text column.
+    *
+    * shingle(n) → k MinHashes → bands of r rows → explode band keys →
+    * self-join on band key → distinct (a < b) pairs → exact n-gram Jaccard
+    * verification ≥ `threshold`.
+    *
+    * Scale: the self-join shuffles on band-key md5 (uniform); candidate
+    * volume is bounded by bucket sizes — degenerate giant buckets (empty /
+    * boilerplate docs) are the classic skew source, so callers should
+    * pre-filter trivial docs. Verification cost is per-candidate-pair only,
+    * never all-pairs.
+    *
+    * `maxBandDf`: drop band buckets holding more than this many docs
     * before pairing — same ceiling as [[minhashFuzzyJoin]]'s. A band
     * shared by far more docs than any real duplicate cluster is
     * boilerplate evidence, not similarity (at low band resolution —
@@ -1018,36 +1023,15 @@ object Dedup {
     // shuffles shingle payloads. At corpus scale the band index is a tiny
     // fraction of the documents' bytes, and the heavy arrays are attached
     // afterwards for the (much smaller) surviving candidate set only.
-    val all = docs.select(explode(col("bands")).as("band"), col("doc_id"))
-    // Two candidate-generation shapes, one pair set. With a ceiling the
-    // bucket is materialized as ONE row per band (groupBy + collect_list —
-    // a single shuffle whose per-band memory is bounded by the cap, since
-    // oversized buckets are dropped whole) and ordered pairs stream out of
-    // two chained generators; without a ceiling bucket sizes are unbounded,
-    // so the band SELF-JOIN form stays — it pairs giant buckets without
-    // ever holding one in a single row. The df-capped form replaces the
-    // previous {explode → df-groupBy → filter-join → self-join} plan (three
-    // shuffles and a double explode eval) that regressed the whole
-    // minhash-consuming family 1.3–5× at sf0.1.
-    val cand = (maxBandDf match {
-      case Some(cap) =>
-        boundedBuckets(all, "band", "doc_id", cap, "ids")
-          .select(explode(col("ids")).as("id_a"), col("ids"))
-          .select(col("id_a"), explode(col("ids")).as("id_b"))
-          .filter(col("id_a") < col("id_b"))
-      case None =>
-        all.select(col("band"), col("doc_id").as("id_a"))
-          .join(all.select(col("band"), col("doc_id").as("id_b")), Seq("band"))
-          .filter(col("id_a") < col("id_b"))
-          .select(col("id_a"), col("id_b"))
-    }).distinct()
-    cand
-      .join(docs.select(col("doc_id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
-      .join(docs.select(col("doc_id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
-      .select(col("id_a"), col("id_b"),
-        (size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-          size(array_union(col("sh_a"), col("sh_b"))).cast("double")).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
+    // Two candidate-generation shapes, one pair set ([[bandCandidates]]).
+    // The df-capped form replaces the previous {explode → df-groupBy →
+    // filter-join → self-join} plan (three shuffles and a double explode
+    // eval) that regressed the whole minhash-consuming family 1.3–5× at
+    // sf0.1.
+    verifyJaccard(bandCandidates(
+        docs.select(explode(col("bands")).as("band"), col("doc_id")),
+        maxBandDf),
+      docs, docs, "sh", threshold)
   }
 
   /** SCOPED MinHash near-dup pairs — [[minhashNearDupPairs]] restricted
@@ -1075,7 +1059,7 @@ object Dedup {
       scopedShingleBandFrame(
           stagedScopedShingles(df, id, text, scope, shingleN),
           k, rowsPerBand)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
+        .persist(StorageLevel.MEMORY_AND_DISK),
       threshold, maxBandDf)
 
   /** The scoped family's staged shingle projection — (doc_id, source,
@@ -1089,12 +1073,7 @@ object Dedup {
     * band — the same filter every consumer applied). */
   def stagedScopedShingles(df: DataFrame, id: Column, text: Column,
       scope: Column, shingleN: Int): DataFrame =
-    ensureParallelism(
-        df.select(id.as("doc_id"), scope.cast("string").as("source"),
-          text.as("txt")), col("doc_id"))
-      .select(col("doc_id"), col("source"),
-        T.tokens(lower(col("txt"))).as("toks"))
-      .filter(size(col("toks")) > 0)
+    nonEmptyTokens(df, id, text, scope.cast("string").as("source"))
       .select(col("doc_id"), col("source"),
         T.tokenShingles(col("toks"), shingleN).as("sh"))
 
@@ -1128,29 +1107,10 @@ object Dedup {
       .select(explode(col("bands")).as("b"), col("source"), col("doc_id"))
       .select(concat_ws("\u0001", col("source"), col("b")).as("band"),
         col("doc_id"))
-    val cand = (maxBandDf match {
-      case Some(cap) =>
-        boundedBuckets(all, "band", "doc_id", cap, "ids")
-          .select(explode(col("ids")).as("id_a"), col("ids"))
-          .select(col("id_a"), explode(col("ids")).as("id_b"))
-          .filter(col("id_a") < col("id_b"))
-      case None =>
-        all.select(col("band"), col("doc_id").as("id_a"))
-          .join(all.select(col("band"), col("doc_id").as("id_b")), Seq("band"))
-          .filter(col("id_a") < col("id_b"))
-          .select(col("id_a"), col("id_b"))
-    }).distinct()
-    cand
-      // the left verify join carries the scope out (both sides share it
-      // by construction) — no separate output-attach join
-      .join(docs.select(col("doc_id").as("id_a"), col("source"),
-        col("sh").as("sh_a")), Seq("id_a"))
-      .join(docs.select(col("doc_id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
-      .select(col("source"), col("id_a"), col("id_b"),
-        (size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-          size(array_union(col("sh_a"), col("sh_b"))).cast("double")).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
-      .select(col("source"), col("id_a"), col("id_b"), col("jaccard"))
+    // the left verify join carries the scope out (both sides share it
+    // by construction) — no separate output-attach join
+    verifyJaccard(bandCandidates(all, maxBandDf), docs, docs, "sh",
+      threshold, carry = Seq("source"))
   }
 
   /** Exact n-gram Jaccard near-dup pairs — the verification measure the
@@ -1163,16 +1123,13 @@ object Dedup {
     * MinHash banding first and verify with this measure. */
   def ngramJaccardPairs(df: DataFrame, id: Column, text: Column,
       n: Int = 2, threshold: Double = 0.3): DataFrame = {
-    val docs = ensureParallelism(df.select(id.as("doc_id"), text.as("txt")), col("doc_id"))
-      .select(col("doc_id"), T.tokens(lower(col("txt"))).as("toks"))
-      .filter(size(col("toks")) > 0)
+    val docs = nonEmptyTokens(df, id, text)
       .select(col("doc_id"), T.tokenShingles(col("toks"), n).as("sh"))
     val a = docs.select(col("doc_id").as("id_a"), col("sh").as("sh_a"))
     val b = docs.select(col("doc_id").as("id_b"), col("sh").as("sh_b"))
     a.crossJoin(b).filter(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"),
-        (size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-          size(array_union(col("sh_a"), col("sh_b"))).cast("double")).as("jaccard"))
+        jaccard(col("sh_a"), col("sh_b")).as("jaccard"))
       .filter(col("jaccard") >= threshold)
   }
 
@@ -1197,9 +1154,7 @@ object Dedup {
     // frame stores (bands, verification shingles) — the signature md5
     // pass runs once at cache fill, not once per self-join branch (see
     // minhashNearDupPairs on why exchange reuse can't dedupe it).
-    val docs = ensureParallelism(df.select(id.as("doc_id"), text.as("txt")), col("doc_id"))
-      .select(col("doc_id"), T.tokens(lower(col("txt"))).as("toks"))
-      .filter(size(col("toks")) > 0)
+    val docs = nonEmptyTokens(df, id, text)
       .select(col("doc_id"),
         T.tokenShingles(col("toks"), candShingleN).as("csh"),
         T.tokenShingles(col("toks"), n).as("vsh"))
@@ -1207,20 +1162,10 @@ object Dedup {
         T.minhashSignature(col("csh"), k).as("sig"), col("vsh"))
       .select(col("doc_id"),
         T.bandKeys(col("sig"), rowsPerBand).as("bands"), col("vsh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val banded = docs.select(explode(col("bands")).as("band"), col("doc_id"))
-    val cand = banded.select(col("band"), col("doc_id").as("id_a"))
-      .join(banded.select(col("band"), col("doc_id").as("id_b")), Seq("band"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"))
-      .distinct()
-    cand
-      .join(docs.select(col("doc_id").as("id_a"), col("vsh").as("sh_a")), Seq("id_a"))
-      .join(docs.select(col("doc_id").as("id_b"), col("vsh").as("sh_b")), Seq("id_b"))
-      .select(col("id_a"), col("id_b"),
-        (size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-          size(array_union(col("sh_a"), col("sh_b"))).cast("double")).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    verifyJaccard(bandCandidates(
+        docs.select(explode(col("bands")).as("band"), col("doc_id")), None),
+      docs, docs, "vsh", threshold)
   }
 
   /** Cross-document duplicated-n-gram statistics — the corpus-INTERNAL
@@ -1256,11 +1201,9 @@ object Dedup {
       n: Int = 3, dfCeiling: Long = 0L, saltBuckets: Int = 0): DataFrame = {
     // read twice (gram explode + per-doc totals) — same persist lifecycle
     // contract as the near-dup operators (object scaladoc)
-    val docs = ensureParallelism(df.select(id.as("doc_id"), text.as("txt")), col("doc_id"))
-      .select(col("doc_id"), T.tokens(lower(col("txt"))).as("toks"))
-      .filter(size(col("toks")) > 0)
+    val docs = nonEmptyTokens(df, id, text)
       .select(col("doc_id"), T.tokenShingles(col("toks"), n).as("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(StorageLevel.MEMORY_AND_DISK)
     val grams = docs.select(col("doc_id"), explode(col("sh")).as("gram"))
     // per-doc shingles are distinct, so count(*) per gram == document count
     val gramCounts = grams.groupBy(col("gram"))
@@ -1301,9 +1244,10 @@ object Dedup {
     // tokenize+hash each document once, not twice (the fingerprint pass IS
     // the dominant cost; the cache is keyed on the canonical plan, so
     // repeated calls reuse one entry rather than accumulating).
-    val withSig = ensureParallelism(df.select(id.as("doc_id"), text.as("txt")), col("doc_id"))
+    val withSig = Parallelism.ensureMinPartitions(
+        df.select(id.as("doc_id"), text.as("txt")), col("doc_id"))
       .select(col("doc_id"), T.simhash(col("txt")).as("sig"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(StorageLevel.MEMORY_AND_DISK)
     val blocked = withSig.select(col("doc_id"), col("sig"),
       explode(array((0 until chunks).map(i =>
         struct(lit(i).as("chunk_i"),
@@ -1526,7 +1470,8 @@ object Dedup {
       threshold: Double = 0.95, nBits: Int = 8, dim: Int = 64,
       seed: Long = 42L): DataFrame = {
     val planes = V.randomPlanes(nBits, dim, seed)
-    val bucketed = ensureParallelism(df.select(id.as("vid"), vec.as("v")), col("vid"))
+    val bucketed = Parallelism.ensureMinPartitions(
+        df.select(id.as("vid"), vec.as("v")), col("vid"))
       .select(col("vid"), col("v"), V.srpBucketTable(col("v"), planes).as("bucket"))
     val a = bucketed.select(col("bucket"), col("vid").as("id_a"), col("v").as("v_a"))
     val b = bucketed.select(col("bucket"), col("vid").as("id_b"), col("v").as("v_b"))
@@ -1601,12 +1546,9 @@ object Dedup {
       threshold: Double = 0.5, maxBandDf: Option[Long] = None): DataFrame = {
     require(threshold > 0.0,
       "bandedRecallReport: threshold must be > 0 (zero-overlap pairs never materialize)")
-    val sh = ensureParallelism(df.select(id.as("doc_id"), text.as("txt")),
-        col("doc_id"))
-      .select(col("doc_id"), T.tokens(lower(col("txt"))).as("toks"))
-      .filter(size(col("toks")) > 0)
+    val sh = nonEmptyTokens(df, id, text)
       .select(col("doc_id"), T.tokenShingles(col("toks"), shingleN).as("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(StorageLevel.MEMORY_AND_DISK)
     val ex = sh.select(col("doc_id"), explode(col("sh")).as("g"))
     val inter = ex.select(col("g"), col("doc_id").as("id_a"))
       .join(ex.select(col("g"), col("doc_id").as("id_b")), Seq("g"))
@@ -1663,19 +1605,16 @@ object Dedup {
     // integral vec_ids — the bounded driver union-find (admitCore's
     // r18 shape; ~6 driver-latency star rounds per micro-batch
     // otherwise), distributed star fallback past the cap unchanged
-    val comps = boundedComponents(pairs, col("id_a"), col("id_b"))
-    sv.select(col("vec_id"))
-      .join(comps, sv("vec_id") === comps("id"), "left")
-      .filter(col("comp").isNull || col("comp") === sv("vec_id"))
-      .select(sv("vec_id"))
+    keepRepresentatives(sv.localCheckpoint(true), pairs, "vec_id")
   }
 
   /** The cell-blocked cosine probe → survivor → in-batch-pair chain
     * shared by [[admitNewVecsPreassigned]] and
     * [[admitNewVecsPreassignedBounded]] — [[survivorPairs]]'s vector
-    * twin: returns (sv, pairs) with `sv` PINNED. */
+    * twin: returns (sv, pairs) with `sv` UNPINNED and `pairs` the
+    * same-cell cosine pair builder over a pinned survivor frame. */
   private def vecSurvivorPairs(asg: DataFrame, standing: DataFrame,
-      threshold: Double, pinSurvivors: Boolean = true): (DataFrame, DataFrame) = {
+      threshold: Double): (DataFrame, DataFrame => DataFrame) = {
     // probe only the cells the batch touches — a bounded collect (≤
     // nCells ints, the ivfFlatProbe discipline) pushed as a literal IN,
     // so a cell-partitioned standing table partition-prunes instead of
@@ -1695,121 +1634,33 @@ object Dedup {
       .filter(V.cosineFromNorms(col("v_n"), col("v_o"),
         col("n_n"), col("n_o")) >= threshold)
       .select(col("id_n")).distinct()
-    val sv0 = asg.join(matched, asg("vec_id") === matched("id_n"), "left_anti")
-    val sv = if (pinSurvivors) sv0.localCheckpoint(true) else sv0
-    val a = sv.select(col("cell"), col("vec_id").as("id_a"),
-      col("embedding").as("v_a"), col("c_norm").as("n_a"))
-    val b = sv.select(col("cell"), col("vec_id").as("id_b"),
-      col("embedding").as("v_b"), col("c_norm").as("n_b"))
-    val pairs = a.join(b, Seq("cell"))
-      .filter(col("id_a") < col("id_b"))
-      .filter(V.cosineFromNorms(col("v_a"), col("v_b"),
-        col("n_a"), col("n_b")) >= threshold)
-      .select(col("id_a"), col("id_b"))
-    (sv, pairs)
+    def pairs(sv: DataFrame): DataFrame = {
+      val a = sv.select(col("cell"), col("vec_id").as("id_a"),
+        col("embedding").as("v_a"), col("c_norm").as("n_a"))
+      val b = sv.select(col("cell"), col("vec_id").as("id_b"),
+        col("embedding").as("v_b"), col("c_norm").as("n_b"))
+      a.join(b, Seq("cell"))
+        .filter(col("id_a") < col("id_b"))
+        .filter(V.cosineFromNorms(col("v_a"), col("v_b"),
+          col("n_a"), col("n_b")) >= threshold)
+        .select(col("id_a"), col("id_b"))
+    }
+    (asg.join(matched, asg("vec_id") === matched("id_n"), "left_anti"), pairs)
   }
 
-  /** [[admitNewVecsPreassignedBounded]] — [[admitPrehashedBounded]]'s
-    * vector twin, the SemanticAdmission loop's fused shape: ONE bounded
-    * take brings back the survivors' (vec_id, cell) rows — two fixed
-    * columns, never the embedding payload — the in-batch CANDIDATE
-    * pairs fall out of the driver-side cell buckets (≡ the survivor
-    * same-cell self-join: cell equality, a < b; a vector is assigned to
-    * exactly ONE cell, so bucket pairs are distinct by construction),
-    * only the candidates verify distributively (the SAME
-    * cosineFromNorms expression, against the cached survivor
-    * embeddings), the min-label union-find runs driver-side, and the
-    * admitted vec_ids come back as a sorted local Seq (Left) — the
-    * loop's fold-back/output semi-joins then build from a LocalRelation
-    * with no broadcast-exchange job, no separate admitted-frame
-    * checkpoint, and no survivor self-join in the per-batch plan. Past
-    * `cap` rows or a past-cap candidate count, or for non-long vec_ids,
-    * the distributed [[admitNewVecsPreassigned]] tail runs unchanged
-    * (Right). */
+  /** [[admitNewVecsPreassigned]] with the admitted vec_ids returned
+    * DRIVER-SIDE when bounded — [[boundedAdmit]] over the vector probe
+    * chain, the SemanticAdmission loop's fused shape: the one cell a
+    * vector is assigned to blocks the in-batch candidates (≡ the
+    * survivor same-cell self-join: cell equality, a < b) and the SAME
+    * cosineFromNorms expression verifies them. */
   private[graft] def admitNewVecsPreassignedBounded(asg: DataFrame,
       standing: DataFrame, threshold: Double,
       cap: Int = InBatchPairCap): Either[Seq[Long], DataFrame] = {
-    def distributedOver(sv: DataFrame, pairs: DataFrame): DataFrame = {
-      val comps = boundedComponents(pairs, col("id_a"), col("id_b"))
-      sv.select(col("vec_id"))
-        .join(comps, sv("vec_id") === comps("id"), "left")
-        .filter(col("comp").isNull || col("comp") === sv("vec_id"))
-        .select(sv("vec_id"))
-    }
-    if (asg.schema("vec_id").dataType !=
-        org.apache.spark.sql.types.LongType) {
-      val (sv, pairs) = vecSurvivorPairs(asg, standing, threshold)
-      return Right(distributedOver(sv, pairs))
-    }
-    val (sv, pairs) = vecSurvivorPairs(asg, standing, threshold,
-      pinSurvivors = false)
-    sv.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    def distributedTail(): DataFrame = {
-      val out = distributedOver(sv, pairs).localCheckpoint(true)
-      sv.unpersist(false)
-      out
-    }
-    val svRows = takeBounded(sv.select(col("vec_id"), col("cell")), cap)
-    if (svRows.length > cap) return Right(distributedTail())
-    val ids = svRows.map(_.getLong(0))
-    val byCell = new java.util.HashMap[Int, scala.collection.mutable.ArrayBuffer[Long]]
-    svRows.foreach { r =>
-      val bucket = {
-        val c = r.getInt(1)
-        var b = byCell.get(c)
-        if (b == null) {
-          b = new scala.collection.mutable.ArrayBuffer[Long]
-          byCell.put(c, b)
-          ()
-        }
-        b
-      }
-      bucket += r.getLong(0)
-    }
-    var quad = 0L
-    val bucketIt = byCell.values.iterator
-    while (bucketIt.hasNext && quad <= cap) {
-      val n = bucketIt.next().length.toLong
-      quad += n * (n - 1) / 2
-    }
-    if (quad > cap) return Right(distributedTail())
-    val cand = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    byCell.values.forEach { bucket =>
-      var i = 0
-      while (i < bucket.length) {
-        var j = i + 1
-        while (j < bucket.length) {
-          val (a, b) = (bucket(i), bucket(j))
-          cand += (if (a < b) (a, b) else (b, a))
-          j += 1
-        }
-        i += 1
-      }
-    }
-    val edges: Seq[(Long, Long)] =
-      if (cand.isEmpty) Nil
-      else {
-        val schema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("id_a",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("id_b",
-            org.apache.spark.sql.types.LongType)))
-        val rows: java.util.List[org.apache.spark.sql.Row] =
-          java.util.Arrays.asList(cand.toSeq.sorted.map { case (a, b) =>
-            org.apache.spark.sql.Row(a, b) }: _*)
-        val candDf = sv.sparkSession.createDataFrame(rows, schema)
-        sv.select(col("vec_id").as("id_b"), col("embedding").as("v_b"),
-            col("c_norm").as("n_b"))
-          .join(broadcast(candDf.join(
-            sv.select(col("vec_id").as("id_a"), col("embedding").as("v_a"),
-              col("c_norm").as("n_a")), Seq("id_a"))), Seq("id_b"))
-          .filter(V.cosineFromNorms(col("v_a"), col("v_b"),
-            col("n_a"), col("n_b")) >= threshold)
-          .select(col("id_a"), col("id_b"))
-          .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-      }
-    sv.unpersist(false)
-    val comp = localMinLabelComponents(edges)
-    Left(ids.filter(id => comp.get(id).forall(_ == id)).sorted.toSeq)
+    val (sv, pairs) = vecSurvivorPairs(asg, standing, threshold)
+    boundedAdmit(sv, pairs, "vec_id", array(col("cell")),
+      Seq("embedding", "c_norm"),
+      V.cosineFromNorms(col("embedding_a"), col("embedding_b"),
+        col("c_norm_a"), col("c_norm_b")) >= threshold, cap)
   }
 }

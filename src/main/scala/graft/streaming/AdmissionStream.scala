@@ -211,8 +211,9 @@ object AdmissionStream {
     * a replayed batch still never probes its prior attempt's signatures.
     * Listings stay O(n + files/128MB) per batch; admissions are unchanged
     * (the probe reads the same signature rows, flat or nested — the spec
-    * pins compacted ≡ uncompacted). */
-  /** `onBatchAdmitted`: per-batch observer invoked AFTER the batch's
+    * pins compacted ≡ uncompacted).
+    *
+    * `onBatchAdmitted`: per-batch observer invoked AFTER the batch's
     * admissions and index fold-back commit, with (admitted rows carrying
     * EVERY landing column — source/metadata ride along, not just
     * (doc_id, text) — and the batchId). The composition point for
@@ -221,8 +222,9 @@ object AdmissionStream {
     * continuous-ingest observability loop. The observer owns its own
     * exactly-once discipline (key whatever it writes by the batchId —
     * [[graft.operators.Upsert.mergeParquet]]'s applied markers do this);
-    * a replayed batch re-invokes it with identical rows and the same id. */
-  /** `compactWhenTombstoneRatio`: the tombstone-PRESSURE policy —
+    * a replayed batch re-invokes it with identical rows and the same id.
+    *
+    * `compactWhenTombstoneRatio`: the tombstone-PRESSURE policy —
     * deletes accumulate in `_tombstones` between sessions and every
     * probe pays the anti-join; when the deleted fraction of the
     * standing tree crosses this threshold, the session folds them
@@ -381,20 +383,11 @@ object AdmissionStream {
         // the composed-ingest floor. Past the cap / non-long ids, the
         // distributed frame comes back instead and the pre-r21 shape
         // (checkpointed admitted frame) runs unchanged.
-        val admittedIdsDf = Dedup.admitPrehashedBounded(sigs,
-          indexExcludingBatch(spark, concrete, batchId, sessionTombstones,
-            sessionIndexSchema),
-          threshold) match {
-          case Left(ids) =>
-            val rows: java.util.List[org.apache.spark.sql.Row] =
-              java.util.Arrays.asList(
-                ids.map(org.apache.spark.sql.Row(_)): _*)
-            broadcast(spark.createDataFrame(rows, StructType(Seq(
-              StructField("doc_id", LongType)))))
-          case Right(df) =>
-            // pin once: three consumers below would re-run the probe
-            df.localCheckpoint(true)
-        }
+        val admittedIdsDf = Dedup.admittedIdsFrame(spark,
+          Dedup.admitPrehashedBounded(sigs,
+            indexExcludingBatch(spark, concrete, batchId, sessionTombstones,
+              sessionIndexSchema),
+            threshold), "doc_id")
         val admitted = docs.join(admittedIdsDf, Seq("doc_id"), "left_semi")
         // batchId-keyed subdirs: a replayed batch overwrites itself
         // (exactly-once) instead of appending duplicates. The two

@@ -203,16 +203,9 @@ object SemanticAdmission {
         // broadcast-exchange jobs. Past the cap / non-long ids the
         // distributed frame comes back and the pre-r21 shape (pinned
         // admitted frame) runs unchanged.
-        val admittedIdsDf = Dedup.admitNewVecsPreassignedBounded(asg,
-          standing, threshold) match {
-          case Left(ids) =>
-            val rows: java.util.List[org.apache.spark.sql.Row] =
-              java.util.Arrays.asList(
-                ids.map(org.apache.spark.sql.Row(_)): _*)
-            broadcast(spark.createDataFrame(rows, StructType(Seq(
-              StructField("vec_id", LongType)))))
-          case Right(df) => df.localCheckpoint(true)
-        }
+        val admittedIdsDf = Dedup.admittedIdsFrame(spark,
+          Dedup.admitNewVecsPreassignedBounded(asg, standing, threshold),
+          "vec_id")
         val admittedAsg = asg.join(admittedIdsDf, Seq("vec_id"), "left_semi")
         // the two appends are independent projections of the pinned
         // admitted assignments into disjoint dirs — run concurrently

@@ -205,12 +205,17 @@ class AdmitCoreComponentsSpec extends SparkSpecBase {
     // min-id representatives: the 1/2/7 and 3/9 clusters collapse
     viaFrame should contain allOf (1L, 3L, 4L, 5L, 6L)
     viaFrame should contain noneOf (2L, 7L, 9L)
-    // the QUADRATIC-TERM cap: survivors fit the row cap (8 ≤ cap) but
-    // the identical cluster's band buckets exceed a tiny pair budget —
-    // must route to the distributed fallback, set unchanged
+    // a tiny cap routes to the distributed fallback, set unchanged (the
+    // 8 survivors already cross the row cap at cap = 2)
     val over = Dedup.admitPrehashedBounded(sigs, emptyIx, 0.4, cap = 2)
     over.isRight shouldBe true
     over.toOption.get.as[Long].collect().sorted.toSeq shouldBe viaFrame
+    // the QUADRATIC-TERM cap: the 8 survivors fit cap = 8 as rows, but
+    // the identical clusters' band buckets hold 16 pairs (4 bands × 3
+    // for 1/2/7, 4 × 1 for 3/9)
+    val quad = Dedup.admitPrehashedBounded(sigs, emptyIx, 0.4, cap = 8)
+    quad.isRight shouldBe true
+    quad.toOption.get.as[Long].collect().sorted.toSeq shouldBe viaFrame
   }
 
   test("admitNewVecsPreassignedBounded candidate path: same-cell in-batch " +
@@ -235,6 +240,102 @@ class AdmitCoreComponentsSpec extends SparkSpecBase {
     fast.isLeft shouldBe true
     fast.left.toOption.get shouldBe viaFrame
     viaFrame shouldBe Seq(1L, 2L, 3L) // 4 collapses into 1's component
+    // every fallback the MinHash caller checks, from the vector caller:
+    // each returns the distributed frame (Right) with the admitted set
+    // of the reference path on the same inputs
+    def fallsBack(a: org.apache.spark.sql.DataFrame, cap: Int): Unit = {
+      val st = a.filter(lit(false))
+      val r = Dedup.admitNewVecsPreassignedBounded(a, st, 0.95, cap)
+      r.isRight shouldBe true
+      r.toOption.get.collect().map(_.get(0)).toSeq.map(_.toString).sorted shouldBe
+        Dedup.admitNewVecsPreassigned(a, st, 0.95)
+          .collect().map(_.get(0)).toSeq.map(_.toString).sorted
+      ()
+    }
+    // the row cap: four survivors past cap = 1
+    fallsBack(asg, cap = 1)
+    def sameCell(n: Int) = graft.operators.Similarity.assignCellsTable(
+        (1 to n).map(i => (i.toLong, Seq(1.0, 0.001 * i, 0.0)))
+          .toDF("vec_id", "embedding"), centroids)
+      .localCheckpoint(true)
+    // three same-cell vectors under cap = 2 (three rows already cross
+    // the row cap), and the quadratic-term cap proper: four same-cell
+    // vectors fit cap = 4 as rows, but their one bucket holds 6 pairs
+    fallsBack(sameCell(3), cap = 2)
+    fallsBack(sameCell(4), cap = 4)
+    // a string vec_id routes distributed (integral-only local min)
+    fallsBack(asg.withColumn("vec_id", col("vec_id").cast("string")),
+      cap = Dedup.InBatchPairCap)
+  }
+
+  test("one bounded call runs a pinned number of Spark jobs: one bounded " +
+      "take, and no extra job when a batch has no in-batch candidates") {
+    val sc = spark.sparkContext
+    // the jobs started under a call's own job group; a sentinel job
+    // under a second group marks the end (the listener bus delivers in
+    // order, so once the sentinel shows up every earlier job has)
+    def jobsOf(body: => Unit): Int = {
+      val tag = "graft-job-pin-" + java.util.UUID.randomUUID()
+      val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+          val g = js.properties.getProperty("spark.jobGroup.id")
+          if (g != null) groups.add(g)
+          ()
+        }
+      }
+      sc.addSparkListener(listener)
+      try {
+        sc.setJobGroup(tag, "job pin", false)
+        try body finally sc.clearJobGroup()
+        sc.setJobGroup(tag + "-end", "job pin sentinel", false)
+        try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+        val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+        while (!groups.contains(tag + "-end") &&
+            System.nanoTime() < deadline) Thread.sleep(50)
+        groups.contains(tag + "-end") shouldBe true
+        import scala.jdk.CollectionConverters._
+        groups.iterator().asScala.count(_ == tag)
+      } finally sc.removeSparkListener(listener)
+    }
+    def sigsOf(texts: Seq[(Long, String)]) =
+      Dedup.nearDupIndex(texts.toDF("doc_id", "text"), col("doc_id"),
+        col("text"), shingleN = 3, k = 8, rowsPerBand = 2).localCheckpoint(true)
+    val unique = Seq(
+      4L -> "lorem ipsum dolor sit amet consectetur adipiscing",
+      5L -> "completely different text with no shared shingles here",
+      6L -> "another unique document body that matches nothing else")
+    val clustered = unique ++ Seq(
+      1L -> "alpha beta gamma delta epsilon zeta eta theta",
+      2L -> "alpha beta gamma delta epsilon zeta eta theta",
+      7L -> "alpha beta gamma delta epsilon zeta eta theta")
+    def minhashJobs(texts: Seq[(Long, String)]): Int = {
+      val sigs = sigsOf(texts)
+      val ix = sigs.filter(lit(false))
+        .select(col("doc_id"), col("sh"), col("bands"))
+      jobsOf { Dedup.admitPrehashedBounded(sigs, ix, 0.4).isLeft shouldBe true; () }
+    }
+    val centroids = Seq(Seq(1.0, 0.0, 0.0), Seq(0.0, 1.0, 0.0),
+      Seq(0.0, 0.0, 1.0))
+    def vecJobs(vecs: Seq[(Long, Seq[Double])]): Int = {
+      val asg = graft.operators.Similarity.assignCellsTable(
+          vecs.toDF("vec_id", "embedding"), centroids).localCheckpoint(true)
+      jobsOf {
+        Dedup.admitNewVecsPreassignedBounded(asg, asg.filter(lit(false)),
+          0.95).isLeft shouldBe true
+        ()
+      }
+    }
+    val distinctCells = Seq((1L, Seq(1.0, 0.0, 0.0)),
+      (2L, Seq(0.0, 1.0, 0.0)), (3L, Seq(0.0, 0.0, 1.0)))
+    val sharedCell = distinctCells :+ ((4L, Seq(0.999, 0.001, 0.0)))
+    val counts = Seq(minhashJobs(unique), minhashJobs(clustered),
+      vecJobs(distinctCells), vecJobs(sharedCell))
+    // a candidate-free MinHash batch is the single bounded take; the
+    // vector path adds its touched-cells collect; in-batch candidates
+    // add the candidate verify
+    counts shouldBe Seq(1, 4, 3, 6)
   }
 
   test("takeBounded parallelism gate: past TakeBoundedMaxParts shuffle " +

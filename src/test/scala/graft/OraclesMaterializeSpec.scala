@@ -82,6 +82,25 @@ class OraclesMaterializeSpec extends AnyFunSuite with Matchers {
     val out2 = Oracles.materialize(esc)
     out2 should include("w2 AS (PARTITION BY y)")
     (out2 should not).include("w2 AS MATERIALIZED")
+    // a '(' inside a double-quoted identifier is opaque too
+    val ident =
+      """WITH base AS (SELECT 1 AS "a(b", 2 AS y)
+        |SELECT y, SUM(y) OVER w1 AS a, MAX(y) OVER w2 AS b FROM base
+        |WINDOW w1 AS (ORDER BY "a(b"),
+        |  w2 AS (PARTITION BY y)""".stripMargin
+    val out3 = Oracles.materialize(ident)
+    out3 should include("w2 AS (PARTITION BY y)")
+    (out3 should not).include("w2 AS MATERIALIZED")
+    // ... and so is a '(' inside a `--` line comment
+    val comment =
+      """WITH base AS (SELECT 1 AS y)
+        |SELECT y, SUM(y) OVER w1 AS a, MAX(y) OVER w2 AS b FROM base
+        |WINDOW w1 AS (ORDER BY y -- tie-break (by y
+        |  ),
+        |  w2 AS (PARTITION BY y)""".stripMargin
+    val out4 = Oracles.materialize(comment)
+    out4 should include("w2 AS (PARTITION BY y)")
+    (out4 should not).include("w2 AS MATERIALIZED")
   }
 
   test("a name defined twice (nested WITH shadowing) stays inlined") {
