@@ -215,9 +215,6 @@ private[graft] object Oracles {
     * associativity MUST mirror pqTopK's explicit `+` chain. */
   private def q59OracleSql: String = q59AdcCore(10)
 
-  /** The ADC-ranked IVF-PQ retrieval as a reusable generator: top `limit`
-    * candidates per query by ADC cosine. q59 takes it at k=10 directly;
-    * q72 takes it at refine·k=20 and re-ranks by exact cosine. */
   /** q129's two Lloyd training rounds as a reusable CTE chain over `e`
     * (the raw embeddings view), ending in `ctr2` — the TRAINED coarse
     * quantizer (cv, idx), drop-in wherever [[hashCoarseCte]]'s ctr8
@@ -383,6 +380,9 @@ private[graft] object Oracles {
       |         FROM e
       |         QUALIFY ROW_NUMBER() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) <= 8)""".stripMargin
 
+  /** The ADC-ranked IVF-PQ retrieval as a reusable generator: top `limit`
+    * candidates per query by ADC cosine. q59 takes it at k=10 directly;
+    * q72 takes it at refine·k=20 and re-ranks by exact cosine. */
   private def q59AdcCore(limit: Int, coarseName: String = "ctr8",
       coarseCtes: String = hashCoarseCte): String = {
     val sPivot = (0 until 8).map(j =>

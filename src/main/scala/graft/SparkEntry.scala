@@ -829,7 +829,7 @@ object SparkEntry {
       .orderBy(col("label"), col("pos"))
 
   /** q57 — product-quantization ANN by asymmetric-distance computation
-    * (Similarity.pqTopKTable, refine=0): hash-chosen codebooks (16 codewords ×
+    * (Similarity.pqTopK, refine=0): hash-chosen codebooks (16 codewords ×
     * 8 subspaces over the 64-dim embeddings), corpus encoded to 8 codes
     * per vector, queries scored via their broadcast lookup tables. The
     * memory-compression path of billion-scale ANN (32× smaller scored
@@ -839,7 +839,7 @@ object SparkEntry {
   def q57AnnPq(s: SparkSession, dir: String): DataFrame = {
     val e = t(s, dir, "embeddings")
     val books = Similarity.pqCodebooks(e, m = 8, codewords = 16)
-    Similarity.pqTopKTable(e.filter(col("vec_id") < 5), e, 10, books)
+    Similarity.pqTopK(e.filter(col("vec_id") < 5), e, 10, books)
       .select(col("query_id"), col("neighbor_id"), col("rnk"))
   }
 
@@ -859,7 +859,7 @@ object SparkEntry {
       .orderBy(col("comp"))
   }
 
-  /** q59 — IVF-PQ ANN (Similarity.ivfPqTopKTable): the composed billion-scale
+  /** q59 — IVF-PQ ANN (Similarity.ivfPqTopK): the composed billion-scale
     * architecture — q49's hash-chosen coarse cells bound WHICH rows each
     * query scores (nProbe=2 of 8 cells), q57's PQ codes compress WHAT is
     * scored (8 codes + table lookups). Both halves are deterministic and
@@ -868,7 +868,7 @@ object SparkEntry {
     val e = t(s, dir, "embeddings")
     val centroids = Similarity.hashCentroids(e, 8)
     val books = Similarity.pqCodebooks(e, m = 8, codewords = 16)
-    Similarity.ivfPqTopKTable(e.filter(col("vec_id") < 5), e, 10, centroids, books,
+    Similarity.ivfPqTopK(e.filter(col("vec_id") < 5), e, 10, centroids, books,
       nProbe = 2)
       .select(col("query_id"), col("neighbor_id"), col("rnk"))
   }
@@ -1083,7 +1083,7 @@ object SparkEntry {
     val e = t(s, dir, "embeddings")
     val centroids = Similarity.hashCentroids(e, 8)
     val books = Similarity.pqCodebooks(e, m = 8, codewords = 16)
-    Similarity.ivfPqTopKTable(e.filter(col("vec_id") < 5), e, 10, centroids, books,
+    Similarity.ivfPqTopK(e.filter(col("vec_id") < 5), e, 10, centroids, books,
       nProbe = 2, refine = 2)
       .select(col("query_id"), col("neighbor_id"), col("rnk"))
   }

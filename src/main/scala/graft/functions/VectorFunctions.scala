@@ -65,7 +65,7 @@ object VectorFunctions {
   /** [[srpBucket]] with the plane matrix as ONE table literal — the
     * past-the-codegen-cliff form for production plane counts (the
     * unrolled form's generated source grows with nBits × dim; see
-    * [[graft.operators.Similarity.assignCellsTable]]). The sign bits
+    * [[graft.operators.Similarity.assignCells]]). The sign bits
     * sum as longs (associative), the per-plane dot is the native
     * [[dot]] inside the lambda, so the bucket id is BIT-IDENTICAL to
     * the unrolled form at any plane count (spec-pinned). */

@@ -1507,7 +1507,7 @@ object Dedup {
     // persist() here is keyed in the cache manager and would accumulate
     // across repeated invocations unless every caller remembered to
     // clear it — the admitCore idiom, not the shingle-frame one)
-    val asg = Similarity.assignCellsTable(embeddings, centroids)
+    val asg = Similarity.assignCells(embeddings, centroids)
       .localCheckpoint(true)
     val a = asg.select(col("cell"), col("vec_id").as("id_a"),
       col("embedding").as("v_a"), col("c_norm").as("n_a"))
@@ -1588,11 +1588,11 @@ object Dedup {
     admitNewVecsPreassigned(
       // the batch plan feeds the probe, the survivor self-join AND the
       // final admitted evaluation — pin one evaluation (admitCore's idiom)
-      Similarity.assignCellsTable(newVecs, centroids).localCheckpoint(true),
+      Similarity.assignCells(newVecs, centroids).localCheckpoint(true),
       standing, threshold)
 
   /** [[admitNewVecs]] over an ALREADY-ASSIGNED batch frame (the caller's
-    * pinned [[Similarity.assignCellsTable]] output under the SAME frozen
+    * pinned [[Similarity.assignCells]] output under the SAME frozen
     * centroids as the standing rows) — the one-assignment-pass-per-batch
     * ingest shape: the admission loop needs the batch's (cell, vec_id,
     * embedding, c_norm) rows twice (probe here, index fold-back after),

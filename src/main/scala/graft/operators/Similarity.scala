@@ -6,19 +6,28 @@ import graft.functions.{VectorFunctions => V}
 
 /** Similarity search over an embedding column (`array<float>`).
   *
-  * Two paths:
-  *  - [[bruteForceTopK]]: exact — broadcast the (small) query set against
-  *    the full corpus; per-partition scoring, ranking via a window
-  *    partitioned by query. The corpus side never shuffles its vectors —
-  *    only (query_id, vec_id, score) triples move, and AQE/TakeOrdered
-  *    keeps the top-k per query cheap. The baseline and the recall oracle.
-  *  - [[srpTopK]]: approximate — sign-random-projection LSH with
-  *    multi-probe (query probes its own bucket plus all 1-bit-flip
-  *    neighbors). Corpus is bucketed once (a single uniform shuffle /
-  *    or pre-materialized at write time); each query scores only its
-  *    probed buckets ⇒ cost drops from O(N·Q) to O(N·Q / 2^bits · probes).
-  *    This is the 100 TB path: bucket the corpus at ingest, broadcast the
-  *    probe list, score within buckets.
+  * Families:
+  *  - exact: [[bruteForceTopK]] — the broadcast query set scored against
+  *    the whole corpus; the baseline and the recall oracle. [[sq8TopK]]
+  *    runs it over an SQ8-reconstructed corpus.
+  *  - LSH: [[srpTopK]] — sign-random-projection buckets with 1-bit-flip
+  *    multi-probe; each query scores only its probed buckets.
+  *  - IVF: [[ivfTopK]] (KMeans quantizer) and [[ivfFlatTopK]] (fixed,
+  *    oracle-checkable centroids); the materialized artifact is
+  *    [[writeIvfFlatIndex]] → [[ivfFlatProbe]], with append, delete and
+  *    [[compactIvfFlatIndex]].
+  *  - PQ: [[pqEncode]] → [[pqTopK]] (ADC scoring) and [[ivfPqTopK]] (IVF
+  *    cells × PQ codes); the artifact is [[writeIvfPqIndex]] →
+  *    [[ivfPqProbe]], with [[compactIvfPqIndex]].
+  *  - quantizer training: [[hashCentroids]], [[lloydRefine]],
+  *    [[lloydTrain]] / [[lloydTrainSubspaces]], [[pqCodebooks]].
+  *  - evaluation: [[recallReport]], [[recallAtK]].
+  *
+  * Every search path is a composition of the same low-level pieces: one
+  * nearest-centroid distance list ([[withCell]], for the argmin and the
+  * probe side alike), one probe-and-score join ([[scorePairs]]), one
+  * cosine expression ([[cosine]]), one top-k ranking ([[rankTopK]]) and,
+  * for the artifacts, one compaction fold ([[foldArtifact]]).
   */
 object Similarity {
 
@@ -41,22 +50,47 @@ object Similarity {
     * reduces, through the same code path (no parallel reimplementation
     * to drift). */
   private[graft] def bruteScored(queries: DataFrame,
-      corpus: DataFrame): DataFrame = {
-    val q = queries.select(col("vec_id").as("query_id"), col("embedding").as("q_vec"),
-      V.l2Norm(col("embedding")).as("q_norm"))
-    // the N·Q scoring pass below inherits the corpus scan's partitioning —
-    // guard it against a single-split input (see Parallelism)
-    val c = Parallelism.ensureMinPartitions(
-        corpus.select(col("vec_id"), col("embedding")), col("vec_id"))
-      .select(col("vec_id").as("neighbor_id"), col("embedding").as("c_vec"),
-        V.l2Norm(col("embedding")).as("c_norm"))
-    val denom = col("q_norm") * col("c_norm")
-    c.crossJoin(broadcast(q))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        when(denom === 0.0, 0.0)
-          .otherwise(V.dot(col("q_vec"), col("c_vec")) / denom).as("cosine"))
+      corpus: DataFrame): DataFrame =
+    scorePairs(exactSide(corpusVecs(corpus), "neighbor_id", "c_vec", "c_norm"),
+      exactSide(queries, "query_id", "q_vec", "q_norm"), None, exactCosine)
+
+  /** The corpus (vec_id, embedding) rows a scoring pass runs over: the
+    * N·Q pass inherits the corpus scan's partitioning, so it is guarded
+    * against a single-split input (see Parallelism). */
+  private def corpusVecs(corpus: DataFrame): DataFrame =
+    Parallelism.ensureMinPartitions(
+      corpus.select(col("vec_id"), col("embedding")), col("vec_id"))
+
+  /** One side of an exact-cosine pair: (vec_id, embedding) renamed to
+    * (`id`, `vec`) plus its L2 norm as `norm` — norms are computed once
+    * per row, never per scored pair. */
+  private def exactSide(df: DataFrame, id: String, vec: String,
+      norm: String): DataFrame =
+    df.select(col("vec_id").as(id), col("embedding").as(vec),
+      V.l2Norm(col("embedding")).as(norm))
+
+  /** `dot`/(q_norm·`norm`), 0 when the denominator is 0 — the one IEEE
+    * op order of every cosine here, exact and ADC alike, and of the
+    * oracles that replay them. */
+  private def cosine(dot: Column, norm: Column): Column = {
+    val denom = col("q_norm") * norm
+    when(denom === 0.0, 0.0).otherwise(dot / denom)
   }
+
+  /** Exact cosine of a (q_vec, q_norm) × (c_vec, c_norm) pair row. */
+  private def exactCosine: Column =
+    cosine(V.dot(col("q_vec"), col("c_vec")), col("c_norm"))
+
+  /** The probe-and-score join every search path shares: corpus rows `c`
+    * (neighbor_id, …) against the broadcast query side `q` (query_id, …)
+    * on the probed `key` — every pair when there is none — self-matches
+    * dropped, scored by `score` as `cosine`. Only (query_id, neighbor_id,
+    * cosine) triples leave it; the corpus side never shuffles vectors. */
+  private def scorePairs(c: DataFrame, q: DataFrame, key: Option[String],
+      score: Column): DataFrame =
+    key.fold(c.crossJoin(broadcast(q)))(k => c.join(broadcast(q), Seq(k)))
+      .filter(col("neighbor_id") =!= col("query_id"))
+      .select(col("query_id"), col("neighbor_id"), score.as("cosine"))
 
   /** (query_id, neighbor_id, cosine) → top-k per query with dense 1-based
     * rnk, via the bounded aggregator. */
@@ -81,8 +115,7 @@ object Similarity {
   private[graft] def srpScored(queries: DataFrame, corpus: DataFrame,
       nBits: Int, dim: Int, seed: Long): DataFrame = {
     val planes = V.randomPlanes(nBits, dim, seed)
-    val c = Parallelism.ensureMinPartitions(
-        corpus.select(col("vec_id"), col("embedding")), col("vec_id"))
+    val c = corpusVecs(corpus)
       .select(col("vec_id").as("neighbor_id"),
         col("embedding").as("c_vec"),
         V.srpBucketTable(col("embedding"), planes).as("bucket"))
@@ -96,10 +129,7 @@ object Similarity {
       V.srpBucketTable(col("embedding"), planes).as("q_bucket"))
       .withColumn("bucket", explode(probes))
       .drop("q_bucket")
-    c.join(broadcast(q), Seq("bucket"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        V.cosine(col("q_vec"), col("c_vec")).as("cosine"))
+    scorePairs(c, q, Some("bucket"), V.cosine(col("q_vec"), col("c_vec")))
       // a vector probed via multiple flipped buckets can pair twice
       .dropDuplicates("query_id", "neighbor_id")
   }
@@ -116,8 +146,7 @@ object Similarity {
       trainBound: Option[String] = None): DataFrame = {
     import org.apache.spark.ml.clustering.KMeans
     import org.apache.spark.ml.functions.array_to_vector
-    val c0 = Parallelism.ensureMinPartitions(
-        corpus.select(col("vec_id"), col("embedding")), col("vec_id"))
+    val c0 = corpusVecs(corpus)
       .select(col("vec_id").as("neighbor_id"),
         col("embedding").as("c_vec"),
         array_to_vector(col("embedding")).as("feat"))
@@ -144,20 +173,22 @@ object Similarity {
     // nearest cells
     val ctrTable = typedlit(model.clusterCenters.map(_.toArray.toSeq).toSeq)
     val cells = transform(ctrTable, (c, i) =>
-      struct(V.l2Sq(col("q_vec"), c).as("d"), i.as("list_id")))
-    val q = queries.select(col("vec_id").as("query_id"), col("embedding").as("q_vec"),
-      V.l2Norm(col("embedding")).as("q_norm"))
-      .withColumn("probe", slice(array_sort(cells), 1, nProbe))
-      .withColumn("list_id", explode(col("probe").getField("list_id")))
-      .drop("probe")
-    val denom = col("q_norm") * col("c_norm")
-    val scored = c.join(broadcast(q), Seq("list_id"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        when(denom === 0.0, 0.0)
-          .otherwise(V.dot(col("q_vec"), col("c_vec")) / denom).as("cosine"))
-    rankTopK(scored, k)
+      struct(V.l2Sq(col("q_vec"), c).as("d"), i.as("idx")))
+    val q = exactSide(queries, "query_id", "q_vec", "q_norm")
+      .withColumn("list_id", nearest(nProbe)(cells))
+    rankTopK(scorePairs(c, q, Some("list_id"), exactCosine), k)
   }
+
+  /** The probe side: the ids of the `nProbe` nearest entries of a
+    * (d, idx) distance list, one row each — array_sort's struct order
+    * (distance, then the lower index) is the argmin's tie rule. */
+  private def nearest(nProbe: Int)(dists: Column): Column =
+    explode(slice(array_sort(dists), 1, nProbe).getField("idx"))
+
+  /** The argmin side: the index of the nearest entry of a (d, idx)
+    * distance list, same tie rule as [[nearest]]. */
+  private def argmin(dists: Column): Column =
+    array_min(dists).getField("idx")
 
   /** Hash-chosen centroids for [[ivfFlatTopK]]: the `n` corpus vectors
     * with the smallest md5(id) — a deterministic, training-free centroid
@@ -169,17 +200,62 @@ object Similarity {
       .select(col("embedding").cast("array<double>"))
       .collect().map(_.getSeq[Double](0).toSeq).toSeq
 
-  /** Per-centroid (distance, idx) structs for argmin cell assignment.
-    * Distances use `ip(v,v) - 2·ip(v,c) + ip(c,c)` so every term is a
-    * native dot product (engine-portable: the identical expression over
+  /** Per-centroid (distance, idx) structs for argmin cell assignment,
+    * unrolled: one literal struct branch per centroid. Distances use
+    * `ip(v,v) - 2·ip(v,c) + ip(c,c)` so every term is a native dot
+    * product (engine-portable: the identical expression over
     * `list_inner_product` reproduces it bit-for-bit); argmin ties break
-    * to the lower cell index. */
+    * to the lower cell index. Only [[assignCellsUnrolled]], the spec
+    * reference for [[withCell]], builds it. */
   private def cellStructs(vec: Column, centroids: Seq[Seq[Double]]): Column =
     array(centroids.zipWithIndex.map { case (ctr, i) =>
       val c = array(ctr.map(lit): _*)
       struct((V.dot(vec, vec) - lit(2.0) * V.dot(vec, c) + V.dot(c, c)).as("d"),
         lit(i).as("idx"))
     }: _*)
+
+  /** VecDot's exact summation loop (sequential left fold in double
+    * precision), run driver-side — the self-dot tables below must be
+    * bit-identical to what a constant-folded VecDot(c, c) over literals
+    * produces, and IEEE addition is order-sensitive. */
+  private def leftFoldDot(a: Seq[Double], b: Seq[Double]): Double = {
+    val n = math.min(a.size, b.size)
+    var s = 0.0
+    var i = 0
+    while (i < n) { s += a(i) * b(i); i += 1 }
+    s
+  }
+
+  /** THE nearest-centroid step: attach `cell` = `pick` of the per-centroid
+    * (d, idx) distance list of the `vec` column — [[argmin]] for the
+    * corpus-side assignment, [[nearest]] for a query's probe cells.
+    *
+    * The centroids ride the plan as ONE array-of-arrays literal plus a
+    * driver-computed self-dot table ([[leftFoldDot]], the exact fold),
+    * and the candidate loop is a `transform` over it — an O(1)-node plan
+    * at any nCells. [[cellStructs]]' unrolled form puts nCells struct
+    * branches × dim-literal arrays into the generated source, and Janino
+    * compile cost grows superlinearly with that: at 64 centroids × 64
+    * dims an assignment STAGE spent seconds compiling a multi-megabyte
+    * method (the argmin itself is milliseconds). The distance is the
+    * IDENTICAL IEEE tree (`(v·v − 2.0·(v·c)) + c·c`; HOF dot ≡ native
+    * VecDot is spec-pinned), so cells are bit-equal to the unrolled form
+    * — asserted by spec, and by every oracle downstream of a caller. The
+    * per-centroid dot rides the lambda as the native VecDot (a tight
+    * array loop — HOF-composed aggregate/zip_with lambdas cost ~5× per
+    * element); v·v is loop-invariant, so it is hoisted into its own
+    * projection instead of recomputed nCells× per row. */
+  private def withCell(df: DataFrame, vec: String,
+      centroids: Seq[Seq[Double]])(pick: Column => Column): DataFrame = {
+    val v = col(vec)
+    val selfDots = typedlit(centroids.map(c => leftFoldDot(c, c)))
+    val dists = transform(typedlit(centroids), (c, i) =>
+      struct(((col("__vv") - lit(2.0) * V.dot(v, c))
+        + element_at(selfDots, i + 1)).as("d"), i.as("idx")))
+    df.withColumn("__vv", V.dot(v, v))
+      .withColumn("cell", pick(dists))
+      .drop("__vv")
+  }
 
   /** One QUANTIZED Lloyd refinement round over fixed seed centroids: each
     * vector joins its nearest centroid (same argmin as [[ivfFlatTopK]]),
@@ -195,9 +271,8 @@ object Similarity {
   def lloydRefine(corpus: DataFrame, centroids: Seq[Seq[Double]],
       scale: Double = 1e6): Seq[Seq[Double]] = {
     val dim = centroids.head.size
-    val sums = corpus
-      .select(col("embedding").cast("array<double>").as("v"))
-      .withColumn("cell", array_min(cellStructs(col("v"), centroids)).getField("idx"))
+    val sums = withCell(corpus.select(col("embedding").cast("array<double>").as("v")),
+        "v", centroids)(argmin)
       .select(col("cell"), posexplode(col("v")).as(Seq("dim", "x")))
       .groupBy(col("cell"), col("dim"))
       .agg(sum(floor(col("x") * lit(scale)).cast("long")).as("s"),
@@ -267,60 +342,11 @@ object Similarity {
     * (cell, pos, centroid_q, n) with 1-based pos — feed
     * `centroid_q / scale` to [[ivfFlatTopK]] as trained centroids. */
   def lloydTrain(corpus: DataFrame, nCells: Int, rounds: Int = 2,
-      scale: Double = 1e6): DataFrame = {
-    require(rounds >= 1, "rounds must be >= 1")
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val vecs = lloydVecs(corpus)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var ctr = hashCentroids(corpus, nCells).zipWithIndex
-      .map { case (c, i) => (i, c) }.toDF("cell", "cv")
-    var sums: DataFrame = null
-    for (r <- 1 to rounds) {
-      // v·v is loop-invariant per vector — projected ONCE per row before
-      // the centroid fan-out (the assignCellsTable hoist; inline it
-      // would re-run the dim-length dot nCells× per vector per round)
-      val withC = vecs.withColumn("__vv", V.dot(col("v"), col("v")))
-        .crossJoin(
-          broadcast(ctr.withColumn("cc", V.dot(col("cv"), col("cv")))))
-      val d = (col("__vv") - lit(2.0) * V.dot(col("v"), col("cv"))) +
-        col("cc")
-      val asg = withC
-        .select(col("vec_id"), col("v"),
-          struct(d.as("d"), col("cell").as("c")).as("dc"))
-        .groupBy(col("vec_id"))
-        // every row of a vec_id group carries the identical v — first()
-        // is deterministic here and avoids grouping on an array key
-        .agg(min(col("dc")).as("m"), first(col("v")).as("v"))
-        .select(col("vec_id"), col("m.c").as("cell"), col("v"))
-      sums = asg
-        .select(col("cell"), posexplode(col("v")).as(Seq("pos0", "x")))
-        .groupBy(col("cell"), col("pos0"))
-        .agg(sum(floor(col("x") * scale).cast("long")).as("s"),
-          count(lit(1)).as("n"))
-        .localCheckpoint()
-      if (r < rounds) {
-        val next = sums
-          .select(col("cell"), col("pos0"),
-            (floor(col("s").cast("double") / col("n").cast("double"))
-              .cast("long").cast("double") / scale).as("cx"))
-          .groupBy(col("cell"))
-          .agg(transform(
-            array_sort(collect_list(struct(col("pos0"), col("cx")))),
-            s => s.getField("cx")).as("new_cv"))
-        ctr = ctr.select(col("cell"), col("cv").as("seed_cv"))
-          .join(next, Seq("cell"), "left")
-          .select(col("cell"),
-            coalesce(col("new_cv"), col("seed_cv")).as("cv"))
-          .localCheckpoint()
-      }
-    }
-    vecs.unpersist()
-    sums.select(col("cell"), (col("pos0") + 1).as("pos"),
-      floor(col("s").cast("double") / col("n").cast("double"))
-        .cast("long").as("centroid_q"),
-      col("n"))
-  }
+      scale: Double = 1e6): DataFrame =
+    // m = 1: one subspace spanning the whole vector, so the `j` join
+    // pairs every vector with all nCells centroids
+    lloydTrainSubspaces(corpus, m = 1, codewords = nCells, rounds, scale)
+      .select(col("code").as("cell"), col("pos"), col("centroid_q"), col("n"))
 
   /** Per-subspace PQ codebook TRAINING — [[lloydTrain]]'s distributed
     * quantized Lloyd iteration run over all `m` subspaces in ONE job:
@@ -344,7 +370,8 @@ object Similarity {
     val spark = corpus.sparkSession
     import spark.implicits._
     val base = hashCentroids(corpus, codewords)
-    val dim = base.head.size
+    // an empty corpus has no seeds: no cell is trained, the result is empty
+    val dim = base.headOption.fold(0)(_.size)
     require(dim % m == 0, s"dim $dim not divisible into $m subspaces")
     val sub = dim / m
     var ctr = (for {
@@ -353,8 +380,7 @@ object Similarity {
     } yield (j, c, v.slice(j * sub, (j + 1) * sub)))
       .toDF("j", "code", "cv")
     // slice every vector once, up front; the per-round passes then scan
-    // (vec_id, j, sv) rows — persisted across rounds like lloydTrain's
-    // vecs frame
+    // the persisted (vec_id, j, sv) rows
     val vecs = lloydVecs(corpus)
       .select(col("vec_id"), explode(array((0 until m).map(j =>
         struct(lit(j).as("j"),
@@ -363,6 +389,9 @@ object Similarity {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     var sums: DataFrame = null
     for (r <- 1 to rounds) {
+      // v·v is loop-invariant per slice — projected ONCE per row before
+      // the codeword fan-out (inline it would re-run the dot codewords×
+      // per slice per round)
       val withC = vecs.withColumn("__vv", V.dot(col("sv"), col("sv")))
         .join(broadcast(ctr.withColumn("cc", V.dot(col("cv"), col("cv")))),
           Seq("j"))
@@ -439,38 +468,18 @@ object Similarity {
     * its nearest centroid by squared L2; queries probe their `nProbe`
     * nearest cells. The deterministic, oracle-checkable counterpart of
     * [[ivfTopK]]'s KMeans quantizer — same probe/score shape, zero
-    * training passes (see [[cellStructs]] for the portable distance). */
+    * training passes (see [[withCell]] for the portable distance). */
   def ivfFlatTopK(queries: DataFrame, corpus: DataFrame, k: Int,
       centroids: Seq[Seq[Double]], nProbe: Int = 2): DataFrame = {
-    // corpus-side assignment via the table-literal form (bit-identical;
-    // safe at production centroid counts) — the query side keeps the
-    // unrolled sort/slice: it needs the full (d, idx) ordering for
-    // nProbe and runs on query-count rows only
-    val c = assignCellsTable(Parallelism.ensureMinPartitions(
-        corpus.select(col("vec_id"), col("embedding")), col("vec_id")), centroids)
+    val c = assignCells(corpusVecs(corpus), centroids)
       .select(col("vec_id").as("neighbor_id"), col("embedding").as("c_vec"),
         col("c_norm"), col("cell"))
-    val q = queries.select(col("vec_id").as("query_id"),
-      col("embedding").as("q_vec"), V.l2Norm(col("embedding")).as("q_norm"))
-      .withColumn("probe", slice(array_sort(probeStructsTable(col("q_vec"), centroids)), 1, nProbe))
-      .withColumn("cell", explode(col("probe").getField("idx")))
-      .drop("probe")
-    val denom = col("q_norm") * col("c_norm")
-    val scored = c.join(broadcast(q), Seq("cell"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        when(denom === 0.0, 0.0)
-          .otherwise(V.dot(col("q_vec"), col("c_vec")) / denom).as("cosine"))
-      .dropDuplicates("query_id", "neighbor_id")
-    rankTopK(scored, k)
+    val q = withCell(exactSide(queries, "query_id", "q_vec", "q_norm"),
+      "q_vec", centroids)(nearest(nProbe))
+    rankTopK(scorePairs(c, q, Some("cell"), exactCosine)
+      .dropDuplicates("query_id", "neighbor_id"), k)
   }
 
-  /** Product-quantization codebooks: the full-vector [[hashCentroids]]
-    * pick (the `codewords` corpus vectors with smallest md5(id)) sliced
-    * into `m` subspaces — codebooks(j) is subspace j's codeword list.
-    * Deterministic and derivable in plain SQL, so the whole PQ path
-    * stays oracle-checkable (the reason KMeans-trained codebooks are not
-    * the default — see [[ivfTopK]] vs [[ivfFlatTopK]]). */
   /** Scalar quantization (SQ8) — the third compression point on the ANN
     * ladder (exact → SQ8 → PQ): each dimension maps to a uint8 code by
     * its OWN corpus [min, max] range, 4× smaller than float32 at far
@@ -534,6 +543,12 @@ object Similarity {
     (exploded, stats)
   }
 
+  /** Product-quantization codebooks: the full-vector [[hashCentroids]]
+    * pick (the `codewords` corpus vectors with smallest md5(id)) sliced
+    * into `m` subspaces — codebooks(j) is subspace j's codeword list.
+    * Deterministic and derivable in plain SQL, so the whole PQ path
+    * stays oracle-checkable (the reason KMeans-trained codebooks are not
+    * the default — see [[ivfTopK]] vs [[ivfFlatTopK]]). */
   def pqCodebooks(corpus: DataFrame, m: Int,
       codewords: Int): Seq[Seq[Seq[Double]]] = {
     val base = hashCentroids(corpus, codewords)
@@ -543,23 +558,33 @@ object Similarity {
     (0 until m).map(j => base.map(v => v.slice(j * sub, (j + 1) * sub)))
   }
 
-  /** Argmin codeword index for one subspace slice — [[cellStructs]]'s
-    * distance (every term a native dot product, ties to the lower index)
-    * over the sliced vector. `selfDot` is ip(slice, slice), passed in as
+  /** The flattened j-major codeword table (index j·codewords + c) and its
+    * self-dot table ([[leftFoldDot]]) as TWO typed-literal array columns.
+    * m×codewords separate literal expression trees would be fine at 16×8,
+    * but at production codebook sizes (256 codewords × 16 subspaces =
+    * 4096 literal vectors) that plan shape is the known Janino
+    * whole-stage-codegen failure mode (compile blows the method-size
+    * limit and falls back to interpreted). One array literal is a SINGLE
+    * constant in the generated code regardless of codeword count, so
+    * every PQ plan stays O(m) nodes. */
+  private def cwTables(codebooks: Seq[Seq[Seq[Double]]]): (Column, Column) = {
+    val flat = codebooks.flatten
+    (typedLit(flat), typedLit(flat.map(v => leftFoldDot(v, v))))
+  }
+
+  /** Argmin codeword index for one subspace slice — [[withCell]]'s
+    * distance (every term a dot product, ties to the lower index) over
+    * the sliced vector, the candidate loop a HOF over subspace j's slice
+    * of the codeword table. `selfDot` is ip(slice, slice), passed in as
     * a pre-projected attribute because it is constant across the
     * codeword candidates — inlining it would recompute the same dot
     * `codewords` times per subspace; the substitution leaves the IEEE
-    * op order of each distance unchanged. ip(c,c) is a dot over
-    * literals — Catalyst constant-folds it through the same VecDot eval
-    * the oracle's list_inner_product mirrors, so it costs nothing at
-    * runtime and still matches bit-for-bit. */
-  private def pqCode(vecSlice: Column, selfDot: Column,
-      cws: Seq[Seq[Double]]): Column =
-    array_min(array(cws.zipWithIndex.map { case (cwv, i) =>
-      val c = array(cwv.map(lit): _*)
-      struct((selfDot - lit(2.0) * V.dot(vecSlice, c)
-        + V.dot(c, c)).as("d"), lit(i).as("idx"))
-    }: _*)).getField("idx")
+    * op order of each distance ((self − 2·dot) + ‖c‖²) unchanged. */
+  private def pqCode(vecSlice: Column, selfDot: Column, table: Column,
+      nsq: Column, j: Int, cw: Int): Column =
+    argmin(transform(slice(table, j * cw + 1, cw), (cwv, c) =>
+      struct((selfDot - lit(2.0) * V.dot(vecSlice, cwv)
+        + element_at(nsq, lit(j * cw + 1) + c)).as("d"), c.as("idx"))))
 
   /** PQ-encode a corpus: (vec_id, codes) where codes(j) is the nearest
     * codeword index of subspace j's slice. THE memory lever of
@@ -569,30 +594,36 @@ object Similarity {
     * pass — the subspace slices and their self-dots are projected as
     * attributes first (multi-referenced non-cheap expressions, so
     * CollapseProject keeps the boundaries), leaving m × codewords small
-    * query-codeword dots per row, no shuffle. */
+    * query-codeword dots per row, no shuffle. With `cellCentroids`, the
+    * IVF cell ([[withCell]]'s argmin) rides the same pass as a `cell`
+    * column — never a second corpus-sized join just to attach it. */
   def pqEncode(corpus: DataFrame, codebooks: Seq[Seq[Seq[Double]]],
       cellCentroids: Seq[Seq[Double]] = Nil): DataFrame = {
     val m = codebooks.size
+    val cw = codebooks.head.size
     val sub = codebooks.head.head.size
-    // cell assignment (IVF-PQ) rides the same pass: the full vector is
-    // carried through the slice projections and argmin'd once — never a
-    // second corpus-sized join just to attach the cell id
-    val carry = if (cellCentroids.nonEmpty) Seq(col("embedding")) else Nil
-    val sliced = Parallelism.ensureMinPartitions(
-        corpus.select(col("vec_id"), col("embedding")), col("vec_id"))
-      .select((col("vec_id") +: carry) ++ (0 until m).map(j =>
-        slice(col("embedding"), j * sub + 1, sub).as(s"s_$j")): _*)
-    val withSelf = sliced
-      .select((col("vec_id") +: carry) ++ (0 until m).flatMap(j => Seq(col(s"s_$j"),
-        V.dot(col(s"s_$j"), col(s"s_$j")).as(s"ss_$j"))): _*)
-    val cellCol =
-      if (cellCentroids.isEmpty) Nil
-      else Seq(array_min(cellStructs(col("embedding"), cellCentroids))
-        .getField("idx").as("cell"))
-    withSelf.select(col("vec_id") +: cellCol :+
-      array((0 until m).map(j =>
-        pqCode(col(s"s_$j"), col(s"ss_$j"), codebooks(j))): _*).as("codes"): _*)
+    val (table, nsq) = cwTables(codebooks)
+    val vecs = corpusVecs(corpus)
+    val (cells, keep) =
+      if (cellCentroids.isEmpty) (vecs, Seq(col("vec_id")))
+      else (withCell(vecs, "embedding", cellCentroids)(argmin),
+        Seq(col("vec_id"), col("cell")))
+    val sliced = cells.select(keep ++ (0 until m).map(j =>
+      slice(col("embedding"), j * sub + 1, sub).as(s"s_$j")): _*)
+    val withSelf = sliced.select(keep ++ (0 until m).flatMap(j => Seq(col(s"s_$j"),
+      V.dot(col(s"s_$j"), col(s"s_$j")).as(s"ss_$j"))): _*)
+    withSelf.select(keep :+ array((0 until m).map(j =>
+      pqCode(col(s"s_$j"), col(s"ss_$j"), table, nsq, j, cw)): _*).as("codes"): _*)
   }
+
+  /** [[pqEncode]] plus the reconstruction norm: it depends on the CODES
+    * alone, so it is computed once per corpus row, never per scored
+    * pair — one lookup per subspace into the codeword self-dot table
+    * (j-major like the lut). */
+  private def encodeWithNorm(corpus: DataFrame, codebooks: Seq[Seq[Seq[Double]]],
+      cellCentroids: Seq[Seq[Double]] = Nil): DataFrame =
+    pqEncode(corpus, codebooks, cellCentroids)
+      .withColumn("recon_norm", sqrt(adcLookupSum(codebooks, cwTables(codebooks)._2)))
 
   /** PQ top-k by asymmetric-distance computation (ADC): each query
     * precomputes a lookup table of sub-dot-products against every
@@ -607,7 +638,9 @@ object Similarity {
     * with the cosine baseline). Every sum is an EXPLICIT left-associated
     * chain (not a fold or SQL SUM whose order an engine may choose), so
     * scores are bit-identical across engines and the ranking (score DESC,
-    * id ASC — [[TopK]]'s tie rule) is oracle-checkable.
+    * id ASC — [[TopK]]'s tie rule) is oracle-checkable. Codebooks ride
+    * the plan as one table literal ([[cwTables]]), so the plan size is
+    * independent of the codeword count.
     *
     * `refine` = 0 ranks purely by ADC (the deterministic driver-surface
     * path); `refine` = r > 0 takes the top r·k ADC candidates per query
@@ -615,181 +648,19 @@ object Similarity {
     * standard two-stage retrieval, paying the exact dot product for r·k
     * rows per query instead of the whole corpus. */
   def pqTopK(queries: DataFrame, corpus: DataFrame, k: Int,
-      codebooks: Seq[Seq[Seq[Double]]], refine: Int = 0): DataFrame = {
-    val q = adcQuerySide(queries, codebooks).drop("embedding")
-    val scored = withReconNorm(pqEncode(corpus, codebooks), codebooks)
-      .crossJoin(broadcast(q))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        adcCosine(codebooks).as("cosine"))
-    finishAdc(scored, k, refine, queries, corpus)
-  }
+      codebooks: Seq[Seq[Seq[Double]]], refine: Int = 0): DataFrame =
+    finishAdc(adcScored(encodeWithNorm(corpus, codebooks),
+      adcQuerySide(queries, codebooks).drop("embedding"), None, codebooks),
+      k, refine, queries, corpus)
 
   /** Query side of ADC scoring: (query_id, lut, q_norm, embedding) —
     * the lookup table holds the sub-dot-products of this query against
-    * every codeword, flattened j-major. The raw embedding rides along
-    * for callers that still need it (cell probing); drop it otherwise. */
+    * every codeword, flattened j-major, built by m HOFs over the codeword
+    * table (slices projected as attributes FIRST — a slice inside the
+    * lambda would re-evaluate per codeword, the documented HOF re-eval
+    * trap). The raw embedding rides along for the cell probe; drop it
+    * otherwise. */
   private def adcQuerySide(queries: DataFrame,
-      codebooks: Seq[Seq[Seq[Double]]]): DataFrame = {
-    val cw = codebooks.head.size
-    val sub = codebooks.head.head.size
-    val lutTerms = for { j <- codebooks.indices; c <- 0 until cw } yield
-      V.dot(slice(col("embedding"), j * sub + 1, sub),
-        array(codebooks(j)(c).map(lit): _*))
-    queries.select(col("vec_id").as("query_id"),
-      array(lutTerms: _*).as("lut"),
-      V.l2Norm(col("embedding")).as("q_norm"), col("embedding"))
-  }
-
-  /** The left-associated m-term lookup sum over `table`, indexed by the
-    * row's `codes` — the EXPLICIT `+` chain whose op order the oracles
-    * replay (a fold or SQL SUM could re-associate). */
-  private def adcLookupSum(codebooks: Seq[Seq[Seq[Double]]],
-      table: Column): Column = {
-    val cw = codebooks.head.size
-    codebooks.indices.map(j =>
-        element_at(table, lit(j * cw + 1) + element_at(col("codes"), j + 1)))
-      .reduceLeft(_ + _)
-  }
-
-  /** Attach the reconstruction norm to the encoded corpus side: it
-    * depends on the CODES alone, so it is computed once per corpus row,
-    * never per scored pair. The codeword-norm² table is all-literal dots
-    * (j-major like the lut) built from the same V.dot as the oracle's
-    * list_inner_product and constant-folded via VecDot.foldable. */
-  private def withReconNorm(enc: DataFrame,
-      codebooks: Seq[Seq[Seq[Double]]]): DataFrame = {
-    val normSqTerms = for { j <- codebooks.indices; c <- codebooks.head.indices } yield {
-      val cwv = array(codebooks(j)(c).map(lit): _*)
-      V.dot(cwv, cwv)
-    }
-    enc.withColumn("recon_norm",
-      sqrt(adcLookupSum(codebooks, array(normSqTerms: _*))))
-  }
-
-  /** ADC cosine over a scored pair row: lut-sum / (|q|·|recon|), 0 when
-    * the denominator is 0 — identical shape to the exact cosine. */
-  private def adcCosine(codebooks: Seq[Seq[Seq[Double]]]): Column = {
-    val denom = col("q_norm") * col("recon_norm")
-    when(denom === 0.0, 0.0)
-      .otherwise(adcLookupSum(codebooks, col("lut")) / denom)
-  }
-
-  /** Common tail of the ADC paths: rank by ADC directly (refine ≤ 0) or
-    * take the top refine·k ADC candidates and re-rank them by exact
-    * cosine against the true vectors. */
-  private def finishAdc(scored: DataFrame, k: Int, refine: Int,
-      queries: DataFrame, corpus: DataFrame): DataFrame =
-    if (refine <= 0) rankTopK(scored, k).withColumnRenamed("cosine", "adc")
-    else {
-      val cand = rankTopK(scored, refine * k).select("query_id", "neighbor_id")
-      val c = corpus.select(col("vec_id").as("neighbor_id"),
-        col("embedding").as("c_vec"), V.l2Norm(col("embedding")).as("c_norm"))
-      val qv = queries.select(col("vec_id").as("query_id"),
-        col("embedding").as("q_vec"), V.l2Norm(col("embedding")).as("q_norm"))
-      val denom = col("q_norm") * col("c_norm")
-      rankTopK(cand
-        .join(c, Seq("neighbor_id"))
-        .join(broadcast(qv), Seq("query_id"))
-        .select(col("query_id"), col("neighbor_id"),
-          when(denom === 0.0, 0.0)
-            .otherwise(V.dot(col("q_vec"), col("c_vec")) / denom).as("cosine")), k)
-    }
-
-  /** IVF-PQ: the composed billion-scale ANN architecture — [[ivfFlatTopK]]'s
-    * coarse cells bound WHICH corpus rows each query scores (nProbe cells
-    * instead of everything), [[pqTopK]]'s codes compress WHAT is scored
-    * (m-byte codes + table lookups instead of full vectors). Cost per
-    * query drops multiplicatively: N/cells·nProbe candidates × m lookups
-    * each. Same determinism contract as both halves (hash-chosen
-    * centroids/codebooks, left-associated sums), so the composition
-    * stays oracle-checkable end to end; `refine` adds the exact re-rank
-    * stage over the surviving candidates exactly as in [[pqTopK]]. */
-  def ivfPqTopK(queries: DataFrame, corpus: DataFrame, k: Int,
-      centroids: Seq[Seq[Double]], codebooks: Seq[Seq[Seq[Double]]],
-      nProbe: Int = 2, refine: Int = 0): DataFrame = {
-    val q = adcQuerySide(queries, codebooks)
-      .withColumn("cell",
-        explode(slice(array_sort(probeStructsTable(col("embedding"), centroids)),
-          1, nProbe).getField("idx")))
-      .drop("embedding")
-    val scored = withReconNorm(
-        pqEncode(corpus, codebooks, cellCentroids = centroids), codebooks)
-      .join(broadcast(q), Seq("cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        adcCosine(codebooks).as("cosine"))
-    finishAdc(scored, k, refine, queries, corpus)
-  }
-
-  /** VecDot's exact summation loop (sequential left fold in double
-    * precision), run driver-side — the codeword self-dot table below must
-    * be bit-identical to what the literal path's constant-folded
-    * VecDot(c, c) produces, and IEEE addition is order-sensitive. */
-  private def leftFoldDot(a: Seq[Double], b: Seq[Double]): Double = {
-    val n = math.min(a.size, b.size)
-    var s = 0.0
-    var i = 0
-    while (i < n) { s += a(i) * b(i); i += 1 }
-    s
-  }
-
-  /** The flattened j-major codeword table (index j·codewords + c) and its
-    * self-dot table as TWO typed-literal array columns. The literal-forest
-    * form ([[pqCode]]/[[adcQuerySide]]) builds m×codewords separate
-    * literal expression trees — fine at 16×8, but at production codebook
-    * sizes (256 codewords × 16 subspaces = 4096 literal vectors) that
-    * plan shape is the known Janino whole-stage-codegen failure mode
-    * (compile blows the method-size limit and falls back to interpreted).
-    * One array literal is a SINGLE constant in the generated code
-    * regardless of codeword count, so the plan stays O(m) nodes. */
-  private def cwTables(codebooks: Seq[Seq[Seq[Double]]]): (Column, Column) = {
-    val flat = codebooks.flatten
-    (typedLit(flat), typedLit(flat.map(v => leftFoldDot(v, v))))
-  }
-
-  /** Table form of [[pqCode]]: argmin codeword index for one subspace
-    * slice, the candidate loop a HOF over the table slice instead of
-    * m×codewords inlined literal trees. Same distance expression in the
-    * same IEEE op order ((self − 2·dot) + ‖c‖²), same tie rule (struct
-    * min: distance then index) — bit-equal by construction, pinned in
-    * VectorAndSimilaritySpec. */
-  private def pqCodeTable(vecSlice: Column, selfDot: Column, table: Column,
-      nsq: Column, j: Int, cw: Int): Column =
-    array_min(transform(slice(table, j * cw + 1, cw), (cwv, c) =>
-      struct((selfDot - lit(2.0) * V.dot(vecSlice, cwv)
-        + element_at(nsq, lit(j * cw + 1) + c)).as("d"), c.as("idx"))))
-      .getField("idx")
-
-  /** Table form of [[pqEncode]] — identical output, O(m)-node plan. */
-  def pqEncodeTable(corpus: DataFrame, codebooks: Seq[Seq[Seq[Double]]],
-      cellCentroids: Seq[Seq[Double]] = Nil): DataFrame = {
-    val m = codebooks.size
-    val cw = codebooks.head.size
-    val sub = codebooks.head.head.size
-    val (table, nsq) = cwTables(codebooks)
-    val carry = if (cellCentroids.nonEmpty) Seq(col("embedding")) else Nil
-    val sliced = Parallelism.ensureMinPartitions(
-        corpus.select(col("vec_id"), col("embedding")), col("vec_id"))
-      .select((col("vec_id") +: carry) ++ (0 until m).map(j =>
-        slice(col("embedding"), j * sub + 1, sub).as(s"s_$j")): _*)
-    val withSelf = sliced
-      .select((col("vec_id") +: carry) ++ (0 until m).flatMap(j => Seq(col(s"s_$j"),
-        V.dot(col(s"s_$j"), col(s"s_$j")).as(s"ss_$j"))): _*)
-    val cellCol =
-      if (cellCentroids.isEmpty) Nil
-      else Seq(array_min(cellStructs(col("embedding"), cellCentroids))
-        .getField("idx").as("cell"))
-    withSelf.select(col("vec_id") +: cellCol :+
-      array((0 until m).map(j =>
-        pqCodeTable(col(s"s_$j"), col(s"ss_$j"), table, nsq, j, cw)): _*).as("codes"): _*)
-  }
-
-  /** Table form of [[adcQuerySide]]: the per-query lut built by m HOFs
-    * over the codeword table (slices projected as attributes FIRST — a
-    * slice inside the lambda would re-evaluate per codeword, the
-    * documented HOF re-eval trap). */
-  private def adcQuerySideTable(queries: DataFrame,
       codebooks: Seq[Seq[Seq[Double]]]): DataFrame = {
     val m = codebooks.size
     val cw = codebooks.head.size
@@ -804,49 +675,59 @@ object Similarity {
       V.l2Norm(col("embedding")).as("q_norm"), col("embedding"))
   }
 
-  /** Table form of [[withReconNorm]]: the codeword-norm² table is the
-    * driver-computed self-dot array, one literal. */
-  private def withReconNormTable(enc: DataFrame,
-      codebooks: Seq[Seq[Seq[Double]]]): DataFrame = {
-    val (_, nsq) = cwTables(codebooks)
-    enc.withColumn("recon_norm", sqrt(adcLookupSum(codebooks, nsq)))
+  /** The IVF-PQ probe side: [[adcQuerySide]] with each query exploded
+    * over its `nProbe` nearest cells ([[withCell]] + [[nearest]]) —
+    * (query_id, lut, q_norm, cell). */
+  private def adcProbeSide(queries: DataFrame, codebooks: Seq[Seq[Seq[Double]]],
+      centroids: Seq[Seq[Double]], nProbe: Int): DataFrame =
+    withCell(adcQuerySide(queries, codebooks), "embedding", centroids)(
+      nearest(nProbe)).drop("embedding")
+
+  /** ADC scoring of encoded corpus rows (vec_id, codes, recon_norm[, cell])
+    * against an ADC query side, through [[scorePairs]]. */
+  private def adcScored(codes: DataFrame, q: DataFrame, key: Option[String],
+      codebooks: Seq[Seq[Seq[Double]]]): DataFrame =
+    scorePairs(codes.withColumnRenamed("vec_id", "neighbor_id"), q, key,
+      cosine(adcLookupSum(codebooks, col("lut")), col("recon_norm")))
+
+  /** The left-associated m-term lookup sum over `table`, indexed by the
+    * row's `codes` — the EXPLICIT `+` chain whose op order the oracles
+    * replay (a fold or SQL SUM could re-associate). */
+  private def adcLookupSum(codebooks: Seq[Seq[Seq[Double]]],
+      table: Column): Column = {
+    val cw = codebooks.head.size
+    codebooks.indices.map(j =>
+        element_at(table, lit(j * cw + 1) + element_at(col("codes"), j + 1)))
+      .reduceLeft(_ + _)
   }
 
-  /** [[pqTopK]] with broadcast-table codebooks — same results bit-for-bit
-    * (spec-pinned at 16×8), plan size independent of codeword count. The
-    * production form at 256-codeword codebooks. */
-  def pqTopKTable(queries: DataFrame, corpus: DataFrame, k: Int,
-      codebooks: Seq[Seq[Seq[Double]]], refine: Int = 0): DataFrame = {
-    val q = adcQuerySideTable(queries, codebooks).drop("embedding")
-    val scored = withReconNormTable(pqEncodeTable(corpus, codebooks), codebooks)
-      .crossJoin(broadcast(q))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        adcCosine(codebooks).as("cosine"))
-    finishAdc(scored, k, refine, queries, corpus)
-  }
+  /** Common tail of the ADC paths: rank by ADC directly (refine ≤ 0) or
+    * take the top refine·k ADC candidates and re-rank them by exact
+    * cosine against the true vectors. */
+  private def finishAdc(scored: DataFrame, k: Int, refine: Int,
+      queries: DataFrame, corpus: DataFrame): DataFrame =
+    if (refine <= 0) rankTopK(scored, k).withColumnRenamed("cosine", "adc")
+    else
+      rankTopK(rankTopK(scored, refine * k).select("query_id", "neighbor_id")
+        .join(exactSide(corpus, "neighbor_id", "c_vec", "c_norm"), Seq("neighbor_id"))
+        .join(broadcast(exactSide(queries, "query_id", "q_vec", "q_norm")), Seq("query_id"))
+        .select(col("query_id"), col("neighbor_id"), exactCosine.as("cosine")), k)
 
-  /** [[ivfPqTopK]] with broadcast-table codebooks — same composition,
-    * same results, O(m)-node ADC plan. (The coarse-cell distance list
-    * stays literal: cell counts are the small axis here; a table form of
-    * [[cellStructs]] would follow the same pattern if cells grew into
-    * the thousands.) */
-  def ivfPqTopKTable(queries: DataFrame, corpus: DataFrame, k: Int,
+  /** IVF-PQ: the composed billion-scale ANN architecture — [[ivfFlatTopK]]'s
+    * coarse cells bound WHICH corpus rows each query scores (nProbe cells
+    * instead of everything), [[pqTopK]]'s codes compress WHAT is scored
+    * (m-byte codes + table lookups instead of full vectors). Cost per
+    * query drops multiplicatively: N/cells·nProbe candidates × m lookups
+    * each. Same determinism contract as both halves (hash-chosen
+    * centroids/codebooks, left-associated sums), so the composition
+    * stays oracle-checkable end to end; `refine` adds the exact re-rank
+    * stage over the surviving candidates exactly as in [[pqTopK]]. */
+  def ivfPqTopK(queries: DataFrame, corpus: DataFrame, k: Int,
       centroids: Seq[Seq[Double]], codebooks: Seq[Seq[Seq[Double]]],
-      nProbe: Int = 2, refine: Int = 0): DataFrame = {
-    val q = adcQuerySideTable(queries, codebooks)
-      .withColumn("cell",
-        explode(slice(array_sort(probeStructsTable(col("embedding"), centroids)),
-          1, nProbe).getField("idx")))
-      .drop("embedding")
-    val scored = withReconNormTable(
-        pqEncodeTable(corpus, codebooks, cellCentroids = centroids), codebooks)
-      .join(broadcast(q), Seq("cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        adcCosine(codebooks).as("cosine"))
-    finishAdc(scored, k, refine, queries, corpus)
-  }
+      nProbe: Int = 2, refine: Int = 0): DataFrame =
+    finishAdc(adcScored(encodeWithNorm(corpus, codebooks, centroids),
+      adcProbeSide(queries, codebooks, centroids, nProbe), Some("cell"), codebooks),
+      k, refine, queries, corpus)
 
   /** The MATERIALIZABLE IVF-flat index — the ANN stack's analog of
     * [[Dedup.nearDupIndex]]'s build-once-probe-many artifact: cell
@@ -961,19 +842,22 @@ object Similarity {
   }
 
   /** The index row shape under a FIXED centroid set: (vec_id, embedding,
-    * c_norm, cell) — one scan-fused projection, shared by build, append
-    * and the streaming ingest. Delegates to the table-literal form so
-    * every corpus-side assignment is safe at production centroid counts
-    * (the unrolled form keeps the executable spec of the semantics —
-    * bit-equality is asserted across 1/8/64 centroids). */
+    * c_norm, cell) — one scan-fused projection, shared by build, append,
+    * the streaming ingest and the IVF search paths. The cell is
+    * [[withCell]]'s table-literal argmin, safe at production centroid
+    * counts; [[assignCellsUnrolled]] keeps the executable spec of the
+    * semantics (bit-equality is asserted across 1/8/64 centroids). */
   private[graft] def assignCells(vecs: DataFrame,
       centroids: Seq[Seq[Double]]): DataFrame =
-    assignCellsTable(vecs, centroids)
+    withCell(vecs.select(col("vec_id"), col("embedding"))
+      .withColumn("c_norm", V.l2Norm(col("embedding"))), "embedding", centroids)(
+      d => argmin(d).cast("int"))
 
   /** The UNROLLED assignment — [[cellStructs]] argmin, nCells struct
     * branches in the generated source. Kept as the reference
-    * implementation [[assignCellsTable]] is spec-checked against; do
-    * not use on a corpus side at large nCells (the Janino cliff). */
+    * implementation [[assignCells]] (and every [[withCell]] caller) is
+    * spec-checked against; do not use on a corpus side at large nCells
+    * (the Janino cliff). */
   private[graft] def assignCellsUnrolled(vecs: DataFrame,
       centroids: Seq[Seq[Double]]): DataFrame =
     vecs.select(col("vec_id"), col("embedding"))
@@ -981,59 +865,6 @@ object Similarity {
       .withColumn("cell",
         array_min(cellStructs(col("embedding"), centroids))
           .getField("idx").cast("int"))
-
-  /** The PROBE-side (d, idx) struct array over a table-literal centroid
-    * set — `array_sort(...)` of this replaces
-    * `array_sort(cellStructs(...))` bit-identically (the per-struct
-    * distance keeps [[cellStructs]]' exact tree, v·v inline included —
-    * probe rows are query-count-few, the cliff is COMPILE-time and
-    * depends on plan size, not row count). */
-  private def probeStructsTable(vec: Column,
-      centroids: Seq[Seq[Double]]): Column = {
-    val ctrTable = typedlit(centroids)
-    val selfDots = typedlit(centroids.map(c => leftFoldDot(c, c)))
-    transform(ctrTable, (c, i) =>
-      struct(
-        ((V.dot(vec, vec) - lit(2.0) * V.dot(vec, c))
-          + element_at(selfDots, i + 1)).as("d"),
-        i.as("idx")))
-  }
-
-  /** [[assignCells]] with the centroid set as ONE table literal — the
-    * past-the-codegen-cliff form ([[pqTopKTable]]'s lesson applied to
-    * assignment): [[cellStructs]] unrolls nCells struct branches ×
-    * dim-literal arrays into the generated source, and Janino
-    * compilation cost grows superlinearly with that — measured at 64
-    * centroids × 64 dims the assignment STAGE spends seconds compiling
-    * a multi-megabyte method (the argmin itself is milliseconds). Here
-    * the centroids ride the plan as one array-of-arrays literal plus a
-    * driver-computed self-dot table ([[leftFoldDot]], the exact fold),
-    * and the argmin is a `transform` over it — an O(1)-node plan at any
-    * nCells. The distances are the IDENTICAL IEEE tree
-    * (`(v·v − 2.0·(v·c)) + c·c`, HOF dot ≡ native VecDot is
-    * spec-pinned), so cells and norms are bit-equal to [[assignCells]]
-    * — asserted by spec, and by every oracle downstream of a caller. */
-  private[graft] def assignCellsTable(vecs: DataFrame,
-      centroids: Seq[Seq[Double]]): DataFrame = {
-    val ctrTable = typedlit(centroids)
-    val selfDots = typedlit(centroids.map(c => leftFoldDot(c, c)))
-    val v = col("embedding")
-    // the per-centroid dot rides the lambda as the NATIVE VecDot (its
-    // interpreted eval is a tight array loop — HOF-composed aggregate/
-    // zip_with lambdas cost ~5× per element); v·v is loop-invariant and
-    // hoisted into its own projection so the transform doesn't recompute
-    // it nCells× per row
-    val structs = transform(ctrTable, (c, i) =>
-      struct(
-        ((col("__vv") - lit(2.0) * V.dot(v, c))
-          + element_at(selfDots, i + 1)).as("d"),
-        i.as("idx")))
-    vecs.select(col("vec_id"), col("embedding"))
-      .withColumn("c_norm", V.l2Norm(col("embedding")))
-      .withColumn("__vv", V.dot(v, v))
-      .withColumn("cell", array_min(structs).getField("idx").cast("int"))
-      .drop("__vv")
-  }
 
   /** Fold the streamed assignment table back into the batch one — the
     * index's compaction. A continuous [[graft.streaming.AnnIngest]]
@@ -1043,100 +874,109 @@ object Similarity {
     * whole history). Compaction reads BOTH tables, dedups on `vec_id`
     * (the index's primary key — one row per vector, so re-running a
     * crashed compaction, or compacting after a replayed append, is
-    * idempotent rather than duplicate-baking), rewrites the union
-    * cell-partitioned into a staged dir, swaps it in (the
-    * [[Maintenance.compactTree]] staged-rename discipline —
-    * `__staged`/`__old` with [[Upsert.recoverStagedSwap]] run first to
-    * finish any earlier half-swap), and drops the streamed table.
-    * Probe results are identical before and after (pinned by spec);
+    * idempotent rather than duplicate-baking), minus the tombstoned
+    * ids, and commits the union cell-partitioned through
+    * [[foldArtifact]] (a staged swap on a plain root, a new generation
+    * on a pointer root), leaving the streamed table behind. Probe results are identical before and after (pinned by spec);
     * run it between ingest sessions, not concurrently with one. */
   def compactIvfFlatIndex(spark: org.apache.spark.sql.SparkSession,
       indexPath: String, targetFileBytes: Long = 128L << 20,
       streamedSubdir: String = "assignments_stream",
       recursiveStreamed: Boolean = false,
-      retain: Option[Int] = None): Unit = {
-    // POINTER-COMMITTED root: fold FROM the current generation (a read
-    // of the root itself would miss gen-local tombstones and streamed
-    // rows) and commit the result as a NEW generation via
-    // [[Fs.publishGeneration]] — swapping directories inside a
-    // published generation would mutate immutable history under
-    // readers. Plain roots keep the in-place staged swap.
+      retain: Option[Int] = None): Unit =
+    foldArtifact(indexPath, "assignments", Set(streamedSubdir, Fs.TombstonesSubdir),
+        targetFileBytes, retain, _ =>
+          s"compacting $indexPath would delete every remaining vector — an " +
+            "empty assignments table cannot be probed; rebuild the index " +
+            "instead of compacting it away") { concrete =>
+      val streamedPath = s"$concrete/$streamedSubdir"
+      val tombPath = s"$concrete/${Fs.TombstonesSubdir}"
+      val hasStreamed = Fs.exists(streamedPath)
+      val hasTomb = Fs.exists(tombPath)
+      if (!hasStreamed && !hasTomb) None
+      else {
+        val cols = Seq("vec_id", "embedding", "c_norm", "cell").map(col)
+        // the file-sink table (cell-partitioned) reads plain; the admission
+        // stream's batch-<id> subdirs carry cell as a data column and need
+        // the recursive lookup
+        val streamedReader =
+          if (recursiveStreamed)
+            spark.read.option("recursiveFileLookup", "true")
+          else spark.read
+        val base = spark.read.parquet(s"$concrete/assignments").select(cols: _*)
+        val union =
+          if (hasStreamed)
+            base.unionByName(streamedReader.parquet(streamedPath).select(cols: _*))
+          else base
+        // the tombstone fold is PHYSICAL: after this swap the deleted rows
+        // are gone from storage, not just masked at probe time
+        Some(
+          if (hasTomb)
+            union.dropDuplicates("vec_id")
+              .join(spark.read.parquet(tombPath).select(col("vec_id")),
+                Seq("vec_id"), "left_anti")
+          else union.dropDuplicates("vec_id"))
+      }
+    }
+
+  /** The compaction fold both artifact layouts share. `kept` builds the
+    * folded `table` from the CONCRETE directory (None: nothing to fold,
+    * return early); the fold refuses an empty result (`emptyMsg`), sizes
+    * the file count from the current table, repartitions BY cell (each
+    * cell's rows land in one task, so the layout is ~one file per
+    * (cell, targetFileBytes) — not n files per cell from a round-robin
+    * split) and commits:
+    *  - POINTER-COMMITTED root: the fold reads FROM the current
+    *    generation (a read of the root itself would miss gen-local
+    *    tombstones and streamed rows) and lands in a FRESH generation via
+    *    [[Fs.publishGeneration]]; every other subtable (centroids,
+    *    codebooks, hidden state) carries over verbatim and the `folded`
+    *    subdirs are left behind — the superseded generation keeps its
+    *    copies untouched (immutable history; swapping directories inside
+    *    a published generation would mutate it under readers). Then
+    *    `retain`: each fold otherwise leaves the superseded generation
+    *    (one full index copy) standing until someone prunes — at a
+    *    compact-per-N-batches cadence that is one index copy of growth
+    *    PER FOLD, so the ingest loops pass the policy here instead of
+    *    relying on an out-of-band sweep.
+    *  - plain root: the in-place staged swap ([[Maintenance.compactTree]]'s
+    *    `__staged`/`__old` discipline, with [[Upsert.recoverStagedSwap]]
+    *    run first to finish any earlier half-swap), then the `folded`
+    *    subdirs are dropped — AFTER the swap: a crash between the swap
+    *    and these deletes leaves tables whose rows the next compaction
+    *    (or any probe) re-applies idempotently, since dedup and anti-join
+    *    are set-semantics. */
+  private def foldArtifact(indexPath: String, table: String, folded: Set[String],
+      targetFileBytes: Long, retain: Option[Int], emptyMsg: String => String)(
+      kept: String => Option[DataFrame]): Unit = {
     val gen = Fs.currentGeneration(indexPath)
     val concrete = gen.getOrElse(indexPath)
-    val assignments = s"$concrete/assignments"
-    if (gen.isEmpty) Upsert.recoverStagedSwap(assignments)
-    val streamedPath = s"$concrete/$streamedSubdir"
-    val tombPath = s"$concrete/${Fs.TombstonesSubdir}"
-    val hasStreamed = Fs.exists(streamedPath)
-    val hasTomb = Fs.exists(tombPath)
-    if (!hasStreamed && !hasTomb) return
-    val cols = Seq("vec_id", "embedding", "c_norm", "cell")
-    // the file-sink table (cell-partitioned) reads plain; the admission
-    // stream's batch-<id> subdirs carry cell as a data column and need
-    // the recursive lookup
-    val streamedReader =
-      if (recursiveStreamed)
-        spark.read.option("recursiveFileLookup", "true")
-      else spark.read
-    val base = spark.read.parquet(assignments).select(cols.map(col): _*)
-    val union =
-      if (hasStreamed)
-        base.unionByName(
-          streamedReader.parquet(streamedPath).select(cols.map(col): _*))
-      else base
-    // the tombstone fold is PHYSICAL: after this swap the deleted rows
-    // are gone from storage, not just masked at probe time
-    val kept =
-      if (hasTomb)
-        union.dropDuplicates("vec_id")
-          .join(spark.read.parquet(tombPath).select(col("vec_id")),
-            Seq("vec_id"), "left_anti")
-      else union.dropDuplicates("vec_id")
-    require(!kept.isEmpty,
-      s"compacting $indexPath would delete every remaining vector — an " +
-        "empty assignments table cannot be probed; rebuild the index " +
-        "instead of compacting it away")
-    val bytes = math.max(1L, Fs.dataBytes(assignments))
-    val n = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
-    // repartition BY cell: each cell's rows land in one task, so the
-    // compacted layout is ~one file per (cell, 128MB) — not n files
-    // per cell from a round-robin split
-    def writeKept(dst: String): Unit =
-      kept.repartition(n, col("cell"))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("cell").parquet(dst)
-    gen match {
-      case Some(_) =>
-        // commit-by-pointer: the folded assignments land in a FRESH
-        // generation, every other subtable (centroids, hidden state)
-        // carries over verbatim, and the streamed + tombstone tables are
-        // folded — the superseded generation keeps its copies untouched
-        // (immutable history; pruneGenerations reclaims it)
-        Fs.publishGeneration(indexPath) { next =>
-          writeKept(s"$next/assignments")
-          Fs.listNames(concrete)
-            .filterNot(Set("assignments", streamedSubdir,
-              Fs.TombstonesSubdir).contains)
-            .foreach { e =>
-              if (!Fs.copyTree(s"$concrete/$e", s"$next/$e"))
-                throw new java.io.IOException(
-                  s"could not carry $e into generation $next")
-            }
-        }
-        // retention: each fold otherwise leaves the superseded
-        // generation (one full index copy) standing until someone
-        // prunes — at a compact-per-N-batches cadence that is one
-        // index copy of growth PER FOLD, so the ingest loops pass the
-        // policy here instead of relying on an out-of-band sweep
-        retain.foreach(k => Fs.pruneGenerations(indexPath, k))
-      case None =>
-        Fs.stagedSwap(assignments)(writeKept)
-        // dropped AFTER the swap: a crash between the swap and these
-        // deletes leaves tables whose rows the next compaction (or any
-        // probe) re-applies idempotently — dedup and anti-join are
-        // set-semantics
-        Fs.rmTree(streamedPath)
-        Fs.rmTree(tombPath)
+    val tablePath = s"$concrete/$table"
+    if (gen.isEmpty) Upsert.recoverStagedSwap(tablePath)
+    kept(concrete).foreach { k =>
+      require(!k.isEmpty, emptyMsg(concrete))
+      val bytes = math.max(1L, Fs.dataBytes(tablePath))
+      val n = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
+      def writeKept(dst: String): Unit =
+        k.repartition(n, col("cell"))
+          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+          .partitionBy("cell").parquet(dst)
+      gen match {
+        case Some(_) =>
+          Fs.publishGeneration(indexPath) { next =>
+            writeKept(s"$next/$table")
+            Fs.listNames(concrete).filterNot((folded + table).contains)
+              .foreach { e =>
+                if (!Fs.copyTree(s"$concrete/$e", s"$next/$e"))
+                  throw new java.io.IOException(
+                    s"could not carry $e into generation $next")
+              }
+          }
+          retain.foreach(r => Fs.pruneGenerations(indexPath, r))
+        case None =>
+          Fs.stagedSwap(tablePath)(writeKept)
+          folded.foreach(d => Fs.rmTree(s"$concrete/$d"))
+      }
     }
   }
 
@@ -1168,55 +1008,25 @@ object Similarity {
   }
 
   /** Fold the tombstone table of a [[writeIvfPqIndex]] artifact into its
-    * codes table physically ([[compactIvfFlatIndex]]'s discipline for
-    * the compressed layout): staged swap of the cell-partitioned codes
-    * minus deleted vec_ids, tombstones dropped after. No-op without
+    * codes table physically ([[compactIvfFlatIndex]]'s [[foldArtifact]]
+    * for the compressed layout): the cell-partitioned codes minus deleted
+    * vec_ids, tombstones left behind. No-op without
     * tombstones (the PQ artifact has no streaming ingest to fold). */
   def compactIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
       indexPath: String, targetFileBytes: Long = 128L << 20,
-      retain: Option[Int] = None): Unit = {
-    // pointer-committed roots fold from the current generation and
-    // publish a new one — [[compactIvfFlatIndex]]'s contract for the
-    // compressed layout
-    val gen = Fs.currentGeneration(indexPath)
-    val concrete = gen.getOrElse(indexPath)
-    val codes = s"$concrete/codes"
-    if (gen.isEmpty) Upsert.recoverStagedSwap(codes)
-    val tombPath = s"$concrete/${Fs.TombstonesSubdir}"
-    if (!Fs.exists(tombPath)) return
-    val kept = spark.read.parquet(codes)
-      .select(col("vec_id"), col("codes"), col("recon_norm"), col("cell"))
-      .join(spark.read.parquet(tombPath).select(col("vec_id")),
-        Seq("vec_id"), "left_anti")
-    require(!kept.isEmpty,
-      s"compacting $concrete would delete every remaining vector — an " +
-        "empty codes table cannot be probed; rebuild the index instead")
-    val bytes = math.max(1L, Fs.dataBytes(codes))
-    val n = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
-    def writeKept(dst: String): Unit =
-      kept.repartition(n, col("cell"))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("cell").parquet(dst)
-    gen match {
-      case Some(_) =>
-        Fs.publishGeneration(indexPath) { next =>
-          writeKept(s"$next/codes")
-          Fs.listNames(concrete)
-            .filterNot(Set("codes", Fs.TombstonesSubdir).contains)
-            .foreach { e =>
-              if (!Fs.copyTree(s"$concrete/$e", s"$next/$e"))
-                throw new java.io.IOException(
-                  s"could not carry $e into generation $next")
-            }
-        }
-        // same retention seam as [[compactIvfFlatIndex]]: without it
-        // every fold leaves a full superseded index copy standing
-        retain.foreach(k => Fs.pruneGenerations(indexPath, k))
-      case None =>
-        Fs.stagedSwap(codes)(writeKept)
-        Fs.rmTree(tombPath)
+      retain: Option[Int] = None): Unit =
+    foldArtifact(indexPath, "codes", Set(Fs.TombstonesSubdir), targetFileBytes,
+        retain, concrete =>
+          s"compacting $concrete would delete every remaining vector — an " +
+            "empty codes table cannot be probed; rebuild the index instead") {
+      concrete =>
+        val tombPath = s"$concrete/${Fs.TombstonesSubdir}"
+        if (!Fs.exists(tombPath)) None
+        else Some(spark.read.parquet(s"$concrete/codes")
+          .select(col("vec_id"), col("codes"), col("recon_norm"), col("cell"))
+          .join(spark.read.parquet(tombPath).select(col("vec_id")),
+            Seq("vec_id"), "left_anti"))
     }
-  }
 
   /** The MATERIALIZABLE IVF-PQ index — [[writeIvfFlatIndex]]'s artifact
     * lifecycle applied to the COMPRESSED form: the corpus lands under
@@ -1229,7 +1039,7 @@ object Similarity {
     * so a probe touches codes only; a probe's scan partition-prunes to
     * its probed cells exactly as the flat artifact's does. Deterministic
     * hash centroids/codebooks by default, so build→write→reload→probe
-    * hash-checks and [[ivfPqProbe]] ≡ [[ivfPqTopKTable]] bit for bit
+    * hash-checks and [[ivfPqProbe]] ≡ [[ivfPqTopK]] bit for bit
     * (doubles and ints round-trip parquet losslessly). */
   def writeIvfPqIndex(corpus: DataFrame, nLists: Int, m: Int,
       codewords: Int, path: String): Unit =
@@ -1245,8 +1055,7 @@ object Similarity {
       "centroids and codebooks must be non-empty")
     val spark = corpus.sparkSession
     import spark.implicits._
-    withReconNormTable(
-        pqEncodeTable(corpus, codebooks, cellCentroids = centroids), codebooks)
+    encodeWithNorm(corpus, codebooks, centroids)
       .select(col("vec_id"), col("codes"), col("recon_norm"), col("cell"))
       .write.mode("overwrite").partitionBy("cell").parquet(s"$path/codes")
     centroids.zipWithIndex.map { case (c, i) => (i, c) }
@@ -1261,23 +1070,24 @@ object Similarity {
   /** The artifact's PQ codebooks, read back: m × codewords rows — the
     * bounded driver-side half, like [[readCentroids]]. */
   private[graft] def readCodebooks(spark: org.apache.spark.sql.SparkSession,
-      indexPath: String): Seq[Seq[Seq[Double]]] =
-    spark.read.parquet(s"$indexPath/codebooks")
+      indexPath: String): Seq[Seq[Seq[Double]]] = {
+    val p = s"$indexPath/codebooks"
+    // existence-check BEFORE the read, as in [[readCentroids]]: a flat
+    // artifact passes the centroid check and would otherwise die in the
+    // parquet scan with a raw AnalysisException
+    require(Fs.exists(p),
+      s"no codebook table at $p — not a writeIvfPqIndex artifact (a " +
+        "writeIvfFlatIndex artifact has no PQ codebooks; probe it with " +
+        "ivfFlatProbe)")
+    spark.read.parquet(p)
       .orderBy(col("subspace"), col("code"))
       .collect()
       .map(r => (r.getInt(0), r.getInt(1),
         r.getAs[scala.collection.Seq[Double]]("codeword").toSeq))
       .groupBy(_._1).toSeq.sortBy(_._1)
       .map(_._2.sortBy(_._2).map(_._3).toSeq)
+  }
 
-  /** Probe a [[writeIvfPqIndex]] artifact: nearest-`nProbe` cells per
-    * query under the reloaded centroids, ADC scoring over ONLY those
-    * cells' code partitions (probed cell ids pushed as a literal IN —
-    * partition pruning reaches the scan statically, the flat-probe
-    * discipline). Output ≡ [[ivfPqTopKTable]] with the same quantizers
-    * (refine = 0; an exact re-rank needs the original vectors, which the
-    * compressed artifact deliberately does not carry — compose with the
-    * corpus table for that). */
   /** Row cap on [[boundedQuerySide]]'s driver-side take of a probe's
     * query rows (the [[Dedup.takeBounded]] discipline): queries×nProbe
     * rows of id + norm + per-query payload (a q_vec, or ADC LUTs) —
@@ -1315,6 +1125,14 @@ object Similarity {
     }
   }
 
+  /** Probe a [[writeIvfPqIndex]] artifact: nearest-`nProbe` cells per
+    * query under the reloaded centroids, ADC scoring over ONLY those
+    * cells' code partitions (probed cell ids pushed as a literal IN —
+    * partition pruning reaches the scan statically, the flat-probe
+    * discipline). Output ≡ [[ivfPqTopK]] with the same quantizers
+    * (refine = 0; an exact re-rank needs the original vectors, which the
+    * compressed artifact deliberately does not carry — compose with the
+    * corpus table for that). */
   def ivfPqProbe(queries: DataFrame, indexPath0: String, k: Int,
       nProbe: Int = 2,
       querySideCap: Int = ProbeQuerySideCap): DataFrame = {
@@ -1325,12 +1143,7 @@ object Similarity {
     // queries×nProbe rows + the probed-cell set, ONE bounded job — see
     // [[boundedQuerySide]]
     val (q, probedCells) = boundedQuerySide(
-      adcQuerySideTable(queries, codebooks)
-        .withColumn("cell",
-          explode(slice(array_sort(probeStructsTable(col("embedding"), centroids)),
-            1, nProbe).getField("idx")))
-        .drop("embedding"),
-      querySideCap)
+      adcProbeSide(queries, codebooks, centroids, nProbe), querySideCap)
     val c0 =
       if (probedCells.isEmpty)
         spark.read.parquet(s"$indexPath/codes").filter(lit(false))
@@ -1342,11 +1155,8 @@ object Similarity {
       case Some(tb) => c0.join(tb, Seq("vec_id"), "left_anti")
       case None => c0
     }
-    val scored = c.join(broadcast(q), Seq("cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        adcCosine(codebooks).as("cosine"))
-    rankTopK(scored, k).withColumnRenamed("cosine", "adc")
+    rankTopK(adcScored(c, q, Some("cell"), codebooks), k)
+      .withColumnRenamed("cosine", "adc")
   }
 
   /** Probe a [[writeIvfFlatIndex]] artifact: nearest-`nProbe` cells per
@@ -1383,12 +1193,8 @@ object Similarity {
     // queries×nProbe rows + the probed-cell set, ONE bounded job — see
     // [[boundedQuerySide]]
     val (q, probedCells) = boundedQuerySide(
-      queries.select(col("vec_id").as("query_id"),
-          col("embedding").as("q_vec"), V.l2Norm(col("embedding")).as("q_norm"))
-        .withColumn("probe",
-          slice(array_sort(probeStructsTable(col("q_vec"), centroids)), 1, nProbe))
-        .withColumn("cell", explode(col("probe").getField("idx")))
-        .drop("probe"),
+      withCell(exactSide(queries, "query_id", "q_vec", "q_norm"), "q_vec",
+        centroids)(nearest(nProbe)),
       querySideCap)
     // the batch-written assignments plus — when a streaming ingest has
     // landed vectors — the file sink's `assignments_stream/` table; the
@@ -1400,11 +1206,8 @@ object Similarity {
         .filter(col("cell").isin(probedCells: _*))
         .select(col("cell"), col("vec_id").as("neighbor_id"),
           col("embedding").as("c_vec"), col("c_norm"))
-    val streamed = new org.apache.hadoop.fs.Path(s"$indexPath/assignments_stream")
-    val hasStreamed = streamed
-      .getFileSystem(spark.sparkContext.hadoopConfiguration).exists(streamed)
     val c0 =
-      if (hasStreamed)
+      if (Fs.exists(s"$indexPath/assignments_stream"))
         cellsOf(s"$indexPath/assignments")
           .unionByName(cellsOf(s"$indexPath/assignments_stream"))
       else cellsOf(s"$indexPath/assignments")
@@ -1415,14 +1218,8 @@ object Similarity {
         c0.join(tb, c0("neighbor_id") === tb("vec_id"), "left_anti")
       case None => c0
     }
-    val denom = col("q_norm") * col("c_norm")
-    val scored = c.join(broadcast(q), Seq("cell"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        when(denom === 0.0, 0.0)
-          .otherwise(V.dot(col("q_vec"), col("c_vec")) / denom).as("cosine"))
-      .dropDuplicates("query_id", "neighbor_id")
-    rankTopK(scored, k)
+    rankTopK(scorePairs(c, q, Some("cell"), exactCosine)
+      .dropDuplicates("query_id", "neighbor_id"), k)
   }
 
   /** Random-projection dimensionality reduction: y_j = ⟨v, plane_j⟩

@@ -192,7 +192,7 @@ object SemanticAdmission {
         // job per micro-batch for no saved compute (the AdmissionStream
         // sigs discipline; downstream plans still read a LogicalRDD,
         // blocks context-cleaner-reclaimed).
-        val asg = Similarity.assignCellsTable(
+        val asg = Similarity.assignCells(
             batch.select(col("vec_id"), col("embedding")), centroids)
           .localCheckpoint(false)
         val standing = streamedExcludingBatch(spark, concrete, batchId)

@@ -231,7 +231,7 @@ class AdmitCoreComponentsSpec extends SparkSpecBase {
       (3L, Seq(0.0, 0.0, 1.0))).toDF("vec_id", "embedding")
     val centroids = Seq(Seq(1.0, 0.0, 0.0), Seq(0.0, 1.0, 0.0),
       Seq(0.0, 0.0, 1.0))
-    val asg = graft.operators.Similarity.assignCellsTable(vecs, centroids)
+    val asg = graft.operators.Similarity.assignCells(vecs, centroids)
       .localCheckpoint(true)
     val standing = asg.filter(lit(false))
     val viaFrame = Dedup.admitNewVecsPreassigned(asg, standing, 0.95)
@@ -254,7 +254,7 @@ class AdmitCoreComponentsSpec extends SparkSpecBase {
     }
     // the row cap: four survivors past cap = 1
     fallsBack(asg, cap = 1)
-    def sameCell(n: Int) = graft.operators.Similarity.assignCellsTable(
+    def sameCell(n: Int) = graft.operators.Similarity.assignCells(
         (1 to n).map(i => (i.toLong, Seq(1.0, 0.001 * i, 0.0)))
           .toDF("vec_id", "embedding"), centroids)
       .localCheckpoint(true)
@@ -319,7 +319,7 @@ class AdmitCoreComponentsSpec extends SparkSpecBase {
     val centroids = Seq(Seq(1.0, 0.0, 0.0), Seq(0.0, 1.0, 0.0),
       Seq(0.0, 0.0, 1.0))
     def vecJobs(vecs: Seq[(Long, Seq[Double])]): Int = {
-      val asg = graft.operators.Similarity.assignCellsTable(
+      val asg = graft.operators.Similarity.assignCells(
           vecs.toDF("vec_id", "embedding"), centroids).localCheckpoint(true)
       jobsOf {
         Dedup.admitNewVecsPreassignedBounded(asg, asg.filter(lit(false)),

@@ -483,7 +483,9 @@ class AnnIngestSpec extends SparkSpecBase {
     // the r21 boundedQuerySide fusion (one bounded take replaces the
     // query-side checkpoint + probed-cells collect) must be
     // result-identical to the past-cap shape it replaces — force the
-    // fallback with querySideCap = 0 and compare against the default
+    // fallback with querySideCap = 0, and cross the cap by one row
+    // (queries × nProbe rows fit exactly; one fewer takes the fallback),
+    // for the flat and the PQ probe alike
     val rnd = new Random(7)
     def cluster(base: Float, n: Int, off: Long) =
       (0 until n).map(i => (off + i, Seq.fill(8)(base + rnd.nextFloat() * 0.01f)))
@@ -496,11 +498,20 @@ class AnnIngestSpec extends SparkSpecBase {
     val cents = Similarity.readCentroids(spark, ix)
     val fast = Similarity.ivfFlatProbeResolved(queries, ix, 5, 2, cents, None)
       .orderBy("query_id", "rnk").collect().toSeq
-    val fallback = Similarity.ivfFlatProbeResolved(queries, ix, 5, 2, cents,
-        None, querySideCap = 0)
-      .orderBy("query_id", "rnk").collect().toSeq
-    fast shouldBe fallback
+    val sideRows = 2 * 2 // queries × nProbe
+    for (cap <- Seq(0, sideRows - 1, sideRows))
+      Similarity.ivfFlatProbeResolved(queries, ix, 5, 2, cents, None,
+          querySideCap = cap)
+        .orderBy("query_id", "rnk").collect().toSeq shouldBe fast
     fast.nonEmpty shouldBe true
+    val pqIx = root.resolve("pq").toString
+    Similarity.writeIvfPqIndex(standing, nLists = 4, m = 4, codewords = 8, pqIx)
+    val pqFast = Similarity.ivfPqProbe(queries, pqIx, 5, nProbe = 2)
+      .orderBy("query_id", "rnk").collect().toSeq
+    for (cap <- Seq(sideRows - 1, sideRows))
+      Similarity.ivfPqProbe(queries, pqIx, 5, nProbe = 2, querySideCap = cap)
+        .orderBy("query_id", "rnk").collect().toSeq shouldBe pqFast
+    pqFast.nonEmpty shouldBe true
     spark.catalog.clearCache()
   }
 }

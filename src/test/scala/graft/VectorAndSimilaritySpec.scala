@@ -159,7 +159,7 @@ class VectorAndSimilaritySpec extends SparkSpecBase {
     spark.catalog.clearCache()
   }
 
-  test("ivfPqProbe over a written PQ index ≡ ivfPqTopKTable; scan prunes to probed cells") {
+  test("ivfPqProbe over a written PQ index ≡ ivfPqTopK; scan prunes to probed cells") {
     val rnd = new Random(13)
     def cluster(base: Float, n: Int, off: Long) =
       (0 until n).map(i => (off + i, Seq.fill(8)(base + rnd.nextFloat() * 0.01f)))
@@ -169,7 +169,7 @@ class VectorAndSimilaritySpec extends SparkSpecBase {
     dir.toFile.deleteOnExit()
     Similarity.writeIvfPqIndex(corpus, nLists = 4, m = 4, codewords = 8, dir.toString)
     val probe = Similarity.ivfPqProbe(queries, dir.toString, 5, nProbe = 2)
-    val direct = Similarity.ivfPqTopKTable(queries, corpus, 5,
+    val direct = Similarity.ivfPqTopK(queries, corpus, 5,
       Similarity.hashCentroids(corpus, 4),
       Similarity.pqCodebooks(corpus, m = 4, codewords = 8), nProbe = 2)
     probe.orderBy("query_id", "rnk").collect().toSeq shouldBe
@@ -193,6 +193,20 @@ class VectorAndSimilaritySpec extends SparkSpecBase {
     cellScans should not be empty
     cellScans.map(_.metrics("numPartitions").value).sum should be <= 2L
     spark.catalog.clearCache()
+  }
+
+  test("ivfPqProbe on a flat artifact fails naming writeIvfPqIndex, not in the parquet scan") {
+    // a writeIvfFlatIndex artifact carries centroids (readCentroids
+    // passes) but no codebooks
+    val corpus = vecDF((0L until 10L).map(i => (i, Seq.fill(8)(i.toFloat))))
+    val dir = java.nio.file.Files.createTempDirectory("graft_flat_as_pq_")
+    dir.toFile.deleteOnExit()
+    Similarity.writeIvfFlatIndex(corpus, nLists = 2, dir.toString)
+    val ex = intercept[IllegalArgumentException] {
+      Similarity.ivfPqProbe(corpus, dir.toString, 5, nProbe = 2)
+    }
+    ex.getMessage should include("no codebook table")
+    ex.getMessage should include("writeIvfPqIndex")
   }
 
   test("appendToIvfFlatIndex under frozen centroids ≡ direct retrieval over the union") {
@@ -340,7 +354,7 @@ class VectorAndSimilaritySpec extends SparkSpecBase {
     approx.exceptAll(again).count() shouldBe 0L
   }
 
-  test("assignCellsTable is bit-identical to the struct-form assignment") {
+  test("assignCells is bit-identical to the struct-form assignment") {
     // the table-literal form exists because the struct form's generated
     // source grows with nCells × dim (the Janino cliff) — the contract
     // is identical cells, norms, and rows at ANY centroid count
@@ -349,7 +363,7 @@ class VectorAndSimilaritySpec extends SparkSpecBase {
       val ctr = Similarity.hashCentroids(e, n)
       val a = Similarity.assignCellsUnrolled(e, ctr).orderBy("vec_id")
         .collect().map(_.toSeq).toSeq
-      val b = Similarity.assignCellsTable(e, ctr).orderBy("vec_id")
+      val b = Similarity.assignCells(e, ctr).orderBy("vec_id")
         .collect().map(_.toSeq).toSeq
       b shouldBe a
     }
@@ -375,6 +389,11 @@ class VectorAndSimilaritySpec extends SparkSpecBase {
     val byCell = out.groupBy(_._1).values.map(_.sortBy(_._2).map(_._3)).toSet
     byCell shouldBe Set(a, b)
     run() shouldBe out // deterministic end to end
+    // an empty corpus trains no cells: an empty (cell, pos, centroid_q, n)
+    // frame, not an error
+    val none = Similarity.lloydTrain(e.limit(0), nCells = 2, rounds = 2)
+    none.columns.toSeq shouldBe Seq("cell", "pos", "centroid_q", "n")
+    none.count() shouldBe 0L
   }
 
   test("lloydRefine: deterministic, moves non-empty cells, keeps empty-cell seeds") {
@@ -492,28 +511,34 @@ class VectorAndSimilaritySpec extends SparkSpecBase {
     r4 should be >= r0
   }
 
-  test("broadcast-table PQ paths are bit-identical to the literal-forest paths") {
+  test("pqEncode codes ≡ the unrolled argmin per subspace; pqTopK ≡ ivfPqTopK probing every cell") {
     import graft.operators.Similarity
     val e = graft.sources.Tables.table(spark, "/root/testdata/sf0.001", "embeddings")
-    val centroids = Similarity.hashCentroids(e, 8)
     val books = Similarity.pqCodebooks(e, m = 8, codewords = 16)
+    val sub = books.head.head.size
+    // the encode pass: codes(j) is the reference assignCellsUnrolled
+    // argmin of subspace j's slice over book j — the same distance tree
+    // and tie rule, checked against the reference that stays
+    val codes = Similarity.pqEncode(e, books)
+    for (j <- books.indices) {
+      val slice_j = e.select(col("vec_id"),
+        slice(col("embedding"), j * sub + 1, sub).as("embedding"))
+      codes.select(col("vec_id"), element_at(col("codes"), j + 1).as("cell"))
+        .orderBy("vec_id").collect().toSeq shouldBe
+        Similarity.assignCellsUnrolled(slice_j, books(j))
+          .select(col("vec_id"), col("cell")).orderBy("vec_id").collect().toSeq
+    }
+    // with every cell probed, the IVF composition may add nothing but
+    // pruning: the ADC doubles and the refined ranks are pqTopK's
+    val nLists = 8
+    val centroids = Similarity.hashCentroids(e, nLists)
     val q = e.filter(col("vec_id") < 5)
-    // the encode pass: identical codes (argmin distance + tie rule match)
-    Similarity.pqEncodeTable(e, books).exceptAll(Similarity.pqEncode(e, books))
-      .count() shouldBe 0L
-    // full ADC retrieval, including the DOUBLE cosine — bit equality, not
-    // tolerance: the table path must reproduce the literal path's exact
-    // IEEE op order or the oracle contract breaks at production codebook
-    // sizes where only the table form compiles
-    Similarity.pqTopKTable(q, e, 10, books).orderBy("query_id", "rnk")
-      .collect().toSeq shouldBe
-      Similarity.pqTopK(q, e, 10, books).orderBy("query_id", "rnk")
-        .collect().toSeq
-    // the composed IVF-PQ, with the refine ladder engaged on both sides
-    Similarity.ivfPqTopKTable(q, e, 10, centroids, books, nProbe = 2, refine = 2)
-      .orderBy("query_id", "rnk").collect().toSeq shouldBe
-      Similarity.ivfPqTopK(q, e, 10, centroids, books, nProbe = 2, refine = 2)
-        .orderBy("query_id", "rnk").collect().toSeq
+    for (refine <- Seq(0, 2))
+      Similarity.ivfPqTopK(q, e, 10, centroids, books, nProbe = nLists,
+          refine = refine)
+        .orderBy("query_id", "rnk").collect().toSeq shouldBe
+        Similarity.pqTopK(q, e, 10, books, refine = refine)
+          .orderBy("query_id", "rnk").collect().toSeq
   }
 
   test("native Md5Hash32 equals the portable conv(md5) formulation on real docs") {
