@@ -174,6 +174,21 @@ object AdmissionStream {
     }
   }
 
+  /** The `batch-<id>` tree at `dir` as one frame (recursiveFileLookup:
+    * plain nested dirs, no partition-column inference), or an empty
+    * frame of schema `empty` when `dir` does not exist — a run of zero
+    * micro-batches (empty landing dir) never creates it, and that
+    * result is simply empty, not an error. */
+  private[streaming] def readBatchTree(spark: SparkSession, dir: String,
+      empty: StructType): DataFrame = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
+      spark.read.option("recursiveFileLookup", "true").parquet(dir)
+    else
+      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        empty)
+  }
+
   /** Run a bounded document stream to completion, admitting each
     * micro-batch against `indexPath` (a [[Dedup.nearDupIndex]] parquet
     * dir, extended in place as batches admit). Admitted rows append
@@ -247,8 +262,6 @@ object AdmissionStream {
       compactWhenTombstoneRatio: Option[Double] = None,
       checkpointDir: Option[String] = None,
       onBatchAdmitted: Option[(DataFrame, Long) => Unit] = None): DataFrame = {
-    val ckpt = checkpointDir.map(java.nio.file.Paths.get(_))
-      .getOrElse(EventStreams.scratchDir("graft_admit_ckpt_"))
     // ---- ONE artifact-state resolution per session ----
     // The session prologue previously paid one scan per VERB: the
     // pressure policy counted the tombstones and the index, the
@@ -301,14 +314,8 @@ object AdmissionStream {
         }
       }
     }
-    // probe the landing files' actual footer schema rather than
-    // hard-coding one (the "probe, don't assume" rule EventStreams
-    // learned from the r10 events re-encoding — a batch schema read,
-    // no data scan); an EMPTY landing dir (stream opened before the
-    // first file lands) falls back to the caller's schema
-    val landingSchema =
-      scala.util.Try(spark.read.parquet(landingDir).schema).toOption
-        .orElse(schemaFallback).getOrElse(defaultLandingSchema)
+    val landingSchema = StateFold.landingSchema(spark, landingDir,
+      schemaFallback, defaultLandingSchema)
     // the concrete tree this SESSION works under, resolved AFTER the
     // pressure fold (a fired fold publishes a new generation on pointer
     // roots): probes read it, batch fold-backs blind-append into it
@@ -329,17 +336,11 @@ object AdmissionStream {
     // cannot change under a running session; a fired fold has no table
     // left to mask — re-resolving per micro-batch was pure fixed cost)
     val sessionTombstones = if (folded) None else preTombs
-    val reader = spark.readStream.schema(landingSchema)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n.toString))
-    // highest batch id this run actually processed — feeds the
-    // stale-generation sweep after the stream stops (foreachBatch runs
-    // driver-side, so the mutation is safe)
-    var lastBatchId = -1L
-    val q = reader.parquet(landingDir)
-      .writeStream
-      .option("checkpointLocation", ckpt.toString)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        lastBatchId = math.max(lastBatchId, batchId)
+    // the highest batch id this run processed feeds the stale-generation
+    // sweep after the stream stops
+    val lastBatchId = StateFold.runBounded(StateFold.landing(spark,
+        landingDir, landingSchema, maxFilesPerTrigger), checkpointDir) {
+      (batch, batchId) =>
         // fold the standing index BEFORE probing once enough batch
         // subdirs accreted — never the current batch's own (see the
         // index-lifecycle note above)
@@ -410,27 +411,13 @@ object AdmissionStream {
           batch.join(admittedIdsDf.select(col("doc_id")), Seq("doc_id"),
             "left_semi"),
           batchId))
-        ()
-      }
-      .start()
-    try { q.processAllAvailable() } finally q.stop()
+    }
     // a re-run over fewer landing files leaves the prior run's
     // higher-id batch subdirs standing in both trees — sweep them so
     // the final read (and the standing index) reflect THIS run only
     pruneStaleBatches(spark, concrete, lastBatchId)
     pruneStaleBatches(spark, outPath, lastBatchId)
-    // a caller-supplied durable checkpoint is KEPT (it is the
-    // cross-session exactly-once state); only the scratch default is
-    // reclaimed
-    if (checkpointDir.isEmpty)
-      graft.operators.Maintenance.rmTree(ckpt.toFile)
-    // zero micro-batches (empty landing dir) never create outPath —
-    // the admitted set is simply empty, not an error
-    val outP = new org.apache.hadoop.fs.Path(outPath)
-    if (outP.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(outP))
-      spark.read.option("recursiveFileLookup", "true").parquet(outPath)
-    else
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(landingSchema.filter(f => f.name == "doc_id" || f.name == "text")))
+    readBatchTree(spark, outPath, StructType(landingSchema.filter(f =>
+      f.name == "doc_id" || f.name == "text")))
   }
 }

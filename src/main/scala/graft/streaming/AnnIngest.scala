@@ -134,12 +134,9 @@ object AnnIngest {
         "(compactIvfFlatIndex) between sessions")
     val ckpt = checkpointDir.map(java.nio.file.Paths.get(_))
       .getOrElse(EventStreams.scratchDir("graft_annin_ckpt_"))
-    val landingSchema =
-      scala.util.Try(spark.read.parquet(landingDir).schema).toOption
-        .orElse(schemaFallback).getOrElse(defaultLandingSchema)
-    val reader = spark.readStream.schema(landingSchema)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n.toString))
-    val src = reader.parquet(landingDir)
+    val src = StateFold.landing(spark, landingDir, StateFold.landingSchema(
+      spark, landingDir, schemaFallback, defaultLandingSchema),
+      maxFilesPerTrigger)
     val q = Similarity.assignCells(
         transform.map(_(src)).getOrElse(src), centroids)
       .writeStream

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StringType, StructField, StructType}
 
 import graft.functions.{TextFunctions => TF}
 import graft.operators.{QualityModel, Sketch, Upsert}
@@ -124,98 +124,45 @@ object CardStream {
         lit(k).as("p_k"))): _*)
   }
 
-  /** Fail fast when standing card state at `targetPath` was built under
-    * a different sketch size than `k` — the embedded-parameter check
-    * (one bounded distinct over an RLE'd constant column). ONLY an
-    * absent table counts as "no evidence" and passes: any other read
-    * failure (corrupt footer, permission error) rethrows — a damaged
-    * standing card must fail loudly here, not slip past this guard AND
-    * the applied-marker guard to be overwritten by the first merge. */
-  private def validateCardK(spark: SparkSession, targetPath: String,
-      k: Int): Unit =
-    if (graft.operators.Fs.exists(targetPath)) {
-      val t = spark.read.parquet(targetPath)
-      if (t.columns.contains("p_k")) {
-        t.select(col("p_k")).filter(col("p_k").isNotNull)
-          .distinct().collect()
-          .foreach { r =>
-            val pk = r.getInt(0)
-            require(pk == k,
-              s"card state at $targetPath carries k=$pk sketches but was " +
-                s"asked for k=$k — merging or estimating across sketch " +
-                "sizes silently corrupts the vocabulary estimate; match " +
-                "the build-time k or start a fresh targetPath")
-          }
-      }
-    }
+  /** Fail fast when the standing card state `t` (at `targetPath`) was
+    * built under a different sketch size than `k` — the
+    * embedded-parameter check (one bounded distinct over an RLE'd
+    * constant column). */
+  private def validateCardK(t: DataFrame, targetPath: String, k: Int): Unit =
+    if (t.columns.contains("p_k"))
+      t.select(col("p_k")).filter(col("p_k").isNotNull)
+        .distinct().collect()
+        .foreach { r =>
+          val pk = r.getInt(0)
+          require(pk == k,
+            s"card state at $targetPath carries k=$pk sketches but was " +
+              s"asked for k=$k — merging or estimating across sketch " +
+              "sizes silently corrupts the vocabulary estimate; match " +
+              "the build-time k or start a fresh targetPath")
+        }
 
   /** The SESSION-scoped card fold — [[runCardStream]]'s loop body,
     * exposed as a factory so compositions share it (the admission loop's
     * `onBatchAdmitted` observer: the card over only the ADMITTED docs,
-    * q143). Construction resolves the standing state ONCE — crash
-    * recovery, the embedded-k fail-fast, the applied set, and the card
-    * rows, collected DRIVER-SIDE (|sources| rows of five counters plus a
-    * k-long mins array — the bounded-collect discipline) — and each
-    * batch then folds its partial against the IN-MEMORY card: the
-    * per-batch work is ONE job (the partial's scan+agg, collected back);
-    * the driver-side merge is [[mergeCards]]'s law on longs (counter
-    * sums; mins = k smallest distinct of the union), bit-identical by
-    * [[CardStreamSpec]]'s local≡DF pin. State WRITES are GROUP-COMMITTED
-    * ([[StateFold]]): one staged swap per `flushEvery` folded batches
-    * and at session end, carrying every covered batch's marker.
-    * Single-writer contract enforced by [[StateFold.takeLease]]; a
-    * crash restarts the session, which re-reads the table from disk —
-    * see [[StateFold]] for the group-commit durability contract. */
+    * q143). A [[StateFold]] (see there for the group-commit protocol and
+    * durability contract) whose state is the card held driver-side
+    * (|sources| rows of five counters plus a k-long mins array). Per
+    * batch ONE job — the partial's scan+agg, collected back — merged by
+    * [[mergeCards]]'s law on longs ([[mergeCardsLocal]]), bit-identical
+    * by [[StateFoldSpec]]'s local≡DF pin. */
   def cardFold(spark: SparkSession, targetPath: String, weights: Seq[Long],
       k: Int, flushEvery: Int = Int.MaxValue,
-      durable: Boolean = false): StateFold = {
-    // a prior session may have died mid-swap — restore the table BEFORE
-    // any pre-merge read, or the recoverable state looks missing and the
-    // fail-fast guard silently passes (the recoverStagedSwap contract)
-    Upsert.recoverStagedSwap(targetPath)
-    validateCardK(spark, targetPath, k)
-    // durable OR finite-cadence sessions prime construction-time marker
-    // evidence (StateFold's first-flush-window contract; the durable
-    // flag keys priming on the same condition the restart guard uses —
-    // see quotaFold)
-    if (durable || flushEvery != Int.MaxValue)
-      StateFold.primeMarkerEvidence(spark, targetPath,
-        cardDf(spark, Map.empty, k).schema)
-    var applied = Upsert.appliedBatches(targetPath)
-    var card: Map[String, CardRow] =
-      if (graft.operators.Fs.exists(targetPath))
-        collectCard(spark.read.parquet(targetPath))
-      else Map.empty
-    var pending = Set.empty[Long]
-    var dirty = false
-    val assertLease = StateFold.takeLease(targetPath, "card")
-    def doFlush(): Unit =
-      // an only-empty-fold session against no standing table records
-      // nothing (the zero-row-table poison); once a table exists, a
-      // flush also marker-annotates batches that folded nothing
-      if (pending.nonEmpty && (dirty || graft.operators.Fs.exists(targetPath))) {
-        assertLease()
-        Upsert.mergeParquetBatches(spark, targetPath,
-          cardDf(spark, card, k).coalesce(1),
-          pending)((_, updates) => updates)
-        applied ++= pending
-        pending = Set.empty
-        dirty = false
-      }
-    new StateFold {
-      override def apply(batch: DataFrame, batchId: Long): Unit =
-        if (!applied.contains(batchId) && !pending.contains(batchId)) {
-          val partial = collectCard(cardPartial(batch, weights, k))
-          if (partial.nonEmpty) {
-            card = mergeCardsLocal(card, partial, k)
-            dirty = true
-          }
-          pending += batchId
-          if (pending.size >= flushEvery) doFlush()
-        }
-      override def flush(): Unit = doFlush()
-    }
-  }
+      durable: Boolean = false): StateFold =
+    StateFold(spark, targetPath, "card", cardSchema, flushEvery, durable) {
+      state =>
+        state.foreach(validateCardK(_, targetPath, k))
+        state.map(collectCard).getOrElse(Map.empty[String, CardRow])
+    } ((card, batch, _) => {
+      val partial = collectCard(cardPartial(batch, weights, k))
+      if (partial.isEmpty) None else Some(mergeCardsLocal(card, partial, k))
+    }, _.toSeq.sortBy(_._1).map { case (src, r) =>
+      Row(src, r.docs, r.chars, r.tokens, r.modelScoreMicros, r.keptDocs,
+        r.mins, k) })
 
   /** The card state's one-row-per-source payload, held driver-side by
     * [[cardFold]]: the five counters plus the KMV mins (ascending, ≤ k
@@ -255,23 +202,13 @@ object CardStream {
       src -> merged
     }.toMap
 
-  /** Render the driver-side card back to the state-table shape (sorted
-    * by source for deterministic files; `p_k` embedded). */
-  private def cardDf(spark: SparkSession, card: Map[String, CardRow],
-      k: Int): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("source", StringType)) ++
-      stateCols.map(StructField(_, LongType)) ++ Seq(
-      StructField("mins",
-        org.apache.spark.sql.types.ArrayType(LongType, containsNull = false)),
-      StructField("p_k", org.apache.spark.sql.types.IntegerType)))
-    val rows: java.util.List[org.apache.spark.sql.Row] =
-      java.util.Arrays.asList(card.toSeq.sortBy(_._1).map {
-        case (src, r) => org.apache.spark.sql.Row(src, r.docs, r.chars,
-          r.tokens, r.modelScoreMicros, r.keptDocs, r.mins, k)
-      }: _*)
-    spark.createDataFrame(rows, schema)
-  }
+  /** The card state table's schema (sorted by source when flushed;
+    * `p_k` embedded). */
+  private val cardSchema = StructType(Seq(
+    StructField("source", StringType)) ++
+    stateCols.map(StructField(_, LongType)) ++ Seq(
+    StructField("mins", ArrayType(LongType, containsNull = false)),
+    StructField("p_k", IntegerType)))
 
   /** Run a bounded document stream to completion, folding each
     * micro-batch's card partial into the standing state at
@@ -281,46 +218,10 @@ object CardStream {
       targetPath: String, weights: Seq[Long], k: Int = 64,
       maxFilesPerTrigger: Option[Int] = None,
       checkpointDir: Option[String] = None): Unit = {
-    // same silent-data-loss guard as streamingCmsCells: a standing card
-    // + scratch checkpoint means restarted batch ids colliding with the
-    // applied set
-    Upsert.recoverStagedSwap(targetPath)
-    require(checkpointDir.nonEmpty
-        || Upsert.appliedBatches(targetPath).isEmpty,
-      s"standing card at $targetPath already carries applied-batch " +
-        "markers and no durable checkpointDir was supplied — a scratch " +
-        "checkpoint restarts batch ids at 0, which would collide with " +
-        "the applied set and silently skip this session's data; pass " +
-        "the prior session's checkpointDir (or start a fresh targetPath)")
-    val ckpt = checkpointDir.map(java.nio.file.Paths.get(_))
-      .getOrElse(EventStreams.scratchDir("graft_card_ckpt_"))
-    // group-commit crash guard (durable continuations only) — see
-    // StateFold.requireNoLostFolds
-    checkpointDir.foreach(c =>
-      StateFold.requireNoLostFolds(targetPath, c, "card"))
-    val reader = spark.readStream.schema(landingSchema)
-    maxFilesPerTrigger.foreach(n =>
-      reader.option("maxFilesPerTrigger", n.toString))
-    // ONE session fold: standing card + applied set resolved here,
-    // carried across batches in memory; scratch checkpoints flush once
-    // at session end, durable ones every DefaultFlushEvery batches
-    val fold = cardFold(spark, targetPath, weights, k,
-      flushEvery =
-        if (checkpointDir.isEmpty) Int.MaxValue
-        else StateFold.DefaultFlushEvery,
-      durable = checkpointDir.nonEmpty)
-    val q = reader.parquet(landingDir)
-      .writeStream
-      .option("checkpointLocation", ckpt.toString)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        fold(batch, batchId)
-        ()
-      }
-      .start()
-    // flush in the finally: a half-run session persists what it folded
-    try { q.processAllAvailable() } finally { q.stop(); fold.flush() }
-    if (checkpointDir.isEmpty)
-      graft.operators.Maintenance.rmTree(ckpt.toFile)
+    StateFold.runFold(targetPath, "card", checkpointDir,
+      StateFold.landing(spark, landingDir, landingSchema, maxFilesPerTrigger))(
+      cardFold(spark, targetPath, weights, k, _, _))
+    ()
   }
 
   /** The card read off the standing state — q132's output shape, with
@@ -329,9 +230,9 @@ object CardStream {
   def readCard(spark: SparkSession, targetPath: String,
       k: Int = 64): DataFrame = {
     Upsert.recoverStagedSwap(targetPath)
-    validateCardK(spark, targetPath, k)
-    spark.read.parquet(targetPath)
-      .select(col("source"), col("docs"), col("chars"), col("tokens"),
+    val t = spark.read.parquet(targetPath)
+    validateCardK(t, targetPath, k)
+    t.select(col("source"), col("docs"), col("chars"), col("tokens"),
         Sketch.kmvEstimate("mins", k).as("est_distinct_tokens"),
         col("model_score_micros"), col("kept_docs"))
   }

@@ -1,9 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
+
+import graft.operators.Maintenance
 
 /** Structured Streaming extension of the snapshot pipeline (SURVEY §2.11):
   * the batch engine's event aggregations re-expressed as an incremental
@@ -17,9 +19,7 @@ import org.apache.spark.sql.types._
   */
 object EventStreams {
 
-  /** The CMS fold's flushed state-table schema — ONE definition shared
-    * by the construction-time evidence priming and every flush, so the
-    * primed table and the first real flush can never diverge. */
+  /** The CMS fold's flushed state-table schema. */
   private val cmsStateSchema: StructType = StructType(Seq(
     StructField("r", IntegerType),
     StructField("c", LongType),
@@ -95,9 +95,7 @@ object EventStreams {
         d.toString
       } else path
     val tsType = probeTsType(spark, dir)
-    val reader = spark.readStream.schema(eventSchemaFor(tsType))
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n.toString))
-    reader.parquet(dir)
+    StateFold.landing(spark, dir, eventSchemaFor(tsType), maxFilesPerTrigger)
       .withColumn("ts",
         graft.sources.Tables.guardTs(graft.sources.Tables.eventTsToTimestamp(tsType)))
   }
@@ -333,38 +331,18 @@ object EventStreams {
   def incrementalRollup(spark: SparkSession, path: String, targetPath: String,
       maxFilesPerTrigger: Option[Int] = None,
       checkpointDir: Option[String] = None): Unit = {
-    // same cross-session silent-skip guard as streamingCmsCells /
-    // CardStream (a scratch checkpoint restarts batch ids, which
-    // collide with the standing rollup's applied set and silently drop
-    // the new session's data); recover a mid-swap crash FIRST or the
-    // recoverable table looks missing and the guard passes vacuously
-    graft.operators.Upsert.recoverStagedSwap(targetPath)
-    require(checkpointDir.nonEmpty
-        || graft.operators.Upsert.appliedBatches(targetPath).isEmpty,
-      s"standing rollup at $targetPath already carries applied-batch " +
-        "markers and no durable checkpointDir was supplied — a scratch " +
-        "checkpoint restarts batch ids at 0, which would collide with " +
-        "the applied set and silently skip this session's data; pass " +
-        "the prior session's checkpointDir (or start a fresh targetPath)")
-    val ckpt = checkpointDir.map(java.nio.file.Paths.get(_))
-      .getOrElse(scratchDir("graft_rollup_ckpt_"))
-    val q = readEventStream(spark, path, maxFilesPerTrigger)
-      .writeStream
-      .option("checkpointLocation", ckpt.toString)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val agg = batch.groupBy(col("event_type"))
-          .agg(count(lit(1)).as("events"),
-            sum(floor(col("value") * lit(100.0) + lit(0.5)).cast("long")).as("value_cents"))
-        graft.operators.Upsert.mergeParquet(spark, targetPath, agg,
-          batchId = Some(batchId))(
-          graft.operators.Upsert.additiveMerge(_, _,
-            keys = Seq("event_type"), metrics = Seq("events", "value_cents")))
-        ()
-      }
-      .start()
-    try { q.processAllAvailable() } finally q.stop()
-    if (checkpointDir.isEmpty) rmDir(ckpt.toFile)
-    stagedDirs.remove(path).foreach(rmDir)
+    StateFold.requireFreshOrDurable(targetPath, "rollup", checkpointDir)
+    StateFold.runBounded(readEventStream(spark, path, maxFilesPerTrigger),
+        checkpointDir) { (batch, batchId) =>
+      val agg = batch.groupBy(col("event_type"))
+        .agg(count(lit(1)).as("events"),
+          sum(floor(col("value") * lit(100.0) + lit(0.5)).cast("long")).as("value_cents"))
+      graft.operators.Upsert.mergeParquet(spark, targetPath, agg,
+        batchId = Some(batchId))(
+        graft.operators.Upsert.additiveMerge(_, _,
+          keys = Seq("event_type"), metrics = Seq("events", "value_cents")))
+    }
+    stagedDirs.remove(path).foreach(Maintenance.rmTree)
   }
 
   /** Streaming Count-Min maintenance — [[incrementalRollup]]'s shape
@@ -395,95 +373,36 @@ object EventStreams {
       maxFilesPerTrigger: Option[Int] = None,
       checkpointDir: Option[String] = None): Unit = {
     // the cross-session collision above is SILENT data loss (restarted
-    // ids are skipped as replays, no error anywhere) — fail fast instead
-    // of relying on the caller having read the scaladoc: a standing
-    // sketch that already carries applied-batch markers plus a scratch
-    // checkpoint can only be a second session over the same target.
-    // Recover a mid-swap crash FIRST, or the recoverable table looks
-    // missing and the guard silently passes.
-    graft.operators.Upsert.recoverStagedSwap(targetPath)
-    require(checkpointDir.nonEmpty
-        || graft.operators.Upsert.appliedBatches(targetPath).isEmpty,
-      s"standing sketch at $targetPath already carries applied-batch " +
-        "markers and no durable checkpointDir was supplied — a scratch " +
-        "checkpoint restarts batch ids at 0, which would collide with " +
-        "the applied set and silently skip this session's data; pass " +
-        "the prior session's checkpointDir (or start a fresh targetPath)")
-    val ckpt = checkpointDir.map(java.nio.file.Paths.get(_))
-      .getOrElse(scratchDir("graft_cms_ckpt_"))
-    // group-commit crash guard (durable continuations only) — see
-    // StateFold.requireNoLostFolds
-    checkpointDir.foreach { c =>
-      StateFold.requireNoLostFolds(targetPath, c, "cms")
-      // prime construction-time marker evidence (StateFold's
-      // first-flush-window contract — durable sessions only)
-      StateFold.primeMarkerEvidence(spark, targetPath, cmsStateSchema)
-    }
-    // SESSION-scoped fold (the [[StateFold]] discipline): standing cells
-    // collected ONCE driver-side (≤ depth·width rows — bounded by the
-    // sketch geometry, never the stream), each batch contributes ONE
-    // cmsCells job collected and summed in memory, and the staged-swap
-    // WRITE group-commits (session end on the scratch default, every
-    // DefaultFlushEvery batches on a durable checkpoint) instead of a
-    // read-merge-rewrite pair per micro-batch.
-    var applied = graft.operators.Upsert.appliedBatches(targetPath)
-    var cellsMap: Map[(Int, Long), Long] =
-      if (graft.operators.Fs.exists(targetPath))
-        spark.read.parquet(targetPath).select(col("r"), col("c"), col("cnt"))
-          .collect()
-          .map(row => (row.getInt(0), row.getLong(1)) -> row.getLong(2)).toMap
-      else Map.empty
-    var pending = Set.empty[Long]
-    var dirty = false
-    val assertLease = StateFold.takeLease(targetPath, "cms")
-    val flushEvery =
-      if (checkpointDir.isEmpty) Int.MaxValue
-      else StateFold.DefaultFlushEvery
-    def doFlush(): Unit =
-      if (pending.nonEmpty &&
-          (dirty || graft.operators.Fs.exists(targetPath))) {
-        assertLease()
-        val schema = cmsStateSchema
-        val rows: java.util.List[org.apache.spark.sql.Row] =
-          java.util.Arrays.asList(cellsMap.toSeq.sortBy(_._1).map {
-            case ((r, c), n) => org.apache.spark.sql.Row(r, c, n)
-          }: _*)
-        graft.operators.Upsert.mergeParquetBatches(spark, targetPath,
-          spark.createDataFrame(rows, schema).coalesce(1),
-          pending)((_, updates) => updates)
-        applied ++= pending
-        pending = Set.empty
-        dirty = false
-      }
-    val q = readEventStream(spark, path, maxFilesPerTrigger)
-      .writeStream
-      .option("checkpointLocation", ckpt.toString)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!applied.contains(batchId) && !pending.contains(batchId)) {
-          // ONE job: ≤ depth·width cells, the documented bounded collect
-          val delta = graft.operators.Sketch.cmsCells(batch, item, depth, width)
-            .select(col("r"), col("c"), col("cnt")).collect()
-          if (delta.nonEmpty) {
-            cellsMap = delta.foldLeft(cellsMap) { (m, row) =>
-              val k = (row.getInt(0), row.getLong(1))
-              m.updated(k, m.getOrElse(k, 0L) + row.getLong(2))
-            }
-            dirty = true
-          }
-          pending += batchId
-          if (pending.size >= flushEvery) doFlush()
-        }
-        ()
-      }
-      .start()
-    // flush in the finally: a half-run session persists what it folded
-    try { q.processAllAvailable() } finally { q.stop(); doFlush() }
-    // a caller-supplied durable checkpoint is KEPT (it is the
-    // cross-session exactly-once state); only the scratch default is
-    // reclaimed
-    if (checkpointDir.isEmpty) rmDir(ckpt.toFile)
-    stagedDirs.remove(path).foreach(rmDir)
+    // ids are skipped as replays, no error anywhere) — runFold fails fast
+    // instead of relying on the caller having read the scaladoc
+    StateFold.runFold(targetPath, "cms", checkpointDir,
+      readEventStream(spark, path, maxFilesPerTrigger))(
+      cmsFold(spark, targetPath, item, depth, width, _, _))
+    stagedDirs.remove(path).foreach(Maintenance.rmTree)
   }
+
+  /** The SESSION-scoped sketch fold — [[streamingCmsCells]]'s loop body.
+    * A [[StateFold]] (see there for the group-commit protocol and
+    * durability contract) whose state is the standing cells held
+    * driver-side (≤ depth·width rows — bounded by the sketch geometry,
+    * never the stream); each batch contributes ONE cmsCells job,
+    * collected and summed in memory. */
+  private[graft] def cmsFold(spark: SparkSession, targetPath: String,
+      item: Column, depth: Int, width: Int, flushEvery: Int = Int.MaxValue,
+      durable: Boolean = false): StateFold =
+    StateFold(spark, targetPath, "cms", cmsStateSchema, flushEvery, durable)(
+      _.map(_.select(col("r"), col("c"), col("cnt")).collect()
+        .map(row => (row.getInt(0), row.getLong(1)) -> row.getLong(2)).toMap)
+        .getOrElse(Map.empty[(Int, Long), Long]))((cells, batch, _) => {
+      // ONE job: ≤ depth·width cells, the documented bounded collect
+      val delta = graft.operators.Sketch.cmsCells(batch, item, depth, width)
+        .select(col("r"), col("c"), col("cnt")).collect()
+      if (delta.isEmpty) None
+      else Some(delta.foldLeft(cells) { (m, row) =>
+        val k = (row.getInt(0), row.getLong(1))
+        m.updated(k, m.getOrElse(k, 0L) + row.getLong(2))
+      })
+    }, _.toSeq.sortBy(_._1).map { case ((r, c), n) => Row(r, c, n) })
 
   /** Run a streaming aggregation over a static directory to completion and
     * return the final result — the batch-equivalence harness used by the
@@ -520,19 +439,13 @@ object EventStreams {
       try { q.processAllAvailable() } finally q.stop()
     } finally {
       spark.conf.set(shufflePartitionsKey, prevShuffle)
-      rmDir(ckpt.toFile)
+      Maintenance.rmTree(ckpt.toFile)
     }
     val view = spark.table(name)
     val rows = view.collect().toIndexedSeq
     val schema = view.schema
     spark.catalog.dropTempView(name)
-    stagedDirs.remove(path).foreach { d =>
-      def rm(f: java.io.File): Unit = if (f.exists()) {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete(); ()
-      }
-      rm(d)
-    }
+    stagedDirs.remove(path).foreach(Maintenance.rmTree)
     spark.createDataFrame(
       spark.sparkContext.parallelize(rows, math.max(1, rows.size / 1000 + 1)), schema)
   }
@@ -612,7 +525,7 @@ object EventStreams {
     srcStageCache.get(pathKey) match {
       case Some((id, dir)) if id == identity => dir
       case prev =>
-        prev.foreach { case (_, dir) => rmDir(dir.toFile) }
+        prev.foreach { case (_, dir) => Maintenance.rmTree(dir.toFile) }
         val d = scratchDir("graft_stream_srccache_")
         files.foreach(f =>
           java.nio.file.Files.copy(f.toPath, d.resolve(f.getName)))
@@ -692,7 +605,7 @@ object EventStreams {
           val keep = scratchDir("graft_stream_sentcache_")
             .resolve("sentinel.parquet")
           Files.move(part.toPath, keep)
-          rmDir(tmp.toFile)
+          Maintenance.rmTree(tmp.toFile)
           keep
         })
     def sentMicrosFor(t: Long, n: Int): Long =
@@ -760,8 +673,8 @@ object EventStreams {
       spark.conf.set(shufflePartitionsKey, prevShuffle)
       // landing/checkpoint are private scratch — removed on success AND
       // failure (only `out` survives, as the caller's artifact)
-      rmDir(landing.toFile)
-      rmDir(ckpt.toFile)
+      Maintenance.rmTree(landing.toFile)
+      Maintenance.rmTree(ckpt.toFile)
     }
     // empty-source guard: append mode with no rows (or no closed windows)
     // writes no data files, and reading the bare dir would throw "Unable
@@ -775,10 +688,5 @@ object EventStreams {
     if (raw.columns.contains("event_type"))
       raw.filter(col("event_type") =!= sentinelType)
     else raw
-  }
-
-  private def rmDir(f: java.io.File): Unit = if (f.exists()) {
-    if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rmDir)
-    f.delete(); ()
   }
 }

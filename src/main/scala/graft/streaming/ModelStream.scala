@@ -1,10 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 
-import graft.operators.{Selection, Upsert}
+import graft.operators.Selection
 
 /** STREAMING DSIR MODEL MAINTENANCE — the n-gram model artifact
   * ([[Selection.writeNgramModel]]) kept CURRENT under a document
@@ -33,14 +33,10 @@ import graft.operators.{Selection, Upsert}
   */
 object ModelStream {
 
-  /** The flushed state-table schema — ONE definition shared by the
-    * construction-time evidence priming and every flush, so the primed
-    * table and the first real flush can never diverge. */
+  /** The flushed state-table schema. */
   private val stateSchema: StructType = StructType(Seq(
-    StructField("s", org.apache.spark.sql.types.IntegerType),
-    StructField("b", LongType),
-    StructField("c", LongType),
-    StructField("p_nbuckets", org.apache.spark.sql.types.IntegerType)))
+    StructField("s", IntegerType), StructField("b", LongType),
+    StructField("c", LongType), StructField("p_nbuckets", IntegerType)))
 
   /** Landing schema fallback for an empty landing dir (stream opened
     * before the first file lands — footer probing needs a file). */
@@ -48,31 +44,49 @@ object ModelStream {
     StructField("doc_id", LongType),
     StructField("text", StringType)))
 
-  /** Fail fast when standing model state at `targetPath` was fitted
-    * under a different hash width than `nBuckets` — the
-    * embedded-parameter check of the versioned-artifact family (one
-    * bounded distinct over an RLE'd constant column). ONLY an absent
-    * table counts as "no evidence": any other read failure rethrows —
-    * damaged state must fail loudly here, not slip past this guard AND
-    * the applied-marker guard to be overwritten by the first merge. */
-  private def validateModelBuckets(spark: SparkSession, targetPath: String,
-      nBuckets: Int): Unit =
-    if (graft.operators.Fs.exists(targetPath)) {
-      val t = spark.read.parquet(targetPath)
-      require(t.columns.contains("p_nbuckets"),
-        s"model state at $targetPath carries no p_nbuckets — not a " +
-          "writeNgramModel/ModelStream artifact; start a fresh targetPath")
-      t.select(col("p_nbuckets")).filter(col("p_nbuckets").isNotNull)
-        .distinct().collect()
-        .foreach { r =>
-          val pb = r.getInt(0)
-          require(pb == nBuckets,
-            s"model state at $targetPath was fitted at $pb buckets but " +
-              s"the stream was asked for $nBuckets — folding across hash " +
-              "widths silently mis-counts every gram; match the " +
-              "build-time width or start a fresh targetPath")
+  /** The SESSION-scoped model fold — [[runModelStream]]'s loop body. A
+    * [[StateFold]] (see there for the group-commit protocol and
+    * durability contract) whose state is the standing cells held
+    * driver-side (≤ 2·nBuckets rows — hash-width-bounded by
+    * construction); each batch contributes ONE gramCells job, collected
+    * and summed in memory.
+    *
+    * The parameter fail-fast refuses standing state fitted under a
+    * different hash width than `nBuckets` (one bounded distinct over an
+    * RLE'd constant column) or carrying no width at all: folding across
+    * hash widths silently mis-counts every gram. */
+  private[graft] def modelFold(spark: SparkSession, targetPath: String,
+      nBuckets: Int, text: Column, flushEvery: Int = Int.MaxValue,
+      durable: Boolean = false): StateFold =
+    StateFold(spark, targetPath, "model", stateSchema, flushEvery, durable) {
+      state =>
+        state.foreach { t =>
+          require(t.columns.contains("p_nbuckets"),
+            s"model state at $targetPath carries no p_nbuckets — not a " +
+              "writeNgramModel/ModelStream artifact; start a fresh targetPath")
+          t.select(col("p_nbuckets")).filter(col("p_nbuckets").isNotNull)
+            .distinct().collect()
+            .foreach { r =>
+              val pb = r.getInt(0)
+              require(pb == nBuckets,
+                s"model state at $targetPath was fitted at $pb buckets but " +
+                  s"the stream was asked for $nBuckets — folding across hash " +
+                  "widths silently mis-counts every gram; match the " +
+                  "build-time width or start a fresh targetPath")
+            }
         }
-    }
+        state.map(_.select(col("s"), col("b"), col("c")).collect()
+          .map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2)).toMap)
+          .getOrElse(Map.empty[(Int, Long), Long])
+    } ((cells, batch, _) => {
+      val delta = Selection.gramCells(batch, text, nBuckets)
+        .collect() // ≤ 2·nBuckets rows, the documented bounded collect
+      if (delta.isEmpty) None
+      else Some(delta.foldLeft(cells) { (m, r) =>
+        val k = (r.getInt(0), r.getLong(1))
+        m.updated(k, m.getOrElse(k, 0L) + r.getLong(2))
+      })
+    }, _.toSeq.sortBy(_._1).map { case ((s, b), c) => Row(s, b, c, nBuckets) })
 
   /** Run a bounded document stream to completion, folding each
     * micro-batch's hashed-n-gram counts into the model artifact at
@@ -92,95 +106,10 @@ object ModelStream {
       maxFilesPerTrigger: Option[Int] = None,
       schemaFallback: Option[StructType] = None,
       checkpointDir: Option[String] = None): Unit = {
-    // a prior session may have died mid-swap — restore the table BEFORE
-    // any pre-merge read, or the recoverable state looks missing and
-    // BOTH fail-fast guards below silently pass
-    Upsert.recoverStagedSwap(targetPath)
-    validateModelBuckets(spark, targetPath, nBuckets)
-    require(checkpointDir.nonEmpty
-        || Upsert.appliedBatches(targetPath).isEmpty,
-      s"standing model at $targetPath already carries applied-batch " +
-        "markers and no durable checkpointDir was supplied — a scratch " +
-        "checkpoint restarts batch ids at 0, which would collide with " +
-        "the applied set and silently skip this session's data; pass " +
-        "the prior session's checkpointDir (or start a fresh targetPath)")
-    val ckpt = checkpointDir.map(java.nio.file.Paths.get(_))
-      .getOrElse(EventStreams.scratchDir("graft_model_ckpt_"))
-    val landingSchema =
-      scala.util.Try(spark.read.parquet(landingDir).schema).toOption
-        .orElse(schemaFallback).getOrElse(defaultLandingSchema)
-    val reader = spark.readStream.schema(landingSchema)
-    maxFilesPerTrigger.foreach(n =>
-      reader.option("maxFilesPerTrigger", n.toString))
-    // group-commit crash guard (durable continuations only) — see
-    // StateFold.requireNoLostFolds
-    checkpointDir.foreach { c =>
-      StateFold.requireNoLostFolds(targetPath, c, "model")
-      // prime construction-time marker evidence (StateFold's
-      // first-flush-window contract — durable sessions only)
-      StateFold.primeMarkerEvidence(spark, targetPath, stateSchema)
-    }
-    // SESSION-scoped fold (the [[StateFold]] discipline the quota/board/
-    // card folds set): the standing cells are collected ONCE driver-side
-    // (≤ 2·nBuckets rows — the model state is hash-width-bounded by
-    // construction), each batch contributes ONE gramCells job collected
-    // and summed in memory, and the staged-swap WRITE group-commits —
-    // session end under the scratch default, every DefaultFlushEvery
-    // batches under a durable checkpoint — carrying every covered
-    // batch's applied marker. The old shape re-read and replace-wrote
-    // the table every micro-batch: two jobs of pure fixed cost per batch
-    // for a table whose size never grows.
-    var applied = Upsert.appliedBatches(targetPath)
-    var cells: Map[(Int, Long), Long] =
-      if (graft.operators.Fs.exists(targetPath))
-        spark.read.parquet(targetPath).select(col("s"), col("b"), col("c"))
-          .collect()
-          .map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2)).toMap
-      else Map.empty
-    var pending = Set.empty[Long]
-    var dirty = false
-    val assertLease = StateFold.takeLease(targetPath, "model")
-    val flushEvery =
-      if (checkpointDir.isEmpty) Int.MaxValue
-      else StateFold.DefaultFlushEvery
-    def doFlush(): Unit =
-      if (pending.nonEmpty && (dirty || graft.operators.Fs.exists(targetPath))) {
-        assertLease()
-        val schema = stateSchema
-        val rows: java.util.List[org.apache.spark.sql.Row] =
-          java.util.Arrays.asList(cells.toSeq.sortBy(_._1).map {
-            case ((s, b), c) => org.apache.spark.sql.Row(s, b, c, nBuckets)
-          }: _*)
-        Upsert.mergeParquetBatches(spark, targetPath,
-          spark.createDataFrame(rows, schema).coalesce(1),
-          pending)((_, updates) => updates)
-        applied ++= pending
-        pending = Set.empty
-        dirty = false
-      }
-    val q = reader.parquet(landingDir)
-      .writeStream
-      .option("checkpointLocation", ckpt.toString)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!applied.contains(batchId) && !pending.contains(batchId)) {
-          val delta = Selection.gramCells(batch, col(textCol), nBuckets)
-            .collect() // ≤ 2·nBuckets rows, the documented bounded collect
-          if (delta.nonEmpty) {
-            cells = delta.foldLeft(cells) { (m, r) =>
-              val k = (r.getInt(0), r.getLong(1))
-              m.updated(k, m.getOrElse(k, 0L) + r.getLong(2))
-            }
-            dirty = true
-          }
-          pending += batchId
-          if (pending.size >= flushEvery) doFlush()
-        }
-        ()
-      }
-      .start()
-    // flush in the finally: a half-run session persists what it folded
-    try { q.processAllAvailable() } finally { q.stop(); doFlush() }
-    if (checkpointDir.isEmpty)
-      graft.operators.Maintenance.rmTree(ckpt.toFile)
+    StateFold.runFold(targetPath, "model", checkpointDir,
+      StateFold.landing(spark, landingDir, StateFold.landingSchema(spark,
+        landingDir, schemaFallback, defaultLandingSchema), maxFilesPerTrigger))(
+      modelFold(spark, targetPath, nBuckets, col(textCol), _, _))
+    ()
   }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{SaveMode, SparkSession}
 import org.apache.spark.sql.types.StructType
 
 import graft.operators.Similarity
@@ -60,26 +60,16 @@ object ProbeStream {
       s"no centroid table under $indexPath — not a writeIvfFlatIndex artifact")
     val sessionTombstones = Similarity.tombstonesOf(spark, concrete)
       .map(_.localCheckpoint(true))
-    val landingSchema =
-      scala.util.Try(spark.read.parquet(landingDir).schema).toOption
-        .orElse(schemaFallback).getOrElse(AnnIngest.defaultLandingSchema)
-    val ckpt = checkpointDir.map(java.nio.file.Paths.get(_))
-      .getOrElse(EventStreams.scratchDir("graft_probe_ckpt_"))
-    val reader = spark.readStream.schema(landingSchema)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n.toString))
-    val q = reader.parquet(landingDir)
-      .writeStream
-      .option("checkpointLocation", ckpt.toString)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        Similarity.ivfFlatProbeResolved(
-            batch.select("vec_id", "embedding"), concrete, k, nProbe,
-            centroids, sessionTombstones)
-          .write.mode(SaveMode.Overwrite)
-          .parquet(s"$outDir/batch=$batchId")
-      }
-      .start()
-    try { q.processAllAvailable() } finally q.stop()
-    if (checkpointDir.isEmpty)
-      graft.operators.Maintenance.rmTree(ckpt.toFile)
+    StateFold.runBounded(StateFold.landing(spark, landingDir,
+        StateFold.landingSchema(spark, landingDir, schemaFallback,
+          AnnIngest.defaultLandingSchema), maxFilesPerTrigger),
+        checkpointDir) { (batch, batchId) =>
+      Similarity.ivfFlatProbeResolved(
+          batch.select("vec_id", "embedding"), concrete, k, nProbe,
+          centroids, sessionTombstones)
+        .write.mode(SaveMode.Overwrite)
+        .parquet(s"$outDir/batch=$batchId")
+    }
+    ()
   }
 }

@@ -111,8 +111,6 @@ object SemanticAdmission {
     // continues batch ids (committed landing files skipped, no clobber,
     // sweep trivially safe); the scratch default is the
     // single-generation bounded replay
-    val ckpt = checkpointDir.map(java.nio.file.Paths.get(_))
-      .getOrElse(EventStreams.scratchDir("graft_semadmit_ckpt_"))
     // ---- ONE artifact-state resolution per session (the
     // AdmissionStream consolidation, vector form): the tombstone table
     // is read once — distinct + pinned, feeding both the pressure
@@ -144,9 +142,8 @@ object SemanticAdmission {
         }
       }
     }
-    val landingSchema =
-      scala.util.Try(spark.read.parquet(landingDir).schema).toOption
-        .orElse(schemaFallback).getOrElse(defaultLandingSchema)
+    val landingSchema = StateFold.landingSchema(spark, landingDir,
+      schemaFallback, defaultLandingSchema)
     // the concrete generation this SESSION works under, resolved once
     // AFTER the pressure fold (a fired fold publishes a new generation):
     // seed assignments are read from it, and the streamed fold-back
@@ -170,17 +167,11 @@ object SemanticAdmission {
       case Some(tb) => seedAsg0.join(tb, Seq("vec_id"), "left_anti")
       case None => seedAsg0
     }
-    val reader = spark.readStream.schema(landingSchema)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n.toString))
-    // highest batch id this run processed — feeds the stale-generation
-    // sweep below (the AdmissionStream idiom; foreachBatch runs
-    // driver-side, so the mutation is safe)
-    var lastBatchId = -1L
-    val q = reader.parquet(landingDir)
-      .writeStream
-      .option("checkpointLocation", ckpt.toString)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        lastBatchId = math.max(lastBatchId, batchId)
+    // the highest batch id this run processed feeds the stale-generation
+    // sweep below
+    val lastBatchId = StateFold.runBounded(StateFold.landing(spark,
+        landingDir, landingSchema, maxFilesPerTrigger), checkpointDir) {
+      (batch, batchId) =>
         // assign the batch ONCE under the frozen quantizer (the rows
         // feed the probe, the admitted output AND the index fold-back —
         // re-assigning per use would run the argmin pass thrice). A
@@ -221,24 +212,14 @@ object SemanticAdmission {
             .select(col("cell"), col("vec_id"), col("embedding"), col("c_norm"))
             .write.mode("overwrite")
             .parquet(s"$concrete/stream/batch-$batchId")))
-        ()
-      }
-      .start()
-    try { q.processAllAvailable() } finally q.stop()
+    }
     // a re-run over fewer landing files than the prior run leaves that
     // run's higher-id batch subdirs standing in the streamed index tree
     // and the output tree — sweep them so the final read (and any later
     // session's full-tree read) reflects THIS run only
     AdmissionStream.pruneStaleBatches(spark, s"$concrete/stream", lastBatchId)
     AdmissionStream.pruneStaleBatches(spark, outPath, lastBatchId)
-    if (checkpointDir.isEmpty)
-      graft.operators.Maintenance.rmTree(ckpt.toFile)
-    val outP = new org.apache.hadoop.fs.Path(outPath)
-    if (outP.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(outP))
-      spark.read.option("recursiveFileLookup", "true").parquet(outPath)
-    else
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(landingSchema.filter(f =>
-          f.name == "vec_id" || f.name == "embedding")))
+    AdmissionStream.readBatchTree(spark, outPath, StructType(
+      landingSchema.filter(f => f.name == "vec_id" || f.name == "embedding")))
   }
 }

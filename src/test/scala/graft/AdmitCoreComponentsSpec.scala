@@ -270,35 +270,6 @@ class AdmitCoreComponentsSpec extends SparkSpecBase {
 
   test("one bounded call runs a pinned number of Spark jobs: one bounded " +
       "take, and no extra job when a batch has no in-batch candidates") {
-    val sc = spark.sparkContext
-    // the jobs started under a call's own job group; a sentinel job
-    // under a second group marks the end (the listener bus delivers in
-    // order, so once the sentinel shows up every earlier job has)
-    def jobsOf(body: => Unit): Int = {
-      val tag = "graft-job-pin-" + java.util.UUID.randomUUID()
-      val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          val g = js.properties.getProperty("spark.jobGroup.id")
-          if (g != null) groups.add(g)
-          ()
-        }
-      }
-      sc.addSparkListener(listener)
-      try {
-        sc.setJobGroup(tag, "job pin", false)
-        try body finally sc.clearJobGroup()
-        sc.setJobGroup(tag + "-end", "job pin sentinel", false)
-        try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-        val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-        while (!groups.contains(tag + "-end") &&
-            System.nanoTime() < deadline) Thread.sleep(50)
-        groups.contains(tag + "-end") shouldBe true
-        import scala.jdk.CollectionConverters._
-        groups.iterator().asScala.count(_ == tag)
-      } finally sc.removeSparkListener(listener)
-    }
     def sigsOf(texts: Seq[(Long, String)]) =
       Dedup.nearDupIndex(texts.toDF("doc_id", "text"), col("doc_id"),
         col("text"), shingleN = 3, k = 8, rowsPerBand = 2).localCheckpoint(true)

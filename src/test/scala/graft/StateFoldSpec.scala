@@ -95,60 +95,163 @@ class StateFoldSpec extends SparkSpecBase {
   }
 
   test("second writer takes the lease; the superseded fold's flush fails fast") {
-    val root = Files.createTempDirectory("graft_sf_lease_")
+    import graft.streaming.{EventStreams, GramianStream, ModelStream, TopNStream}
+    // each group-commit fold: a factory over a state path, and a batch
+    // that changes its state
+    val folds: Seq[(String, String => StateFold, org.apache.spark.sql.DataFrame)] = Seq(
+      ("quota", st => QuotaStream.quotaFold(spark, st, st + "_out",
+        capPerSource = 2L), docs(1L)),
+      ("top-N", st => TopNStream.boardFold(spark, st, n = 2, "n_chars"),
+        docs(1L)),
+      ("card", st => CardStream.cardFold(spark, st, SparkEntry.q130Weights,
+        k = 8), docs(1L)),
+      ("model", st => ModelStream.modelFold(spark, st, nBuckets = 64,
+        col("text")), docs(1L)),
+      ("gramian", st => GramianStream.gramianFold(spark, st, scale = 1e6,
+        col("embedding")), vecs(1L)),
+      ("cms", st => EventStreams.cmsFold(spark, st, col("doc_id"),
+        depth = 3, width = 64), docs(1L)))
+    folds.foreach { case (what, fold, batch) =>
+      withClue(s"$what: ") {
+        val root = Files.createTempDirectory("graft_sf_lease_")
+        try {
+          val state = root.resolve("state").toString
+          val first = fold(state)
+          first(batch, 0L)
+          // a second factory against the SAME state path supersedes the
+          // lease
+          val second = fold(state)
+          val e = intercept[IllegalArgumentException] { first.flush() }
+          e.getMessage should include("leased to another session")
+          e.getMessage should include(s"$what state at $state")
+          // the live writer is unaffected: its table is exactly what a
+          // lone writer of the same batch leaves
+          second(batch, 0L)
+          second.flush()
+          val lone = root.resolve("lone").toString
+          val ref = fold(lone)
+          ref(batch, 0L)
+          ref.flush()
+          def rows(p: String) =
+            spark.read.parquet(p).collect().map(_.toString).sorted.toSeq
+          rows(state) should not be empty
+          rows(state) shouldBe rows(lone)
+          graft.operators.Upsert.appliedBatches(state) shouldBe Set(0L)
+        } finally graft.operators.Maintenance.rmTree(root.toFile)
+      }
+    }
+  }
+
+  /** Move `df` as ONE parquet file into `landing/name`, mtime `mod`
+    * (the file source picks files up in mtime order). */
+  private def land(landing: java.nio.file.Path,
+      df: org.apache.spark.sql.DataFrame, name: String, mod: Long): Unit = {
+    val stage = Files.createTempDirectory("graft_sf_stage_")
+    df.coalesce(1).write.mode("overwrite").parquet(stage.toString)
+    val part = stage.toFile.listFiles().filter(_.getName.endsWith(".parquet")).head
+    Files.move(part.toPath, landing.resolve(name))
+    landing.resolve(name).toFile.setLastModified(mod)
+    graft.operators.Maintenance.rmTree(stage.toFile)
+  }
+
+  /** Two landing files, one per trigger under `maxFilesPerTrigger = 1`. */
+  private def landTwo(a: org.apache.spark.sql.DataFrame,
+      b: org.apache.spark.sql.DataFrame)(landing: java.nio.file.Path): Unit = {
+    land(landing, a, "a.parquet", 1000000L)
+    land(landing, b, "b.parquet", 2000000L)
+  }
+
+  private def docs(ids: Long*) = ids.map(i =>
+      (i, s"s${i % 2}", i * 10L, s"alpha beta gamma doc$i delta"))
+    .toDF("doc_id", "source", "n_chars", "text")
+
+  private def vecs(ids: Long*) = ids.map(i => (i, Seq(1.0f, i.toFloat)))
+    .toDF("vec_id", "embedding")
+
+  /** Events in the legacy long-nanos `ts` encoding
+    * ([[graft.streaming.EventStreams.eventSchema]]), 2023-11. */
+  private def events(ids: Long*) = ids.map(i =>
+      (i, 1700000000000000000L + i * 1000000000L, i % 3, "click", 1.0, "{}"))
+    .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+
+  /** Each group-commit fold runner: its name, how to land its two input
+    * files, and a run over (landing, state, checkpointDir). */
+  private def foldRunners: Seq[(String, java.nio.file.Path => Unit,
+      (String, String, Option[String]) => Unit)] = {
+    import graft.streaming.{EventStreams, GramianStream, ModelStream, TopNStream}
+    val landDocs = landTwo(docs(1L, 2L, 3L), docs(4L, 5L)) _
+    Seq(
+      ("top-N", landDocs, (l, s, c) => {
+        TopNStream.runTopN(spark, l, s, n = 2, scoreCol = "n_chars",
+          maxFilesPerTrigger = Some(1), checkpointDir = c)
+        ()
+      }),
+      ("quota", landDocs, (l, s, c) => {
+        QuotaStream.runQuotaAdmission(spark, l, s, s + "_out",
+          capPerSource = 2L, maxFilesPerTrigger = Some(1), checkpointDir = c)
+        ()
+      }),
+      ("card", landDocs, (l, s, c) =>
+        CardStream.runCardStream(spark, l, s, SparkEntry.q130Weights, k = 8,
+          maxFilesPerTrigger = Some(1), checkpointDir = c)),
+      ("model", landDocs, (l, s, c) =>
+        ModelStream.runModelStream(spark, l, s, nBuckets = 64,
+          maxFilesPerTrigger = Some(1), checkpointDir = c)),
+      ("gramian", landTwo(vecs(1L, 2L), vecs(3L)) _, (l, s, c) =>
+        GramianStream.runGramianStream(spark, l, s,
+          maxFilesPerTrigger = Some(1), checkpointDir = c)),
+      ("cms", landTwo(events(1L, 2L, 3L), events(4L, 5L)) _, (l, s, c) =>
+        EventStreams.streamingCmsCells(spark, l, s, col("user_id"),
+          depth = 3, width = 64, maxFilesPerTrigger = Some(1),
+          checkpointDir = c)))
+  }
+
+  /** `f(landing, state, checkpoint)`: paths in a fresh root whose
+    * landing dir holds `landIn`'s files; the root is deleted after. */
+  private def withLanding[A](landIn: java.nio.file.Path => Unit)(
+      f: (String, String, String) => A): A = {
+    val root = Files.createTempDirectory("graft_sf_run_")
     try {
-      val state = root.resolve("state").toString
-      val first = QuotaStream.quotaFold(spark, state,
-        root.resolve("out_a").toString, capPerSource = 2L)
-      first(Seq((1L, "s1")).toDF("doc_id", "source"), 0L)
-      // a second factory against the SAME state path supersedes the lease
-      val second = QuotaStream.quotaFold(spark, state,
-        root.resolve("out_b").toString, capPerSource = 2L)
-      val e = intercept[IllegalArgumentException] { first.flush() }
-      e.getMessage should include("leased to another session")
-      // the live writer is unaffected
-      second(Seq((2L, "s1")).toDF("doc_id", "source"), 0L)
-      second.flush()
-      spark.read.parquet(state).select("source", "admitted")
-        .as[(String, Long)].collect().toMap shouldBe Map("s1" -> 1L)
+      val landing = root.resolve("landing"); Files.createDirectory(landing)
+      landIn(landing)
+      f(landing.toString, root.resolve("state").toString,
+        root.resolve("ckpt").toString)
     } finally graft.operators.Maintenance.rmTree(root.toFile)
   }
 
   test("a runner refuses a durable continuation whose state lost a fold") {
-    import graft.streaming.TopNStream
-    val root = Files.createTempDirectory("graft_sf_runlost_")
-    try {
-      val landing = root.resolve("landing"); Files.createDirectory(landing)
-      def land(df: org.apache.spark.sql.DataFrame, name: String, mod: Long): Unit = {
-        val stage = Files.createTempDirectory("graft_sf_stage_")
-        df.coalesce(1).write.mode("overwrite").parquet(stage.toString)
-        val part = stage.toFile.listFiles().filter(_.getName.endsWith(".parquet")).head
-        Files.move(part.toPath, landing.resolve(name))
-        landing.resolve(name).toFile.setLastModified(mod); ()
+    foldRunners.foreach { case (what, landIn, run) =>
+      withClue(s"$what: ") {
+        withLanding(landIn) { (landing, state, ckpt) =>
+          run(landing, state, Some(ckpt))
+          // simulate a crash-lost fold: strike batch 1 from the applied
+          // markers while the checkpoint still shows it committed — the
+          // next durable continuation must fail loudly, not serve state
+          // missing that batch's fold
+          // rewrite through Fs (Hadoop local FS is checksummed — a raw
+          // nio write would leave a stale .crc sidecar)
+          graft.operators.Fs.writeText(s"$state/_graft_applied_batches", "0\n")
+          val e = intercept[IllegalArgumentException] {
+            run(landing, state, Some(ckpt))
+          }
+          e.getMessage should include("missing the folds")
+        }
       }
-      land(Seq((1L, "s1", 10L), (2L, "s1", 20L))
-        .toDF("doc_id", "source", "n_chars"), "a.parquet", 1000000L)
-      land(Seq((3L, "s1", 30L)).toDF("doc_id", "source", "n_chars"),
-        "b.parquet", 2000000L)
-      val state = root.resolve("state").toString
-      val ckpt = root.resolve("ckpt").toString
-      TopNStream.runTopN(spark, landing.toString, state, n = 2,
-        scoreCol = "n_chars", maxFilesPerTrigger = Some(1),
-        checkpointDir = Some(ckpt))
-      // simulate a crash-lost fold: strike batch 1 from the applied
-      // markers while the checkpoint still shows it committed — the
-      // next durable continuation must fail loudly, not serve a board
-      // missing that batch's displacements
-      // rewrite through Fs (Hadoop local FS is checksummed — a raw nio
-      // write would leave a stale .crc sidecar)
-      graft.operators.Fs.writeText(s"$state/_graft_applied_batches", "0\n")
-      val e = intercept[IllegalArgumentException] {
-        TopNStream.runTopN(spark, landing.toString, state, n = 2,
-          scoreCol = "n_chars", maxFilesPerTrigger = Some(1),
-          checkpointDir = Some(ckpt))
+    }
+  }
+
+  test("each fold runner's two-file scratch run takes a pinned number " +
+      "of Spark jobs") {
+    val counts = foldRunners.map { case (what, landIn, run) =>
+      what -> withLanding(landIn) { (landing, state, _) =>
+        jobsOf(run(landing, state, None))
       }
-      e.getMessage should include("missing the folds")
-    } finally graft.operators.Maintenance.rmTree(root.toFile)
+    }
+    // the landing-schema probe where the runner has one, each batch's
+    // one fold job (plus its shuffle-map job under AQE), the session-end
+    // flush, and the runner's own result read
+    counts shouldBe Seq("top-N" -> 7, "quota" -> 10, "card" -> 5,
+      "model" -> 6, "gramian" -> 6, "cms" -> 6)
   }
 
   test("requireNoLostFolds fires on committed-but-unapplied ids, passes otherwise") {
