@@ -2,9 +2,12 @@ package graft.expressions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.UnaryExpression
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.util.{ArrayData, CollationFactory, CollationSupport, GenericArrayData}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -85,6 +88,101 @@ object AsciiEscape {
 
   def apply(col: Column): Column =
     ColumnBridge.column(AsciiEscape(ColumnBridge.expression(col)))
+}
+
+/** One side of a match-hash payload: the participants as
+  * `array<struct<crowns: int, tag: string>>`, where tag =
+  * `upper(coalesce(tag, ""))` and crowns = `coalesce(crowns, 0)`, sorted
+  * by (tag, crowns) — byte-wise on the tag, as `array_sort` orders
+  * strings. A null side is an empty array, a null participant is
+  * ("", 0). Input structs need `tag: string` and `crowns: int` (matched
+  * by name). The upper-casing is Spark's own `upper`
+  * (`CollationSupport.Upper` under the session's ICU case-mapping flag),
+  * so the bytes equal the higher-order form
+  * `transform(array_sort(transform(side, …)), …)` this replaces (pinned
+  * in MatchSideSpec; the reference vectors stay in HashingSpec), without
+  * the interpreted lambdas. */
+case class MatchSide(child: Expression) extends UnaryExpression {
+
+  override def prettyName: String = "match_side"
+
+  override def dataType: DataType = MatchSide.resultType
+
+  override def nullable: Boolean = false
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    MatchSide.ordinals(child.dataType) match {
+      case Some(_) => TypeCheckResult.TypeCheckSuccess
+      case None => TypeCheckResult.TypeCheckFailure(
+        "match_side requires array<struct<tag: string, crowns: int>>, got " +
+          child.dataType.simpleString)
+    }
+
+  // (tag, crowns, field count) of the participant struct
+  @transient private lazy val ords: Array[Int] = MatchSide.ordinals(child.dataType).get
+  @transient private lazy val useICU: Boolean =
+    SQLConf.get.getConf(SQLConf.ICU_CASE_MAPPINGS_ENABLED)
+
+  override def eval(input: InternalRow): Any =
+    MatchSide.sideJava(child.eval(input).asInstanceOf[ArrayData],
+      ords(0), ords(1), ords(2), useICU)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val c = child.genCode(ctx)
+    ev.copy(code = code"""
+      ${c.code}
+      ${CodeGenerator.javaType(dataType)} ${ev.value} = graft.expressions.MatchSide.sideJava(
+        ${c.isNull} ? null : ${c.value}, ${ords(0)}, ${ords(1)}, ${ords(2)}, $useICU);""",
+      isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): MatchSide =
+    copy(child = newChild)
+}
+
+object MatchSide {
+  val resultType: ArrayType = ArrayType(StructType(Seq(
+    StructField("crowns", IntegerType, nullable = false),
+    StructField("tag", StringType, nullable = false))), containsNull = false)
+
+  private val Empty = UTF8String.fromString("")
+
+  private[expressions] def ordinals(t: DataType): Option[Array[Int]] = t match {
+    case ArrayType(s: StructType, _) =>
+      val tag = s.fields.indexWhere(f => f.name == "tag" && f.dataType == StringType)
+      val crowns = s.fields.indexWhere(f => f.name == "crowns" && f.dataType == IntegerType)
+      if (tag < 0 || crowns < 0) None else Some(Array(tag, crowns, s.fields.length))
+    case _ => None
+  }
+
+  /** Static helper the generated code calls. */
+  def sideJava(side: ArrayData, tagOrd: Int, crownsOrd: Int, nFields: Int,
+      useICU: Boolean): ArrayData = {
+    val n = if (side == null) 0 else side.numElements()
+    val tags = new Array[UTF8String](n)
+    val crowns = new Array[Int](n)
+    var i = 0
+    while (i < n) {
+      tags(i) = Empty
+      if (!side.isNullAt(i)) {
+        val p = side.getStruct(i, nFields)
+        if (!p.isNullAt(tagOrd))
+          tags(i) = CollationSupport.Upper.exec(p.getUTF8String(tagOrd),
+            CollationFactory.UTF8_BINARY_COLLATION_ID, useICU).clone()
+        if (!p.isNullAt(crownsOrd)) crowns(i) = p.getInt(crownsOrd)
+      }
+      i += 1
+    }
+    val order = Array.tabulate(n)(i => Int.box(i))
+    java.util.Arrays.sort(order, (a: Integer, b: Integer) => {
+      val c = tags(a).binaryCompare(tags(b))
+      if (c != 0) c else Integer.compare(crowns(a), crowns(b))
+    })
+    new GenericArrayData(order.map(k => new GenericInternalRow(Array[Any](crowns(k), tags(k)))))
+  }
+
+  def apply(side: Column): Column =
+    ColumnBridge.column(MatchSide(ColumnBridge.expression(side)))
 }
 
 /** Distinct n-token shingles over a token array, in first-occurrence

@@ -2,12 +2,15 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import graft.expressions.{AsciiEscape, MatchSide}
 
 /** Deck / match identity hashing, byte-compatible with the reference
-  * (src/clashdb/hash_utils.py). Everything is built from codegen'd
-  * built-ins (`array_sort`, `transform`, `concat_ws`, `sha1`, `to_json`) —
-  * no UDFs — so hashing runs inside whole-stage codegen and scales
-  * embarrassingly parallel (pure per-row work, no shuffle).
+  * (src/clashdb/hash_utils.py). No UDFs: the match hashes are built from
+  * built-ins plus the native [[graft.expressions.MatchSide]] side payload,
+  * all inside whole-stage codegen; the deck signature here is the column
+  * form (`transform`/`array_sort`, which Spark runs interpreted) — the
+  * snapshot computes the same bytes natively in
+  * [[graft.expressions.DeckKernel]]. Pure per-row work, no shuffle.
   */
 object Hashing {
 
@@ -50,7 +53,7 @@ object Hashing {
     *  - `mode` = str(gameMode.id or gameMode.name or type or "") — Python
     *    `or` skips 0/""/null, reproduced with nullif+coalesce.
     *  - side payload participants are sorted by upper-cased tag; crowns
-    *    coerced int(x or 0).
+    *    coerced int(x or 0) ([[graft.expressions.MatchSide]]).
     *  - Python escapes non-ASCII (`ensure_ascii=True`) while `to_json`
     *    does not — closed by [[graft.expressions.AsciiEscape]] over the
     *    rendered JSON (every remaining non-ASCII char sits inside a string
@@ -60,15 +63,6 @@ object Hashing {
     *    hashes identically to the Python bytes (HashingSpec vector). */
   def matchHash(battleTime: Column, modeId: Column, modeName: Column,
                 battleType: Column, team: Column, opponent: Column): Column = {
-    def sidePayload(side: Column): Column = {
-      // sort by tag (tag first in the sort struct), then re-shape to the
-      // alphabetical {crowns, tag} field order the JSON needs.
-      val sorted = array_sort(transform(coalesce(side, array()), p =>
-        struct(upper(coalesce(p.getField("tag"), lit(""))).as("tag"),
-               coalesce(p.getField("crowns").cast("int"), lit(0)).as("crowns"))))
-      transform(sorted, p =>
-        struct(p.getField("crowns").as("crowns"), p.getField("tag").as("tag")))
-    }
     val modeKey = coalesce(
       nullif(modeId.cast("string"), lit("0")),
       nullif(coalesce(modeName, lit("")), lit("")),
@@ -77,9 +71,9 @@ object Hashing {
     val payload = struct(
       coalesce(battleTime, lit("")).as("battleTime"),
       modeKey.as("mode"),
-      sidePayload(opponent).as("opponent"),
-      sidePayload(team).as("team"))
-    sha1(graft.expressions.AsciiEscape(to_json(payload)))
+      MatchSide(opponent).as("opponent"),
+      MatchSide(team).as("team"))
+    sha1(AsciiEscape(to_json(payload)))
   }
 
   /** Orientation-insensitive match hash — the dedup key the reference
@@ -93,13 +87,7 @@ object Hashing {
     * hashing, so either perspective produces identical bytes. */
   def symmetricMatchHash(battleTime: Column, modeId: Column, modeName: Column,
                          battleType: Column, team: Column, opponent: Column): Column = {
-    def sideJson(side: Column): Column = {
-      val sorted = array_sort(transform(coalesce(side, array()), p =>
-        struct(upper(coalesce(p.getField("tag"), lit(""))).as("tag"),
-               coalesce(p.getField("crowns").cast("int"), lit(0)).as("crowns"))))
-      to_json(transform(sorted, p =>
-        struct(p.getField("crowns").as("crowns"), p.getField("tag").as("tag"))))
-    }
+    def sideJson(side: Column): Column = to_json(MatchSide(side))
     val modeKey = coalesce(
       nullif(modeId.cast("string"), lit("0")),
       nullif(coalesce(modeName, lit("")), lit("")),
@@ -107,7 +95,7 @@ object Hashing {
       lit(""))
     val a = sideJson(team)
     val b = sideJson(opponent)
-    sha1(graft.expressions.AsciiEscape(concat_ws("|",
+    sha1(AsciiEscape(concat_ws("|",
       coalesce(battleTime, lit("")), modeKey, least(a, b), greatest(a, b))))
   }
 

@@ -3,7 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.functions.{DomainFunctions => F, Hashing}
+import graft.expressions.{DeckKernel, DeckMeta}
+import graft.functions.{DomainFunctions => F}
 import graft.sources.CardMetadata
 
 /** Row-level battle operators: the ranked-1v1 predicate, normalization
@@ -13,7 +14,8 @@ import graft.sources.CardMetadata
   * All operators are narrow (per-row) column expressions — at 100 TB they
   * pipeline inside the scan stage with zero shuffle; the only wide edges in
   * the whole pipeline are the match-hash dedup and the final group-bys
-  * (see [[SnapshotPipeline]]).
+  * (see [[SnapshotPipeline]]). The deck operators are views of the one
+  * native [[graft.expressions.DeckKernel]] pass.
   */
 object BattleOps {
 
@@ -51,48 +53,23 @@ object BattleOps {
     * (scripts/etl_snapshot_topn.py:77-108): take the first 8 of `cards[]`,
     * slot = 1..8, backfill a missing name from metadata by id, and reject
     * the deck (→ null) unless every card has an id and there are exactly 8
-    * distinct (card_id, card_variant) pairs.
+    * distinct (card_id, card_variant) pairs. The `obs` field of one native
+    * [[graft.expressions.DeckKernel]] pass.
     *
     * Returns array<struct<card_id:long, card_name:string,
     * card_variant:string, slot:int>> or null when rejected.
     */
-  def deckObs(cards: Column, nameById: Map[Long, String]): Column = {
-    val nameMap =
-      if (nameById.isEmpty) map()
-      else map(nameById.toSeq.sortBy(_._1).flatMap {
-        case (id, n) => Seq(lit(id), lit(n)) }: _*)
-    val all = coalesce(cards, array())
-    val first8 = slice(all, 1, 8)
-    val obs = transform(first8, (c, i) => {
-      val cid = c.getField("id").cast("long")
-      struct(
-        cid.as("card_id"),
-        coalesce(nullif(trim(coalesce(c.getField("name"), lit(""))), lit("")),
-          element_at(nameMap, cid), lit("")).as("card_name"),
-        F.cardVariant(c.getField("evolutionLevel")).as("card_variant"),
-        (i + 1).cast("int").as("slot"))
-    })
-    val valid = size(all) >= 8 &&
-      !exists(first8, c => c.getField("id").isNull) &&
-      size(array_distinct(transform(obs, o =>
-        struct(o.getField("card_id"), o.getField("card_variant"))))) === 8
-    when(valid, obs)
-  }
+  def deckObs(cards: Column, nameById: Map[Long, String]): Column =
+    DeckKernel(cards, DeckMeta.names(nameById)).getField("obs")
 
-  /** (card_id-as-string, variant) pairs feeding the canonical signature
-    * (etl_snapshot_topn.py:140-143). */
-  def deckPairs(obs: Column): Column =
-    transform(obs, o => struct(
-      o.getField("card_id").cast("string").as("_1"),
-      o.getField("card_variant").as("_2")))
-
-  /** Deck hash of an extracted observation array. */
-  def deckHashOf(obs: Column): Column = Hashing.deckHash(deckPairs(obs))
+  /** Deck hash of an extracted observation array: sha1 of the canonical
+    * signature (etl_snapshot_topn.py:140-143), as the kernel computes it. */
+  def deckHashOf(obs: Column): Column = DeckKernel.hashOf(obs)
 
   /** Non-empty card names for the classifier
-    * (etl_snapshot_topn.py:287-288). */
+    * (etl_snapshot_topn.py:287-288); observation names are never null. */
   def classifierNames(obs: Column): Column =
-    filter(transform(obs, o => o.getField("card_name")), n => n =!= "")
+    array_remove(obs.getField("card_name"), lit(""))
 
   /** A14/A15 — per-archetype W/L/D summary over normalized battles
     * (reference deck_type.py:192-274): classify each side (only decks of

@@ -2,19 +2,21 @@ package graft.operators
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import graft.expressions.DeckKernel
 import graft.sources.CardMetadata
 
 /** Deck-archetype classifier: a priority rule cascade over card metadata,
   * first match wins (reference src/analysist/deck_type.py:85-152, features
   * precomputed at :38-82).
   *
-  * Engine-native design: instead of a per-row UDF doing dict lookups (the
-  * reference's shape), the ~121-card metadata is baked in as *literal* map/
-  * array expressions and the whole cascade is a single codegen'd column
-  * expression over the deck's `array<string>` of card names. No join, no
-  * shuffle, no broadcast — the metadata rides inside the generated code of
-  * every task, which is the right trade at any scale for a dimension this
-  * size. Catalyst can constant-fold, prune, and pipeline it freely.
+  * Engine-native design: the cascade is one native expression
+  * ([[graft.expressions.DeckKernel]] and its names-only form
+  * [[graft.expressions.DeckType]]). The ~121-card metadata rides inside
+  * the expression as hash lookups built once on the driver — no join, no
+  * shuffle, no broadcast — and the cascade runs as one generated call per
+  * deck. (A column formulation over literal maps looks constant-folded but
+  * is not: `transform`/`filter`/`aggregate` run interpreted and every
+  * lookup scans the literal map.)
   */
 object Classifier {
   val Siege      = "Siege"
@@ -24,55 +26,12 @@ object Classifier {
   val Beatdown   = "Beatdown"
   val Hybrid     = "Hybrid"
 
-  /** Deck-level features (deck_type.py:38-82) as named columns, given
-    * `cardNames: array<string>` (the ≤8 non-empty card names). */
-  final case class Features(avgElixir: Column, fourCycle: Column,
-      hasXbow: Column, hasMortar: Column, baitPieces: Column,
-      bridgeSpamCount: Column, bigTankCount: Column)
-
-  def features(cardNames: Column, meta: CardMetadata.Meta): Features = {
-    // elixirs = metadata elixir per card that HAS metadata (missing names
-    // contribute nothing to the list but still count toward the ÷8).
-    val elixirMap =
-      if (meta.elixirByName.isEmpty) map()
-      else map(meta.elixirByName.toSeq.sortBy(_._1).flatMap {
-        case (n, e) => Seq(lit(n), lit(e.toDouble)) }: _*)
-    val elixirs = filter(
-      transform(cardNames, n => element_at(elixirMap, n)),
-      e => e.isNotNull)
-    val nElixirs = size(elixirs)
-    // quirks preserved: ÷8 fixed denominator; defaults 3.0 / 12.0 when no
-    // metadata matched (deck_type.py:54-61).
-    val avgElixir = when(nElixirs === 0, lit(3.0))
-      .otherwise(aggregate(elixirs, lit(0.0), (acc, e) => acc + e) / 8.0)
-    val fourCycle = when(nElixirs === 0, lit(12.0))
-      .otherwise(aggregate(slice(array_sort(elixirs), 1, 4), lit(0.0), (acc, e) => acc + e))
-    def countFlag(names: Set[String]): Column =
-      if (names.isEmpty) lit(0)
-      else size(filter(cardNames, n => n.isInCollection(names.toSeq.sorted)))
-    Features(
-      avgElixir = avgElixir,
-      fourCycle = fourCycle,
-      hasXbow = array_contains(cardNames, "X-Bow"),
-      hasMortar = array_contains(cardNames, "Mortar"),
-      baitPieces = countFlag(meta.baitNames),
-      bridgeSpamCount = countFlag(meta.bridgeNames),
-      bigTankCount = countFlag(meta.tankNames))
-  }
-
   /** The cascade (deck_type.py:89-152): Siege → Bait(≥3) → Cycle(4-cheapest
     * ≤9) → Bridge Spam(≥2) → Beatdown(tank ∧ avg≥3.5) → Hybrid; empty deck
-    * → Hybrid (:97-98). */
-  def classifyDeck(cardNames: Column, meta: CardMetadata.Meta): Column = {
-    val f = features(cardNames, meta)
-    when(cardNames.isNull || size(cardNames) === 0, Hybrid)
-      .when(f.hasXbow || f.hasMortar, Siege)
-      .when(f.baitPieces >= 3, Bait)
-      .when(f.fourCycle <= 9.0, Cycle)
-      .when(f.bridgeSpamCount >= 2, BridgeSpam)
-      .when(f.bigTankCount >= 1 && f.avgElixir >= 3.5, Beatdown)
-      .otherwise(Hybrid)
-  }
+    * → Hybrid (:97-98). Over `cardNames: array<string>`; the cascade of
+    * [[graft.expressions.DeckKernel]], which the snapshot runs per side. */
+  def classifyDeck(cardNames: Column, meta: CardMetadata.Meta): Column =
+    DeckKernel.typeOf(cardNames, meta.deck)
 
   /** Generic rule-cascade helper: first predicate that fires labels the row
     * (`when`-chain, same shape Catalyst codegens for CASE WHEN). Used for

@@ -1,7 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.util.concurrent.{Callable, ConcurrentLinkedQueue, Executors}
+
+import scala.util.Try
+
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.expressions.DeckKernel
 import graft.functions.{DomainFunctions => F, Hashing}
 import graft.sources.CardMetadata
 
@@ -10,20 +15,25 @@ import graft.sources.CardMetadata
   * warehouse DDL db/schema.sql).
   *
   * Execution shape (designed for 100 TB of battle logs):
-  *  1. narrow stage: filter ranked-1v1, compute match_hash, extract both
-  *     decks, hash + classify — all codegen'd per-row work fused into the
-  *     scan;
+  *  1. narrow stage: filter ranked-1v1 and compute match_hash (its side
+  *     payloads are the native [[graft.expressions.MatchSide]]), fused
+  *     into the scan in generated code;
   *  2. `dropDuplicates(match_hash)` — the ONE global shuffle keyed on a
   *     sha1 hex (uniform, unskewable key: hash partitioning is perfectly
   *     balanced);
-  *  3. union-of-perspectives (U1) doubles rows *after* dedup, still narrow;
+  *  3. one native [[graft.expressions.DeckKernel]] call per side (8-card
+  *     extraction, deck hash, classifier cascade), then both perspectives
+  *     (U1) from one `inline` generator pass — rows double *after* dedup,
+  *     still narrow, and nothing upstream runs twice;
   *  4. each rollup is a partial-aggregate-friendly count/sum groupBy —
   *     map-side combine collapses the per-partition cardinality to
   *     |distinct keys| (archetypes: ~6; decks: bounded by distinct hashes)
   *     so the final shuffles move tiny partial maps, not facts.
   *
   * The per-side observation frame is cached once and feeds all six rollups
-  * (the reference's single-pass dict accumulators, SURVEY §4).
+  * (the reference's single-pass dict accumulators, SURVEY §4);
+  * [[Snapshot.write]] fills that cache once, then overlaps the table
+  * writes.
   */
 object SnapshotPipeline {
 
@@ -53,11 +63,76 @@ object SnapshotPipeline {
 
     /** Snapshot-mode load: overwrite per table — TRUNCATE+reload semantics
       * (etl_snapshot_topn.py:162-182; S6/S7/S8 degenerate to overwrite
-      * after upstream dedup, SURVEY §2.1). */
-    def write(outDir: String): Unit =
-      all.foreach { case (name, df) =>
-        df.write.mode("overwrite").parquet(s"$outDir/$name")
+      * after upstream dedup, SURVEY §2.1).
+      *
+      * The decks table is written first and alone: in a [[build]]
+      * snapshot it reads the cached decks dim, itself over the cached
+      * side observations, so that one action fills both shared caches and
+      * the other writes read them instead of racing to compute them (a
+      * separate fill action would cost one more job). The other ten
+      * writes then run on a pool of `defaultParallelism` threads, so each
+      * write's driver-side planning and commit overlaps the others' jobs.
+      * Every write runs to its end; the first failure (decks first, then
+      * by table name) is rethrown as thrown, and no pool thread is left
+      * running when this returns. */
+    def write(outDir: String): Unit = {
+      def writeTable(name: String): Option[Throwable] =
+        Try(all(name).write.mode("overwrite").parquet(s"$outDir/$name")).failed.toOption
+      val primed = writeTable("decks")
+      val threads = new ConcurrentLinkedQueue[Thread]()
+      val pool = Executors.newFixedThreadPool(
+        players.sparkSession.sparkContext.defaultParallelism, (r: Runnable) => {
+          val t = new Thread(r, "snapshot-write")
+          threads.add(t)
+          t
+        })
+      val failures = try {
+        val pending = (all.keySet - "decks").toSeq.sorted.map { name =>
+          val task: Callable[Option[Throwable]] = () => writeTable(name)
+          pool.submit(task)
+        }
+        pending.flatMap(_.get())
+      } finally {
+        pool.shutdown()
+        threads.forEach(_.join())
       }
+      (primed ++ failures).headOption.foreach(e => throw e)
+    }
+
+    /** The post-load invariants (reference validate_snapshot.py:49-206,
+      * SURVEY §5) over the tables [[write]] put in `outDir`. Returns the
+      * message of each invariant that fails, in check order. */
+    def validate(outDir: String, topN: Int): Seq[String] = {
+      val spark = players.sparkSession
+      def table(name: String): DataFrame = spark.read.parquet(s"$outDir/$name")
+      def total(df: DataFrame): Long =
+        df.agg(coalesce(sum("uses"), lit(0L))).head().getLong(0)
+      val checks = Seq[(String, () => Boolean)](
+        "deck_cards: every deck has exactly 8 rows" -> (() =>
+          table("deck_cards").groupBy("deck_hash").count()
+            .filter(col("count") =!= 8).isEmpty),
+        "0 <= wins <= uses in all stats tables" -> (() =>
+          Seq("player_decks", "meta_deck_types", "meta_type_deck_ids",
+            "meta_type_cards", "player_type_cards", "meta_type_matchups")
+            .forall(t => table(t)
+              .filter(col("wins") < 0 || col("uses") < 0 || col("wins") > col("uses"))
+              .isEmpty)),
+        "meta_deck_types non-empty" -> (() =>
+          table("meta_deck_types").limit(1).count() == 1),
+        "player count <= topN" -> (() => table("player").count() <= topN),
+        "topn_obs <= meta_obs <= 2*topn_obs" -> (() => {
+          val topnObs = total(table("player_decks"))
+          val metaObs = total(table("meta_deck_types"))
+          topnObs <= metaObs && metaObs <= 2 * topnObs
+        }),
+        // the reference gates on 'Unknown' only (validate_snapshot.py:116-145)
+        "unknown-archetype ratio <= 0.30" -> (() => {
+          val m = table("meta_deck_types")
+          val uses = total(m)
+          uses == 0L || total(m.filter(lower(col("deck_type")) === "unknown")).toDouble / uses <= 0.30
+        }))
+      checks.collect { case (name, ok) if !ok() => name }
+    }
   }
 
   /** Per-side observation frame: one row per (deduped match, side).
@@ -72,11 +147,11 @@ object SnapshotPipeline {
         case (h, t) => Seq(lit(h), lit(t)) }: _*)
     // J1 — override lookup ?? classifier (etl:290-291). Overrides are a
     // tiny config dim → literal map, mirroring the reference's dict.
+    def typed(deck: String): Column =
+      coalesce(element_at(overrideMap, col(s"$deck.deck_hash")), col(s"$deck.deck_type"))
     finishSides(hashedWide(battles, meta)
-      .withColumn("team_type", coalesce(element_at(overrideMap, col("team_dh")),
-        Classifier.classifyDeck(BattleOps.classifierNames(col("team_obs")), meta)))
-      .withColumn("opp_type", coalesce(element_at(overrideMap, col("opp_dh")),
-        Classifier.classifyDeck(BattleOps.classifierNames(col("opp_obs")), meta))))
+      .withColumn("team_type", typed("team_deck"))
+      .withColumn("opp_type", typed("opp_deck")))
   }
 
   /** S5 as a real config-table SCAN: overrides read from a warehouse table
@@ -94,21 +169,21 @@ object SnapshotPipeline {
       // config hygiene: one label per hash even if the config table is
       // dirty — deterministic min, mirroring the PK the warehouse enforces
       .groupBy("deck_hash").agg(min("deck_type").as("ovr_type"))
-    finishSides(hashedWide(battles, meta)
-      .join(broadcast(ovr.select(col("deck_hash").as("team_dh"),
-        col("ovr_type").as("team_ovr"))), Seq("team_dh"), "left")
-      .join(broadcast(ovr.select(col("deck_hash").as("opp_dh"),
-        col("ovr_type").as("opp_ovr"))), Seq("opp_dh"), "left")
-      .withColumn("team_type", coalesce(col("team_ovr"),
-        Classifier.classifyDeck(BattleOps.classifierNames(col("team_obs")), meta)))
-      .withColumn("opp_type", coalesce(col("opp_ovr"),
-        Classifier.classifyDeck(BattleOps.classifierNames(col("opp_obs")), meta))))
+    def labelled(wide: DataFrame, deck: String): DataFrame = wide
+      .join(broadcast(ovr.select(col("deck_hash").as(s"${deck}_dh"),
+        col("ovr_type").as(s"${deck}_ovr"))),
+        col(s"${deck}_deck.deck_hash") === col(s"${deck}_dh"), "left")
+      .withColumn(s"${deck}_type",
+        coalesce(col(s"${deck}_ovr"), col(s"${deck}_deck.deck_type")))
+    finishSides(labelled(labelled(hashedWide(battles, meta), "team"), "opp"))
   }
 
-  /** Dedup + per-side hashing, shared by both override paths: everything
-    * up to (team_dh, opp_dh, win flags), before type resolution. */
-  private def hashedWide(battles: DataFrame, meta: CardMetadata.Meta): DataFrame = {
-    val deduped = battles
+  /** Dedup + one [[DeckKernel]] pass per side, shared by both override
+    * paths: (match_hash, team_tag, opp_tag, team_deck, opp_deck, win
+    * flags), where each `*_deck` is the kernel's struct<obs, deck_hash,
+    * deck_type> — before override resolution. */
+  private def hashedWide(battles: DataFrame, meta: CardMetadata.Meta): DataFrame =
+    battles
       .filter(BattleOps.isRanked1v1(col("team"), col("opponent"), col("gameMode.id")))
       // A13 — global exact dedup on the match hash (etl:257-261). Shuffle
       // key = sha1 hex → uniformly distributed, no skew at any scale.
@@ -116,41 +191,38 @@ object SnapshotPipeline {
       // battlelogs collapses — the reference's documented intent
       // (hash_utils.py:31-33), which its orientation-sensitive JSON
       // never achieves. Divergence documented in Hashing.symmetricMatchHash.
-      .withColumn("match_hash", Hashing.symmetricMatchHash(col("battleTime"),
-        col("gameMode.id"), col("gameMode.name"), col("type"),
-        col("team"), col("opponent")))
-      .dropDuplicates("match_hash")
-
-    deduped
-      .select(col("match_hash"),
+      .select(Hashing.symmetricMatchHash(col("battleTime"),
+          col("gameMode.id"), col("gameMode.name"), col("type"),
+          col("team"), col("opponent")).as("match_hash"),
+        // a ranked 1v1 side has one participant: the shuffle carries it,
+        // not the array around it
         element_at(col("team"), 1).as("t"),
         element_at(col("opponent"), 1).as("o"))
-      .withColumn("team_tag", F.normalizeTag(col("t.tag")))
-      .withColumn("opp_tag", F.normalizeTag(col("o.tag")))
+      .dropDuplicates("match_hash")
+      .select(col("match_hash"),
+        F.normalizeTag(col("t.tag")).as("team_tag"),
+        F.normalizeTag(col("o.tag")).as("opp_tag"),
+        DeckKernel(col("t.cards"), meta.deck).as("team_deck"),
+        DeckKernel(col("o.cards"), meta.deck).as("opp_deck"),
+        // P5 — strict-crowns win flags; draw = neither side won (etl:293-294)
+        F.isWin(col("t.crowns"), col("o.crowns")).as("team_won"),
+        F.isWin(col("o.crowns"), col("t.crowns")).as("opp_won"))
       .filter(col("team_tag") =!= "" && col("opp_tag") =!= "")
-      .withColumn("team_obs", BattleOps.deckObs(col("t.cards"), meta.nameById))
-      .withColumn("opp_obs", BattleOps.deckObs(col("o.cards"), meta.nameById))
-      // reject the match unless BOTH decks extract (etl:279-282)
-      .filter(col("team_obs").isNotNull && col("opp_obs").isNotNull)
-      .withColumn("team_dh", BattleOps.deckHashOf(col("team_obs")))
-      .withColumn("opp_dh", BattleOps.deckHashOf(col("opp_obs")))
-      // P5 — strict-crowns win flags; draw = neither side won (etl:293-294)
-      .withColumn("team_won", F.isWin(col("t.crowns"), col("o.crowns")))
-      .withColumn("opp_won", F.isWin(col("o.crowns"), col("t.crowns")))
-  }
 
-  /** U1 — both perspectives of the typed wide frame. */
+  /** U1 — both perspectives of the typed wide frame from one generator
+    * pass over each match. A match is kept only when BOTH decks extract
+    * (etl:279-282); that check runs on the generated rows, so the
+    * optimizer cannot push it below the projection and run each kernel a
+    * second time inside the filter. */
   private def finishSides(wide: DataFrame): DataFrame = {
-    def side(tag: String, dh: String, tp: String, obs: String, won: String,
-        oppTp: String): DataFrame =
-      wide.select(col("match_hash"), col(tag).as("player_tag"),
-        col(dh).as("deck_hash"), col(tp).as("deck_type"),
-        col(obs).as("cards"), col(won).as("won"),
-        col(oppTp).as("opp_deck_type"))
-
-    side("team_tag", "team_dh", "team_type", "team_obs", "team_won", "opp_type")
-      .unionByName(
-        side("opp_tag", "opp_dh", "opp_type", "opp_obs", "opp_won", "team_type"))
+    def side(me: String, them: String): Column = struct(
+      col(s"${me}_tag").as("player_tag"), col(s"${me}_deck.deck_hash").as("deck_hash"),
+      col(s"${me}_type").as("deck_type"), col(s"${me}_deck.obs").as("cards"),
+      col(s"${me}_won").as("won"), col(s"${them}_type").as("opp_deck_type"),
+      (col("team_deck").isNotNull && col("opp_deck").isNotNull).as("kept"))
+    wide.select(col("match_hash"), inline(array(side("team", "opp"), side("opp", "team"))))
+      .filter(col("kept"))
+      .drop("kept")
   }
 
   /** Build the full snapshot. `battles` in [[graft.sources.Tables.battleSchema]];

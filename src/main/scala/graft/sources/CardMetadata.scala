@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
+import graft.expressions.DeckMeta
 
 /** Card-metadata dimension: `{id, name, maxLevel, elixir, is_big_tank,
   * is_bait_piece, is_bridge_spam_piece}` records (shape per reference
@@ -10,10 +11,10 @@ import org.apache.spark.sql.types._
   *
   * The dimension is tiny (~121 rows) so the engine consumes it two ways:
   *  - as a broadcast DataFrame for equi-joins (SURVEY J2/J3);
-  *  - as driver-side literal maps baked into codegen'd column expressions
-  *    (the classifier cascade) — zero joins, zero shuffles, and the lookup
-  *    is a constant-folded literal on every executor. At 1000 executors
-  *    this is strictly cheaper than even a broadcast join.
+  *  - as [[Meta.deck]], hash lookups built once on the driver and carried
+  *    as a field of the native deck kernel
+  *    ([[graft.expressions.DeckKernel]]: name backfill and the classifier
+  *    cascade) — zero joins, zero shuffles, one hash probe per card.
   */
 object CardMetadata {
   val schema: StructType = StructType(Seq(
@@ -55,7 +56,7 @@ object CardMetadata {
     }
   }
 
-  /** Lookup maps for literal-expression use. */
+  /** Lookup maps over the metadata records. */
   final case class Meta(cards: Seq[Card]) {
     val nameById: Map[Long, String]    = cards.map(c => c.id -> c.name).toMap
     val elixirByName: Map[String, Int] =
@@ -63,6 +64,9 @@ object CardMetadata {
     val baitNames: Set[String]   = cards.filter(_.isBaitPiece).map(_.name).toSet
     val bridgeNames: Set[String] = cards.filter(_.isBridgeSpamPiece).map(_.name).toSet
     val tankNames: Set[String]   = cards.filter(_.isBigTank).map(_.name).toSet
+    /** The maps above as the deck kernel's lookup tables, built once. */
+    lazy val deck: DeckMeta =
+      new DeckMeta(nameById, elixirByName, baitNames, bridgeNames, tankNames)
   }
 
   def load(spark: SparkSession, path: String): Meta =
