@@ -547,19 +547,14 @@ object Dedup {
     n
   }
 
-  /** The probe → survivor → in-batch-pair chain shared by [[admitCore]]
-    * and [[admitPrehashedBounded]]: returns (sv, pairs) where `sv` is
-    * the UNPINNED survivor frame — docs that matched nothing in the
-    * index — and `pairs` builds the verified in-batch near-dup edges
-    * among a (pinned or persisted) survivor frame (both endpoints
-    * survivors). The caller pins: the batch [[admitCore]] shape
-    * localCheckpoints eagerly (its components loop needs the pinned
-    * frame at once), [[boundedAdmit]] persists instead (its ONE bounded
-    * take then materializes probe + cache in the same job). See the
-    * inline notes for the join-strategy reasoning; the split exists so
-    * the streaming loop can evaluate survivors + pairs in ONE bounded
-    * collect instead of admitCore's checkpoint + collect + label-join
-    * chain. */
+  /** The distributed probe → survivor → in-batch-pair chain of
+    * [[admitCore]] (and so of [[admitPrehashedBounded]]'s past-cap
+    * fallback): returns (sv, pairs) where `sv` is the UNPINNED survivor
+    * frame — docs that matched nothing in the index — and `pairs` builds
+    * the verified in-batch near-dup edges among a pinned survivor frame
+    * (both endpoints survivors). [[admitCore]] localCheckpoints `sv`
+    * eagerly (its components loop needs the pinned frame at once). See
+    * the inline notes for the join-strategy reasoning. */
   private def survivorPairs(nw: DataFrame, ix: DataFrame,
       threshold: Double,
       broadcastNew: Boolean): (DataFrame, DataFrame => DataFrame) = {
@@ -651,93 +646,215 @@ object Dedup {
       .select(col(id))
   }
 
-  /** The driver-side admission core shared by [[admitPrehashedBounded]]
-    * and [[admitNewVecsPreassignedBounded]] — the streaming admission
-    * loops' fused shape (the QuotaStream AdmitCollectCap /
-    * [[InBatchPairCap]] discipline). `sv` is the unpinned survivor frame
-    * and `pairs` its distributed in-batch pair builder (the caller's
-    * probe chain); `blockKeys` is an array column of the blocking keys
-    * two survivors must share to be an in-batch candidate (MinHash
-    * bands, or the one IVF cell); `payload` are the columns `verify`
-    * reads, attached per candidate side as `<col>_a` / `<col>_b`.
-    *
-    * ONE bounded take ([[takeBounded]], one parallel job) materializes
-    * the index probe and brings back the survivors' (id, block keys)
-    * rows — fixed bytes per row, never the shingle or embedding payload
-    * (≈ 20 MB of band keys at the cap). The survivor frame is
-    * PERSISTED, not checkpointed: the take populates the cache in the
-    * same job (runJob covers every partition), where an eager checkpoint
-    * was a separate per-batch action. The in-batch CANDIDATE pairs (same
-    * block key, id_a < id_b, distinct) then fall out of a driver-side
-    * hash group — the survivor self-join, its distinct exchange and its
-    * broadcast builds disappear from the per-batch plan — and only the
-    * candidates verify distributively against the cached survivor
-    * payload (build side = candidates with side a attached —
-    * batch-bounded, the in-batch analogue of admitCore's bcast-hinted
-    * self-join sides), through the caller's SAME verify predicate. Most
-    * micro-batches carry zero in-batch candidates and pay exactly one
-    * job here. The exact min-label union-find runs on the driver, and
-    * the admitted set — survivors that are their component's min-id
-    * representative — comes back as a sorted local Seq (Left), which
-    * [[admittedIdsFrame]] turns into a LocalRelation: the per-batch
-    * admitted/fold-back/observer semi-joins then build their broadcast
-    * side from local rows with NO broadcast-exchange job, and the
-    * separate admitted-frame checkpoint job disappears — jobs-per-micro-
-    * batch is the composed-ingest floor (r18–r21 BenchProbe
-    * decompositions).
-    *
-    * Bounded: the take is capped at `cap` + 1 rows AND the buckets'
-    * quadratic term is counted before any pair materializes (a
-    * degenerate key shared by every survivor routes to the fallback
-    * exactly like a past-cap collect did); past either cap the
-    * distributed [[keepRepresentatives]] tail runs over the cached
-    * survivors and comes back EAGER (Right), so the cache can be released
-    * before returning. Non-long ids (the local min must reproduce Spark's
-    * ordering — guaranteed for integrals; the landing contract is long
-    * ids) take the batch shape unchanged: pinned survivors, lazy
-    * distributed frame (Right). Label-equivalence of local vs distributed
-    * components is pinned by AdmitCoreComponentsSpec; AdmissionStreamSpec
-    * and SemanticAdmissionSpec pin the loops end to end. */
-  private def boundedAdmit(sv: DataFrame, pairs: DataFrame => DataFrame,
-      id: String, blockKeys: Column, payload: Seq[String], verify: Column,
-      cap: Int): Either[Seq[Long], DataFrame] = {
-    if (sv.schema(id).dataType != LongType)
-      return Right(keepRepresentatives(sv.localCheckpoint(true), pairs, id))
-    sv.persist(StorageLevel.MEMORY_AND_DISK)
-    def distributedTail(): DataFrame = {
-      val out = keepRepresentatives(sv, pairs, id).localCheckpoint(true)
-      sv.unpersist(false)
-      out
+  /** The driver-side bounds of a bounded admission — past any of them
+    * the distributed path runs instead ([[admitCore]]'s survivorPairs /
+    * keepRepresentatives chain, unchanged):
+    *  - [[BoundedBatchRows]]: batch rows brought to the driver by the
+    *    batch collect (a micro-batch is trigger-bounded; 32,768 docs);
+    *  - [[BoundedIndexRows]]: index rows that share a band with the
+    *    batch, brought back by the index collect (collisions scale with
+    *    hot bands of the corpus, not the batch, hence their own cap);
+    *  - [[BoundedPayload]]: array elements one collect may carry (the
+    *    shingle sets and band keys, or the embeddings), and one driver
+    *    verify may lay out over its candidate rows — 2²¹ elements,
+    *    ≈ 100–200 MB of driver heap at shingle size. It bounds each
+    *    partition's share of the one-job take too; past
+    *    [[TakeBoundedMaxParts]] partitions only the row cap bounds the
+    *    transfer (the incremental take cannot weigh rows). */
+  private[graft] val BoundedBatchRows = 1 << 15
+  private[graft] val BoundedIndexRows = 1 << 16
+  private[graft] val BoundedPayload = 1L << 21
+
+  /** A row's payload for [[BoundedPayload]]: the elements of its array
+    * columns. */
+  private val arrayElements: Row => Long = r =>
+    (0 until r.length).iterator.map(i => r.get(i) match {
+      case s: scala.collection.Seq[_] => s.length.toLong
+      case _ => 0L
+    }).sum
+
+  /** `df`'s rows on the driver when it holds at most `cap` rows of at most
+    * `payloadCap` array elements in all ([[takeBounded]], one job; none
+    * for a local frame), else None. */
+  private[graft] def boundedRows(df: DataFrame, cap: Int,
+      payloadCap: Long = BoundedPayload): Option[Seq[Row]] = {
+    val rows = takeBounded(df, cap, payloadCap, arrayElements)
+    if (rows.length > cap || rows.iterator.map(arrayElements).sum > payloadCap)
+      None
+    else Some(rows.toSeq)
+  }
+
+  /** `df` held on the driver — a LocalRelation of its rows under its own
+    * schema, brought back by one [[boundedRows]] take — when it is within
+    * [[BoundedBatchRows]] and [[BoundedPayload]]. Every plan over the
+    * result reads the driver's rows: a filter or projection of it is
+    * folded into a new LocalRelation while optimizing (no job), a write
+    * of it is the write job alone, and it never re-runs `df`'s plan. */
+  private[graft] def heldLocally(df: DataFrame): Option[DataFrame] =
+    boundedRows(df, BoundedBatchRows).map(rows =>
+      df.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*),
+        df.schema))
+
+  /** The pairs of `pairs` that pass `verify`, evaluated on the driver: one
+    * row per pair and per combination of the two ids' rows (a duplicated
+    * id verifies every copy, as the distributed verify joins do), laid
+    * out as (id_a, id_b, <payload>_a…, <payload>_b…) with the payload
+    * columns from position 2 of `rowsA`/`rowsB` (typed by `payload`).
+    * The rows form a LocalRelation, and ConvertToLocalRelation evaluates
+    * the filter while optimizing: no job runs, and the predicate is the
+    * distributed path's own Column, so every decision is bit-identical.
+    * None when those rows would carry more than `payloadCap` array
+    * elements (counted before any row is built). */
+  private def verifyLocally(spark: SparkSession, pairs: Seq[(Long, Long)],
+      rowsA: Map[Long, Seq[Row]], rowsB: Map[Long, Seq[Row]],
+      payload: Seq[StructField], verify: Column,
+      payloadCap: Long): Option[Seq[(Long, Long)]] = {
+    def weight(rs: Seq[Row]) = rs.iterator.map(arrayElements).sum
+    val load = pairs.iterator.map { case (a, b) =>
+      rowsB(b).length * weight(rowsA(a)) + rowsA(a).length * weight(rowsB(b))
+    }.sum
+    if (load > payloadCap) None
+    else if (pairs.isEmpty) Some(Nil)
+    else {
+      val ps = payload.indices.map(_ + 2)
+      val rows = for {
+        (a, b) <- pairs; ra <- rowsA(a); rb <- rowsB(b)
+      } yield Row.fromSeq(Seq(a, b) ++ ps.map(ra.get) ++ ps.map(rb.get))
+      val schema = StructType(
+        Seq(StructField("id_a", LongType), StructField("id_b", LongType)) ++
+          payload.map(f => f.copy(name = s"${f.name}_a")) ++
+          payload.map(f => f.copy(name = s"${f.name}_b")))
+      Some(spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+        .filter(verify).select(col("id_a"), col("id_b"))
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq)
     }
-    val svRows = takeBounded(sv.select(col(id), blockKeys), cap)
-    if (svRows.length > cap) return Right(distributedTail())
-    val ids = svRows.map(_.getLong(0))
-    val buckets = svRows.toSeq.flatMap { r =>
-      val keys = if (r.isNullAt(1)) Nil else r.getSeq[Any](1)
-      keys.map(_ -> r.getLong(0))
-    }.groupMap(_._1)(_._2).values
-    if (buckets.map(b => b.length.toLong * (b.length - 1) / 2).sum > cap)
-      return Right(distributedTail())
-    val cand = (for {
-      b <- buckets; i <- b.indices; j <- i + 1 until b.length
-      if b(i) != b(j)
-    } yield (b(i) min b(j), b(i) max b(j))).toSet
-    val edges =
-      if (cand.isEmpty) Nil
+  }
+
+  /** The block keys (position 1) of a taken row — none when null. */
+  private def keysOf(r: Row): Seq[Any] =
+    if (r.isNullAt(1)) Nil else r.getSeq[Any](1)
+
+  /** The in-batch half of a bounded admission, shared by
+    * [[admitPrehashedBounded]] and [[admitNewVecsPreassignedBounded]].
+    * `survivors` are the survivor rows on the driver as (id: long, block
+    * keys, payload…) under `schema` — None when a collect crossed its
+    * cap. Two survivors sharing a block key (MinHash bands, or the one
+    * IVF cell) are a candidate (a < b, distinct: ≡ the distributed
+    * self-join); the quadratic term of the buckets is counted before any
+    * pair materializes, so a degenerate key shared by every survivor
+    * routes to `fallback` like a past-cap collect. Candidates verify on
+    * the driver ([[verifyLocally]], no job, within `payloadCap`), the
+    * exact min-label union-find runs over the verified edges, and the
+    * admitted ids —
+    * survivors that are their component's min-id representative, sorted,
+    * a duplicated id once per row as the distributed path returns it —
+    * come back Left. Past a cap, `fallback` (the distributed
+    * keepRepresentatives chain) comes back Right. Label-equivalence of
+    * local vs distributed components is pinned by AdmitCoreComponentsSpec;
+    * AdmissionStreamSpec and SemanticAdmissionSpec pin the loops end to
+    * end. */
+  private def boundedAdmit(spark: SparkSession,
+      survivors: Option[Seq[Row]], schema: StructType, verify: Column,
+      cap: Int, payloadCap: Long)(
+      fallback: => DataFrame): Either[Seq[Long], DataFrame] =
+    survivors.filter(_.length <= cap).flatMap { rows =>
+      val buckets = rows.flatMap(r => keysOf(r).map(_ -> r.getLong(0)))
+        .groupMap(_._1)(_._2).values
+      if (buckets.map(b => b.length.toLong * (b.length - 1) / 2).sum > cap)
+        None
       else {
-        def side(s: String) = sv.select(col(id).as(s"id_$s") +:
-          payload.map(c => col(c).as(s"${c}_$s")): _*)
-        side("b")
-          .join(broadcast(longFrame(sv.sparkSession, Seq("id_a", "id_b"),
-            cand.toSeq.sorted.map { case (a, b) => Row(a, b) })
-            .join(side("a"), Seq("id_a"))), Seq("id_b"))
-          .filter(verify)
-          .select(col("id_a"), col("id_b"))
-          .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+        val cand = (for {
+          b <- buckets; i <- b.indices; j <- i + 1 until b.length
+          if b(i) != b(j)
+        } yield (b(i) min b(j), b(i) max b(j))).toSet
+        val byId = rows.groupBy(_.getLong(0))
+        verifyLocally(spark, cand.toSeq.sorted, byId, byId,
+            schema.fields.drop(2).toSeq, verify, payloadCap)
+          .map { edges =>
+            val comp = localMinLabelComponents(edges)
+            rows.map(_.getLong(0)).filter(x => comp.get(x).forall(_ == x))
+              .sorted
+          }
       }
-    sv.unpersist(false)
-    val comp = localMinLabelComponents(edges)
-    Left(ids.filter(x => comp.get(x).forall(_ == x)).sorted.toSeq)
+    }.toLeft(fallback)
+
+  /** A bounded admission's result as the filter the streaming loops put
+    * on every frame keyed by `id` (the admitted rows, the index
+    * fold-back, the observer's rows): for driver-side ids an
+    * `isInCollection` — a map-only filter, no join and no broadcast
+    * exchange (a semi-join against a broadcast LocalRelation still runs
+    * a broadcast job: the exchange collects its build side through
+    * `executeCollectIterator`, which LocalTableScanExec does not
+    * override) — and for the distributed frame a semi-join against it
+    * pinned once (its consumers would each re-run the probe). */
+  private[graft] def admittedFilter(admitted: Either[Seq[Long], DataFrame],
+      id: String): DataFrame => DataFrame =
+    admitted match {
+      case Left(ids) => _.filter(col(id).isInCollection(ids))
+      case Right(df) =>
+        val pinned = df.localCheckpoint(true)
+        _.join(pinned, Seq(id), "left_semi")
+    }
+
+  /** [[admitPrehashed]] with the admitted ids returned DRIVER-SIDE when
+    * bounded — the streaming admission's per-batch shape, two bounded
+    * collects and no other job:
+    *  1. the batch collect: one [[boundedRows]] take brings the batch's
+    *     (doc_id, bands, sh) to the driver (free when `newSigs` is
+    *     already held locally — [[heldLocally]], as the streaming loop
+    *     does);
+    *  2. the index collect: one more take brings back the index rows
+    *     that share a band with the batch — `indexFrame` filtered by an
+    *     `isInCollection` of the batch's bands over each row's bands, one
+    *     map-only scan with no exchange, which also carries the shingles
+    *     (no second read of the index).
+    * Every Jaccard verify then runs on the driver ([[verifyLocally]]):
+    * index-vs-batch candidates (a batch and an index row sharing a band,
+    * distinct id pairs — ≡ the band join) first, then the in-batch
+    * candidates of the survivors through [[boundedAdmit]]. Past any cap
+    * ([[BoundedBatchRows]], [[BoundedIndexRows]], [[BoundedPayload]],
+    * `cap` survivors or in-batch pairs) or for non-long ids the
+    * distributed [[admitCore]] comes back instead (Right).
+    *
+    * Same decisions as [[admitPrehashed]] (the seeded equivalence spec
+    * pins it), with one reading of the index: a doc_id is one document,
+    * so of an id that appears on several index rows only the rows that
+    * share a band with the batch are verified (the distributed verify
+    * join also reads the id's other rows). */
+  private[graft] def admitPrehashedBounded(newSigs: DataFrame,
+      indexFrame: DataFrame, threshold: Double, cap: Int = InBatchPairCap,
+      batchCap: Int = BoundedBatchRows, indexCap: Int = BoundedIndexRows,
+      payloadCap: Long = BoundedPayload): Either[Seq[Long], DataFrame] = {
+    val spark = newSigs.sparkSession
+    val nw = newSigs.select(col("doc_id"), col("bands"), col("sh"))
+    val ix = indexFrame.select(col("doc_id"), col("bands"), col("sh"))
+    val verify = jaccard(col("sh_a"), col("sh_b")) >= threshold
+    def distributed: DataFrame = admitCore(nw, ix, threshold)
+    if (!Seq(nw, ix).forall(_.schema("doc_id").dataType == LongType))
+      return Right(distributed)
+    val survivors = boundedRows(nw, batchCap, payloadCap).flatMap { batch =>
+      val bands = batch.iterator.flatMap(keysOf).toSeq.distinct
+      val probed =
+        if (bands.isEmpty) Some(Nil)
+        else boundedRows(ix.filter(exists(col("bands"),
+          _.isInCollection(bands))), indexCap, payloadCap)
+      probed.flatMap { index =>
+        val byBand = batch.flatMap(r => keysOf(r).map(_ -> r.getLong(0)))
+          .groupMap(_._1)(_._2)
+        val cand = index.flatMap(r => keysOf(r)
+            .flatMap(byBand.getOrElse(_, Nil)).map(_ -> r.getLong(0)))
+          .distinct.sorted
+        verifyLocally(spark, cand, batch.groupBy(_.getLong(0)),
+            index.groupBy(_.getLong(0)), Seq(nw.schema("sh")), verify,
+            payloadCap)
+          .map { verified =>
+            val matched = verified.map(_._1).toSet
+            batch.filterNot(r => matched(r.getLong(0)))
+          }
+      }
+    }
+    boundedAdmit(spark, survivors, nw.schema, verify, cap, payloadCap)(
+      distributed)
   }
 
   /** A local (LocalRelation) frame of long columns — the bounded driver
@@ -746,34 +863,6 @@ object Dedup {
       rows: Seq[Row]): DataFrame =
     spark.createDataFrame(java.util.Arrays.asList(rows: _*),
       StructType(names.map(StructField(_, LongType))))
-
-  /** A bounded admission's result as the admitted-ids frame (`id`) the
-    * streaming loops semi-join against: the driver-side ids as a
-    * broadcast LocalRelation (no broadcast-exchange job), or the
-    * distributed frame pinned once (its consumers would each re-run the
-    * probe). */
-  private[graft] def admittedIdsFrame(spark: SparkSession,
-      admitted: Either[Seq[Long], DataFrame], id: String): DataFrame =
-    admitted match {
-      case Left(ids) => broadcast(longFrame(spark, Seq(id), ids.map(Row(_))))
-      case Right(df) => df.localCheckpoint(true)
-    }
-
-  /** [[admitPrehashed]] with the admitted ids returned DRIVER-SIDE when
-    * bounded — [[boundedAdmit]] over the MinHash probe chain: band keys
-    * block the in-batch candidates (≡ the svb self-join: same band
-    * equality, a < b, distinct) and the SAME exact-Jaccard predicate
-    * verifies them. */
-  private[graft] def admitPrehashedBounded(newSigs: DataFrame,
-      indexFrame: DataFrame, threshold: Double,
-      cap: Int = InBatchPairCap): Either[Seq[Long], DataFrame] = {
-    val (sv, pairs) = survivorPairs(
-      newSigs.select(col("doc_id"), col("sh"), col("bands")),
-      indexFrame.select(col("doc_id"), col("sh"), col("bands")), threshold,
-      broadcastNew = true)
-    boundedAdmit(sv, pairs, "doc_id", col("bands"), Seq("sh"),
-      jaccard(col("sh_a"), col("sh_b")) >= threshold, cap)
-  }
 
   /** Components over the in-batch survivor pair graph, driver-side when
     * BOUNDED: an admission batch's internal near-dup pairs are
@@ -900,27 +989,51 @@ object Dedup {
     * partitions would already execute the frame's intermediate
     * stages — the gate must not cost a pass). The one-job path is
     * exactly where job count IS the floor: micro-batch / bench-scale
-    * sessions with a few dozen partitions. */
+    * sessions with a few dozen partitions.
+    *
+    * `payload` weighs a row (array elements for [[boundedRows]]); each
+    * partition, and the total, stops at the first row that takes it past
+    * `payloadCap`, so on the one-job path the transfer is bounded in
+    * payload as well as in rows. A frame that is a LocalRelation after
+    * optimizing is collected directly, with no job. */
   private[graft] val TakeBoundedMaxParts = 64
 
-  private[graft] def takeBounded(df: DataFrame,
-      cap: Int): Array[org.apache.spark.sql.Row] = {
+  private[graft] def takeBounded(df: DataFrame, cap: Int,
+      payloadCap: Long = Long.MaxValue,
+      payload: Row => Long = _ => 0L): Array[Row] = {
+    // a local frame's rows are already on the driver: collecting it runs
+    // no job (LocalTableScanExec answers executeCollect itself)
+    if (df.queryExecution.optimizedPlan.isInstanceOf[
+        org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+      return boundedPrefix(df.collect().iterator, cap, payloadCap, payload)
     val configured = df.sparkSession.conf
       .get("spark.sql.shuffle.partitions", "200")
+    def incremental(): Array[Row] =
+      boundedPrefix(df.limit(cap + 1).collect().iterator, cap, payloadCap,
+        payload)
     if (scala.util.Try(configured.toInt).toOption.forall(_ > TakeBoundedMaxParts))
-      return df.limit(cap + 1).collect()
+      return incremental()
     val rdd = df.rdd
     if (rdd.getNumPartitions == 0) return Array.empty
-    if (rdd.getNumPartitions > TakeBoundedMaxParts)
-      return df.limit(cap + 1).collect()
+    if (rdd.getNumPartitions > TakeBoundedMaxParts) return incremental()
     val perPart = df.sparkSession.sparkContext.runJob(rdd,
-      (it: Iterator[org.apache.spark.sql.Row]) => it.take(cap + 1).toArray)
-    val out = Array.newBuilder[org.apache.spark.sql.Row]
-    var n = 0
-    perPart.foreach { a =>
-      // past cap+1 total the exact content no longer matters (every
-      // caller falls back on length > cap) — stop accumulating
-      if (n <= cap) { out ++= a.take(cap + 1 - n); n += math.min(a.length, cap + 1 - n) }
+      (it: Iterator[Row]) => boundedPrefix(it, cap, payloadCap, payload))
+    // past cap+1 rows (or the payload cap) in total the exact content no
+    // longer matters — every caller falls back — so stop accumulating
+    boundedPrefix(perPart.iterator.flatMap(_.iterator), cap, payloadCap,
+      payload)
+  }
+
+  /** The head of `it` up to the first row that takes it past `cap` rows
+    * or past `payloadCap` in `payload` — that row included, so a caller
+    * sees the crossing. */
+  private def boundedPrefix(it: Iterator[Row], cap: Int, payloadCap: Long,
+      payload: Row => Long): Array[Row] = {
+    val out = Array.newBuilder[Row]
+    var (n, w) = (0, 0L)
+    while (n <= cap && w <= payloadCap && it.hasNext) {
+      val r = it.next()
+      out += r; n += 1; w += payload(r)
     }
     out.result()
   }
@@ -1649,18 +1762,28 @@ object Dedup {
   }
 
   /** [[admitNewVecsPreassigned]] with the admitted vec_ids returned
-    * DRIVER-SIDE when bounded — [[boundedAdmit]] over the vector probe
-    * chain, the SemanticAdmission loop's fused shape: the one cell a
-    * vector is assigned to blocks the in-batch candidates (≡ the
-    * survivor same-cell self-join: cell equality, a < b) and the SAME
-    * cosineFromNorms expression verifies them. */
+    * DRIVER-SIDE when bounded — the SemanticAdmission loop's fused shape:
+    * ONE bounded take ([[boundedRows]], one parallel job) materializes the
+    * cell-blocked probe and brings back the survivors' (vec_id, cell,
+    * embedding, c_norm) — the verify payload rides in the take — and
+    * [[boundedAdmit]] finishes on the driver: the one cell a vector is
+    * assigned to blocks the in-batch candidates (≡ the survivor
+    * same-cell self-join: cell equality, a < b) and the SAME
+    * cosineFromNorms expression verifies them, over a LocalRelation.
+    * Past `cap` survivors or pairs, [[BoundedPayload]], or for non-long
+    * ids, the distributed keepRepresentatives chain comes back (Right). */
   private[graft] def admitNewVecsPreassignedBounded(asg: DataFrame,
       standing: DataFrame, threshold: Double,
       cap: Int = InBatchPairCap): Either[Seq[Long], DataFrame] = {
     val (sv, pairs) = vecSurvivorPairs(asg, standing, threshold)
-    boundedAdmit(sv, pairs, "vec_id", array(col("cell")),
-      Seq("embedding", "c_norm"),
+    val taken = sv.select(col("vec_id"), array(col("cell")).as("cells"),
+      col("embedding"), col("c_norm"))
+    boundedAdmit(asg.sparkSession,
+      if (sv.schema("vec_id").dataType == LongType) boundedRows(taken, cap)
+      else None,
+      taken.schema,
       V.cosineFromNorms(col("embedding_a"), col("embedding_b"),
-        col("c_norm_a"), col("c_norm_b")) >= threshold, cap)
+        col("c_norm_a"), col("c_norm_b")) >= threshold, cap, BoundedPayload)(
+      keepRepresentatives(sv.localCheckpoint(true), pairs, "vec_id"))
   }
 }

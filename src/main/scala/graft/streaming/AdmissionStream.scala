@@ -20,9 +20,16 @@ import graft.operators.Dedup
   * signature index, which belongs in storage shared across restarts, not
   * in per-key executor state (there is no bounded key horizon to
   * watermark it by — a duplicate can arrive years later). Each batch pays
-  * |batch| shingling plus band joins against the index — never a
+  * |batch| shingling plus one band-filtered scan of the index — never a
   * re-shingle of history — which is what makes the loop viable when the
   * standing corpus is 100 TB and the stream is a firehose.
+  *
+  * Per-trigger job budget (bounded path, no tombstones): the batch
+  * collect (the landing scan and hash — two jobs when the one-file
+  * batch is spread over the cores first), the index collect (one
+  * map-only scan), the two concurrent writes, and whatever the observer
+  * runs (one job for [[TopNStream.boardFold]]) — six in all. Every
+  * verify runs on the driver ([[Dedup.admitPrehashedBounded]]).
   *
   * Exactly-once: the index append and the admissions append are both
   * keyed by `batchId` subdirectories; a replayed micro-batch (failure
@@ -55,12 +62,14 @@ object AdmissionStream {
   /** Run independent batch writes CONCURRENTLY (wall pays max, not sum)
     * with the calling thread's Spark job group COPIED onto each worker.
     * Job group / description are THREAD-locals: a job submitted from a
-    * bare global-EC future carries none, so `q.stop()`'s cancelJobGroup
-    * cannot interrupt it and it keeps writing through session teardown.
-    * Each future sets the captured group before its write (and clears
-    * it after — global-EC threads are pooled and would otherwise leak
-    * the group onto unrelated work), is awaited with [[WriteAwait]],
-    * and ALL futures are awaited before the first error is rethrown: no
+    * thread that does not carry them cannot be interrupted by
+    * `q.stop()`'s cancelJobGroup and keeps writing through session
+    * teardown. Each write runs on a thread of its own, started by the
+    * caller, so it inherits the caller's local properties (Spark copies
+    * them into a thread at its creation) — a pooled thread would carry
+    * whatever its creator had set, long ago; each also sets the captured
+    * group before its write. Each write is awaited with [[WriteAwait]],
+    * and ALL are awaited before the first error is rethrown: no
     * in-flight sibling writer may outlive the batch (crash recovery
     * relies on a failed batch replaying and overwriting every subdir). */
   private[graft] def runConcurrentWrites(spark: SparkSession,
@@ -76,10 +85,15 @@ object AdmissionStream {
     // a same-JVM replay on the same subdir (the r20 ADVICE finding)
     val group = Option(callerGroup).getOrElse(
       "graft-concurrent-writes-" + java.util.UUID.randomUUID())
+    val perWrite = scala.concurrent.ExecutionContext.fromExecutor { r =>
+      val t = new Thread(r, "graft-concurrent-write")
+      t.setDaemon(true)
+      t.start()
+    }
     val fs = writes.map(w => scala.concurrent.Future {
       sc.setJobGroup(group, desc, "true".equals(interrupt))
-      try w() finally sc.clearJobGroup()
-    }(scala.concurrent.ExecutionContext.global))
+      w()
+    }(perWrite))
     val outcomes = fs.map(f => scala.util.Try(
       scala.concurrent.Await.result(f, WriteAwait)))
     // on ANY timeout, cancel the writes' group before rethrowing so no
@@ -174,19 +188,22 @@ object AdmissionStream {
     }
   }
 
-  /** The `batch-<id>` tree at `dir` as one frame (recursiveFileLookup:
-    * plain nested dirs, no partition-column inference), or an empty
-    * frame of schema `empty` when `dir` does not exist — a run of zero
-    * micro-batches (empty landing dir) never creates it, and that
-    * result is simply empty, not an error. */
+  /** The `batch-<id>` tree at `dir` as one frame of `schema` — the shape
+    * the caller wrote it in, so the read infers nothing (a footer
+    * inference is a job of its own) — read with recursiveFileLookup
+    * (plain nested dirs, no partition-column inference); empty when
+    * `dir` does not exist — a run of zero micro-batches (empty landing
+    * dir) never creates it, and that result is simply empty, not an
+    * error. */
   private[streaming] def readBatchTree(spark: SparkSession, dir: String,
-      empty: StructType): DataFrame = {
+      schema: StructType): DataFrame = {
     val p = new org.apache.hadoop.fs.Path(dir)
     if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-      spark.read.option("recursiveFileLookup", "true").parquet(dir)
+      spark.read.schema(schema).option("recursiveFileLookup", "true")
+        .parquet(dir)
     else
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        empty)
+        schema)
   }
 
   /** Run a bounded document stream to completion, admitting each
@@ -358,66 +375,58 @@ object AdmissionStream {
         }
         // the landing scan is cheap to re-run (one small parquet file per
         // trigger) — the EXPENSIVE shared work is the signature hash,
-        // pinned below; eagerly checkpointing the raw batch too was one
+        // held below; eagerly checkpointing the raw batch too was one
         // more per-batch job for no saved compute
         val docs = batch.select(col("doc_id"), col("text"))
         // hash the batch ONCE (signatures feed the probe AND the index
         // fold-back — rebuilding them per use would shingle the batch
-        // twice per micro-batch). A LAZY localCheckpoint: the probe's
-        // first job over the batch (admitPrehashedBounded's bounded
-        // take / its broadcast builds) materializes every partition
-        // into executor storage as a side effect — the standalone
-        // EAGER per-batch checkpoint action was one more driver-latency
-        // job per micro-batch for no saved compute (guide §1.2 step 1;
-        // jobs-per-batch is the composed-ingest floor). Downstream
-        // plans still read a LogicalRDD (no per-action cache-stage
-        // re-planning, unlike persist) and the blocks stay
-        // context-cleaner-reclaimed, so no unpersist lifecycle.
-        val sigs = Dedup.nearDupIndex(docs, col("doc_id"), col("text"),
-            shingleN, k, rowsPerBand)
-          .localCheckpoint(false)
+        // twice per micro-batch): the batch collect, one bounded take
+        // that brings the signature rows to the driver, where the probe
+        // reads them and the fold-back writes them (a LocalRelation — no
+        // plan re-runs the hash, and no pin needs a job or a release).
+        // Past Dedup's batch caps the distributed path pins them instead.
+        val hashed = Dedup.nearDupIndex(docs, col("doc_id"), col("text"),
+          shingleN, k, rowsPerBand)
+        val sigs = Dedup.heldLocally(hashed)
+          .getOrElse(hashed.localCheckpoint(false))
         // the admitted SET, driver-side when bounded (the common case —
-        // an in-batch admitted set is micro-batch-sized): every
-        // downstream semi-join then builds its broadcast side from a
-        // LocalRelation (no broadcast-exchange job) and the separate
-        // admitted-frame checkpoint job disappears — jobs-per-batch is
-        // the composed-ingest floor. Past the cap / non-long ids, the
-        // distributed frame comes back instead and the pre-r21 shape
-        // (checkpointed admitted frame) runs unchanged.
-        val admittedIdsDf = Dedup.admittedIdsFrame(spark,
+        // an in-batch admitted set is micro-batch-sized): the index
+        // collect plus a driver-side verify, and every consumer below
+        // filters with an isInCollection — no join, no broadcast job.
+        // Past a cap / non-long ids, the distributed frame comes back
+        // and the consumers semi-join against it, pinned once.
+        val keep = Dedup.admittedFilter(
           Dedup.admitPrehashedBounded(sigs,
             indexExcludingBatch(spark, concrete, batchId, sessionTombstones,
               sessionIndexSchema),
             threshold), "doc_id")
-        val admitted = docs.join(admittedIdsDf, Seq("doc_id"), "left_semi")
         // batchId-keyed subdirs: a replayed batch overwrites itself
         // (exactly-once) instead of appending duplicates. The two
-        // appends are INDEPENDENT (both read only the pinned sigs /
-        // admitted-ids frames, write disjoint dirs) and each is a small
+        // appends are INDEPENDENT (both read only the held sigs / the
+        // landing file, write disjoint dirs) and each is a small
         // driver-latency-bound job, so they run CONCURRENTLY through
         // [[runConcurrentWrites]] (wall pays max, not sum; job group
         // propagated, awaits bounded, both awaited before rethrow).
-        // Fold-back = the SAME signature rows, filtered to the
-        // admitted ids (parameter columns ride along) — no re-shingle.
+        // Fold-back = the SAME signature rows, filtered to the admitted
+        // ids under the sigs schema (parameter columns ride along) — no
+        // re-shingle.
         runConcurrentWrites(spark, Seq(
-          () => admitted.write.mode("overwrite")
+          () => keep(docs).write.mode("overwrite")
             .parquet(s"$outPath/batch-$batchId"),
-          () => sigs.join(admittedIdsDf, Seq("doc_id"), "left_semi")
+          () => keep(sigs)
             .write.mode("overwrite").parquet(s"$concrete/batch-$batchId")))
-        // observer sees the admitted rows with EVERY landing column
-        // (the raw batch semi-joined to the admitted ids) — after the
-        // admission state commits, so its view is never ahead of the tree
-        onBatchAdmitted.foreach(_(
-          batch.join(admittedIdsDf.select(col("doc_id")), Seq("doc_id"),
-            "left_semi"),
-          batchId))
+        // observer sees the admitted rows with EVERY landing column (the
+        // raw batch, filtered to the admitted ids) — after the admission
+        // state commits, so its view is never ahead of the tree
+        onBatchAdmitted.foreach(_(keep(batch), batchId))
     }
     // a re-run over fewer landing files leaves the prior run's
     // higher-id batch subdirs standing in both trees — sweep them so
     // the final read (and the standing index) reflect THIS run only
     pruneStaleBatches(spark, concrete, lastBatchId)
     pruneStaleBatches(spark, outPath, lastBatchId)
-    readBatchTree(spark, outPath, StructType(landingSchema.filter(f =>
-      f.name == "doc_id" || f.name == "text")))
+    readBatchTree(spark, outPath,
+      StructType(Seq("doc_id", "text").flatMap(n =>
+        landingSchema.find(_.name == n))))
   }
 }

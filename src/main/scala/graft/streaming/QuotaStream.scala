@@ -170,14 +170,17 @@ object QuotaStream {
       schemaFallback: Option[StructType] = None,
       checkpointDir: Option[String] = None): DataFrame = {
     require(capPerSource > 0, "capPerSource must be positive")
+    lazy val landingSchema = StateFold.landingSchema(spark, landingDir,
+      schemaFallback, defaultLandingSchema)
     val lastBatchId = StateFold.runFold(statePath, "quota",
-      checkpointDir, StateFold.landing(spark, landingDir,
-        StateFold.landingSchema(spark, landingDir, schemaFallback,
-          defaultLandingSchema), maxFilesPerTrigger))(
+      checkpointDir, StateFold.landing(spark, landingDir, landingSchema,
+        maxFilesPerTrigger))(
       quotaFold(spark, statePath, outPath, capPerSource, _, _))
     AdmissionStream.pruneStaleBatches(spark, outPath, lastBatchId)
-    AdmissionStream.readBatchTree(spark, outPath, StructType(Seq(
-      StructField("source", StringType), StructField("doc_id", LongType),
-      StructField("rk", LongType))))
+    // the admitted rows as the fold wrote them: landing source and
+    // doc_id, long rank
+    AdmissionStream.readBatchTree(spark, outPath, StructType(
+      Seq("source", "doc_id").flatMap(n => landingSchema.find(_.name == n)) :+
+        StructField("rk", LongType)))
   }
 }

@@ -180,26 +180,27 @@ object SemanticAdmission {
         // admitNewVecsPreassignedBounded) materializes every partition
         // into executor storage as a side effect — the standalone
         // EAGER per-batch checkpoint action was one more driver-latency
-        // job per micro-batch for no saved compute (the AdmissionStream
-        // sigs discipline; downstream plans still read a LogicalRDD,
-        // blocks context-cleaner-reclaimed).
+        // job per micro-batch for no saved compute (downstream plans
+        // still read a LogicalRDD, blocks context-cleaner-reclaimed; a
+        // lazy checkpoint still runs the jobs of any exchange in the
+        // plan, which the assignment has none of).
         val asg = Similarity.assignCells(
             batch.select(col("vec_id"), col("embedding")), centroids)
           .localCheckpoint(false)
         val standing = streamedExcludingBatch(spark, concrete, batchId)
           .map(seedAsg.unionByName(_)).getOrElse(seedAsg)
         // admitted vec_ids driver-side when bounded (the AdmissionStream
-        // fused shape): the two appends below then semi-join against a
-        // LocalRelation — no admitted-frame checkpoint job, no
-        // broadcast-exchange jobs. Past the cap / non-long ids the
-        // distributed frame comes back and the pre-r21 shape (pinned
-        // admitted frame) runs unchanged.
-        val admittedIdsDf = Dedup.admittedIdsFrame(spark,
+        // fused shape): the two appends below then filter the assignment
+        // rows with an isInCollection — no admitted-frame checkpoint, no
+        // join, no broadcast job. Past the cap / non-long ids the
+        // distributed frame comes back and they semi-join against it,
+        // pinned once.
+        val keep = Dedup.admittedFilter(
           Dedup.admitNewVecsPreassignedBounded(asg, standing, threshold),
           "vec_id")
-        val admittedAsg = asg.join(admittedIdsDf, Seq("vec_id"), "left_semi")
-        // the two appends are independent projections of the pinned
-        // admitted assignments into disjoint dirs — run concurrently
+        val admittedAsg = keep(asg)
+        // the two appends are independent projections of the admitted
+        // assignments into disjoint dirs — run concurrently
         // through [[AdmissionStream.runConcurrentWrites]] (wall pays
         // max, not sum; job group propagated, awaits bounded, both
         // awaited before rethrow; recovery unchanged: either missing ⇒
@@ -219,7 +220,8 @@ object SemanticAdmission {
     // session's full-tree read) reflects THIS run only
     AdmissionStream.pruneStaleBatches(spark, s"$concrete/stream", lastBatchId)
     AdmissionStream.pruneStaleBatches(spark, outPath, lastBatchId)
-    AdmissionStream.readBatchTree(spark, outPath, StructType(
-      landingSchema.filter(f => f.name == "vec_id" || f.name == "embedding")))
+    AdmissionStream.readBatchTree(spark, outPath,
+      StructType(Seq("vec_id", "embedding").flatMap(n =>
+        landingSchema.find(_.name == n))))
   }
 }

@@ -23,10 +23,10 @@ import graft.operators.Fs
   * state would reproduce it bit-for-bit anyway; the marker just makes
   * the skip free.
   *
-  * At 100 TB: the per-batch work is one window over (state ∪ batch) —
-  * state is board-sized, the batch is batch-sized, and nothing rescans
-  * the corpus; the final board is the state table itself, read back in
-  * one board-sized scan.
+  * At 100 TB: the per-batch work is one map-only pass over the batch and
+  * a driver-side merge with the board-sized state — nothing shuffles and
+  * nothing rescans the corpus; the final board is the state table
+  * itself, read back in one board-sized scan.
   */
 object TopNStream {
 
@@ -42,21 +42,23 @@ object TopNStream {
     * q162). A [[StateFold]] (see there for the group-commit protocol and
     * durability contract) whose state is the board itself: at most
     * n×|sources| (doc_id, source, score) rows held driver-side. Per batch
-    * ONE job — the top-N window over local board ∪ arrivals, collected
-    * back; an empty batch reproduces the board and changes nothing.
-    * Idempotent even WITHOUT the applied marker, by top-N's merge
-    * property; the marker makes the skip free. */
+    * ONE job, the one that reads the batch: each partition reduces its
+    * rows to their per-source top-n (no exchange, at most n×|sources|
+    * rows per partition come back), and the driver merges those into
+    * the board by (source, score desc, doc_id) — top-N(S ∪ B) =
+    * top-N(S ∪ ⋃ top-N(Bᵢ)) by the merge property above, so the board is
+    * the one the old window over board ∪ batch computed. An empty batch
+    * reproduces the board and changes nothing. Idempotent even WITHOUT
+    * the applied marker, by the same property; the marker makes the skip
+    * free. */
   def boardFold(spark: SparkSession, statePath: String, n: Int,
       scoreCol: String, flushEvery: Int = Int.MaxValue,
       durable: Boolean = false): StateFold = {
     // canonical (source, score desc, doc_id) order, so fold-result
     // comparisons and flushed files are deterministic
-    def canonical(rows: Array[Row]): Vector[(Long, String, Long)] =
-      rows.map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
-        .sortBy { case (id, src, sc) => (src, -sc, id) }.toVector
-    def boardDf(board: Vector[(Long, String, Long)]): DataFrame =
-      spark.createDataFrame(java.util.Arrays.asList(board.map {
-        case (id, src, sc) => Row(id, src, sc) }: _*), boardSchema)
+    def canonical(entries: Iterable[Entry]): Vector[(Long, String, Long)] =
+      entries.map { case (id, src, sc) => (id.longValue, src, sc.longValue) }
+        .toVector.sortBy { case (id, src, sc) => (src, -sc, id) }
     StateFold(spark, statePath, "top-N", boardSchema.add("p_n", IntegerType),
         flushEvery, durable) { state =>
       // board-size fail-fast: a board built at one n is a DIFFERENT
@@ -71,31 +73,49 @@ object TopNStream {
             "a new board size")
       }
       canonical(state.map(_.select(col("doc_id"), col("source"), col("score"))
-        .collect()).getOrElse(Array.empty))
+        .collect().toSeq.map(entry)).getOrElse(Nil))
     } ((board, batch, _) => {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("source"))
-        .orderBy(col("score").desc, col("doc_id").asc)
-      val next = canonical(boardDf(board)
-        .unionByName(batch.select(col("doc_id"), col("source"),
-          col(scoreCol).cast("long").as("score")))
-        .withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") <= n)
-        .select(col("doc_id"), col("source"), col("score"))
-        .collect())
+      val partial = spark.sparkContext.runJob(
+        batch.select(col("doc_id"), col("source"),
+          col(scoreCol).cast("long").as("score")).rdd,
+        (it: Iterator[Row]) => topN(it.map(entry).toSeq, n).toArray)
+      val next = canonical(topN(board.map { case (id, src, sc) =>
+        (Long.box(id), src, Long.box(sc)) } ++ partial.flatMap(_.toSeq), n))
       Some(next).filter(_ != board)
     }, _.map { case (id, src, sc) => Row(id, src, sc, n) })
   }
+
+  /** A board entry (doc_id, source, score), nulls as the landing gave
+    * them. */
+  private type Entry = (java.lang.Long, String, java.lang.Long)
+
+  private def entry(r: Row): Entry =
+    (r.getAs[java.lang.Long](0), r.getString(1), r.getAs[java.lang.Long](2))
+
+  /** The board's order within a source: score desc NULLS LAST, then
+    * doc_id asc NULLS FIRST — Spark's defaults for the window the board
+    * is defined by. */
+  private val byRank: Ordering[Entry] =
+    Ordering.Tuple4(Ordering.Boolean, Ordering.Long.reverse,
+      Ordering.Boolean, Ordering.Long).on { case (id, _, sc) =>
+      (sc == null, if (sc == null) 0L else sc.longValue,
+        id != null, if (id == null) 0L else id.longValue)
+    }
+
+  /** Each source's first `n` entries by [[byRank]]. */
+  private def topN(entries: Seq[Entry], n: Int): Seq[Entry] =
+    entries.groupBy(_._2).values.flatMap(_.sorted(byRank).take(n)).toSeq
 
   private val boardSchema = StructType(Seq(
     StructField("doc_id", LongType),
     StructField("source", StringType),
     StructField("score", LongType)))
 
-  /** Read the standing board at `statePath` (empty frame when none). */
+  /** Read the standing board at `statePath` (empty frame when none),
+    * under the schema it was written with — no footer-inference job. */
   def readBoard(spark: SparkSession, statePath: String): DataFrame =
     if (Fs.exists(statePath))
-      spark.read.parquet(statePath)
+      spark.read.schema(boardSchema).parquet(statePath)
         .select(col("source"), col("doc_id"), col("score"))
     else
       spark.createDataFrame(

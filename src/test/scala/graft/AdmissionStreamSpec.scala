@@ -500,4 +500,47 @@ class AdmissionStreamSpec extends SparkSpecBase {
       graft.operators.Maintenance.rmTree(root.toFile)
     }
   }
+
+  test("a two-file admission run with a board observer against a " +
+      "non-empty index takes a pinned number of Spark jobs") {
+    val docs = graft.sources.Tables.documents(spark, "/root/testdata/sf0.001")
+    val isNew = substring(md5(col("doc_id").cast("string")), 1, 4) >= lit("cccc")
+    val splitA = pmod(col("doc_id"), lit(2)) === 0
+    val root = Files.createTempDirectory("graft_admit_pin_")
+    val landing = root.resolve("landing"); Files.createDirectory(landing)
+    val indexPath = root.resolve("index").toString
+    def land(df: org.apache.spark.sql.DataFrame, name: String, mod: Long): Unit = {
+      val stage = root.resolve(s"stage-$name")
+      df.coalesce(1).write.parquet(stage.toString)
+      val part = stage.toFile.listFiles().filter(_.getName.endsWith(".parquet")).head
+      Files.move(part.toPath, landing.resolve(name))
+      landing.resolve(name).toFile.setLastModified(mod)
+      ()
+    }
+    land(docs.filter(isNew && splitA), "a.parquet", 1000000L)
+    land(docs.filter(isNew && !splitA), "b.parquet", 2000000L)
+    try {
+      Dedup.nearDupIndex(docs.filter(!isNew), col("doc_id"), col("text"),
+          shingleN = 3, k = 8, rowsPerBand = 2)
+        .write.parquet(s"$indexPath/seed")
+      val board = graft.streaming.TopNStream.boardFold(spark,
+        root.resolve("board").toString, 5, "n_chars")
+      val jobs = jobsOf {
+        AdmissionStream.runAdmission(spark, landing.toString, indexPath,
+          root.resolve("out").toString, shingleN = 3, k = 8, rowsPerBand = 2,
+          threshold = 0.4, maxFilesPerTrigger = Some(1),
+          onBatchAdmitted = Some(board))
+        ()
+      }
+      // the session prologue — the index's schema inference, its
+      // parameter aggregate (two jobs under AQE) and the landing-schema
+      // probe: four — then six per trigger: the batch collect (the spread
+      // shuffle and the take), the index collect, the two writes and the
+      // board's one job; the out tree is read under the schema it was
+      // written in. The parent commit of this pin measured 37 when run
+      // alone (its concurrent writes ran on pooled threads, which this
+      // count sees only when the pool is fresh).
+      jobs shouldBe 16
+    } finally graft.operators.Maintenance.rmTree(root.toFile)
+  }
 }

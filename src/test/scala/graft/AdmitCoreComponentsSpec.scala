@@ -303,10 +303,12 @@ class AdmitCoreComponentsSpec extends SparkSpecBase {
     val sharedCell = distinctCells :+ ((4L, Seq(0.999, 0.001, 0.0)))
     val counts = Seq(minhashJobs(unique), minhashJobs(clustered),
       vecJobs(distinctCells), vecJobs(sharedCell))
-    // a candidate-free MinHash batch is the single bounded take; the
-    // vector path adds its touched-cells collect; in-batch candidates
-    // add the candidate verify
-    counts shouldBe Seq(1, 4, 3, 6)
+    // a MinHash batch is the single batch collect (the index collect
+    // over this empty index is a local relation, no job); the vector path
+    // adds its touched-cells collect (an aggregate: two jobs); in-batch
+    // candidates verify on the driver, with no job (the parent commit of
+    // this pin measured (1, 4, 3, 6): three jobs per candidate verify)
+    counts shouldBe Seq(1, 1, 3, 3)
   }
 
   test("takeBounded parallelism gate: past TakeBoundedMaxParts shuffle " +
