@@ -646,52 +646,62 @@ object Dedup {
       .select(col(id))
   }
 
-  /** The driver-side bounds of a bounded admission — past any of them
-    * the distributed path runs instead ([[admitCore]]'s survivorPairs /
-    * keepRepresentatives chain, unchanged):
-    *  - [[BoundedBatchRows]]: batch rows brought to the driver by the
-    *    batch collect (a micro-batch is trigger-bounded; 32,768 docs);
-    *  - [[BoundedIndexRows]]: index rows that share a band with the
-    *    batch, brought back by the index collect (collisions scale with
-    *    hot bands of the corpus, not the batch, hence their own cap);
-    *  - [[BoundedPayload]]: array elements one collect may carry (the
-    *    shingle sets and band keys, or the embeddings), and one driver
-    *    verify may lay out over its candidate rows — 2²¹ elements,
-    *    ≈ 100–200 MB of driver heap at shingle size. It bounds each
-    *    partition's share of the one-job take too; past
-    *    [[TakeBoundedMaxParts]] partitions only the row cap bounds the
-    *    transfer (the incremental take cannot weigh rows). */
-  private[graft] val BoundedBatchRows = 1 << 15
-  private[graft] val BoundedIndexRows = 1 << 16
-  private[graft] val BoundedPayload = 1L << 21
+  /** The driver-side bound of a bounded admission, in payload: a row
+    * weighs one plus the elements of its array columns (the shingle sets
+    * and band keys, or the cell and the embedding), so the bound caps
+    * rows too. It bounds each collect (the batch, the index candidates,
+    * the vector survivors) and each driver verify's candidate layout;
+    * the quadratic pair bound (`cap`, [[InBatchPairCap]] by default)
+    * counts candidate pairs per shared key before any pair exists. Past
+    * either, the distributed path runs instead ([[admitCore]]'s
+    * survivorPairs / keepRepresentatives chain, unchanged). On the
+    * one-job take ([[takeBounded]]) the bound holds during the transfer,
+    * per partition and in total; past [[TakeBoundedMaxParts]] partitions
+    * the incremental take bounds rows only and the payload is checked
+    * once the rows are on the driver.
+    *
+    * 2¹⁸ is set from a measurement of both paths (4 vCPUs, local[4],
+    * 4 GB heap; medians of three): batches of 40–120-word documents
+    * (about 83 units each, 15% reposts of a 2,000-document parquet index,
+    * 10% in-batch reposts) took, on the driver path, 0.46× the
+    * distributed path's time at 400 documents (33k units), 0.81× at
+    * 2,000 (166k), 0.98× at 3,000 (247k), 1.24× at 4,000 (331k) and 2.1×
+    * at 20,000 (1.66M): the driver's take, layout and verify are one
+    * thread, the distributed path runs on every core. 2¹⁸ is the largest
+    * power of two under that break-even. 384-dimension vectors (386 units
+    * a survivor, 772 a candidate pair in the verify) broke even at about
+    * 850k verify units (1,095 pairs: 0.98×; 587 pairs: 0.90×), so the
+    * bound keeps them under it too. At the bound a collect's rows retain
+    * 18–19 MB of driver heap (69–72 bytes a unit, measured). */
+  private[graft] val BoundedPayload = 1L << 18
 
-  /** A row's payload for [[BoundedPayload]]: the elements of its array
-    * columns. */
-  private val arrayElements: Row => Long = r =>
-    (0 until r.length).iterator.map(i => r.get(i) match {
+  /** A row's weight for [[BoundedPayload]]: one plus the elements of its
+    * array columns. */
+  private val rowWeight: Row => Long = r =>
+    1L + (0 until r.length).iterator.map(i => r.get(i) match {
       case s: scala.collection.Seq[_] => s.length.toLong
       case _ => 0L
     }).sum
 
-  /** `df`'s rows on the driver when it holds at most `cap` rows of at most
-    * `payloadCap` array elements in all ([[takeBounded]], one job; none
-    * for a local frame), else None. */
-  private[graft] def boundedRows(df: DataFrame, cap: Int,
+  /** `df`'s rows on the driver when they weigh at most `payloadCap` in
+    * all ([[rowWeight]]; [[takeBounded]], one job; none for a local
+    * frame), else None. */
+  private[graft] def boundedRows(df: DataFrame,
       payloadCap: Long = BoundedPayload): Option[Seq[Row]] = {
-    val rows = takeBounded(df, cap, payloadCap, arrayElements)
-    if (rows.length > cap || rows.iterator.map(arrayElements).sum > payloadCap)
-      None
+    val rows = takeBounded(df, math.min(payloadCap, Int.MaxValue - 1L).toInt,
+      payloadCap, rowWeight)
+    if (rows.iterator.map(rowWeight).sum > payloadCap) None
     else Some(rows.toSeq)
   }
 
   /** `df` held on the driver — a LocalRelation of its rows under its own
     * schema, brought back by one [[boundedRows]] take — when it is within
-    * [[BoundedBatchRows]] and [[BoundedPayload]]. Every plan over the
-    * result reads the driver's rows: a filter or projection of it is
-    * folded into a new LocalRelation while optimizing (no job), a write
-    * of it is the write job alone, and it never re-runs `df`'s plan. */
+    * [[BoundedPayload]]. Every plan over the result reads the driver's
+    * rows: a filter or projection of it is folded into a new
+    * LocalRelation while optimizing (no job), a write of it is the write
+    * job alone, and it never re-runs `df`'s plan. */
   private[graft] def heldLocally(df: DataFrame): Option[DataFrame] =
-    boundedRows(df, BoundedBatchRows).map(rows =>
+    boundedRows(df).map(rows =>
       df.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*),
         df.schema))
 
@@ -703,13 +713,13 @@ object Dedup {
     * The rows form a LocalRelation, and ConvertToLocalRelation evaluates
     * the filter while optimizing: no job runs, and the predicate is the
     * distributed path's own Column, so every decision is bit-identical.
-    * None when those rows would carry more than `payloadCap` array
-    * elements (counted before any row is built). */
+    * None when those rows would weigh more than `payloadCap`
+    * ([[rowWeight]], counted before any row is built). */
   private def verifyLocally(spark: SparkSession, pairs: Seq[(Long, Long)],
       rowsA: Map[Long, Seq[Row]], rowsB: Map[Long, Seq[Row]],
       payload: Seq[StructField], verify: Column,
       payloadCap: Long): Option[Seq[(Long, Long)]] = {
-    def weight(rs: Seq[Row]) = rs.iterator.map(arrayElements).sum
+    def weight(rs: Seq[Row]) = rs.iterator.map(rowWeight).sum
     val load = pairs.iterator.map { case (a, b) =>
       rowsB(b).length * weight(rowsA(a)) + rowsA(a).length * weight(rowsB(b))
     }.sum
@@ -734,32 +744,34 @@ object Dedup {
   private def keysOf(r: Row): Seq[Any] =
     if (r.isNullAt(1)) Nil else r.getSeq[Any](1)
 
+  /** The ids (position 0) of taken rows under each of their block keys. */
+  private def idsByKey(rows: Seq[Row]): Map[Any, Seq[Long]] =
+    rows.flatMap(r => keysOf(r).map(_ -> r.getLong(0))).groupMap(_._1)(_._2)
+
   /** The in-batch half of a bounded admission, shared by
     * [[admitPrehashedBounded]] and [[admitNewVecsPreassignedBounded]].
     * `survivors` are the survivor rows on the driver as (id: long, block
     * keys, payload…) under `schema` — None when a collect crossed its
-    * cap. Two survivors sharing a block key (MinHash bands, or the one
+    * bound. Two survivors sharing a block key (MinHash bands, or the one
     * IVF cell) are a candidate (a < b, distinct: ≡ the distributed
-    * self-join); the quadratic term of the buckets is counted before any
-    * pair materializes, so a degenerate key shared by every survivor
-    * routes to `fallback` like a past-cap collect. Candidates verify on
-    * the driver ([[verifyLocally]], no job, within `payloadCap`), the
-    * exact min-label union-find runs over the verified edges, and the
-    * admitted ids —
-    * survivors that are their component's min-id representative, sorted,
-    * a duplicated id once per row as the distributed path returns it —
-    * come back Left. Past a cap, `fallback` (the distributed
-    * keepRepresentatives chain) comes back Right. Label-equivalence of
-    * local vs distributed components is pinned by AdmitCoreComponentsSpec;
-    * AdmissionStreamSpec and SemanticAdmissionSpec pin the loops end to
-    * end. */
+    * self-join); the quadratic term of the buckets is counted against
+    * `cap` before any pair materializes, so a degenerate key shared by
+    * every survivor routes to `fallback` like a past-bound collect.
+    * Candidates verify on the driver ([[verifyLocally]], no job, within
+    * `payloadCap`), the exact min-label union-find runs over the verified
+    * edges, and the admitted ids — survivors that are their component's
+    * min-id representative, sorted, a duplicated id once per row as the
+    * distributed path returns it — come back Left. Past a bound,
+    * `fallback` (the distributed keepRepresentatives chain) comes back
+    * Right. Label-equivalence of local vs distributed components is
+    * pinned by AdmitCoreComponentsSpec; AdmissionStreamSpec and
+    * SemanticAdmissionSpec pin the loops end to end. */
   private def boundedAdmit(spark: SparkSession,
       survivors: Option[Seq[Row]], schema: StructType, verify: Column,
       cap: Int, payloadCap: Long)(
       fallback: => DataFrame): Either[Seq[Long], DataFrame] =
-    survivors.filter(_.length <= cap).flatMap { rows =>
-      val buckets = rows.flatMap(r => keysOf(r).map(_ -> r.getLong(0)))
-        .groupMap(_._1)(_._2).values
+    survivors.flatMap { rows =>
+      val buckets = idsByKey(rows).values
       if (buckets.map(b => b.length.toLong * (b.length - 1) / 2).sum > cap)
         None
       else {
@@ -811,19 +823,21 @@ object Dedup {
     * Every Jaccard verify then runs on the driver ([[verifyLocally]]):
     * index-vs-batch candidates (a batch and an index row sharing a band,
     * distinct id pairs — ≡ the band join) first, then the in-batch
-    * candidates of the survivors through [[boundedAdmit]]. Past any cap
-    * ([[BoundedBatchRows]], [[BoundedIndexRows]], [[BoundedPayload]],
-    * `cap` survivors or in-batch pairs) or for non-long ids the
-    * distributed [[admitCore]] comes back instead (Right).
-    *
-    * Same decisions as [[admitPrehashed]] (the seeded equivalence spec
-    * pins it), with one reading of the index: a doc_id is one document,
-    * so of an id that appears on several index rows only the rows that
-    * share a band with the batch are verified (the distributed verify
-    * join also reads the id's other rows). */
+    * candidates of the survivors through [[boundedAdmit]]. The verify
+    * reads every row of a candidate index id, as the distributed verify
+    * join does: an id on several rows (a re-landed doc_id with new text)
+    * may have rows that share no band with the batch, so the candidates
+    * the band-sharing rows leave unmatched verify against all rows of
+    * their ids, brought back by one more collect (an `isInCollection` on
+    * doc_id) — run only when such candidates exist. Past
+    * [[BoundedPayload]] on any collect or verify, past `cap` candidate
+    * pairs (index-vs-batch, counted per shared band before any pair
+    * exists, or in-batch), or for non-long ids the distributed
+    * [[admitCore]] comes back instead (Right). Same decisions as
+    * [[admitPrehashed]]: BoundedAdmissionSpec pins it on seeded corpora
+    * and past each bound. */
   private[graft] def admitPrehashedBounded(newSigs: DataFrame,
       indexFrame: DataFrame, threshold: Double, cap: Int = InBatchPairCap,
-      batchCap: Int = BoundedBatchRows, indexCap: Int = BoundedIndexRows,
       payloadCap: Long = BoundedPayload): Either[Seq[Long], DataFrame] = {
     val spark = newSigs.sparkSession
     val nw = newSigs.select(col("doc_id"), col("bands"), col("sh"))
@@ -832,25 +846,36 @@ object Dedup {
     def distributed: DataFrame = admitCore(nw, ix, threshold)
     if (!Seq(nw, ix).forall(_.schema("doc_id").dataType == LongType))
       return Right(distributed)
-    val survivors = boundedRows(nw, batchCap, payloadCap).flatMap { batch =>
-      val bands = batch.iterator.flatMap(keysOf).toSeq.distinct
+    def indexRows(keep: Column): Option[Seq[Row]] =
+      boundedRows(ix.filter(col("doc_id").isNotNull && keep), payloadCap)
+    val survivors = boundedRows(nw, payloadCap).flatMap { batch =>
+      val byBand = idsByKey(batch)
       val probed =
-        if (bands.isEmpty) Some(Nil)
-        else boundedRows(ix.filter(exists(col("bands"),
-          _.isInCollection(bands))), indexCap, payloadCap)
+        if (byBand.isEmpty) Some(Nil)
+        else indexRows(exists(col("bands"), _.isInCollection(byBand.keys)))
       probed.flatMap { index =>
-        val byBand = batch.flatMap(r => keysOf(r).map(_ -> r.getLong(0)))
-          .groupMap(_._1)(_._2)
-        val cand = index.flatMap(r => keysOf(r)
-            .flatMap(byBand.getOrElse(_, Nil)).map(_ -> r.getLong(0)))
-          .distinct.sorted
-        verifyLocally(spark, cand, batch.groupBy(_.getLong(0)),
-            index.groupBy(_.getLong(0)), Seq(nw.schema("sh")), verify,
-            payloadCap)
-          .map { verified =>
-            val matched = verified.map(_._1).toSet
-            batch.filterNot(r => matched(r.getLong(0)))
+        val ixByBand = idsByKey(index)
+        if (ixByBand.iterator.map { case (k, os) =>
+            os.length.toLong * byBand.getOrElse(k, Nil).length }.sum > cap)
+          None
+        else {
+          val cand = ixByBand.toSeq.flatMap { case (k, os) =>
+            for (n <- byBand.getOrElse(k, Nil); o <- os) yield (n, o)
+          }.distinct.sorted
+          val byId = batch.groupBy(_.getLong(0))
+          def matches(rows: Seq[Row], pairs: Seq[(Long, Long)]) = {
+            val rowsOf = rows.groupBy(_.getLong(0))
+            verifyLocally(spark, pairs.filter(p => rowsOf.contains(p._2)),
+              byId, rowsOf, Seq(nw.schema("sh")), verify, payloadCap)
+              .map(_.map(_._1).toSet)
           }
+          matches(index, cand).flatMap { matched =>
+            val open = cand.filterNot(p => matched(p._1))
+            if (open.isEmpty) Some(matched)
+            else indexRows(col("doc_id").isInCollection(open.map(_._2).distinct))
+              .flatMap(matches(_, open)).map(matched ++ _)
+          }.map(matched => batch.filterNot(r => matched(r.getLong(0))))
+        }
       }
     }
     boundedAdmit(spark, survivors, nw.schema, verify, cap, payloadCap)(
@@ -991,7 +1016,7 @@ object Dedup {
     * exactly where job count IS the floor: micro-batch / bench-scale
     * sessions with a few dozen partitions.
     *
-    * `payload` weighs a row (array elements for [[boundedRows]]); each
+    * `payload` weighs a row ([[rowWeight]] for [[boundedRows]]); each
     * partition, and the total, stops at the first row that takes it past
     * `payloadCap`, so on the one-job path the transfer is bounded in
     * payload as well as in rows. A frame that is a LocalRelation after
@@ -1779,7 +1804,8 @@ object Dedup {
     val taken = sv.select(col("vec_id"), array(col("cell")).as("cells"),
       col("embedding"), col("c_norm"))
     boundedAdmit(asg.sparkSession,
-      if (sv.schema("vec_id").dataType == LongType) boundedRows(taken, cap)
+      if (sv.schema("vec_id").dataType == LongType)
+        boundedRows(taken).filter(_.length <= cap)
       else None,
       taken.schema,
       V.cosineFromNorms(col("embedding_a"), col("embedding_b"),

@@ -28,8 +28,11 @@ import graft.operators.Dedup
   * collect (the landing scan and hash — two jobs when the one-file
   * batch is spread over the cores first), the index collect (one
   * map-only scan), the two concurrent writes, and whatever the observer
-  * runs (one job for [[TopNStream.boardFold]]) — six in all. Every
-  * verify runs on the driver ([[Dedup.admitPrehashedBounded]]).
+  * runs (one job for [[TopNStream.boardFold]]) — six in all, and one
+  * more index collect in a batch where a document shares a band with an
+  * index id but matches none of its band-sharing rows (the id's other
+  * rows verify too). Every verify runs on the driver
+  * ([[Dedup.admitPrehashedBounded]]).
   *
   * Exactly-once: the index append and the admissions append are both
   * keyed by `batchId` subdirectories; a replayed micro-batch (failure
@@ -384,22 +387,26 @@ object AdmissionStream {
         // that brings the signature rows to the driver, where the probe
         // reads them and the fold-back writes them (a LocalRelation — no
         // plan re-runs the hash, and no pin needs a job or a release).
-        // Past Dedup's batch caps the distributed path pins them instead.
+        // The admitted SET is then driver-side when bounded (the common
+        // case — an in-batch admitted set is micro-batch-sized): the
+        // index collect plus a driver-side verify, and every consumer
+        // below filters with an isInCollection — no join, no broadcast
+        // job. A batch past Dedup's payload bound is pinned instead and
+        // goes straight to the distributed path (its take has already
+        // crossed the bound; taking it again would hash it twice), whose
+        // admitted frame the consumers semi-join against, pinned once.
         val hashed = Dedup.nearDupIndex(docs, col("doc_id"), col("text"),
           shingleN, k, rowsPerBand)
-        val sigs = Dedup.heldLocally(hashed)
-          .getOrElse(hashed.localCheckpoint(false))
-        // the admitted SET, driver-side when bounded (the common case —
-        // an in-batch admitted set is micro-batch-sized): the index
-        // collect plus a driver-side verify, and every consumer below
-        // filters with an isInCollection — no join, no broadcast job.
-        // Past a cap / non-long ids, the distributed frame comes back
-        // and the consumers semi-join against it, pinned once.
-        val keep = Dedup.admittedFilter(
-          Dedup.admitPrehashedBounded(sigs,
-            indexExcludingBatch(spark, concrete, batchId, sessionTombstones,
-              sessionIndexSchema),
-            threshold), "doc_id")
+        val index = indexExcludingBatch(spark, concrete, batchId,
+          sessionTombstones, sessionIndexSchema)
+        val (sigs, admitted) = Dedup.heldLocally(hashed) match {
+          case Some(held) =>
+            (held, Dedup.admitPrehashedBounded(held, index, threshold))
+          case None =>
+            val pinned = hashed.localCheckpoint(false)
+            (pinned, Right(Dedup.admitPrehashed(pinned, index, threshold)))
+        }
+        val keep = Dedup.admittedFilter(admitted, "doc_id")
         // batchId-keyed subdirs: a replayed batch overwrites itself
         // (exactly-once) instead of appending duplicates. The two
         // appends are INDEPENDENT (both read only the held sigs / the

@@ -206,13 +206,13 @@ class AdmitCoreComponentsSpec extends SparkSpecBase {
     viaFrame should contain allOf (1L, 3L, 4L, 5L, 6L)
     viaFrame should contain noneOf (2L, 7L, 9L)
     // a tiny cap routes to the distributed fallback, set unchanged (the
-    // 8 survivors already cross the row cap at cap = 2)
+    // clusters' 16 bucket pairs cross cap = 2)
     val over = Dedup.admitPrehashedBounded(sigs, emptyIx, 0.4, cap = 2)
     over.isRight shouldBe true
     over.toOption.get.as[Long].collect().sorted.toSeq shouldBe viaFrame
-    // the QUADRATIC-TERM cap: the 8 survivors fit cap = 8 as rows, but
-    // the identical clusters' band buckets hold 16 pairs (4 bands × 3
-    // for 1/2/7, 4 × 1 for 3/9)
+    // the QUADRATIC-TERM cap: the 8 survivors number no more than
+    // cap = 8, but the identical clusters' band buckets hold 16 pairs
+    // (4 bands × 3 for 1/2/7, 4 × 1 for 3/9)
     val quad = Dedup.admitPrehashedBounded(sigs, emptyIx, 0.4, cap = 8)
     quad.isRight shouldBe true
     quad.toOption.get.as[Long].collect().sorted.toSeq shouldBe viaFrame

@@ -25,7 +25,9 @@ class BoundedAdmissionSpec extends SparkSpecBase {
     * 0.5 with an index doc or an earlier batch doc (11 words vs. their
     * first 8 plus 3 fresh: 6 shared of 12 shingles); a row repeated under
     * its doc_id, and a doc_id carried by two different texts. The index
-    * repeats some rows (one signature written twice). */
+    * repeats some rows (one signature written twice) and carries some ids
+    * on a second row of different text (a re-landed id), a few of which
+    * the batch reposts. */
   private def corpus(seed: Long): (Seq[(Long, String)], Seq[(Long, String)]) = {
     val r = new scala.util.Random(seed)
     val vocab = Iterator.continually(
@@ -55,8 +57,13 @@ class BoundedAdmissionSpec extends SparkSpecBase {
     }
     val dupRow = batch(7)
     val twoTexts = batch(11)._1 -> words(25)
-    val batchRows = batch.toSeq :+ dupRow :+ twoTexts
-    val indexRows = index ++ index.take(6)
+    // re-landed index ids: a second row under the id with new text, and
+    // batch reposts of some of those texts
+    val relanded = index.filter(_._1 % 7 == 0).map { case (i, _) => i -> words(25) }
+    val relandedReposts = relanded.take(5).zipWithIndex.map { case ((_, ws), j) =>
+      (1200L + j) -> ws }
+    val batchRows = batch.toSeq ++ Seq(dupRow, twoTexts) ++ relandedReposts
+    val indexRows = index ++ index.take(6) ++ relanded
     (indexRows.map { case (i, ws) => i -> ws.mkString(" ") },
       batchRows.map { case (i, ws) => i -> repost(ws) })
   }
@@ -130,13 +137,13 @@ class BoundedAdmissionSpec extends SparkSpecBase {
     val empty = sigs(index).filter(lit(false))
     viaFrame(sigs(batch), empty) shouldBe Seq(10L)
     bounded(Dedup.admitPrehashedBounded(sigs(batch), empty, threshold)) shouldBe Seq(10L)
-    // the driver verify's payload cap: the batch holds 3 × (8 bands + 9
-    // shingles) = 51 elements, its three in-batch pairs lay out twice
-    // that — 51 admits the batch collect and crosses the verify
+    // the driver verify's payload bound: the batch weighs 3 × (1 + 8
+    // bands + 9 shingles) = 54, its three in-batch pairs lay out twice
+    // that — 54 admits the batch collect and crosses the verify
     bounded(Dedup.admitPrehashedBounded(sigs(batch), empty, threshold,
-      payloadCap = 102)) shouldBe Seq(10L)
+      payloadCap = 108)) shouldBe Seq(10L)
     fallback(Dedup.admitPrehashedBounded(sigs(batch), empty, threshold,
-      payloadCap = 51)) shouldBe Seq(10L)
+      payloadCap = 54)) shouldBe Seq(10L)
   }
 
   test("the streaming loop excludes the batch's own batch-<id> subdir: a " +
@@ -166,37 +173,88 @@ class BoundedAdmissionSpec extends SparkSpecBase {
     } finally graft.operators.Maintenance.rmTree(root.toFile)
   }
 
-  test("just past each driver cap — batch rows, batch payload, index " +
-      "candidate rows — the distributed fallback admits the same set") {
+  test("an index doc_id on two rows of different text verifies under " +
+      "both rows, also the one that shares no band with the batch") {
+    val r = new scala.util.Random(6L)
+    val vocab = Iterator.continually(
+        Iterator.fill(4 + r.nextInt(5))(('a' + r.nextInt(26)).toChar).mkString)
+      .distinct.take(4000).toVector
+    def words(n: Int): Seq[String] =
+      Iterator.continually(vocab(r.nextInt(vocab.size))).distinct.take(n).toSeq
+    // per id X: batch doc n (11 words); X's row A keeps n's first 7
+    // words (Jaccard 5/13 with n: often a band candidate, never a
+    // match) and X's row B its first 8 (exactly 0.5: a match that
+    // shares no band with n about a third of the time)
+    val triples = (1L to 60L).map { x =>
+      val n = words(11)
+      val fresh = Iterator.continually(words(1).head).filterNot(n.contains)
+        .distinct.take(7).toSeq
+      (x, n, n.take(7) ++ fresh.take(4), n.take(8) ++ fresh.drop(4))
+    }
+    val batch = triples.map { case (x, n, _, _) => (1000L + x) -> n.mkString(" ") }
+    val index = triples.flatMap { case (x, _, a, b) =>
+      Seq(x -> a.mkString(" "), x -> b.mkString(" ")) }
+    val sigs = sigsOf(batch)
+    val ix = sigsOf(index)
+    val reference = viaFrame(sigs, ix)
+    bounded(Dedup.admitPrehashedBounded(sigs, ix, threshold)) shouldBe reference
+    // the case is present: batch docs rejected though their B row shares
+    // no band with any batch doc (a verify of the band-sharing rows
+    // alone would admit them)
+    val batchBands = sigs.select(explode(col("bands"))).as[String].collect().toSet
+    val bandFreeB = sigsOf(triples.map { case (x, _, _, b) => x -> b.mkString(" ") })
+      .select("doc_id", "bands").collect()
+      .filter(_.getSeq[String](1).forall(b => !batchBands(b))).map(_.getLong(0)).toSet
+    val hidden = triples.map(_._1).count(x => bandFreeB(x) && !reference.contains(1000L + x))
+    withClue("no batch doc is rejected by a band-free row alone: ") {
+      hidden should be > 0
+    }
+  }
+
+  test("just past each driver bound — batch payload, index-candidate " +
+      "payload, verify payload, candidate pairs — the distributed fallback admits the same set") {
     val (indexDocs, batchDocs) = corpus(5L)
     val sigs = sigsOf(batchDocs)
     val ix = sigsOf(indexDocs)
     val reference = viaFrame(sigs, ix)
-    def elements(rows: Seq[Row]): Long = rows.map(r =>
-      r.getSeq[String](1).size.toLong + r.getSeq[String](2).size).sum
-    val batchRows = sigs.select("doc_id", "bands", "sh").collect().toSeq
-    val bands = batchRows.flatMap(_.getSeq[String](1)).toSet
-    val candidates = ix.select("doc_id", "bands", "sh").collect().toSeq
-      .filter(_.getSeq[String](1).exists(bands))
-    val (nBatch, nIndex) = (batchRows.size, candidates.size)
-    val payload = elements(batchRows)
-    assert(nIndex > 0 && elements(candidates) < payload)
-    def run(batchCap: Int = Dedup.BoundedBatchRows,
-        indexCap: Int = Dedup.BoundedIndexRows,
-        payloadCap: Long = Dedup.BoundedPayload) =
-      Dedup.admitPrehashedBounded(sigs, ix, threshold, batchCap = batchCap,
-        indexCap = indexCap, payloadCap = payloadCap)
-    bounded(run(batchCap = nBatch)) shouldBe reference
-    fallback(run(batchCap = nBatch - 1)) shouldBe reference
-    bounded(run(payloadCap = payload)) shouldBe reference
-    fallback(run(payloadCap = payload - 1)) shouldBe reference
-    bounded(run(indexCap = nIndex)) shouldBe reference
-    fallback(run(indexCap = nIndex - 1)) shouldBe reference
-    // the held batch obeys the same caps as the batch collect
-    Dedup.boundedRows(sigs.select("doc_id", "bands", "sh"), nBatch - 1) shouldBe None
-    Dedup.boundedRows(sigs.select("doc_id", "bands", "sh"), nBatch,
-      payload - 1) shouldBe None
-    Dedup.boundedRows(sigs.select("doc_id", "bands", "sh"), nBatch,
-      payload).map(_.length) shouldBe Some(nBatch)
+    def weight(rows: Seq[Row]): Long = rows.map(r =>
+      1L + r.getSeq[String](1).size + r.getSeq[String](2).size).sum
+    def rowsOf(df: DataFrame) = df.select("doc_id", "bands", "sh").collect().toSeq
+    // the batch outweighs its index candidates here: the batch collect
+    // crosses first
+    val batchWeight = weight(rowsOf(sigs))
+    bounded(Dedup.admitPrehashedBounded(sigs, ix, threshold)) shouldBe reference
+    fallback(Dedup.admitPrehashedBounded(sigs, ix, threshold,
+      payloadCap = batchWeight - 1)) shouldBe reference
+    Dedup.boundedRows(sigs.select("doc_id", "bands", "sh"), batchWeight - 1) shouldBe None
+    Dedup.boundedRows(sigs.select("doc_id", "bands", "sh"), batchWeight)
+      .map(_.length) shouldBe Some(sigs.count())
+    // a batch of reposts against an index that holds each of their
+    // originals twice: the index candidates outweigh the batch, so the
+    // index collect crosses first; each repost shares every one of its
+    // 4 bands with both copies — 8 band pairs per repost
+    val originals = indexDocs.distinct.take(20)
+    val reposts = sigsOf(originals.map { case (i, t) => (2000L + i) -> t.toUpperCase })
+    val doubled = sigsOf(originals ++ originals)
+    val repostRef = viaFrame(reposts, doubled)
+    repostRef shouldBe Seq.empty
+    val repostWeight = weight(rowsOf(reposts))
+    val candidateWeight = weight(rowsOf(doubled))
+    assert(candidateWeight > repostWeight)
+    bounded(Dedup.admitPrehashedBounded(reposts, doubled, threshold)) shouldBe repostRef
+    fallback(Dedup.admitPrehashedBounded(reposts, doubled, threshold,
+      payloadCap = candidateWeight - 1)) shouldBe repostRef
+    // the verify lays out each repost with both copies of its original:
+    // (2 + 2) × its weight
+    bounded(Dedup.admitPrehashedBounded(reposts, doubled, threshold,
+      payloadCap = 4 * repostWeight)) shouldBe repostRef
+    fallback(Dedup.admitPrehashedBounded(reposts, doubled, threshold,
+      payloadCap = 4 * repostWeight - 1)) shouldBe repostRef
+    // the pair bound, on the index-vs-batch band pairs
+    val bandPairs = 20 * 4 * 2
+    bounded(Dedup.admitPrehashedBounded(reposts, doubled, threshold,
+      cap = bandPairs)) shouldBe repostRef
+    fallback(Dedup.admitPrehashedBounded(reposts, doubled, threshold,
+      cap = bandPairs - 1)) shouldBe repostRef
   }
 }
