@@ -1227,7 +1227,7 @@ private[graft] object Oracles {
        |WHERE rk <= 10 ORDER BY source, rk""".stripMargin
 
   /** q163's oracle, generated AT ACCESS TIME: the whitening basis the
-    * query run itself fitted ([[SparkEntry.pcaModelCache]] — Verify runs
+    * query run itself fitted ([[SparkEntry.pcaModels]] — Verify runs
     * every query BEFORE dumping oracle_sql.json) renders as double-array
     * literals into the q123-shaped projection, and the whitened IVF
     * build→probe replays as the q49 CTE chain over the projected
@@ -1261,7 +1261,7 @@ private[graft] object Oracles {
     * loudly instead of silently picking the lexicographically-first
     * dir's basis and producing a spurious mismatch. */
   private def dumpPcaModel: Option[graft.operators.Pca.PcaModel] = {
-    val models = SparkEntry.pcaModelCache
+    val models = SparkEntry.pcaModels
     require(models.size <= 1,
       s"oracle dump ambiguous: PCA models fitted for ${models.keys.toSeq.sorted.mkString(", ")} — " +
         "dump oracles from a JVM that ran queries against exactly one fixture dir")

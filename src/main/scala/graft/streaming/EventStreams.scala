@@ -66,8 +66,9 @@ object EventStreams {
     * sentinels): tmpfs when the host offers it, java.io.tmpdir
     * otherwise. The bounded-replay harnesses re-pay checkpoint/offset/
     * state-store I/O on EVERY run — pure fixed cost that durability buys
-    * nothing for (the scratch is deleted on exit) — so keeping it off
-    * disk amortizes the ~2-3 s/query streaming-harness overhead. A real
+    * nothing for (the scratch is removed after the run, or at JVM exit)
+    * — so keeping it off disk amortizes the ~2-3 s/query
+    * streaming-harness overhead. A real
     * deployment puts the checkpoint on durable shared storage; that is
     * exactly what this scratch is NOT. */
   private[graft] def scratchDir(prefix: String): java.nio.file.Path = {
@@ -75,6 +76,21 @@ object EventStreams {
     if (java.nio.file.Files.isDirectory(shm) && java.nio.file.Files.isWritable(shm))
       java.nio.file.Files.createTempDirectory(shm, prefix)
     else java.nio.file.Files.createTempDirectory(prefix)
+  }
+
+  /** Scratch dirs that stand until JVM exit (per-JVM caches, standing
+    * artifacts, frames returned to the caller), removed by one shutdown
+    * hook — `File.deleteOnExit` cannot remove a non-empty directory. */
+  private val standingDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]
+  private lazy val standingDirsHook =
+    sys.addShutdownHook(standingDirs.forEach(f => Maintenance.rmTree(f)))
+
+  /** A [[scratchDir]] removed at JVM exit. */
+  private[graft] def standingScratchDir(prefix: String): java.nio.file.Path = {
+    standingDirsHook
+    val d = scratchDir(prefix)
+    standingDirs.add(d.toFile)
+    d
   }
 
   def readEventStream(spark: SparkSession, path: String,
@@ -526,7 +542,7 @@ object EventStreams {
       case Some((id, dir)) if id == identity => dir
       case prev =>
         prev.foreach { case (_, dir) => Maintenance.rmTree(dir.toFile) }
-        val d = scratchDir("graft_stream_srccache_")
+        val d = standingScratchDir("graft_stream_srccache_")
         files.foreach(f =>
           java.nio.file.Files.copy(f.toPath, d.resolve(f.getName)))
         srcStageCache.put(pathKey, (identity, d))
@@ -546,7 +562,7 @@ object EventStreams {
     // deployed stream writes its sink to durable storage, which this
     // bounded-replay harness is exactly not)
     val landing = scratchDir("graft_stream_land_")
-    val out = scratchDir("graft_stream_out_")
+    val out = standingScratchDir("graft_stream_out_")
     val ckpt = scratchDir("graft_stream_ckpt_")
     val src = new java.io.File(path)
     val srcFiles =
@@ -602,7 +618,7 @@ object EventStreams {
             .getOrElse(Array.empty)
             .filter(f => f.isFile && f.getName.endsWith(".parquet"))
             .head
-          val keep = scratchDir("graft_stream_sentcache_")
+          val keep = standingScratchDir("graft_stream_sentcache_")
             .resolve("sentinel.parquet")
           Files.move(part.toPath, keep)
           Maintenance.rmTree(tmp.toFile)
