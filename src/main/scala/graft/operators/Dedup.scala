@@ -340,15 +340,12 @@ object Dedup {
   def admitNewDocsWithIndex(newDf: DataFrame, indexPath0: String, id: Column,
       text: Column, threshold: Double): DataFrame = {
     // pointer-committed roots resolve to their current generation here
-    // (the object-store layout — [[Fs.currentGeneration]]); plain dirs
-    // pass through, same contract as the ANN probes
-    val indexPath = Fs.currentGeneration(indexPath0).getOrElse(indexPath0)
-    // tombstoned docs are masked out of the probed set here (the
-    // `_tombstones` table is invisible to the data read itself), so a
-    // new document that matched ONLY deleted docs admits
-    val ix = excludeTombstoned(newDf.sparkSession, indexPath,
-      newDf.sparkSession.read
-        .option("recursiveFileLookup", "true").parquet(indexPath))
+    // (the object-store layout — [[Fs.concrete]]); plain dirs pass
+    // through, same contract as the ANN probes
+    val indexPath = Fs.concrete(indexPath0)
+    // tombstoned docs are masked out of the probed set here, so a new
+    // document that matched ONLY deleted docs admits
+    val ix = standingIndex(newDf.sparkSession, indexPath)
     val paramCols = Seq("p_shingle_n", "p_k", "p_rows_per_band")
     require(paramCols.forall(ix.columns.contains),
       s"near-dup index at $indexPath carries no build parameters " +
@@ -384,13 +381,12 @@ object Dedup {
     * a caller-supplied (doc_id, text) source — the documents table or a
     * stored text side; signatures cannot be re-derived from signatures —
     * restricted to the doc_ids the standing tree holds (whatever
-    * generation each came from), and swaps a fresh single-generation
-    * [[nearDupIndex]] artifact in via the [[Maintenance.compactTree]]
-    * staged-rename discipline (`__staged`/`__old`,
-    * [[Upsert.recoverStagedSwap]] run first, crash-safe). The swapped
-    * tree is flat target-sized files — also a compaction. Run between
-    * ingest sessions, never concurrently with one. Returns the rebuilt
-    * file count.
+    * generation each came from), and commits a fresh single-generation
+    * [[nearDupIndex]] artifact through [[Fs.commitFold]] (crash-safe: a
+    * staged swap on a plain root, a new generation on a pointer root).
+    * The rebuilt tree is flat target-sized files — also a compaction.
+    * Run between ingest sessions, never concurrently with one. Returns
+    * the rebuilt file count.
     *
     * Cost is one full re-shingle of the kept set — the once-per-
     * reparameterization price the artifact's embedded parameters exist
@@ -399,153 +395,95 @@ object Dedup {
     * index, so the rebuild REQUIRES full coverage and throws otherwise. */
   def rebuildNearDupIndex(docs: DataFrame, indexPath: String, id: Column,
       text: Column, shingleN: Int = 3, k: Int = 16, rowsPerBand: Int = 4,
-      targetFileBytes: Long = 128L << 20, retain: Option[Int] = None): Int = {
-    val spark = docs.sparkSession
+      targetFileBytes: Long = 128L << 20, retain: Option[Int] = None): Int =
     // pointer-committed root: kept set comes from the CURRENT generation
     // (and its tombstones), and the rebuilt index publishes as a NEW
     // generation — same contract as [[compactNearDupIndex]]
-    val gen = Fs.currentGeneration(indexPath)
-    val concrete = gen.getOrElse(indexPath)
-    if (gen.isEmpty) Upsert.recoverStagedSwap(indexPath)
-    require(Fs.isDirectory(concrete), s"no near-dup index tree at $concrete")
-    // tombstoned ids are dropped from the kept set — a rebuild is also a
-    // physical delete fold (the `_tombstones` table rides into `__old`
-    // with the swapped-out tree), and the coverage guard must not demand
-    // text for documents being deleted
-    val keptIds = excludeTombstoned(spark, concrete,
-        spark.read.option("recursiveFileLookup", "true")
-          .parquet(concrete).select(col("doc_id")).distinct())
-      .localCheckpoint(true)
-    val kept = keptIds.count()
-    val src = docs.select(id.as("doc_id"), text.as("txt"))
-    val covered = src.join(keptIds, Seq("doc_id"), "left_semi")
-    // one id-only pass for both guards (rows vs distinct ids) — the
-    // text payload stays out of it and nothing corpus-sized is pinned
-    val guardRow = covered.select(col("doc_id"))
-      .agg(count(lit(1)).as("rows"), count_distinct(col("doc_id")).as("ids"))
-      .collect().head
-    val (coveredRows, coveredIds) = (guardRow.getLong(0), guardRow.getLong(1))
-    require(coveredIds == kept,
-      s"rebuild source covers $coveredIds of $kept kept doc_ids — a " +
-        "partial rebuild would silently drop documents from the index; " +
-        "supply a text source spanning the whole kept set")
-    // duplicate doc_id rows in the SOURCE would pass the distinct-count
-    // coverage check while silently landing duplicate signature rows in
-    // the rebuilt index (an index is one row per doc_id by contract)
-    require(coveredRows == coveredIds,
-      s"rebuild source holds $coveredRows rows for $coveredIds distinct " +
-        "kept doc_ids — duplicate ids would land duplicate signature " +
-        "rows; dedupe the source on the id column first")
-    // size from the standing tree's bytes (same-rows-similar-encoding
-    // approximation, the compactTree sizing rule)
-    val n = math.max(1L,
-      (Fs.dataBytes(concrete) + targetFileBytes - 1) / targetFileBytes).toInt
-    def writeRebuilt(dst: String): Unit =
-      nearDupIndex(covered, col("doc_id"), col("txt"), shingleN, k, rowsPerBand)
-        .repartition(n)
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(dst)
-    if (gen.isDefined) {
-      Fs.publishGeneration(indexPath)(writeRebuilt)
-      retain.foreach(k2 => Fs.pruneGenerations(indexPath, k2))
-    } else Fs.stagedSwap(indexPath)(writeRebuilt)
-    n
-  }
+    Fs.commitFold(indexPath, None, targetFileBytes, retain) { (concrete, n) =>
+      val spark = docs.sparkSession
+      require(Fs.isDirectory(concrete), s"no near-dup index tree at $concrete")
+      // tombstoned ids are dropped from the kept set — a rebuild is also
+      // a physical delete fold, and the coverage guard must not demand
+      // text for documents being deleted
+      val keptIds = standingIndex(spark, concrete).select(col("doc_id"))
+        .distinct().localCheckpoint(true)
+      val kept = keptIds.count()
+      val src = docs.select(id.as("doc_id"), text.as("txt"))
+      val covered = src.join(keptIds, Seq("doc_id"), "left_semi")
+      // one id-only pass for both guards (rows vs distinct ids) — the
+      // text payload stays out of it and nothing corpus-sized is pinned
+      val guardRow = covered.select(col("doc_id"))
+        .agg(count(lit(1)).as("rows"), count_distinct(col("doc_id")).as("ids"))
+        .collect().head
+      val (coveredRows, coveredIds) = (guardRow.getLong(0), guardRow.getLong(1))
+      require(coveredIds == kept,
+        s"rebuild source covers $coveredIds of $kept kept doc_ids — a " +
+          "partial rebuild would silently drop documents from the index; " +
+          "supply a text source spanning the whole kept set")
+      // duplicate doc_id rows in the SOURCE would pass the distinct-count
+      // coverage check while silently landing duplicate signature rows in
+      // the rebuilt index (an index is one row per doc_id by contract)
+      require(coveredRows == coveredIds,
+        s"rebuild source holds $coveredRows rows for $coveredIds distinct " +
+          "kept doc_ids — duplicate ids would land duplicate signature " +
+          "rows; dedupe the source on the id column first")
+      // sized from the standing tree's bytes (same-rows-similar-encoding
+      // approximation, the compactTree sizing rule)
+      Some(dst =>
+        nearDupIndex(covered, col("doc_id"), col("txt"), shingleN, k, rowsPerBand)
+          .repartition(n)
+          .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(dst))
+    }
 
   /** DELETE documents from a standing near-dup index tree — the missing
     * verb of the build/admit/ingest/compact/rebuild lifecycle (takedowns,
     * retention windows, dedup-policy reversals; without it the only
     * removal path is [[rebuildNearDupIndex]]'s full re-shingle). The ids
-    * land as a blind append to the tree's `_tombstones` table —
-    * O(|deleted|) rows written, no signature data touched, invisible to
-    * every recursive data read of the tree (the `_` prefix) — and take
-    * effect at the next probe (the path overload of
-    * [[admitNewDocsWithIndex]] and [[graft.streaming.AdmissionStream]]
-    * anti-join the table, so a new document that matched ONLY deleted
-    * docs admits) until [[compactNearDupIndex]] or
-    * [[rebuildNearDupIndex]] folds them in physically. Replayed deletes
-    * and ids absent from the tree are harmless (set semantics at every
-    * read). `ids` must expose `doc_id`. */
+    * land as a blind append to the tree's tombstone table
+    * ([[Fs.appendTombstones]]) — O(|deleted|) rows written, no signature
+    * data touched, invisible to every recursive data read of the tree
+    * (the `_` prefix) — and take effect at the next probe (the path
+    * overload of [[admitNewDocsWithIndex]] and
+    * [[graft.streaming.AdmissionStream]] mask them, so a new document
+    * that matched ONLY deleted docs admits) until [[compactNearDupIndex]]
+    * or [[rebuildNearDupIndex]] folds them in physically. Replayed
+    * deletes and ids absent from the tree are harmless (set semantics at
+    * every read). `ids` must expose `doc_id`. */
   def deleteFromNearDupIndex(ids: DataFrame, indexPath: String): Unit =
-    ids.select(col("doc_id"))
-      .write.mode("append")
-      .parquet(s"${Fs.currentGeneration(indexPath).getOrElse(indexPath)}/" +
-        Fs.TombstonesSubdir)
+    Fs.appendTombstones(ids, indexPath, "doc_id")
 
-  /** The tree's tombstone table, when one exists. */
-  private def tombstonesOf(spark: org.apache.spark.sql.SparkSession,
-      indexPath: String): Option[DataFrame] = {
-    val p = s"$indexPath/${Fs.TombstonesSubdir}"
-    if (Fs.exists(p)) Some(spark.read.parquet(p).select(col("doc_id")))
-    else None
-  }
-
-  /** The tombstone table resolved ONCE for a whole probe/ingest
-    * SESSION, pinned off its files — deletes are a between-sessions
-    * verb, so the table cannot change under a running session and
-    * re-resolving it per micro-batch is pure fixed cost (filesystem
-    * existence check + parquet footer reads per batch — the q116
-    * drift); the eager localCheckpoint also survives a mid-session
-    * [[Maintenance.compactTree]] swap relocating the table's files. */
-  private[graft] def sessionTombstones(
-      spark: org.apache.spark.sql.SparkSession,
-      indexPath: String): Option[DataFrame] =
-    tombstonesOf(spark, indexPath).map(_.localCheckpoint(true))
-
-  /** Mask tombstoned doc_ids out of an index FRAME read from `indexPath`
-    * — the probe-side half of [[deleteFromNearDupIndex]], shared with
-    * the streaming admission loop. Identity when no tombstones stand. */
-  private[graft] def excludeTombstoned(spark: org.apache.spark.sql.SparkSession,
-      indexPath: String, ix: DataFrame): DataFrame =
-    excludeTombstoned(ix, tombstonesOf(spark, indexPath))
-
-  /** The pre-resolved form: mask `tombstones` (a [[sessionTombstones]]
-    * read) out of `ix`; identity when none stand. */
-  private[graft] def excludeTombstoned(ix: DataFrame,
-      tombstones: Option[DataFrame]): DataFrame =
-    tombstones match {
-      case Some(tb) => ix.join(tb, Seq("doc_id"), "left_anti")
-      case None => ix
-    }
+  /** The signature rows of the concrete index tree at `dir` (nested
+    * batch subdirs included), tombstoned doc_ids masked out. */
+  private def standingIndex(spark: org.apache.spark.sql.SparkSession,
+      dir: String): DataFrame =
+    Fs.masked(spark.read.option("recursiveFileLookup", "true").parquet(dir),
+      Fs.tombstones(spark, dir, "doc_id"), "doc_id", "doc_id")
 
   /** Fold the tombstone table into the tree PHYSICALLY — the near-dup
     * counterpart of [[Similarity.compactIvfFlatIndex]]'s delete fold:
     * the whole tree (seed + batch subdirs) minus deleted doc_ids
-    * rewrites as flat target-sized files via the staged swap, so it is
-    * also a compaction; signatures are parameter-stable under deletion,
-    * so no re-shingle happens (that is [[rebuildNearDupIndex]]'s job,
-    * and only for PARAMETER changes). The `_tombstones` table rides
-    * into `__old` with the swapped-out tree — deletes and data commit
-    * in the same rename. Run between ingest sessions, never
-    * concurrently with one. Returns the rewritten file count. */
+    * rewrites as flat target-sized files through [[Fs.commitFold]], so
+    * it is also a compaction; signatures are parameter-stable under
+    * deletion, so no re-shingle happens (that is [[rebuildNearDupIndex]]'s
+    * job, and only for PARAMETER changes). On a plain root the tombstone
+    * table rides into `__old` with the swapped-out tree — deletes and
+    * data commit in the same rename; a pointer-committed root reads the
+    * CURRENT generation (a recursive read of the root would union every
+    * gen-* dir, resurrecting superseded docs) and publishes the fold as
+    * a new one. Run between ingest sessions, never concurrently with
+    * one. Returns the rewritten file count. */
   def compactNearDupIndex(spark: org.apache.spark.sql.SparkSession,
       indexPath: String, targetFileBytes: Long = 128L << 20,
-      retain: Option[Int] = None): Int = {
-    // POINTER-COMMITTED root: read the CURRENT generation (a recursive
-    // read of the root would union every gen-* dir, resurrecting
-    // superseded docs) including ITS tombstones, and commit the fold as
-    // a NEW generation + pointer flip ([[Fs.publishGeneration]]) — a
-    // directory swap under the root would destroy the generational
-    // layout readers are holding. Plain dirs keep the staged swap.
-    val gen = Fs.currentGeneration(indexPath)
-    val concrete = gen.getOrElse(indexPath)
-    if (gen.isEmpty) Upsert.recoverStagedSwap(indexPath)
-    require(Fs.isDirectory(concrete), s"no near-dup index tree at $concrete")
-    val kept = excludeTombstoned(spark, concrete,
-      spark.read.option("recursiveFileLookup", "true").parquet(concrete))
-    require(!kept.isEmpty,
-      s"compacting $concrete would delete every remaining document — " +
-        "an empty index admits everything; rebuild or reseed instead")
-    val n = math.max(1L,
-      (Fs.dataBytes(concrete) + targetFileBytes - 1) / targetFileBytes).toInt
-    def writeKept(dst: String): Unit =
-      kept.repartition(n)
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(dst)
-    if (gen.isDefined) {
-      Fs.publishGeneration(indexPath)(writeKept)
-      retain.foreach(k => Fs.pruneGenerations(indexPath, k))
-    } else Fs.stagedSwap(indexPath)(writeKept)
-    n
-  }
+      retain: Option[Int] = None): Int =
+    Fs.commitFold(indexPath, None, targetFileBytes, retain) { (concrete, n) =>
+      require(Fs.isDirectory(concrete), s"no near-dup index tree at $concrete")
+      val kept = standingIndex(spark, concrete)
+      require(!kept.isEmpty,
+        s"compacting $concrete would delete every remaining document — " +
+          "an empty index admits everything; rebuild or reseed instead")
+      Some(dst => kept.repartition(n)
+        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(dst))
+    }
 
   /** The distributed probe → survivor → in-batch-pair chain of
     * [[admitCore]] (and so of [[admitPrehashedBounded]]'s past-cap

@@ -2,7 +2,8 @@ package graft.operators
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileContext, FileStatus, FileSystem, FileUtil, Options, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
 /** Filesystem primitives for the artifact lifecycle (staged write-swaps,
   * tree sizing, marker files), on the Hadoop [[FileSystem]] API — so every
@@ -283,6 +284,104 @@ object Fs {
       (gens.filter(_ < curN).sorted.reverse.drop(keep) ++ gens.filter(_ > curN))
         .foreach(n => rmTree(s"$root/$GenPrefix$n"))
     }
+
+  // ---- The index-artifact layout: every verb of the near-dup signature
+  // index (Dedup) and the IVF-flat/PQ indexes (Similarity) and every
+  // session of the loops over them goes through these helpers. An index
+  // root is a plain directory or a pointer-committed root; either way
+  // the data, the tombstone table and any streamed tables live under
+  // its `concrete` directory.
+
+  /** The directory an index root's data lives in: the current
+    * generation of a pointer-committed root, or the root itself (a plain
+    * directory artifact), so every verb accepts either layout. */
+  def concrete(root: String): String = currentGeneration(root).getOrElse(root)
+
+  /** The tombstone table under the concrete index directory `dir`, as
+    * its one `idCol` column (`"*"` for whatever it holds); None when no
+    * delete has landed. Rows may repeat (replayed deletes) — readers use
+    * it with set semantics. */
+  def tombstones(spark: SparkSession, dir: String,
+      idCol: String): Option[DataFrame] = {
+    val p = s"$dir/$TombstonesSubdir"
+    if (exists(p)) Some(spark.read.parquet(p).select(col(idCol))) else None
+  }
+
+  /** `frame` minus its rows whose `frameId` is tombstoned (an anti-join
+    * on the `idCol` column of a [[tombstones]] table); identity when none
+    * stand. */
+  def masked(frame: DataFrame, tombstones: Option[DataFrame],
+      frameId: String, idCol: String): DataFrame =
+    tombstones.fold(frame)(tb =>
+      frame.join(tb, frame(frameId) === tb(idCol), "left_anti"))
+
+  /** The DELETE verb of an index artifact: a blind append of the `idCol`
+    * column of `ids` to the tombstone table of the root's concrete
+    * directory — O(|deleted|) rows, no index data touched. */
+  def appendTombstones(ids: DataFrame, root: String, idCol: String): Unit =
+    ids.select(col(idCol)).write.mode("append")
+      .parquet(s"${concrete(root)}/$TombstonesSubdir")
+
+  /** The one fold commit of an index artifact (compaction, tombstone
+    * fold, rebuild) — a staged swap on a plain root, a new generation on
+    * a pointer root. `fold(concrete, files)` reads the current state from
+    * the concrete directory and returns the writer of the folded table
+    * (None: nothing to fold, nothing commits); `files` is the target file
+    * count, sized from the table's standing bytes. `table` is the
+    * subtable the fold rewrites, or None for the whole tree. The
+    * tombstone table and the `consumed` subdirs are folded in by the
+    * writer, so the commit leaves them behind:
+    *  - plain root: any earlier half-swap is recovered BEFORE the fold
+    *    reads, the table swaps in through [[stagedSwap]], and the left-
+    *    behind subdirs are dropped AFTER the swap (a crash between the
+    *    two leaves tables the next fold or probe re-applies
+    *    idempotently: dedup and anti-join are set semantics);
+    *  - pointer root: the writer fills a fresh generation
+    *    ([[publishGeneration]]), every other entry of a subtable fold
+    *    (centroids, codebooks, hidden state) is copied over verbatim —
+    *    a published generation is never mutated under its readers — and
+    *    `retain` prunes the superseded generations (each fold otherwise
+    *    leaves one full index copy standing).
+    * Returns the file count, 0 when nothing folded. Run between ingest
+    * sessions, never concurrently with one. */
+  def commitFold(root: String, table: Option[String], targetFileBytes: Long,
+      retain: Option[Int], consumed: Set[String] = Set.empty)(
+      fold: (String, Int) => Option[String => Unit]): Int = {
+    val gen = currentGeneration(root)
+    val dir = gen.getOrElse(root)
+    def tableIn(d: String): String = table.fold(d)(t => s"$d/$t")
+    val leftBehind = consumed + TombstonesSubdir
+    if (gen.isEmpty) recoverStagedSwap(tableIn(dir))
+    val files = math.max(1L,
+      (dataBytes(tableIn(dir)) + targetFileBytes - 1) / targetFileBytes).toInt
+    fold(dir, files).fold(0) { write =>
+      if (gen.isEmpty) {
+        stagedSwap(tableIn(dir))(write)
+        leftBehind.foreach(d => rmTree(s"$dir/$d"))
+      } else {
+        publishGeneration(root) { next =>
+          write(tableIn(next))
+          table.foreach { t =>
+            listNames(dir).filterNot(leftBehind + t).foreach { e =>
+              if (!copyTree(s"$dir/$e", s"$next/$e"))
+                throw new java.io.IOException(
+                  s"could not carry $e into generation $next")
+            }
+          }
+        }
+        retain.foreach(pruneGenerations(root, _))
+      }
+      files
+    }
+  }
+
+  /** The tombstone-pressure decision an ingest session makes once at
+    * start (`compactWhenTombstoneRatio`): fold the deletes physically
+    * when the distinct tombstoned ids are more than `theta` of the
+    * standing rows. Deletes are a between-sessions verb, so the ratio
+    * cannot change under a running session. */
+  def overPressure(tombs: Long, dataRows: Long, theta: Double): Boolean =
+    dataRows > 0L && tombs.toDouble / dataRows > theta
 
   private def generationNumbers(root: String): Seq[Long] =
     listNames(root).collect {

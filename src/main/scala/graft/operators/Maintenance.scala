@@ -99,7 +99,7 @@ object Maintenance {
     val bytes = included.map(Fs.dataBytes).sum
     if (included.isEmpty || bytes == 0L) return 0
     val n = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
-    // hidden DIRECTORIES (a pending `_tombstones` table) carry over the
+    // hidden DIRECTORIES (a pending tombstone table) carry over the
     // swap untouched — they are lifecycle state, not foldable data, and
     // dropping them with the old tree would silently un-delete. Hidden
     // FILES (`_SUCCESS` and friends) are write debris: the staged write
@@ -141,10 +141,9 @@ object Maintenance {
         else 1L
       if (!fs.exists(hp)) 0L else fs.listStatus(hp).map(walk).sum
     }
-    def tombstoneRows(p: String): Long = {
-      val t = s"$p/${Fs.TombstonesSubdir}"
-      if (Fs.exists(t)) spark.read.parquet(t).count() else 0L
-    }
+    // either index kind's tombstone table: all of its (one) columns
+    def tombstoneRows(p: String): Long =
+      Fs.tombstones(spark, p, "*").fold(0L)(_.count())
     def batchSubdirs(p: String): Long =
       Fs.listNames(p).count(n => n.startsWith("batch-") &&
         Fs.isDirectory(s"$p/$n")).toLong

@@ -27,7 +27,8 @@ import graft.functions.{VectorFunctions => V}
   * nearest-centroid distance list ([[withCell]], for the argmin and the
   * probe side alike), one probe-and-score join ([[scorePairs]]), one
   * cosine expression ([[cosine]]), one top-k ranking ([[rankTopK]]) and,
-  * for the artifacts, one compaction fold ([[foldArtifact]]).
+  * for the artifacts, the one fold commit of the index layout
+  * ([[Fs.commitFold]]).
   */
 object Similarity {
 
@@ -793,23 +794,12 @@ object Similarity {
     }
   }
 
-  /** Resolve a possibly POINTER-COMMITTED artifact root to its concrete
-    * generation directory ([[Fs.currentGeneration]]); plain directory
-    * artifacts pass through unchanged, so every read / blind-append
-    * verb here accepts either layout. The pointer layout is the
-    * object-store deployment story (see [[Fs]]'s caveat): swap verbs
-    * (compact, rebuild, re-train) should there write a NEW generation
-    * via [[Fs.publishGeneration]] and flip the pointer, instead of
-    * renaming directories under readers. */
-  private def resolveArtifact(path: String): String =
-    Fs.currentGeneration(path).getOrElse(path)
-
   /** The artifact's frozen quantizer, read back: nLists rows — the
     * bounded driver-side half of every probe/append/ingest. Accepts a
     * pointer-committed root or a concrete generation/plain dir. */
   private[graft] def readCentroids(spark: org.apache.spark.sql.SparkSession,
       indexPath: String): Seq[Seq[Double]] = {
-    val p = s"${resolveArtifact(indexPath)}/centroids"
+    val p = s"${Fs.concrete(indexPath)}/centroids"
     // existence-check BEFORE the read: a missing/non-artifact path would
     // otherwise surface as an AnalysisException from the parquet scan,
     // and every caller's own "not an artifact" diagnostic (ProbeStream,
@@ -835,7 +825,7 @@ object Similarity {
     * centroids) is the caller's rebuild/compaction policy — the same
     * lifecycle contract as the near-dup signature index. */
   def appendToIvfFlatIndex(newVecs: DataFrame, indexPath: String): Unit = {
-    val ix = resolveArtifact(indexPath)
+    val ix = Fs.concrete(indexPath)
     assignCells(newVecs, readCentroids(newVecs.sparkSession, ix))
       .write.mode("append").partitionBy("cell")
       .parquet(s"$ix/assignments")
@@ -876,24 +866,21 @@ object Similarity {
     * crashed compaction, or compacting after a replayed append, is
     * idempotent rather than duplicate-baking), minus the tombstoned
     * ids, and commits the union cell-partitioned through
-    * [[foldArtifact]] (a staged swap on a plain root, a new generation
-    * on a pointer root), leaving the streamed table behind. Probe results are identical before and after (pinned by spec);
-    * run it between ingest sessions, not concurrently with one. */
+    * [[Fs.commitFold]] (a staged swap on a plain root, a new generation
+    * on a pointer root), leaving the streamed table behind. Probe
+    * results are identical before and after (pinned by spec); run it
+    * between ingest sessions, not concurrently with one. */
   def compactIvfFlatIndex(spark: org.apache.spark.sql.SparkSession,
       indexPath: String, targetFileBytes: Long = 128L << 20,
       streamedSubdir: String = "assignments_stream",
       recursiveStreamed: Boolean = false,
-      retain: Option[Int] = None): Unit =
-    foldArtifact(indexPath, "assignments", Set(streamedSubdir, Fs.TombstonesSubdir),
-        targetFileBytes, retain, _ =>
-          s"compacting $indexPath would delete every remaining vector — an " +
-            "empty assignments table cannot be probed; rebuild the index " +
-            "instead of compacting it away") { concrete =>
+      retain: Option[Int] = None): Unit = {
+    Fs.commitFold(indexPath, Some("assignments"), targetFileBytes, retain,
+        consumed = Set(streamedSubdir)) { (concrete, n) =>
       val streamedPath = s"$concrete/$streamedSubdir"
-      val tombPath = s"$concrete/${Fs.TombstonesSubdir}"
       val hasStreamed = Fs.exists(streamedPath)
-      val hasTomb = Fs.exists(tombPath)
-      if (!hasStreamed && !hasTomb) None
+      val tombs = Fs.tombstones(spark, concrete, "vec_id")
+      if (!hasStreamed && tombs.isEmpty) None
       else {
         val cols = Seq("vec_id", "embedding", "c_norm", "cell").map(col)
         // the file-sink table (cell-partitioned) reads plain; the admission
@@ -908,76 +895,28 @@ object Similarity {
           if (hasStreamed)
             base.unionByName(streamedReader.parquet(streamedPath).select(cols: _*))
           else base
-        // the tombstone fold is PHYSICAL: after this swap the deleted rows
-        // are gone from storage, not just masked at probe time
-        Some(
-          if (hasTomb)
-            union.dropDuplicates("vec_id")
-              .join(spark.read.parquet(tombPath).select(col("vec_id")),
-                Seq("vec_id"), "left_anti")
-          else union.dropDuplicates("vec_id"))
+        // the tombstone fold is PHYSICAL: after the commit the deleted
+        // rows are gone from storage, not just masked at probe time
+        cellFold(Fs.masked(union.dropDuplicates("vec_id"), tombs, "vec_id",
+            "vec_id"), n,
+          s"compacting $indexPath would delete every remaining vector — an " +
+            "empty assignments table cannot be probed; rebuild the index " +
+            "instead of compacting it away")
       }
     }
+    ()
+  }
 
-  /** The compaction fold both artifact layouts share. `kept` builds the
-    * folded `table` from the CONCRETE directory (None: nothing to fold,
-    * return early); the fold refuses an empty result (`emptyMsg`), sizes
-    * the file count from the current table, repartitions BY cell (each
-    * cell's rows land in one task, so the layout is ~one file per
-    * (cell, targetFileBytes) — not n files per cell from a round-robin
-    * split) and commits:
-    *  - POINTER-COMMITTED root: the fold reads FROM the current
-    *    generation (a read of the root itself would miss gen-local
-    *    tombstones and streamed rows) and lands in a FRESH generation via
-    *    [[Fs.publishGeneration]]; every other subtable (centroids,
-    *    codebooks, hidden state) carries over verbatim and the `folded`
-    *    subdirs are left behind — the superseded generation keeps its
-    *    copies untouched (immutable history; swapping directories inside
-    *    a published generation would mutate it under readers). Then
-    *    `retain`: each fold otherwise leaves the superseded generation
-    *    (one full index copy) standing until someone prunes — at a
-    *    compact-per-N-batches cadence that is one index copy of growth
-    *    PER FOLD, so the ingest loops pass the policy here instead of
-    *    relying on an out-of-band sweep.
-    *  - plain root: the in-place staged swap ([[Maintenance.compactTree]]'s
-    *    `__staged`/`__old` discipline, with [[Upsert.recoverStagedSwap]]
-    *    run first to finish any earlier half-swap), then the `folded`
-    *    subdirs are dropped — AFTER the swap: a crash between the swap
-    *    and these deletes leaves tables whose rows the next compaction
-    *    (or any probe) re-applies idempotently, since dedup and anti-join
-    *    are set-semantics. */
-  private def foldArtifact(indexPath: String, table: String, folded: Set[String],
-      targetFileBytes: Long, retain: Option[Int], emptyMsg: String => String)(
-      kept: String => Option[DataFrame]): Unit = {
-    val gen = Fs.currentGeneration(indexPath)
-    val concrete = gen.getOrElse(indexPath)
-    val tablePath = s"$concrete/$table"
-    if (gen.isEmpty) Upsert.recoverStagedSwap(tablePath)
-    kept(concrete).foreach { k =>
-      require(!k.isEmpty, emptyMsg(concrete))
-      val bytes = math.max(1L, Fs.dataBytes(tablePath))
-      val n = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
-      def writeKept(dst: String): Unit =
-        k.repartition(n, col("cell"))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .partitionBy("cell").parquet(dst)
-      gen match {
-        case Some(_) =>
-          Fs.publishGeneration(indexPath) { next =>
-            writeKept(s"$next/$table")
-            Fs.listNames(concrete).filterNot((folded + table).contains)
-              .foreach { e =>
-                if (!Fs.copyTree(s"$concrete/$e", s"$next/$e"))
-                  throw new java.io.IOException(
-                    s"could not carry $e into generation $next")
-              }
-          }
-          retain.foreach(r => Fs.pruneGenerations(indexPath, r))
-        case None =>
-          Fs.stagedSwap(tablePath)(writeKept)
-          folded.foreach(d => Fs.rmTree(s"$concrete/$d"))
-      }
-    }
+  /** The folded table's writer for both ANN compactions: refuses an
+    * empty result, and repartitions BY cell, so each cell's rows land in
+    * one task and the layout is ~one file per (cell, target size) — not
+    * `files` files per cell from a round-robin split. */
+  private def cellFold(kept: DataFrame, files: Int,
+      emptyMsg: => String): Option[String => Unit] = {
+    require(!kept.isEmpty, emptyMsg)
+    Some(dst => kept.repartition(files, col("cell"))
+      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+      .partitionBy("cell").parquet(dst))
   }
 
   /** DELETE vectors from a standing ANN index artifact — the missing
@@ -985,48 +924,37 @@ object Similarity {
     * dedup-driven removals, retention windows; without it the only
     * removal path is a full rebuild). Works against BOTH artifact
     * layouts ([[writeIvfFlatIndex]] and [[writeIvfPqIndex]]): the ids
-    * land as a blind append to the artifact's `_tombstones` table —
-    * O(|deleted|) rows written, the index data untouched — and take
-    * effect at the next probe ([[ivfFlatProbe]]/[[ivfPqProbe]]
-    * anti-join the table) until a compaction
+    * land as a blind append to the artifact's tombstone table
+    * ([[Fs.appendTombstones]]) — O(|deleted|) rows written, the index
+    * data untouched — and take effect at the next probe
+    * ([[ivfFlatProbe]]/[[ivfPqProbe]] mask them) until a compaction
     * ([[compactIvfFlatIndex]]/[[compactIvfPqIndex]]) folds them in
     * physically. Replayed deletes, overlapping batches and ids absent
     * from the index are all harmless: every reader applies the table
     * with set semantics. `ids` must expose `vec_id`. */
   def deleteFromAnnIndex(ids: DataFrame, indexPath: String): Unit =
-    ids.select(col("vec_id"))
-      .write.mode("append")
-      .parquet(s"${resolveArtifact(indexPath)}/${Fs.TombstonesSubdir}")
-
-  /** The artifact's tombstone table, when one exists — the anti-join
-    * side every probe applies. */
-  private[graft] def tombstonesOf(spark: org.apache.spark.sql.SparkSession,
-      indexPath: String): Option[DataFrame] = {
-    val p = s"$indexPath/${Fs.TombstonesSubdir}"
-    if (Fs.exists(p)) Some(spark.read.parquet(p).select(col("vec_id")))
-    else None
-  }
+    Fs.appendTombstones(ids, indexPath, "vec_id")
 
   /** Fold the tombstone table of a [[writeIvfPqIndex]] artifact into its
-    * codes table physically ([[compactIvfFlatIndex]]'s [[foldArtifact]]
-    * for the compressed layout): the cell-partitioned codes minus deleted
-    * vec_ids, tombstones left behind. No-op without
+    * codes table physically ([[compactIvfFlatIndex]]'s
+    * [[Fs.commitFold]] for the compressed layout): the cell-partitioned
+    * codes minus deleted vec_ids, tombstones left behind. No-op without
     * tombstones (the PQ artifact has no streaming ingest to fold). */
   def compactIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
       indexPath: String, targetFileBytes: Long = 128L << 20,
-      retain: Option[Int] = None): Unit =
-    foldArtifact(indexPath, "codes", Set(Fs.TombstonesSubdir), targetFileBytes,
-        retain, concrete =>
-          s"compacting $concrete would delete every remaining vector — an " +
-            "empty codes table cannot be probed; rebuild the index instead") {
-      concrete =>
-        val tombPath = s"$concrete/${Fs.TombstonesSubdir}"
-        if (!Fs.exists(tombPath)) None
-        else Some(spark.read.parquet(s"$concrete/codes")
-          .select(col("vec_id"), col("codes"), col("recon_norm"), col("cell"))
-          .join(spark.read.parquet(tombPath).select(col("vec_id")),
-            Seq("vec_id"), "left_anti"))
+      retain: Option[Int] = None): Unit = {
+    Fs.commitFold(indexPath, Some("codes"), targetFileBytes, retain) {
+      (concrete, n) =>
+        Fs.tombstones(spark, concrete, "vec_id").flatMap { tb =>
+          cellFold(Fs.masked(spark.read.parquet(s"$concrete/codes")
+              .select(col("vec_id"), col("codes"), col("recon_norm"), col("cell")),
+              Some(tb), "vec_id", "vec_id"), n,
+            s"compacting $concrete would delete every remaining vector — an " +
+              "empty codes table cannot be probed; rebuild the index instead")
+        }
     }
+    ()
+  }
 
   /** The MATERIALIZABLE IVF-PQ index — [[writeIvfFlatIndex]]'s artifact
     * lifecycle applied to the COMPRESSED form: the corpus lands under
@@ -1137,7 +1065,7 @@ object Similarity {
       nProbe: Int = 2,
       querySideCap: Int = ProbeQuerySideCap): DataFrame = {
     val spark = queries.sparkSession
-    val indexPath = resolveArtifact(indexPath0)
+    val indexPath = Fs.concrete(indexPath0)
     val centroids = readCentroids(spark, indexPath)
     val codebooks = readCodebooks(spark, indexPath)
     // queries×nProbe rows + the probed-cell set, ONE bounded job — see
@@ -1151,10 +1079,8 @@ object Similarity {
         .filter(col("cell").isin(probedCells: _*))
     // deleted-but-not-yet-compacted vectors are masked here; the
     // anti-join's left side is already pruned to the probed cells
-    val c = tombstonesOf(spark, indexPath) match {
-      case Some(tb) => c0.join(tb, Seq("vec_id"), "left_anti")
-      case None => c0
-    }
+    val c = Fs.masked(c0, Fs.tombstones(spark, indexPath, "vec_id"), "vec_id",
+      "vec_id")
     rankTopK(adcScored(c, q, Some("cell"), codebooks), k)
       .withColumnRenamed("cosine", "adc")
   }
@@ -1169,9 +1095,9 @@ object Similarity {
   def ivfFlatProbe(queries: DataFrame, indexPath0: String, k: Int,
       nProbe: Int = 2): DataFrame = {
     val spark = queries.sparkSession
-    val indexPath = resolveArtifact(indexPath0)
+    val indexPath = Fs.concrete(indexPath0)
     ivfFlatProbeResolved(queries, indexPath, k, nProbe,
-      readCentroids(spark, indexPath), tombstonesOf(spark, indexPath))
+      readCentroids(spark, indexPath), Fs.tombstones(spark, indexPath, "vec_id"))
   }
 
   /** [[ivfFlatProbe]] with the SESSION-CONSTANT artifact state resolved
@@ -1182,7 +1108,7 @@ object Similarity {
     * between-sessions verb), so the loop resolves them ONCE and every
     * micro-batch skips one centroid read+collect job and the per-batch
     * tombstone footer re-read. `indexPath` must already be the concrete
-    * generation ([[resolveArtifact]]); streamed-append visibility stays
+    * generation ([[Fs.concrete]]); streamed-append visibility stays
     * per batch (the existence check below is a driver FS call, no job). */
   private[graft] def ivfFlatProbeResolved(queries: DataFrame,
       indexPath: String, k: Int, nProbe: Int,
@@ -1213,11 +1139,7 @@ object Similarity {
       else cellsOf(s"$indexPath/assignments")
     // deleted-but-not-yet-compacted vectors (batch AND streamed rows)
     // are masked here; the left side is already pruned to probed cells
-    val c = tombstones match {
-      case Some(tb) =>
-        c0.join(tb, c0("neighbor_id") === tb("vec_id"), "left_anti")
-      case None => c0
-    }
+    val c = Fs.masked(c0, tombstones, "neighbor_id", "vec_id")
     rankTopK(scorePairs(c, q, Some("cell"), exactCosine)
       .dropDuplicates("query_id", "neighbor_id"), k)
   }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
-import graft.operators.Dedup
+import graft.operators.{Dedup, Fs}
 
 /** STREAMING ADMISSION — the continuous form of the incremental-ingest
   * dedup ([[Dedup.admitNewDocsWithIndex]]): a document stream lands in
@@ -135,8 +135,9 @@ object AdmissionStream {
     val paths = fs.listStatus(base)
       .filterNot { st =>
         val n = st.getPath.getName
-        // hidden entries (`_tombstones`, markers) must never be listed as
-        // data roots — an EXPLICIT path bypasses Spark's hidden-file rule
+        // hidden entries (the tombstone table, markers) must never be
+        // listed as data roots — an EXPLICIT path bypasses Spark's
+        // hidden-file rule
         n.startsWith("_") || n.startsWith(".") ||
         (st.isDirectory && n.startsWith("batch-") &&
           scala.util.Try(n.stripPrefix("batch-").toLong).toOption
@@ -151,11 +152,10 @@ object AdmissionStream {
     indexSchema.foreach(reader.schema)
     // deleted-but-not-yet-compacted docs are masked from the probed set,
     // so a streamed document that matches ONLY deleted docs admits; the
-    // table was resolved ONCE per session (Dedup.sessionTombstones —
-    // deletes are a between-sessions verb)
-    Dedup.excludeTombstoned(
-      reader.option("recursiveFileLookup", "true").parquet(paths: _*),
-      tombstones)
+    // table was resolved ONCE per session (deletes are a between-sessions
+    // verb)
+    Fs.masked(reader.option("recursiveFileLookup", "true").parquet(paths: _*),
+      tombstones, "doc_id", "doc_id")
   }
 
   /** Drop `batch-<id>` subdirs with id STRICTLY AFTER the run's last
@@ -259,8 +259,9 @@ object AdmissionStream {
     * [[graft.operators.Upsert.mergeParquet]]'s applied markers do this);
     * a replayed batch re-invokes it with identical rows and the same id.
     *
-    * `compactWhenTombstoneRatio`: the tombstone-PRESSURE policy —
-    * deletes accumulate in `_tombstones` between sessions and every
+    * `compactWhenTombstoneRatio`: the tombstone-PRESSURE policy
+    * ([[Fs.overPressure]]) — deletes accumulate in the index's tombstone
+    * table between sessions and every
     * probe pays the anti-join; when the deleted fraction of the
     * standing tree crosses this threshold, the session folds them
     * physically ONCE at start ([[Dedup.compactNearDupIndex]] —
@@ -298,14 +299,9 @@ object AdmissionStream {
     // (Pointer-root discipline unchanged: resolve the CURRENT
     // generation first — tombstones live inside it, and a root-level
     // read would union every retained superseded generation.)
-    val pre = graft.operators.Fs.currentGeneration(indexPath)
-      .getOrElse(indexPath)
-    val preTombPath = s"$pre/${graft.operators.Fs.TombstonesSubdir}"
-    val preTombs: Option[DataFrame] =
-      if (graft.operators.Fs.exists(preTombPath))
-        Some(spark.read.parquet(preTombPath).select(col("doc_id"))
-          .distinct().localCheckpoint(true))
-      else None
+    val pre = Fs.concrete(indexPath)
+    val preTombs = Fs.tombstones(spark, pre, "doc_id")
+      .map(_.distinct().localCheckpoint(true))
     val preFrame = scala.util.Try(
         spark.read.option("recursiveFileLookup", "true").parquet(pre))
       .toOption
@@ -322,18 +318,11 @@ object AdmissionStream {
     // tombstone-pressure fold (deletes are a between-sessions verb, so
     // the ratio is checked once at session start): a fired fold removes
     // the tombstone table WITH the deleted rows, so the session mask
-    // below is None
-    var folded = false
-    compactWhenTombstoneRatio.foreach { theta =>
-      preTombs.foreach { tb =>
-        // count off the pinned distinct frame — no table re-read
-        val tombs = tb.count()
-        if (standingRows > 0L && tombs.toDouble / standingRows > theta) {
-          Dedup.compactNearDupIndex(spark, indexPath, retain = Some(1))
-          folded = true
-        }
-      }
-    }
+    // below is None; the tombstones are counted off the pinned distinct
+    // frame — no table re-read
+    val folded = compactWhenTombstoneRatio.exists(theta =>
+      preTombs.exists(tb => Fs.overPressure(tb.count(), standingRows, theta)))
+    if (folded) Dedup.compactNearDupIndex(spark, indexPath, retain = Some(1))
     val landingSchema = StateFold.landingSchema(spark, landingDir,
       schemaFallback, defaultLandingSchema)
     // the concrete tree this SESSION works under, resolved AFTER the
@@ -341,8 +330,7 @@ object AdmissionStream {
     // roots): probes read it, batch fold-backs blind-append into it
     // (the pointer protocol's allowed mutation — same discipline as
     // SemanticAdmission's stream/ subdirs)
-    val concrete = graft.operators.Fs.currentGeneration(indexPath)
-      .getOrElse(indexPath)
+    val concrete = Fs.concrete(indexPath)
     // the mid-stream fold stage-swaps the tree IN PLACE — on a pointer
     // root that would mutate a published (immutable) generation under
     // readers; between-sessions compaction (compactNearDupIndex, or the

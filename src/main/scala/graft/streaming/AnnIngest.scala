@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{ArrayType, FloatType, LongType, StructField, StructType}
 
-import graft.operators.Similarity
+import graft.operators.{Fs, Similarity}
 
 /** STREAMING ANN INGEST — the continuous form of
   * [[Similarity.appendToIvfFlatIndex]], completing the index-lifecycle
@@ -76,19 +76,15 @@ object AnnIngest {
       transform: Option[org.apache.spark.sql.DataFrame =>
         org.apache.spark.sql.DataFrame] = None): Unit = {
     compactWhenTombstoneRatio.foreach { theta =>
-      val concrete = graft.operators.Fs.currentGeneration(indexPath)
-        .getOrElse(indexPath)
-      val tp = s"$concrete/${graft.operators.Fs.TombstonesSubdir}"
-      if (graft.operators.Fs.exists(tp)) {
+      val concrete = Fs.concrete(indexPath)
+      Fs.tombstones(spark, concrete, "vec_id").foreach { tb =>
         // ONE aggregate job carries both pressure operands (the
         // AdmissionStream prologue discipline): the deduped tombstone
         // count (numerator) and the standing assignment count
         // (denominator) ride one tagged union — two table counts were
         // two driver-latency jobs for one session-start decision
         import org.apache.spark.sql.functions.{count, lit, when}
-        val tombsSide = spark.read.parquet(tp)
-          .select(col("vec_id")).distinct()
-          .select(lit(true).as("is_tomb"))
+        val tombsSide = tb.distinct().select(lit(true).as("is_tomb"))
         val dataSide = scala.util.Try(
             spark.read.parquet(s"$concrete/assignments")
               .select(lit(false).as("is_tomb")))
@@ -97,12 +93,8 @@ object AnnIngest {
           .agg(count(when(col("is_tomb"), lit(1))).as("tombs"),
             count(when(!col("is_tomb"), lit(1))).as("data"))
           .head()
-        val (tombs, data) = (r.getLong(0), r.getLong(1))
-        if (data > 0L && tombs.toDouble / data > theta) {
-          Similarity.compactIvfFlatIndex(spark, indexPath,
-            retain = Some(1))
-          ()
-        }
+        if (Fs.overPressure(r.getLong(0), r.getLong(1), theta))
+          Similarity.compactIvfFlatIndex(spark, indexPath, retain = Some(1))
       }
     }
     // the concrete generation this SESSION extends, resolved once AFTER
@@ -112,8 +104,7 @@ object AnnIngest {
     // on a pointer root would be silently invisible to every reader
     // (blind appends into the current generation are the pointer
     // protocol's allowed mutation, the SemanticAdmission discipline)
-    val concrete = graft.operators.Fs.currentGeneration(indexPath)
-      .getOrElse(indexPath)
+    val concrete = Fs.concrete(indexPath)
     val centroids = Similarity.readCentroids(spark, indexPath)
     require(centroids.nonEmpty,
       s"no centroid table under $indexPath — not a writeIvfFlatIndex artifact")

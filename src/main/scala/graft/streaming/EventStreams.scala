@@ -99,7 +99,9 @@ object EventStreams {
     val f = new java.io.File(path)
     val dir =
       if (f.isFile) {
-        val d = scratchDir("graft_stream_")
+        // standing: the harnesses remove it eagerly after their run, the
+        // shutdown hook whatever a direct caller leaves
+        val d = standingScratchDir("graft_stream_")
         // hard-link from the shm-staged copy (one disk→shm copy per
         // fixture per session, not per query per pass; superseded
         // versions of a mutated fixture are evicted — see stagedCopy)

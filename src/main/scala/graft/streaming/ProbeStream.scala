@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{SaveMode, SparkSession}
 import org.apache.spark.sql.types.StructType
 
-import graft.operators.Similarity
+import graft.operators.{Fs, Similarity}
 
 /** STREAMING ANN PROBE — the serving side of the index lifecycle, and
   * the missing half of [[AnnIngest]]'s symmetry: query vectors land in
@@ -53,12 +53,11 @@ object ProbeStream {
     // with them instead of re-reading centroid parquet + tombstone
     // footers per batch. Streamed-append visibility stays per batch
     // (ivfFlatProbeResolved's existence check is a driver FS call).
-    val concrete = graft.operators.Fs.currentGeneration(indexPath)
-      .getOrElse(indexPath)
+    val concrete = Fs.concrete(indexPath)
     val centroids = Similarity.readCentroids(spark, concrete)
     require(centroids.nonEmpty,
       s"no centroid table under $indexPath — not a writeIvfFlatIndex artifact")
-    val sessionTombstones = Similarity.tombstonesOf(spark, concrete)
+    val sessionTombstones = Fs.tombstones(spark, concrete, "vec_id")
       .map(_.localCheckpoint(true))
     StateFold.runBounded(StateFold.landing(spark, landingDir,
         StateFold.landingSchema(spark, landingDir, schemaFallback,

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, FloatType, LongType, StructField, StructType}
 
-import graft.operators.{Dedup, Similarity}
+import graft.operators.{Dedup, Fs, Similarity}
 
 /** STREAMING SEMANTIC ADMISSION — [[AdmissionStream]]'s continuous-ingest
   * loop moved into embedding space, composed with the ANN index artifact:
@@ -119,29 +119,17 @@ object SemanticAdmission {
     // the CURRENT generation (deleteFromAnnIndex resolves before its
     // blind append) — probe there, not at the root, or the fold
     // silently never fires on pointer roots (the AnnIngest discipline).
-    val pre = graft.operators.Fs.currentGeneration(indexPath)
-      .getOrElse(indexPath)
-    val preTombPath = s"$pre/${graft.operators.Fs.TombstonesSubdir}"
-    val preTombs: Option[DataFrame] =
-      if (graft.operators.Fs.exists(preTombPath))
-        Some(spark.read.parquet(preTombPath).select(col("vec_id"))
-          .distinct().localCheckpoint(true))
-      else None
+    val pre = Fs.concrete(indexPath)
+    val preTombs = Fs.tombstones(spark, pre, "vec_id")
+      .map(_.distinct().localCheckpoint(true))
     // a fired fold removes the tombstone table with the deleted rows,
-    // so the seed mask below is None
-    var folded = false
-    compactWhenTombstoneRatio.foreach { theta =>
-      preTombs.foreach { tb =>
-        val tombs = tb.count() // off the pinned distinct — no re-read
-        val data = scala.util.Try(
-          spark.read.parquet(s"$pre/assignments").count())
-          .getOrElse(0L)
-        if (data > 0L && tombs.toDouble / data > theta) {
-          compactStream(spark, indexPath)
-          folded = true
-        }
-      }
-    }
+    // so the seed mask below is None (tombstones counted off the pinned
+    // distinct — no re-read)
+    val folded = compactWhenTombstoneRatio.exists(theta =>
+      preTombs.exists(tb => Fs.overPressure(tb.count(),
+        scala.util.Try(spark.read.parquet(s"$pre/assignments").count())
+          .getOrElse(0L), theta)))
+    if (folded) compactStream(spark, indexPath)
     val landingSchema = StateFold.landingSchema(spark, landingDir,
       schemaFallback, defaultLandingSchema)
     // the concrete generation this SESSION works under, resolved once
@@ -150,8 +138,7 @@ object SemanticAdmission {
     // subdirs land inside it — blind appends into the current
     // generation are the pointer protocol's allowed mutation, and
     // [[compactStream]] folds `stream/` from the resolved generation too
-    val concrete = graft.operators.Fs.currentGeneration(indexPath)
-      .getOrElse(indexPath)
+    val concrete = Fs.concrete(indexPath)
     // the frozen quantizer: read ONCE — the loop assigns every batch
     // under the artifact's centroids, never re-derives them
     // (readCentroids resolves pointer roots itself)
@@ -161,12 +148,9 @@ object SemanticAdmission {
     // vector that matched ONLY deleted vectors admits; the pinned
     // pre-fold read — deletes are a between-sessions verb, like the
     // centroids
-    val seedAsg0 = spark.read.parquet(s"$concrete/assignments")
-      .select(col("cell"), col("vec_id"), col("embedding"), col("c_norm"))
-    val seedAsg = (if (folded) None else preTombs) match {
-      case Some(tb) => seedAsg0.join(tb, Seq("vec_id"), "left_anti")
-      case None => seedAsg0
-    }
+    val seedAsg = Fs.masked(spark.read.parquet(s"$concrete/assignments")
+        .select(col("cell"), col("vec_id"), col("embedding"), col("c_norm")),
+      if (folded) None else preTombs, "vec_id", "vec_id")
     // the highest batch id this run processed feeds the stale-generation
     // sweep below
     val lastBatchId = StateFold.runBounded(StateFold.landing(spark,

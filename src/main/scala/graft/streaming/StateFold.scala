@@ -281,11 +281,12 @@ object StateFold {
 
   /** Run the bounded stream `source` to completion through `batch`
     * (a `foreachBatch` body) under `checkpointDir` — or, when none is
-    * given, a scratch checkpoint that is deleted afterwards (a
-    * caller-supplied durable checkpoint is KEPT: it is the
-    * cross-session exactly-once state). `atEnd` runs after the query
-    * stops, also when it failed — a half-run session still flushes what
-    * it folded. Returns the highest batch id processed (-1 for none). */
+    * given, a scratch checkpoint that is deleted afterwards, also when
+    * the stream failed (a caller-supplied durable checkpoint is KEPT: it
+    * is the cross-session exactly-once state). `atEnd` runs after the
+    * query stops, also when it failed — a half-run session still
+    * flushes what it folded. Returns the highest batch id processed (-1
+    * for none). */
   private[streaming] def runBounded(source: DataFrame,
       checkpointDir: Option[String])(batch: (DataFrame, Long) => Unit,
       atEnd: () => Unit = () => ()): Long = {
@@ -293,15 +294,16 @@ object StateFold {
       .getOrElse(EventStreams.scratchDir("graft_ckpt_"))
     // foreachBatch runs driver-side, so the mutation is safe
     var lastBatchId = -1L
-    val q = source.writeStream
-      .option("checkpointLocation", ckpt.toString)
-      .foreachBatch { (b: DataFrame, batchId: Long) =>
-        lastBatchId = math.max(lastBatchId, batchId)
-        batch(b, batchId)
-      }
-      .start()
-    try q.processAllAvailable() finally { q.stop(); atEnd() }
-    if (checkpointDir.isEmpty) Maintenance.rmTree(ckpt.toFile)
+    try {
+      val q = source.writeStream
+        .option("checkpointLocation", ckpt.toString)
+        .foreachBatch { (b: DataFrame, batchId: Long) =>
+          lastBatchId = math.max(lastBatchId, batchId)
+          batch(b, batchId)
+        }
+        .start()
+      try q.processAllAvailable() finally { q.stop(); atEnd() }
+    } finally if (checkpointDir.isEmpty) Maintenance.rmTree(ckpt.toFile)
     lastBatchId
   }
 

@@ -501,8 +501,11 @@ class AdmissionStreamSpec extends SparkSpecBase {
     }
   }
 
-  test("a two-file admission run with a board observer against a " +
-      "non-empty index takes a pinned number of Spark jobs") {
+  /** Spark jobs of a two-file admission run (one file per trigger) with
+    * a board observer against a seeded index — with a fifth of the seed
+    * tombstoned and the pressure knob set below the ratio when
+    * `tombstoned`. */
+  private def boardRunJobs(tombstoned: Boolean): Int = {
     val docs = graft.sources.Tables.documents(spark, "/root/testdata/sf0.001")
     val isNew = substring(md5(col("doc_id").cast("string")), 1, 4) >= lit("cccc")
     val splitA = pmod(col("doc_id"), lit(2)) === 0
@@ -523,27 +526,47 @@ class AdmissionStreamSpec extends SparkSpecBase {
       Dedup.nearDupIndex(docs.filter(!isNew), col("doc_id"), col("text"),
           shingleN = 3, k = 8, rowsPerBand = 2)
         .write.parquet(s"$indexPath/seed")
+      if (tombstoned)
+        Dedup.deleteFromNearDupIndex(docs.filter(!isNew && col("doc_id") % 5 === 2)
+          .select(col("doc_id")), indexPath)
       val board = graft.streaming.TopNStream.boardFold(spark,
         root.resolve("board").toString, 5, "n_chars")
-      val jobs = jobsOf {
+      jobsOf {
         AdmissionStream.runAdmission(spark, landing.toString, indexPath,
           root.resolve("out").toString, shingleN = 3, k = 8, rowsPerBand = 2,
           threshold = 0.4, maxFilesPerTrigger = Some(1),
+          compactWhenTombstoneRatio = if (tombstoned) Some(0.9) else None,
           onBatchAdmitted = Some(board))
         ()
       }
-      // the session prologue — the index's schema inference, its
-      // parameter aggregate (two jobs under AQE) and the landing-schema
-      // probe: four — then six per trigger: the batch collect (the spread
-      // shuffle and the take), the index collect, the two writes and the
-      // board's one job; one trigger here also has a band-sharing
-      // candidate that none of the id's band-sharing rows match, so the
-      // id's other rows are collected too (one more job); the out tree is
-      // read under the schema it was written in. The parent commit of
-      // this pin measured 37 when run alone (its concurrent writes ran on
-      // pooled threads, which this count sees only when the pool is
-      // fresh).
-      jobs shouldBe 17
     } finally graft.operators.Maintenance.rmTree(root.toFile)
+  }
+
+  test("a two-file admission run with a board observer against a " +
+      "non-empty index takes a pinned number of Spark jobs") {
+    val jobs = boardRunJobs(tombstoned = false)
+    // the session prologue — the index's schema inference, its
+    // parameter aggregate (two jobs under AQE) and the landing-schema
+    // probe: four — then six per trigger: the batch collect (the spread
+    // shuffle and the take), the index collect, the two writes and the
+    // board's one job; one trigger here also has a band-sharing
+    // candidate that none of the id's band-sharing rows match, so the
+    // id's other rows are collected too (one more job); the out tree is
+    // read under the schema it was written in. The parent commit of
+    // this pin measured 37 when run alone (its concurrent writes ran on
+    // pooled threads, which this count sees only when the pool is
+    // fresh).
+    jobs shouldBe 17
+  }
+
+  test("the same run with a tombstone table standing and the pressure " +
+      "knob below its ratio takes a pinned number of Spark jobs") {
+    // eight more than the run above: the prologue reads the tombstone
+    // table (its schema inference), pins its distinct ids (a shuffle
+    // and the pin) and counts them for the pressure decision (two jobs
+    // under AQE); each index collect then broadcasts the pinned mask,
+    // one job per collect (three here: one per trigger and the extra
+    // collect). Measured equal at the parent commit.
+    boardRunJobs(tombstoned = true) shouldBe 25
   }
 }

@@ -410,50 +410,62 @@ class AnnIngestSpec extends SparkSpecBase {
       (0 until n).map(i => (off + i, Seq.fill(8)(base + rnd.nextFloat() * 0.01f)))
     val standing = vecDF(cluster(1f, 30, 0L) ++ cluster(-1f, 30, 100L))
     val queries = vecDF(Seq((900L, Seq.fill(8)(1.002f))))
-    val root = Files.createTempDirectory("graft_annin_theta_")
-    root.toFile.deleteOnExit()
-    val ix = root.resolve("ix").toString
-    Similarity.writeIvfFlatIndex(standing, nLists = 4, ix)
-    // a prior session's streamed rows + a 25% takedown load
-    val landing0 = root.resolve("landing0"); Files.createDirectory(landing0)
-    def land(dir: java.nio.file.Path, vs: Seq[(Long, Seq[Float])],
-        name: String): Unit = {
-      val stage = root.resolve(s"stage_$name")
-      vecDF(vs).coalesce(1).write.mode("overwrite").parquet(stage.toString)
-      val part = stage.toFile.listFiles()
-        .filter(f => f.isFile && f.getName.endsWith(".parquet")).head
-      Files.move(part.toPath, dir.resolve(name))
-      ()
-    }
-    land(landing0, cluster(1f, 6, 300L), "s0.parquet")
-    AnnIngest.runIngest(spark, landing0.toString, ix)
-    Similarity.deleteFromAnnIndex(
-      standing.filter(col("vec_id") % 4 === 0).select(col("vec_id")), ix)
-    val masked = Similarity.ivfFlatProbe(queries, ix, 5, nProbe = 2)
-      .orderBy("query_id", "rnk").collect().toSeq
-    // below θ: no fold — the streamed sink log still stands, so a
-    // scratch re-session is refused (the silent-skip guard)
-    val landing1 = root.resolve("landing1"); Files.createDirectory(landing1)
-    land(landing1, cluster(-1f, 4, 500L), "s1.parquet")
-    an[IllegalArgumentException] should be thrownBy
+    // a plain root, and a POINTER-COMMITTED one: there the tombstones,
+    // the streamed table and its sink log live inside the current
+    // generation, and the fired fold publishes the next one
+    for (pointer <- Seq(false, true)) {
+      val root = Files.createTempDirectory("graft_annin_theta_")
+      root.toFile.deleteOnExit()
+      val ix = root.resolve("ix").toString
+      if (pointer)
+        graft.operators.Fs.publishGeneration(ix)(gen =>
+          Similarity.writeIvfFlatIndex(standing, nLists = 4, gen))
+      else Similarity.writeIvfFlatIndex(standing, nLists = 4, ix)
+      // a prior session's streamed rows + a 25% takedown load
+      val landing0 = root.resolve("landing0"); Files.createDirectory(landing0)
+      def land(dir: java.nio.file.Path, vs: Seq[(Long, Seq[Float])],
+          name: String): Unit = {
+        val stage = root.resolve(s"stage_$name")
+        vecDF(vs).coalesce(1).write.mode("overwrite").parquet(stage.toString)
+        val part = stage.toFile.listFiles()
+          .filter(f => f.isFile && f.getName.endsWith(".parquet")).head
+        Files.move(part.toPath, dir.resolve(name))
+        ()
+      }
+      land(landing0, cluster(1f, 6, 300L), "s0.parquet")
+      AnnIngest.runIngest(spark, landing0.toString, ix)
+      Similarity.deleteFromAnnIndex(
+        standing.filter(col("vec_id") % 4 === 0).select(col("vec_id")), ix)
+      val masked = Similarity.ivfFlatProbe(queries, ix, 5, nProbe = 2)
+        .orderBy("query_id", "rnk").collect().toSeq
+      // below θ: no fold — the streamed sink log still stands, so a
+      // scratch re-session is refused (the silent-skip guard)
+      val landing1 = root.resolve("landing1"); Files.createDirectory(landing1)
+      land(landing1, cluster(-1f, 4, 500L), "s1.parquet")
+      an[IllegalArgumentException] should be thrownBy
+        AnnIngest.runIngest(spark, landing1.toString, ix,
+          compactWhenTombstoneRatio = Some(0.9))
+      // past θ: the session-start fold fires — tombstones folded
+      // physically, streamed table folded into assignments, sink log
+      // cleared — and the same scratch re-session now proceeds
       AnnIngest.runIngest(spark, landing1.toString, ix,
-        compactWhenTombstoneRatio = Some(0.9))
-    // past θ: the session-start fold fires — tombstones folded
-    // physically, streamed table folded into assignments, sink log
-    // cleared — and the same scratch re-session now proceeds
-    AnnIngest.runIngest(spark, landing1.toString, ix,
-      compactWhenTombstoneRatio = Some(0.1))
-    graft.operators.Fs.exists(
-      s"$ix/${graft.operators.Fs.TombstonesSubdir}") shouldBe false
-    // probe: the masked standing set, plus both sessions' streamed rows
-    val after = Similarity.ivfFlatProbe(queries, ix, 5, nProbe = 2)
-      .orderBy("query_id", "rnk").collect().toSeq
-    after.map(_.getLong(1)).toSet should not be empty
-    // the pre-fold masked answers are reproducible from the folded index
-    // for the standing ids (the new streamed vectors may displace tail
-    // ranks, so compare via the delete semantics: no deleted id appears)
-    after.map(_.getLong(1)).foreach(id => (id % 4 == 0 && id < 200) shouldBe false)
-    masked.map(_.getLong(1)).foreach(id => (id % 4 == 0 && id < 200) shouldBe false)
+        compactWhenTombstoneRatio = Some(0.1))
+      if (pointer)
+        graft.operators.Fs.currentGeneration(ix).get should endWith("gen-2")
+      graft.operators.Fs.exists(
+        s"${graft.operators.Fs.concrete(ix)}/" +
+          graft.operators.Fs.TombstonesSubdir) shouldBe false
+      // probe: the masked standing set, plus both sessions' streamed rows
+      val after = Similarity.ivfFlatProbe(queries, ix, 5, nProbe = 2)
+        .orderBy("query_id", "rnk").collect().toSeq
+      after.map(_.getLong(1)).toSet should not be empty
+      // the pre-fold masked answers are reproducible from the folded index
+      // for the standing ids (the new streamed vectors may displace tail
+      // ranks, so compare via the delete semantics: no deleted id appears)
+      after.map(_.getLong(1)).foreach(id => (id % 4 == 0 && id < 200) shouldBe false)
+      masked.map(_.getLong(1)).foreach(id => (id % 4 == 0 && id < 200) shouldBe false)
+      graft.operators.Maintenance.rmTree(root.toFile)
+    }
   }
 
   test("ingest requires a centroid artifact and tolerates an empty landing dir") {
@@ -513,5 +525,19 @@ class AnnIngestSpec extends SparkSpecBase {
         .orderBy("query_id", "rnk").collect().toSeq shouldBe pqFast
     pqFast.nonEmpty shouldBe true
     spark.catalog.clearCache()
+  }
+
+  test("a two-file ingest session with a tombstone table standing and the " +
+      "pressure knob below its ratio takes a pinned number of Spark jobs") {
+    withTombstonedAnnIndex("graft_annin_tpin_") { (_, ix, landing) =>
+      // five of these are the pressure decision: the schema inferences
+      // of the tombstone and assignment tables and their one tagged
+      // aggregate (three jobs under AQE). Measured equal at the parent
+      // commit.
+      jobsOf {
+        AnnIngest.runIngest(spark, landing, ix, maxFilesPerTrigger = Some(1),
+          compactWhenTombstoneRatio = Some(0.9))
+      } shouldBe 12
+    }
   }
 }

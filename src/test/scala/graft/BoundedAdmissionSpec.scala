@@ -108,7 +108,8 @@ class BoundedAdmissionSpec extends SparkSpecBase {
         val reposted = indexDocs.map(_._1).find(i => batchDocs.exists(b =>
           b._2.toLowerCase.split("\\s+").mkString(" ") ==
             indexDocs.find(_._1 == i).get._2)).get
-        val masked = Dedup.excludeTombstoned(ix, Some(Seq(reposted).toDF("doc_id")))
+        val masked = graft.operators.Fs.masked(ix,
+          Some(Seq(reposted).toDF("doc_id")), "doc_id", "doc_id")
         val maskedRef = viaFrame(sigs, masked)
         maskedRef.size should be > reference.size
         bounded(Dedup.admitPrehashedBounded(sigs, masked, threshold)) shouldBe

@@ -79,4 +79,16 @@ class ProbeStreamSpec extends SparkSpecBase {
       landing.toString, root.resolve("nope").toString,
       root.resolve("out").toString, k = 5)
   }
+
+  test("a two-file probe session with a tombstone table standing takes a " +
+      "pinned number of Spark jobs") {
+    withTombstonedAnnIndex("graft_probe_tpin_") { (root, ix, landing) =>
+      // two of these are the session's tombstone mask: its schema
+      // inference and its pin. Measured equal at the parent commit.
+      jobsOf {
+        ProbeStream.runProbes(spark, landing, ix, root.resolve("out").toString,
+          k = 5, nProbe = 2, maxFilesPerTrigger = Some(1))
+      } shouldBe 21
+    }
+  }
 }

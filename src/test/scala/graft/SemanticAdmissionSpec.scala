@@ -207,4 +207,19 @@ class SemanticAdmissionSpec extends SparkSpecBase {
       root.resolve("out").toString, threshold = 0.5)
     out.count() shouldBe 0L
   }
+
+  test("a two-file admission session with a tombstone table standing and " +
+      "the pressure knob below its ratio takes a pinned number of Spark jobs") {
+    withTombstonedAnnIndex("graft_semadmit_tpin_") { (root, ix, landing) =>
+      // the prologue's tombstone read, distinct pin and count, and its
+      // assignment count for the pressure decision come on top of the
+      // session's own jobs. Measured equal at the parent commit.
+      jobsOf {
+        SemanticAdmission.runAdmission(spark, landing, ix,
+          root.resolve("out").toString, threshold = 0.35,
+          maxFilesPerTrigger = Some(1), compactWhenTombstoneRatio = Some(0.9))
+        ()
+      } shouldBe 35
+    }
+  }
 }

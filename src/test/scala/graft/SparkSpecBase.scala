@@ -58,4 +58,37 @@ abstract class SparkSpecBase extends AnyFunSuite with Matchers {
       seen.iterator().asScala.count(_ == tag)
     } finally sc.removeSparkListener(listener)
   }
+
+  /** An IVF-flat index (4 cells) over sf0.001's standing embeddings with
+    * a quarter of them tombstoned, and a landing dir of two 20-vector
+    * files of new ones (one per trigger at `maxFilesPerTrigger = 1`) —
+    * the setup of the ANN loops' tombstone-standing job pins. `body`
+    * gets (root, index path, landing dir); the root is removed after. */
+  def withTombstonedAnnIndex(prefix: String)(
+      body: (java.nio.file.Path, String, String) => Unit): Unit = {
+    import org.apache.spark.sql.functions.{col, md5, substring}
+    val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    val isNew = substring(md5(col("vec_id").cast("string")), 1, 4) >= "cccc"
+    val root = java.nio.file.Files.createTempDirectory(prefix)
+    val ix = root.resolve("ix").toString
+    val landing = root.resolve("landing")
+    try {
+      graft.operators.Similarity.writeIvfFlatIndex(e.filter(!isNew), nLists = 4, ix)
+      graft.operators.Similarity.deleteFromAnnIndex(
+        e.filter(!isNew && col("vec_id") % 4 === 0).select(col("vec_id")), ix)
+      java.nio.file.Files.createDirectory(landing)
+      Seq(col("vec_id") % 2 === 0, col("vec_id") % 2 =!= 0).zipWithIndex
+        .foreach { case (half, i) =>
+          val stage = root.resolve(s"stage_$i")
+          e.filter(isNew && half).select("vec_id", "embedding").limit(20)
+            .coalesce(1).write.parquet(stage.toString)
+          val part = stage.toFile.listFiles()
+            .filter(f => f.isFile && f.getName.endsWith(".parquet")).head
+          val dst = landing.resolve(s"$i.parquet")
+          java.nio.file.Files.move(part.toPath, dst)
+          dst.toFile.setLastModified(1000000L * (i + 1))
+        }
+      body(root, ix, landing.toString)
+    } finally graft.operators.Maintenance.rmTree(root.toFile)
+  }
 }

@@ -257,6 +257,28 @@ class StateFoldSpec extends SparkSpecBase {
       "model" -> 6, "gramian" -> 6, "cms" -> 6)
   }
 
+  test("a fold runner whose batch throws leaves no scratch checkpoint behind") {
+    val scratch = {
+      val probe = graft.streaming.EventStreams.scratchDir("graft_sf_probe_")
+      graft.operators.Maintenance.rmTree(probe.toFile)
+      probe.getParent.toFile
+    }
+    def ckpts = Option(scratch.list()).getOrElse(Array.empty[String])
+      .filter(_.startsWith("graft_ckpt_")).toSet
+    val before = ckpts
+    // an unreadable landing file: the schema probe falls back to the
+    // default landing schema, so the stream starts and its first batch
+    // throws
+    withLanding { landing =>
+      Files.write(landing.resolve("a.parquet"), "not parquet".getBytes); ()
+    } { (landing, state, _) =>
+      an[Exception] should be thrownBy
+        graft.streaming.TopNStream.runTopN(spark, landing, state, n = 2,
+          scoreCol = "n_chars")
+    }
+    ckpts -- before shouldBe empty
+  }
+
   test("requireNoLostFolds fires on committed-but-unapplied ids, passes otherwise") {
     val root = Files.createTempDirectory("graft_sf_lost_")
     try {
