@@ -43,9 +43,4 @@ object DomainFunctions {
     * Reference scripts/etl_snapshot_topn.py:111-137. */
   def isWin(myCrowns: Column, theirCrowns: Column): Column =
     coalesce(myCrowns, lit(0)) > coalesce(theirCrowns, lit(0))
-
-  /** `ROUND(100.0 * wins / NULLIF(uses, 0), 2)` — the analyst win-rate
-    * expression (reference queries/top_deck_types.sql:5). */
-  def winRatePct(wins: Column, uses: Column): Column =
-    round(lit(100.0) * wins / nullif(uses.cast("double"), lit(0.0)), 2)
 }

@@ -41,14 +41,6 @@ object TextFunctions {
         / n.cast("double"))
   }
 
-  /** Average token length (characters per whitespace token). */
-  def avgTokenLength(text: Column): Column = {
-    val toks = tokens(text)
-    when(size(toks) === 0, 0.0).otherwise(
-      aggregate(toks, lit(0L), (acc, t) => acc + length(t)).cast("double")
-        / size(toks).cast("double"))
-  }
-
   /** Heuristic document quality score in [0,1]: rewards mid-length docs
     * and stopword presence, penalizes punctuation noise. Deterministic
     * arithmetic only (no floating accumulation across rows). */

@@ -30,17 +30,6 @@ import graft.functions.{TextFunctions => T}
   */
 object CorpusPipeline {
 
-  /** Clean `docs` (must have doc_id, lang, text columns; text may be
-    * null). Returns the surviving rows with an added `quality` column.
-    * `sampleBounds`/`defaultBound` are [[Sampling.stratifiedSample]] hex
-    * bounds per lang ("g" compares above every hex bucket = keep all).
-    *
-    * `keepBestByQuality` switches the near-dup cluster representative
-    * from the default minimum id to [[Dedup.bestRepresentative]] on the
-    * computed quality score (ties to the lower id) — keep the CLEANEST
-    * member of each cluster instead of the earliest-crawled. Min-id
-    * stays the default because it is the id-stable policy
-    * [[cleanIncremental]]'s append-only contract builds on. */
   /** A near-dup PAIR POLICY: (docs, id, text) → verified duplicate pairs
     * (id_a, id_b), id_a < id_b. The clustering, representative pick and
     * sampling downstream of candidate generation are policy-independent,
@@ -75,6 +64,37 @@ object CorpusPipeline {
       k, w, minShared, maxDf)
       .select(col("doc_a").as("id_a"), col("doc_b").as("id_b"))
 
+  /** The prologue of every clean: null text read as "", the quality gate
+    * (`quality` ≥ `qualityThreshold`, the score kept as a column), then
+    * exact dedup keeping the lowest doc_id per identical text
+    * ([[Dedup.exactByContent]]). Unpinned: each caller persists where
+    * its own reads need it. */
+  private def gatedExact(docs: DataFrame, stopwords: Seq[String],
+      qualityThreshold: Double): DataFrame = {
+    val qual = docs.withColumn("text", coalesce(col("text"), lit("")))
+      .withColumn("quality", T.qualityScore(col("text"), stopwords))
+      .filter(col("quality") >= qualityThreshold)
+    qual.join(
+      Dedup.exactByContent(qual, col("text"), col("doc_id")).select("keep_id"),
+      col("doc_id") === col("keep_id"), "left_semi")
+  }
+
+  /** The rows with non-blank text: the only ones the near-dup stage
+    * sees (an empty doc has no shingles or fingerprints). */
+  private def nonBlank(df: DataFrame): DataFrame =
+    df.filter(trim(col("text")) =!= "")
+
+  /** Clean `docs` (must have doc_id, lang, text columns; text may be
+    * null). Returns the surviving rows with an added `quality` column.
+    * `sampleBounds`/`defaultBound` are [[Sampling.stratifiedSample]] hex
+    * bounds per lang ("g" compares above every hex bucket = keep all).
+    *
+    * `keepBestByQuality` switches the near-dup cluster representative
+    * from the default minimum id to [[Dedup.bestRepresentative]] on the
+    * computed quality score (ties to the lower id) — keep the CLEANEST
+    * member of each cluster instead of the earliest-crawled. Min-id
+    * stays the default because it is the id-stable policy
+    * [[cleanIncremental]]'s append-only contract builds on. */
   def clean(docs: DataFrame, stopwords: Seq[String],
       qualityThreshold: Double = 0.5,
       shingleN: Int = 3, minhashK: Int = 8, jaccardThreshold: Double = 0.5,
@@ -96,40 +116,26 @@ object CorpusPipeline {
       sampleBounds: Map[String, String] = Map.empty,
       defaultBound: String = "g",
       keepBestByQuality: Boolean = false): DataFrame = {
-    val base = docs.withColumn("text", coalesce(col("text"), lit("")))
-    val qual = base
-      .withColumn("quality", T.qualityScore(col("text"), stopwords))
-      .filter(col("quality") >= qualityThreshold)
-    // exact dedup: keep the lowest doc_id per identical payload.
     // Persisted: this frame is read by BOTH the near-dup candidate chain
     // and the survivor join below, and each read would otherwise re-run
     // the scan + quality gate + dedup shuffle (the same cache lifecycle
     // contract as Dedup's shingle frames — callers clear the session
     // cache once the result is consumed).
-    val exact = qual.join(
-      Dedup.exactByContent(qual, col("text"), col("doc_id")).select("keep_id"),
-      col("doc_id") === col("keep_id"), "left_semi")
+    val exact = gatedExact(docs, stopwords, qualityThreshold)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // near-dup clusters over the exact-deduped survivors; empty docs have
     // no shingles/fingerprints and skip this stage (they survive unless
     // exact-dup'd)
-    val pairs = pairPolicy(
-      exact.filter(trim(col("text")) =!= ""),
-      col("doc_id"), col("text"))
+    val pairs = pairPolicy(nonBlank(exact), col("doc_id"), col("text"))
+    val comps = Dedup.connectedComponentsAuto(pairs, col("id_a"), col("id_b"))
     val surv =
-      if (!keepBestByQuality) {
-        val comps = Dedup.connectedComponentsAuto(pairs, col("id_a"), col("id_b"))
-        exact
-          .join(comps, col("doc_id") === col("id"), "left")
-          .filter(col("id").isNull || col("comp") === col("doc_id"))
-          .drop("id", "comp")
-      } else {
+      if (!keepBestByQuality) Dedup.minIdKeep(exact, comps, "doc_id")
+      else {
         // clustered docs keep their argmax-quality member; singletons
         // (never paired) pass through untouched. Components are computed
         // ONCE and shared by the representative pick and the membership
         // anti-join — the iterative components job is the expensive
         // stage of this branch.
-        val comps = Dedup.connectedComponentsAuto(pairs, col("id_a"), col("id_b"))
         val reps = Dedup.bestRepresentativeIn(
           exact.select(col("doc_id"), col("quality")), comps,
           col("doc_id"), col("quality"))
@@ -188,17 +194,10 @@ object CorpusPipeline {
       defaultBound: String = "g"): DataFrame = {
     val bits = Contamination.bloomBits(benchmark, col("text"), shingleN,
       bloomM, bloomK)
-    val base = docs.withColumn("text", coalesce(col("text"), lit("")))
-    val qual = base
-      .withColumn("quality", T.qualityScore(col("text"), stopwords))
-      .filter(col("quality") >= qualityThreshold)
-    val exact = qual.join(
-      Dedup.exactByContent(qual, col("text"), col("doc_id")).select("keep_id"),
-      col("doc_id") === col("keep_id"), "left_semi")
+    val exact = gatedExact(docs, stopwords, qualityThreshold)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val banded = Dedup.scopedShingleBandFrame(
-        Dedup.stagedScopedShingles(
-          exact.filter(trim(col("text")) =!= ""),
+        Dedup.stagedScopedShingles(nonBlank(exact),
           col("doc_id"), col("text"), scope, shingleN),
         minhashK, rowsPerBand)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -218,12 +217,8 @@ object CorpusPipeline {
     // the exact frame, not the staged one
     val surv = exact.join(contaminated, Seq("doc_id"), "left_anti")
     val comps = Dedup.connectedComponentsAuto(pairs, col("id_a"), col("id_b"))
-    val out = surv
-      .join(comps, col("doc_id") === col("id"), "left")
-      .filter(col("id").isNull || col("comp") === col("doc_id"))
-      .drop("id", "comp")
-    Sampling.stratifiedSample(out, col("doc_id"), col("lang"),
-      sampleBounds, defaultBound)
+    Sampling.stratifiedSample(Dedup.minIdKeep(surv, comps, "doc_id"),
+      col("doc_id"), col("lang"), sampleBounds, defaultBound)
   }
 
   /** Fold an APPEND-ONLY batch of new documents into an already-cleaned
@@ -258,16 +253,9 @@ object CorpusPipeline {
       rowsPerBand: Int = 2,
       sampleBounds: Map[String, String] = Map.empty,
       defaultBound: String = "g"): DataFrame = {
-    val base = newDocs.withColumn("text", coalesce(col("text"), lit("")))
-    val qual = base
-      .withColumn("quality", T.qualityScore(col("text"), stopwords))
-      .filter(col("quality") >= qualityThreshold)
     // exact dedup: lowest id within the batch, then drop content the
     // corpus already holds (hash semi-join — survivors never rescan)
-    val batchExact = qual.join(
-      Dedup.exactByContent(qual, col("text"), col("doc_id")).select("keep_id"),
-      col("doc_id") === col("keep_id"), "left_semi")
-    val newExact = batchExact.join(
+    val newExact = gatedExact(newDocs, stopwords, qualityThreshold).join(
       existing.select(graft.functions.Hashing.contentHash(col("text")).as("__h")).distinct(),
       graft.functions.Hashing.contentHash(col("text")) === col("__h"), "left_anti")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -276,17 +264,12 @@ object CorpusPipeline {
     // holds no survivor AND it is the batch cluster's minimum
     val pool = existing.select(col("doc_id"), col("text"))
       .unionByName(newExact.select(col("doc_id"), col("text")))
-    val pairs = Dedup.minhashNearDupPairs(
-      pool.filter(trim(col("text")) =!= ""),
+    val pairs = Dedup.minhashNearDupPairs(nonBlank(pool),
       col("doc_id"), col("text"), shingleN, minhashK,
       rowsPerBand = rowsPerBand, threshold = jaccardThreshold)
     val comps = Dedup.connectedComponentsAuto(pairs, col("id_a"), col("id_b"))
-    val survNew = newExact
-      .join(comps, col("doc_id") === col("id"), "left")
-      .filter(col("id").isNull || col("comp") === col("doc_id"))
-      .drop("id", "comp")
-    existing.unionByName(
-      Sampling.stratifiedSample(survNew, col("doc_id"), col("lang"),
-        sampleBounds, defaultBound))
+    existing.unionByName(Sampling.stratifiedSample(
+      Dedup.minIdKeep(newExact, comps, "doc_id"), col("doc_id"), col("lang"),
+      sampleBounds, defaultBound))
   }
 }

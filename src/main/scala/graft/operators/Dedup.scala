@@ -117,43 +117,66 @@ object Dedup {
     size(array_intersect(a, b)).cast("double") /
       size(array_union(a, b)).cast("double")
 
+  /** `df` broadcast-hinted when `on`. */
+  private def hinted(df: DataFrame, on: Boolean): DataFrame =
+    if (on) broadcast(df) else df
+
   /** The candidate verify join: attach each candidate's two shingle
     * sets (column `sh` of `docsA`/`docsB`, keyed by `doc_id`) and keep
     * (carry…, a, b, jaccard) for pairs whose exact Jaccard ≥
-    * `threshold`. `carry` columns ride out of `docsA`. */
+    * `threshold`. `carry` columns ride out of `docsA`; `hintA`/`hintB`
+    * broadcast-hint that side's shingle join. */
   private def verifyJaccard(cand: DataFrame, docsA: DataFrame,
       docsB: DataFrame, sh: String, threshold: Double, a: String = "id_a",
-      b: String = "id_b", carry: Seq[String] = Nil): DataFrame =
+      b: String = "id_b", carry: Seq[String] = Nil, hintA: Boolean = false,
+      hintB: Boolean = false): DataFrame =
     cand
-      .join(docsA.select((col("doc_id").as(a) +: carry.map(col)) :+
-        col(sh).as("sh_a"): _*), Seq(a))
-      .join(docsB.select(col("doc_id").as(b), col(sh).as("sh_b")), Seq(b))
+      .join(hinted(docsA.select((col("doc_id").as(a) +: carry.map(col)) :+
+        col(sh).as("sh_a"): _*), hintA), Seq(a))
+      .join(hinted(docsB.select(col("doc_id").as(b), col(sh).as("sh_b")),
+        hintB), Seq(b))
       .select((carry :+ a :+ b).map(col) :+
         jaccard(col("sh_a"), col("sh_b")).as("jaccard"): _*)
       .filter(col("jaccard") >= threshold)
 
-  /** Distinct (id_a < id_b) candidate pairs from an exploded
-    * (band, doc_id) index. With a `maxBandDf` ceiling each bucket is ONE
-    * row per band ([[boundedBuckets]] — a single shuffle whose per-band
-    * memory is bounded by the cap, oversized buckets dropped whole) and
-    * ordered pairs stream out of two chained generators; without one,
-    * bucket sizes are unbounded, so the band SELF-JOIN form stays — it
-    * pairs giant buckets without ever holding one in a single row. */
-  private def bandCandidates(exploded: DataFrame,
-      maxBandDf: Option[Long]): DataFrame =
-    (maxBandDf match {
+  /** The exploded (band, doc_id) index of a frame's `bands` column. */
+  private def bandRows(df: DataFrame): DataFrame =
+    df.select(explode(col("bands")).as("band"), col("doc_id"))
+
+  /** Distinct candidate pairs (a, b) from exploded (band, doc_id)
+    * indexes ([[bandRows]]): an id of `bandsA` and an id of `bandsB`
+    * that share a band — or, with `bandsB` None, two ids of `bandsA`,
+    * a < b. With a `maxBandDf` ceiling each side's bucket is ONE row per
+    * band ([[boundedBuckets]] — a single shuffle whose per-band memory is
+    * bounded by the cap, oversized buckets dropped whole; two sides'
+    * buckets join on band, so the quadratic term is at most cap² per
+    * band) and the pairs stream out of two chained generators; without
+    * one, bucket sizes are unbounded, so the band JOIN form stays — it
+    * pairs giant buckets without ever holding one in a single row.
+    * `hintA`/`hintB` broadcast-hint that side of the join. */
+  private def bandCandidates(bandsA: DataFrame, bandsB: Option[DataFrame],
+      maxBandDf: Option[Long], a: String = "id_a", b: String = "id_b",
+      hintA: Boolean = false, hintB: Boolean = false): DataFrame = {
+    val pairs = maxBandDf match {
       case Some(cap) =>
-        boundedBuckets(exploded, "band", "doc_id", cap, "ids")
-          .select(explode(col("ids")).as("id_a"), col("ids"))
-          .select(col("id_a"), explode(col("ids")).as("id_b"))
-          .filter(col("id_a") < col("id_b"))
+        def buckets(df: DataFrame, ids: String) =
+          boundedBuckets(df, "band", "doc_id", cap, ids)
+        val both = bandsB match {
+          case None =>
+            buckets(bandsA, "ids_a").withColumn("ids_b", col("ids_a"))
+          case Some(other) => hinted(buckets(bandsA, "ids_a"), hintA)
+            .join(hinted(buckets(other, "ids_b"), hintB), Seq("band"))
+        }
+        both.select(explode(col("ids_a")).as(a), col("ids_b"))
+          .select(col(a), explode(col("ids_b")).as(b))
       case None =>
-        exploded.select(col("band"), col("doc_id").as("id_a"))
-          .join(exploded.select(col("band"), col("doc_id").as("id_b")),
-            Seq("band"))
-          .filter(col("id_a") < col("id_b"))
-          .select(col("id_a"), col("id_b"))
-    }).distinct()
+        hinted(bandsA.select(col("band"), col("doc_id").as(a)), hintA)
+          .join(hinted(bandsB.getOrElse(bandsA)
+            .select(col("band"), col("doc_id").as(b)), hintB), Seq("band"))
+          .select(col(a), col(b))
+    }
+    (if (bandsB.isEmpty) pairs.filter(col(a) < col(b)) else pairs).distinct()
+  }
 
   /** Exact dedup by content hash: keeps the lowest-id row per distinct
     * content. GroupBy on md5 — uniform key, perfectly balanced shuffle;
@@ -496,8 +519,6 @@ object Dedup {
   private def survivorPairs(nw: DataFrame, ix: DataFrame,
       threshold: Double,
       broadcastNew: Boolean): (DataFrame, DataFrame => DataFrame) = {
-    def bcast(df: DataFrame): DataFrame =
-      if (broadcastNew) broadcast(df) else df
     // new-vs-index: one band join, (band, id) pairs only; shingles join
     // in for the surviving candidate set. `broadcastNew` (default on)
     // pins the BUILD side of both index-touching joins to the NEW/
@@ -512,27 +533,20 @@ object Dedup {
     // index size (AdmitCoreComponentsSpec pins it with auto-broadcast
     // off); pass false when probing with a genuinely corpus-scale new
     // frame, where the optimizer should choose.
-    val nwBands = nw.select(explode(col("bands")).as("band"),
-      col("doc_id").as("id_n"))
-    val ixBands = ix.select(explode(col("bands")).as("band"),
-      col("doc_id").as("id_o"))
-    val cand = bcast(nwBands).join(ixBands, Seq("band"))
-      .select(col("id_n"), col("id_o")).distinct()
-    val withShN = cand
-      .join(bcast(nw.select(col("doc_id").as("id_n"), col("sh").as("sh_n"))),
-        Seq("id_n"))
-    // the verify join is deliberately UNHINTED: withShN is bounded by
-    // |candidate pairs| × shingle payload, which scales with corpus-side
-    // band collisions (hot/skewed bands), not the ingest batch — a
-    // forced broadcast would fail the job outright past the driver/
-    // broadcast limit where a sort-merge completes. At bench scale the
-    // small side still auto-broadcasts, and under AQE a runtime-small
-    // candidate frame is converted to a broadcast join anyway — the
-    // optimizer-chosen path is the only one safe at every collision
-    // profile.
-    val matched = withShN
-      .join(ix.select(col("doc_id").as("id_o"), col("sh").as("sh_o")), Seq("id_o"))
-      .filter(jaccard(col("sh_n"), col("sh_o")) >= threshold)
+    val cand = bandCandidates(bandRows(nw), Some(bandRows(ix)), None,
+      "id_n", "id_o", hintA = broadcastNew)
+    // the verify join against the index shingles is deliberately
+    // UNHINTED (only the new-side shingle join is): its candidate side
+    // is bounded by |candidate pairs| × shingle payload, which scales
+    // with corpus-side band collisions (hot/skewed bands), not the
+    // ingest batch — a forced broadcast would fail the job outright past
+    // the driver/broadcast limit where a sort-merge completes. At bench
+    // scale the small side still auto-broadcasts, and under AQE a
+    // runtime-small candidate frame is converted to a broadcast join
+    // anyway — the optimizer-chosen path is the only one safe at every
+    // collision profile.
+    val matched = verifyJaccard(cand, nw, ix, "sh", threshold, "id_n",
+        "id_o", hintA = broadcastNew)
       .select(col("id_n")).distinct()
     // survivors of the index check, deduped among themselves. The
     // index-probe above (band join + Jaccard verify — the expensive
@@ -546,22 +560,13 @@ object Dedup {
     // every frame below is batch-bounded (survivors ⊆ the new batch), so
     // the same hint keeps the whole in-batch dedup shuffle-free past the
     // auto-broadcast threshold
-    val sv = nw.join(bcast(matched), nw("doc_id") === matched("id_n"),
-      "left_anti")
-    def pairs(sv: DataFrame): DataFrame = {
-      val svb = sv.select(explode(col("bands")).as("band"), col("doc_id"))
-      svb.select(col("band"), col("doc_id").as("id_a"))
-        .join(bcast(svb.select(col("band"), col("doc_id").as("id_b"))),
-          Seq("band"))
-        .filter(col("id_a") < col("id_b"))
-        .select(col("id_a"), col("id_b")).distinct()
-        .join(bcast(sv.select(col("doc_id").as("id_a"), col("sh").as("sh_a"))),
-          Seq("id_a"))
-        .join(bcast(sv.select(col("doc_id").as("id_b"), col("sh").as("sh_b"))),
-          Seq("id_b"))
-        .filter(jaccard(col("sh_a"), col("sh_b")) >= threshold)
+    val sv = nw.join(hinted(matched, broadcastNew),
+      nw("doc_id") === matched("id_n"), "left_anti")
+    def pairs(sv: DataFrame): DataFrame =
+      verifyJaccard(
+          bandCandidates(bandRows(sv), None, None, hintB = broadcastNew),
+          sv, sv, "sh", threshold, hintA = broadcastNew, hintB = broadcastNew)
         .select(col("id_a"), col("id_b"))
-    }
     (sv, pairs)
   }
 
@@ -576,13 +581,19 @@ object Dedup {
     * the bounded driver union-find, distributed star past the cap),
     * left-joined back so pair-free survivors keep themselves. */
   private def keepRepresentatives(sv: DataFrame,
-      pairs: DataFrame => DataFrame, id: String): DataFrame = {
-    val comps = boundedComponents(pairs(sv), col("id_a"), col("id_b"))
-    sv.select(col(id))
-      .join(comps, sv(id) === comps("id"), "left")
+      pairs: DataFrame => DataFrame, id: String): DataFrame =
+    minIdKeep(sv.select(col(id)),
+      boundedComponents(pairs(sv), col("id_a"), col("id_b")), id)
+
+  /** The rows of `df` that are their component's min-id representative
+    * under the (id, comp) labeling `comps`: left-joined on `id`, so a row
+    * in no component keeps itself — the keep rule of the admissions and
+    * of every [[CorpusPipeline]] clean. */
+  private[operators] def minIdKeep(df: DataFrame, comps: DataFrame,
+      id: String): DataFrame =
+    df.join(comps, col(id) === col("id"), "left")
       .filter(col("comp").isNull || col("comp") === col(id))
-      .select(col(id))
-  }
+      .drop("id", "comp")
 
   /** The driver-side bound of a bounded admission, in payload: a row
     * weighs one plus the elements of its array columns (the shingle sets
@@ -1041,10 +1052,6 @@ object Dedup {
       threshold: Double = 0.5, maxBandDf: Option[Long] = None): DataFrame = {
     val li = shingleBandFrame(left, idL, textL, shingleN, k, rowsPerBand)
     val ri = shingleBandFrame(right, idR, textR, shingleN, k, rowsPerBand)
-    val lb = li.select(explode(col("bands")).as("band"),
-      col("doc_id").as("left_id"))
-    val rb = ri.select(explode(col("bands")).as("band"),
-      col("doc_id").as("right_id"))
     // optional boilerplate ceiling (the Winnowing.maxDf knob for this
     // join): a band key held by more than `maxBandDf` docs on a side is
     // template/boilerplate evidence, and its candidate volume is the
@@ -1056,17 +1063,9 @@ object Dedup {
     // side, oversized buckets dropped whole, then a bucket-level band
     // join — per-band memory ≤ 2·cap ids), not bolted on as an extra
     // df-count join per side: same pair set, two fewer shuffles.
-    val cand = (maxBandDf match {
-      case None =>
-        lb.join(rb, Seq("band")).select(col("left_id"), col("right_id"))
-      case Some(cap) =>
-        boundedBuckets(lb, "band", "left_id", cap, "left_ids")
-          .join(boundedBuckets(rb, "band", "right_id", cap, "right_ids"),
-            Seq("band"))
-          .select(explode(col("left_ids")).as("left_id"), col("right_ids"))
-          .select(col("left_id"), explode(col("right_ids")).as("right_id"))
-    }).distinct()
-    verifyJaccard(cand, li, ri, "sh", threshold, "left_id", "right_id")
+    verifyJaccard(bandCandidates(bandRows(li), Some(bandRows(ri)), maxBandDf,
+        "left_id", "right_id"),
+      li, ri, "sh", threshold, "left_id", "right_id")
   }
 
   /** MinHash + LSH near-duplicate candidate pairs over a text column.
@@ -1104,9 +1103,7 @@ object Dedup {
     // filter-join → self-join} plan (three shuffles and a double explode
     // eval) that regressed the whole minhash-consuming family 1.3–5× at
     // sf0.1.
-    verifyJaccard(bandCandidates(
-        docs.select(explode(col("bands")).as("band"), col("doc_id")),
-        maxBandDf),
+    verifyJaccard(bandCandidates(bandRows(docs), None, maxBandDf),
       docs, docs, "sh", threshold)
   }
 
@@ -1185,7 +1182,7 @@ object Dedup {
         col("doc_id"))
     // the left verify join carries the scope out (both sides share it
     // by construction) — no separate output-attach join
-    verifyJaccard(bandCandidates(all, maxBandDf), docs, docs, "sh",
+    verifyJaccard(bandCandidates(all, None, maxBandDf), docs, docs, "sh",
       threshold, carry = Seq("source"))
   }
 
@@ -1239,8 +1236,7 @@ object Dedup {
       .select(col("doc_id"),
         T.bandKeys(col("sig"), rowsPerBand).as("bands"), col("vsh"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    verifyJaccard(bandCandidates(
-        docs.select(explode(col("bands")).as("band"), col("doc_id")), None),
+    verifyJaccard(bandCandidates(bandRows(docs), None, None),
       docs, docs, "vsh", threshold)
   }
 
@@ -1329,14 +1325,8 @@ object Dedup {
         struct(lit(i).as("chunk_i"),
           shiftright(col("sig"), i * 8).bitwiseAND(0xFF).as("chunk_v"))): _*)).as("chunk"))
       .select(col("doc_id"), col("sig"), col("chunk.chunk_i"), col("chunk.chunk_v"))
-    val a = blocked.select(col("chunk_i"), col("chunk_v"),
-      col("doc_id").as("id_a"), col("sig").as("sig_a"))
-    val b = blocked.select(col("chunk_i"), col("chunk_v"),
-      col("doc_id").as("id_b"), col("sig").as("sig_b"))
-    a.join(b, Seq("chunk_i", "chunk_v"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        T.hammingDistance(col("sig_a"), col("sig_b")).as("hamming"))
+    blockedPairs(blocked, Seq("chunk_i", "chunk_v"), "doc_id", Seq("sig"))(
+        "hamming", T.hammingDistance(col("sig_a"), col("sig_b")))
       // filter BEFORE distinct: almost every candidate pair fails the
       // Hamming bound, so the dedup shuffle moves only survivors (a pair
       // can match on up to `chunks` blocks → duplicates are possible but
@@ -1549,11 +1539,8 @@ object Dedup {
     val bucketed = Parallelism.ensureMinPartitions(
         df.select(id.as("vid"), vec.as("v")), col("vid"))
       .select(col("vid"), col("v"), V.srpBucketTable(col("v"), planes).as("bucket"))
-    val a = bucketed.select(col("bucket"), col("vid").as("id_a"), col("v").as("v_a"))
-    val b = bucketed.select(col("bucket"), col("vid").as("id_b"), col("v").as("v_b"))
-    a.join(b, Seq("bucket"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"), V.cosine(col("v_a"), col("v_b")).as("cosine"))
+    blockedPairs(bucketed, Seq("bucket"), "vid", Seq("v"))(
+        "cosine", V.cosine(col("v_a"), col("v_b")))
       .filter(col("cosine") >= threshold)
   }
 
@@ -1583,19 +1570,36 @@ object Dedup {
     // persist() here is keyed in the cache manager and would accumulate
     // across repeated invocations unless every caller remembered to
     // clear it — the admitCore idiom, not the shingle-frame one)
-    val asg = Similarity.assignCells(embeddings, centroids)
-      .localCheckpoint(true)
-    val a = asg.select(col("cell"), col("vec_id").as("id_a"),
-      col("embedding").as("v_a"), col("c_norm").as("n_a"))
-    val b = asg.select(col("cell"), col("vec_id").as("id_b"),
-      col("embedding").as("v_b"), col("c_norm").as("n_b"))
-    a.join(b, Seq("cell"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        V.cosineFromNorms(col("v_a"), col("v_b"),
-          col("n_a"), col("n_b")).as("cosine"))
+    cellPairs(Similarity.assignCells(embeddings, centroids)
+        .localCheckpoint(true))
       .filter(col("cosine") >= threshold)
   }
+
+  /** The blocked self-join: every two rows of `df` that share all `keys`,
+    * as (id_a, id_b, `name`) with id_a < id_b (ids from column `id`) and
+    * `name` = `score` over the two rows' `payload` columns, read as
+    * `<p>_a` and `<p>_b`. A pair sharing several keys comes out once per
+    * key: each caller places its own distinct. */
+  private def blockedPairs(df: DataFrame, keys: Seq[String], id: String,
+      payload: Seq[String])(name: String, score: Column): DataFrame = {
+    def side(s: String) = df.select(keys.map(col) ++ (col(id).as(s"id_$s") +:
+      payload.map(p => col(p).as(s"${p}_$s"))): _*)
+    side("a").join(side("b"), keys)
+      .filter(col("id_a") < col("id_b"))
+      .select(col("id_a"), col("id_b"), score.as(name))
+  }
+
+  /** Exact cosine of two index-shaped rows' (embedding, c_norm) read as
+    * `_a`/`_b` columns — norms from the assignment pass, one sqrt per
+    * vector, never per pair. */
+  private val pairCosine: Column = V.cosineFromNorms(col("embedding_a"),
+    col("embedding_b"), col("c_norm_a"), col("c_norm_b"))
+
+  /** Same-cell pairs of an index-shaped (cell, vec_id, embedding, c_norm)
+    * frame, scored by [[pairCosine]] as `cosine`. */
+  private def cellPairs(asg: DataFrame): DataFrame =
+    blockedPairs(asg, Seq("cell"), "vec_id", Seq("embedding", "c_norm"))(
+      "cosine", pairCosine)
 
   /** Banded-dedup RECALL report — the ANN family's measure-before-trust
     * discipline ([[Similarity.recallReport]]) pointed at the near-dup
@@ -1710,17 +1714,9 @@ object Dedup {
       .filter(V.cosineFromNorms(col("v_n"), col("v_o"),
         col("n_n"), col("n_o")) >= threshold)
       .select(col("id_n")).distinct()
-    def pairs(sv: DataFrame): DataFrame = {
-      val a = sv.select(col("cell"), col("vec_id").as("id_a"),
-        col("embedding").as("v_a"), col("c_norm").as("n_a"))
-      val b = sv.select(col("cell"), col("vec_id").as("id_b"),
-        col("embedding").as("v_b"), col("c_norm").as("n_b"))
-      a.join(b, Seq("cell"))
-        .filter(col("id_a") < col("id_b"))
-        .filter(V.cosineFromNorms(col("v_a"), col("v_b"),
-          col("n_a"), col("n_b")) >= threshold)
+    def pairs(sv: DataFrame): DataFrame =
+      cellPairs(sv).filter(col("cosine") >= threshold)
         .select(col("id_a"), col("id_b"))
-    }
     (asg.join(matched, asg("vec_id") === matched("id_n"), "left_anti"), pairs)
   }
 
@@ -1745,9 +1741,7 @@ object Dedup {
       if (sv.schema("vec_id").dataType == LongType)
         boundedRows(taken).filter(_.length <= cap)
       else None,
-      taken.schema,
-      V.cosineFromNorms(col("embedding_a"), col("embedding_b"),
-        col("c_norm_a"), col("c_norm_b")) >= threshold, cap, BoundedPayload)(
+      taken.schema, pairCosine >= threshold, cap, BoundedPayload)(
       keepRepresentatives(sv.localCheckpoint(true), pairs, "vec_id"))
   }
 }

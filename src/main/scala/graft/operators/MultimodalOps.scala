@@ -44,13 +44,6 @@ object MultimodalOps {
         Row(n, header, (64 + n % 64).toInt, (64 + (n / 64) % 64).toInt)
       }
     }
-
-    /** The production seam: decoding real media requires codec libraries
-      * absent from this environment. */
-    def codecBacked(codec: String): Decoder =
-      throw new UnsupportedOperationException(
-        s"codec-backed decoder ($codec) requires media libraries; " +
-          "use Decoder.deterministic in tests")
   }
 
   /** id + binary column → id + feature struct columns. Decoder is invoked

@@ -24,11 +24,11 @@ import graft.functions.{VectorFunctions => V}
   *  - evaluation: [[recallReport]], [[recallAtK]].
   *
   * Every search path is a composition of the same low-level pieces: one
-  * nearest-centroid distance list ([[withCell]], for the argmin and the
-  * probe side alike), one probe-and-score join ([[scorePairs]]), one
-  * cosine expression ([[cosine]]), one top-k ranking ([[rankTopK]]) and,
-  * for the artifacts, the one fold commit of the index layout
-  * ([[Fs.commitFold]]).
+  * nearest-entry distance list ([[distances]]: [[withCell]]'s argmin and
+  * probe side alike, and the PQ codes), one probe-and-score join
+  * ([[scorePairs]]), one cosine expression ([[cosine]]), one top-k
+  * ranking ([[rankTopK]]) and, for the artifacts, the one fold commit
+  * of the index layout ([[Fs.commitFold]]).
   */
 object Similarity {
 
@@ -227,9 +227,23 @@ object Similarity {
     s
   }
 
-  /** THE nearest-centroid step: attach `cell` = `pick` of the per-centroid
-    * (d, idx) distance list of the `vec` column — [[argmin]] for the
-    * corpus-side assignment, [[nearest]] for a query's probe cells.
+  /** THE nearest-entry distance list: one (d, idx) struct per entry of
+    * the `entries` array column, d = `(vv − 2.0·(v·c)) + c·c` with `vv`
+    * the pre-projected v·v and c·c read from the driver-computed
+    * `selfDots` table ([[leftFoldDot]]) at `offset` + idx — the struct
+    * order (distance, then the lower idx) is the tie rule of [[argmin]]
+    * and [[nearest]]. [[withCell]] runs it over the centroids and
+    * [[pqEncode]] over each subspace's codewords. */
+  private def distances(vv: Column, v: Column, entries: Column,
+      selfDots: Column, offset: Int): Column =
+    transform(entries, (c, i) =>
+      struct(((vv - lit(2.0) * V.dot(v, c))
+        + element_at(selfDots, lit(offset + 1) + i)).as("d"), i.as("idx")))
+
+  /** THE nearest-centroid step: attach `cell` = `pick` of the
+    * [[distances]] list of the `vec` column against the centroids —
+    * [[argmin]] for the corpus-side assignment, [[nearest]] for a
+    * query's probe cells.
     *
     * The centroids ride the plan as ONE array-of-arrays literal plus a
     * driver-computed self-dot table ([[leftFoldDot]], the exact fold),
@@ -249,12 +263,9 @@ object Similarity {
   private def withCell(df: DataFrame, vec: String,
       centroids: Seq[Seq[Double]])(pick: Column => Column): DataFrame = {
     val v = col(vec)
-    val selfDots = typedlit(centroids.map(c => leftFoldDot(c, c)))
-    val dists = transform(typedlit(centroids), (c, i) =>
-      struct(((col("__vv") - lit(2.0) * V.dot(v, c))
-        + element_at(selfDots, i + 1)).as("d"), i.as("idx")))
     df.withColumn("__vv", V.dot(v, v))
-      .withColumn("cell", pick(dists))
+      .withColumn("cell", pick(distances(col("__vv"), v, typedlit(centroids),
+        typedlit(centroids.map(c => leftFoldDot(c, c))), 0)))
       .drop("__vv")
   }
 
@@ -573,20 +584,6 @@ object Similarity {
     (typedLit(flat), typedLit(flat.map(v => leftFoldDot(v, v))))
   }
 
-  /** Argmin codeword index for one subspace slice — [[withCell]]'s
-    * distance (every term a dot product, ties to the lower index) over
-    * the sliced vector, the candidate loop a HOF over subspace j's slice
-    * of the codeword table. `selfDot` is ip(slice, slice), passed in as
-    * a pre-projected attribute because it is constant across the
-    * codeword candidates — inlining it would recompute the same dot
-    * `codewords` times per subspace; the substitution leaves the IEEE
-    * op order of each distance ((self − 2·dot) + ‖c‖²) unchanged. */
-  private def pqCode(vecSlice: Column, selfDot: Column, table: Column,
-      nsq: Column, j: Int, cw: Int): Column =
-    argmin(transform(slice(table, j * cw + 1, cw), (cwv, c) =>
-      struct((selfDot - lit(2.0) * V.dot(vecSlice, cwv)
-        + element_at(nsq, lit(j * cw + 1) + c)).as("d"), c.as("idx"))))
-
   /** PQ-encode a corpus: (vec_id, codes) where codes(j) is the nearest
     * codeword index of subspace j's slice. THE memory lever of
     * billion-scale ANN: an m-byte code replaces a dim×4-byte vector
@@ -595,9 +592,13 @@ object Similarity {
     * pass — the subspace slices and their self-dots are projected as
     * attributes first (multi-referenced non-cheap expressions, so
     * CollapseProject keeps the boundaries), leaving m × codewords small
-    * query-codeword dots per row, no shuffle. With `cellCentroids`, the
-    * IVF cell ([[withCell]]'s argmin) rides the same pass as a `cell`
-    * column — never a second corpus-sized join just to attach it. */
+    * query-codeword dots per row, no shuffle: codes(j) is the [[argmin]]
+    * of the [[distances]] list over subspace j's slice of the codeword
+    * table, its v·v the pre-projected slice self-dot (constant across
+    * the codewords, so never recomputed per candidate). With
+    * `cellCentroids`, the IVF cell ([[withCell]]'s argmin) rides the
+    * same pass as a `cell` column — never a second corpus-sized join
+    * just to attach it. */
   def pqEncode(corpus: DataFrame, codebooks: Seq[Seq[Seq[Double]]],
       cellCentroids: Seq[Seq[Double]] = Nil): DataFrame = {
     val m = codebooks.size
@@ -614,7 +615,8 @@ object Similarity {
     val withSelf = sliced.select(keep ++ (0 until m).flatMap(j => Seq(col(s"s_$j"),
       V.dot(col(s"s_$j"), col(s"s_$j")).as(s"ss_$j"))): _*)
     withSelf.select(keep :+ array((0 until m).map(j =>
-      pqCode(col(s"s_$j"), col(s"ss_$j"), table, nsq, j, cw)): _*).as("codes"): _*)
+      argmin(distances(col(s"ss_$j"), col(s"s_$j"),
+        slice(table, j * cw + 1, cw), nsq, j * cw))): _*).as("codes"): _*)
   }
 
   /** [[pqEncode]] plus the reconstruction norm: it depends on the CODES
@@ -807,10 +809,10 @@ object Similarity {
     require(Fs.exists(p),
       s"no centroid table at $p — not a writeIvfFlatIndex/writeIvfPqIndex " +
         "artifact (or a pointer root whose current generation lacks one)")
-    spark.read.parquet(p)
-      .orderBy(col("cell"))
-      .collect().map(r => r.getAs[scala.collection.Seq[Double]]("centroid").toSeq)
-      .toSeq
+    // nLists rows: sorted on the driver, which spares a range-partitioned
+    // orderBy its sampling job and its shuffle
+    spark.read.parquet(p).collect().toSeq.sortBy(_.getAs[Int]("cell"))
+      .map(_.getAs[scala.collection.Seq[Double]]("centroid").toSeq)
   }
 
   /** Append a NEW batch of vectors into a standing [[writeIvfFlatIndex]]
@@ -1007,9 +1009,7 @@ object Similarity {
       s"no codebook table at $p — not a writeIvfPqIndex artifact (a " +
         "writeIvfFlatIndex artifact has no PQ codebooks; probe it with " +
         "ivfFlatProbe)")
-    spark.read.parquet(p)
-      .orderBy(col("subspace"), col("code"))
-      .collect()
+    spark.read.parquet(p).collect()
       .map(r => (r.getInt(0), r.getInt(1),
         r.getAs[scala.collection.Seq[Double]]("codeword").toSeq))
       .groupBy(_._1).toSeq.sortBy(_._1)

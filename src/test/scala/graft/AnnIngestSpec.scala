@@ -532,12 +532,12 @@ class AnnIngestSpec extends SparkSpecBase {
     withTombstonedAnnIndex("graft_annin_tpin_") { (_, ix, landing) =>
       // five of these are the pressure decision: the schema inferences
       // of the tombstone and assignment tables and their one tagged
-      // aggregate (three jobs under AQE). Measured equal at the parent
-      // commit.
+      // aggregate (three jobs under AQE); the centroid read is two (its
+      // schema inference and the collect, sorted on the driver).
       jobsOf {
         AnnIngest.runIngest(spark, landing, ix, maxFilesPerTrigger = Some(1),
           compactWhenTombstoneRatio = Some(0.9))
-      } shouldBe 12
+      } shouldBe 10
     }
   }
 }

@@ -84,11 +84,12 @@ class ProbeStreamSpec extends SparkSpecBase {
       "pinned number of Spark jobs") {
     withTombstonedAnnIndex("graft_probe_tpin_") { (root, ix, landing) =>
       // two of these are the session's tombstone mask: its schema
-      // inference and its pin. Measured equal at the parent commit.
+      // inference and its pin; the centroid read is two (its schema
+      // inference and the collect — the rows are sorted on the driver).
       jobsOf {
         ProbeStream.runProbes(spark, landing, ix, root.resolve("out").toString,
           k = 5, nProbe = 2, maxFilesPerTrigger = Some(1))
-      } shouldBe 21
+      } shouldBe 19
     }
   }
 }

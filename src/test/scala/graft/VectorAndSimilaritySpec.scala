@@ -209,6 +209,21 @@ class VectorAndSimilaritySpec extends SparkSpecBase {
     ex.getMessage should include("writeIvfPqIndex")
   }
 
+  test("readCentroids reads a 4-cell index's centroids back in cell order " +
+      "in a pinned number of Spark jobs") {
+    val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    val dir = java.nio.file.Files.createTempDirectory("graft_centroid_pin_")
+    try {
+      Similarity.writeIvfFlatIndex(e, nLists = 4, dir.toString)
+      var read: Seq[Seq[Double]] = Nil
+      // the parquet read's schema inference and the collect: the sort
+      // of nLists rows runs on the driver, not as a range-partitioned
+      // orderBy (two more jobs: its sampling pass and the shuffle)
+      jobsOf { read = Similarity.readCentroids(spark, dir.toString) } shouldBe 2
+      read shouldBe Similarity.hashCentroids(e, 4)
+    } finally graft.operators.Maintenance.rmTree(dir.toFile)
+  }
+
   test("appendToIvfFlatIndex under frozen centroids ≡ direct retrieval over the union") {
     val rnd = new Random(11)
     def cluster(base: Float, n: Int, off: Long) =
