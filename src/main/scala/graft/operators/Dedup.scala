@@ -287,19 +287,26 @@ object Dedup {
         collect_set(when(paramCols.map(col(_).isNotNull).reduce(_ && _),
           struct(paramCols.map(col): _*))).as("__params"))
         .head()
-      row.getSeq[org.apache.spark.sql.Row](1).foreach { r =>
-        val (in, ik, ir) = (r.getInt(0), r.getInt(1), r.getInt(2))
-        require(in == shingleN && ik == k && ir == rowsPerBand,
-          s"near-dup index was built under (shingleN=$in, k=$ik, " +
-            s"rowsPerBand=$ir) but probed with (shingleN=$shingleN, " +
-            s"k=$k, rowsPerBand=$rowsPerBand) — admissions would be " +
-            "silently wrong; rebuild the index or probe with the " +
-            "build-time parameters")
-      }
+      requireIndexParams(row.getSeq[org.apache.spark.sql.Row](1)
+        .map(r => (r.getInt(0), r.getInt(1), r.getInt(2))), shingleN, k,
+        rowsPerBand)
       row.getLong(0)
     } else if (needCount) indexFrame.count()
     else 0L
   }
+
+  /** The parameter fail-fast over an index's (p_shingle_n, p_k,
+    * p_rows_per_band) evidence: every triple must equal the probe's. */
+  private[graft] def requireIndexParams(triples: Iterable[(Int, Int, Int)],
+      shingleN: Int, k: Int, rowsPerBand: Int): Unit =
+    triples.foreach { case (in, ik, ir) =>
+      require(in == shingleN && ik == k && ir == rowsPerBand,
+        s"near-dup index was built under (shingleN=$in, k=$ik, " +
+          s"rowsPerBand=$ir) but probed with (shingleN=$shingleN, " +
+          s"k=$k, rowsPerBand=$rowsPerBand) — admissions would be " +
+          "silently wrong; rebuild the index or probe with the " +
+          "build-time parameters")
+    }
 
   /** [[admitNewDocsWithIndex]] minus BOTH the parameter fail-fast and
     * the batch hashing, over an ALREADY-HASHED batch frame (a
@@ -599,9 +606,11 @@ object Dedup {
     * weighs one plus the elements of its array columns (the shingle sets
     * and band keys, or the cell and the embedding), so the bound caps
     * rows too. It bounds each collect (the batch, the index candidates,
-    * the vector survivors) and each driver verify's candidate layout;
-    * the quadratic pair bound (`cap`, [[InBatchPairCap]] by default)
-    * counts candidate pairs per shared key before any pair exists. Past
+    * the vector survivors, a streaming session's [[IndexView]]) and the
+    * vector verify's candidate layout (the MinHash verify reads held
+    * shingle sets, [[passes]], and lays nothing out); the quadratic
+    * pair bound (`cap`, [[InBatchPairCap]] by default) counts candidate
+    * pairs per shared key before any pair exists. Past
     * either, the distributed path runs instead ([[admitCore]]'s
     * survivorPairs / keepRepresentatives chain, unchanged). On the
     * one-job take ([[takeBounded]]) the bound holds during the transfer,
@@ -621,7 +630,14 @@ object Dedup {
     * a survivor, 772 a candidate pair in the verify) broke even at about
     * 850k verify units (1,095 pairs: 0.98×; 587 pairs: 0.90×), so the
     * bound keeps them under it too. At the bound a collect's rows retain
-    * 18–19 MB of driver heap (69–72 bytes a unit, measured). */
+    * 18–19 MB of driver heap (69–72 bytes a unit, measured).
+    *
+    * The same bound holds a streaming session's [[IndexView]], where it is
+    * a memory bound, not a speed one: measured on the same corpora up to
+    * 458k units (`tools/view_bound_probe.txt`), the view's build had paid
+    * for itself against per-trigger tree probes by the second trigger at
+    * every size, and a built view retains about 100 bytes a unit for the
+    * session's life (26 MB at 2¹⁸). */
   private[graft] val BoundedPayload = 1L << 18
 
   /** A row's weight for [[BoundedPayload]]: one plus the elements of its
@@ -643,18 +659,18 @@ object Dedup {
     else Some(rows.toSeq)
   }
 
-  /** `df` held on the driver — a LocalRelation of its rows under its own
-    * schema, brought back by one [[boundedRows]] take — when it is within
-    * [[BoundedPayload]]. Every plan over the result reads the driver's
-    * rows: a filter or projection of it is folded into a new
-    * LocalRelation while optimizing (no job), a write of it is the write
-    * job alone, and it never re-runs `df`'s plan. */
-  private[graft] def heldLocally(df: DataFrame): Option[DataFrame] =
-    boundedRows(df).map(rows =>
-      df.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*),
-        df.schema))
+  /** `df` held on the driver — a LocalRelation of `rows`, its rows as a
+    * [[boundedRows]] take brought them back, under its own schema. Every
+    * plan over the result reads the driver's rows: a filter or
+    * projection of it is folded into a new LocalRelation while optimizing
+    * (no job), a write of it is the write job alone, and it never re-runs
+    * `df`'s plan. */
+  private[graft] def heldFrame(df: DataFrame, rows: Seq[Row]): DataFrame =
+    df.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*),
+      df.schema)
 
-  /** The pairs of `pairs` that pass `verify`, evaluated on the driver: one
+  /** The pairs of `pairs` that pass `verify`, evaluated on the driver —
+    * the vector admission's in-batch verify: one
     * row per pair and per combination of the two ids' rows (a duplicated
     * id verifies every copy, as the distributed verify joins do), laid
     * out as (id_a, id_b, <payload>_a…, <payload>_b…) with the payload
@@ -693,34 +709,38 @@ object Dedup {
   private def keysOf(r: Row): Seq[Any] =
     if (r.isNullAt(1)) Nil else r.getSeq[Any](1)
 
-  /** The ids (position 0) of taken rows under each of their block keys. */
-  private def idsByKey(rows: Seq[Row]): Map[Any, Seq[Long]] =
-    rows.flatMap(r => keysOf(r).map(_ -> r.getLong(0))).groupMap(_._1)(_._2)
+  /** The ids of `rows` under each of their block keys (a key a row
+    * carries twice lists the row twice). */
+  private def idsByKey[R](rows: Seq[R], id: R => Long,
+      keys: R => Seq[Any]): Map[Any, Seq[Long]] =
+    rows.flatMap(r => keys(r).map(_ -> id(r))).groupMap(_._1)(_._2)
 
   /** The in-batch half of a bounded admission, shared by
-    * [[admitPrehashedBounded]] and [[admitNewVecsPreassignedBounded]].
-    * `survivors` are the survivor rows on the driver as (id: long, block
-    * keys, payload…) under `schema` — None when a collect crossed its
-    * bound. Two survivors sharing a block key (MinHash bands, or the one
-    * IVF cell) are a candidate (a < b, distinct: ≡ the distributed
-    * self-join); the quadratic term of the buckets is counted against
-    * `cap` before any pair materializes, so a degenerate key shared by
-    * every survivor routes to `fallback` like a past-bound collect.
-    * Candidates verify on the driver ([[verifyLocally]], no job, within
-    * `payloadCap`), the exact min-label union-find runs over the verified
-    * edges, and the admitted ids — survivors that are their component's
-    * min-id representative, sorted, a duplicated id once per row as the
-    * distributed path returns it — come back Left. Past a bound,
-    * `fallback` (the distributed keepRepresentatives chain) comes back
-    * Right. Label-equivalence of local vs distributed components is
+    * [[admitPrehashedBounded]], [[admitHeld]] and
+    * [[admitNewVecsPreassignedBounded]]. `survivors` are the survivor
+    * rows on the driver (None when a collect crossed its bound), each
+    * with its `id` and block `keys`. Two survivors sharing a block key
+    * (MinHash bands, or the one IVF cell) are a candidate (a < b,
+    * distinct: ≡ the distributed self-join); the quadratic term of the
+    * buckets is counted against `cap` before any pair materializes, so a
+    * degenerate key shared by every survivor routes to `fallback` like a
+    * past-bound collect. `verify` keeps the candidates that match under
+    * some pair of their rows (given every survivor row by id; None past
+    * its own bound), the exact min-label union-find runs over the
+    * verified edges, and the admitted ids — survivors that are their
+    * component's min-id representative, sorted, a duplicated id once per
+    * row as the distributed path returns it — come back Left. Past a
+    * bound, `fallback` (the distributed keepRepresentatives chain) comes
+    * back Right. Label-equivalence of local vs distributed components is
     * pinned by AdmitCoreComponentsSpec; AdmissionStreamSpec and
     * SemanticAdmissionSpec pin the loops end to end. */
-  private def boundedAdmit(spark: SparkSession,
-      survivors: Option[Seq[Row]], schema: StructType, verify: Column,
-      cap: Int, payloadCap: Long)(
+  private def boundedAdmit[R](survivors: Option[Seq[R]], id: R => Long,
+      keys: R => Seq[Any], cap: Int)(
+      verify: (Seq[(Long, Long)], Map[Long, Seq[R]]) =>
+        Option[Seq[(Long, Long)]])(
       fallback: => DataFrame): Either[Seq[Long], DataFrame] =
     survivors.flatMap { rows =>
-      val buckets = idsByKey(rows).values
+      val buckets = idsByKey(rows, id, keys).values
       if (buckets.map(b => b.length.toLong * (b.length - 1) / 2).sum > cap)
         None
       else {
@@ -728,16 +748,23 @@ object Dedup {
           b <- buckets; i <- b.indices; j <- i + 1 until b.length
           if b(i) != b(j)
         } yield (b(i) min b(j), b(i) max b(j))).toSet
-        val byId = rows.groupBy(_.getLong(0))
-        verifyLocally(spark, cand.toSeq.sorted, byId, byId,
-            schema.fields.drop(2).toSeq, verify, payloadCap)
-          .map { edges =>
-            val comp = localMinLabelComponents(edges)
-            rows.map(_.getLong(0)).filter(x => comp.get(x).forall(_ == x))
-              .sorted
-          }
+        verify(cand.toSeq.sorted, rows.groupBy(id)).map { edges =>
+          val comp = localMinLabelComponents(edges)
+          rows.map(id).filter(x => comp.get(x).forall(_ == x)).sorted
+        }
       }
     }.toLeft(fallback)
+
+  /** [[boundedAdmit]] over taken rows, verified by [[verifyLocally]]
+    * under `verify` with the payload columns from position 2 of
+    * `schema`. */
+  private def boundedAdmitRows(spark: SparkSession,
+      survivors: Option[Seq[Row]], schema: StructType, verify: Column,
+      cap: Int, payloadCap: Long)(
+      fallback: => DataFrame): Either[Seq[Long], DataFrame] =
+    boundedAdmit[Row](survivors, _.getLong(0), keysOf, cap)((cand, byId) =>
+      verifyLocally(spark, cand, byId, byId, schema.fields.drop(2).toSeq,
+        verify, payloadCap))(fallback)
 
   /** A bounded admission's result as the filter the streaming loops put
     * on every frame keyed by `id` (the admitted rows, the index
@@ -758,76 +785,180 @@ object Dedup {
     }
 
   /** [[admitPrehashed]] with the admitted ids returned DRIVER-SIDE when
-    * bounded — the streaming admission's per-batch shape, two bounded
+    * bounded — the streaming admission's per-batch shape when it probes
+    * the index tree ([[admitHeld]] probes a held view), two bounded
     * collects and no other job:
     *  1. the batch collect: one [[boundedRows]] take brings the batch's
     *     (doc_id, bands, sh) to the driver (free when `newSigs` is
-    *     already held locally — [[heldLocally]], as the streaming loop
-    *     does);
+    *     already held — [[heldFrame]], as the streaming loop does);
     *  2. the index collect: one more take brings back the index rows
     *     that share a band with the batch — `indexFrame` filtered by an
     *     `isInCollection` of the batch's bands over each row's bands, one
     *     map-only scan with no exchange, which also carries the shingles
     *     (no second read of the index).
-    * Every Jaccard verify then runs on the driver ([[verifyLocally]]):
-    * index-vs-batch candidates (a batch and an index row sharing a band,
-    * distinct id pairs — ≡ the band join) first, then the in-batch
-    * candidates of the survivors through [[boundedAdmit]]. The verify
-    * reads every row of a candidate index id, as the distributed verify
-    * join does: an id on several rows (a re-landed doc_id with new text)
-    * may have rows that share no band with the batch, so the candidates
-    * the band-sharing rows leave unmatched verify against all rows of
-    * their ids, brought back by one more collect (an `isInCollection` on
-    * doc_id) — run only when such candidates exist. Past
-    * [[BoundedPayload]] on any collect or verify, past `cap` candidate
-    * pairs (index-vs-batch, counted per shared band before any pair
-    * exists, or in-batch), or for non-long ids the distributed
-    * [[admitCore]] comes back instead (Right). Same decisions as
-    * [[admitPrehashed]]: BoundedAdmissionSpec pins it on seeded corpora
-    * and past each bound. */
+    * Both are held ([[HeldSig]]) and decided by [[admitHeld]]'s core
+    * ([[admitAgainst]]). It verifies every row of a candidate index id,
+    * as the distributed verify join does: the candidates the
+    * band-sharing rows leave unmatched verify against all rows of their
+    * ids, brought back by one more collect (an `isInCollection` on
+    * doc_id) — run only when such candidates exist. Past `payloadCap` on
+    * any collect, past `cap` candidate pairs, or for non-long ids the
+    * distributed [[admitCore]] comes back instead (Right). Same
+    * decisions as [[admitPrehashed]]: BoundedAdmissionSpec pins it on
+    * seeded corpora and past each bound. */
   private[graft] def admitPrehashedBounded(newSigs: DataFrame,
       indexFrame: DataFrame, threshold: Double, cap: Int = InBatchPairCap,
       payloadCap: Long = BoundedPayload): Either[Seq[Long], DataFrame] = {
-    val spark = newSigs.sparkSession
     val nw = newSigs.select(col("doc_id"), col("bands"), col("sh"))
     val ix = indexFrame.select(col("doc_id"), col("bands"), col("sh"))
-    val verify = jaccard(col("sh_a"), col("sh_b")) >= threshold
     def distributed: DataFrame = admitCore(nw, ix, threshold)
     if (!Seq(nw, ix).forall(_.schema("doc_id").dataType == LongType))
       return Right(distributed)
-    def indexRows(keep: Column): Option[Seq[Row]] =
-      boundedRows(ix.filter(col("doc_id").isNotNull && keep), payloadCap)
-    val survivors = boundedRows(nw, payloadCap).flatMap { batch =>
-      val byBand = idsByKey(batch)
-      val probed =
-        if (byBand.isEmpty) Some(Nil)
-        else indexRows(exists(col("bands"), _.isInCollection(byBand.keys)))
-      probed.flatMap { index =>
-        val ixByBand = idsByKey(index)
-        if (ixByBand.iterator.map { case (k, os) =>
-            os.length.toLong * byBand.getOrElse(k, Nil).length }.sum > cap)
-          None
-        else {
-          val cand = ixByBand.toSeq.flatMap { case (k, os) =>
-            for (n <- byBand.getOrElse(k, Nil); o <- os) yield (n, o)
-          }.distinct.sorted
-          val byId = batch.groupBy(_.getLong(0))
-          def matches(rows: Seq[Row], pairs: Seq[(Long, Long)]) = {
-            val rowsOf = rows.groupBy(_.getLong(0))
-            verifyLocally(spark, pairs.filter(p => rowsOf.contains(p._2)),
-              byId, rowsOf, Seq(nw.schema("sh")), verify, payloadCap)
-              .map(_.map(_._1).toSet)
-          }
-          matches(index, cand).flatMap { matched =>
-            val open = cand.filterNot(p => matched(p._1))
-            if (open.isEmpty) Some(matched)
-            else indexRows(col("doc_id").isInCollection(open.map(_._2).distinct))
-              .flatMap(matches(_, open)).map(matched ++ _)
-          }.map(matched => batch.filterNot(r => matched(r.getLong(0))))
-        }
+    def held(df: DataFrame): Option[Seq[HeldSig]] =
+      boundedRows(df, payloadCap).map(HeldSig.of(_, df.schema, _ => -1L))
+    def indexRows(keep: Column) = held(ix.filter(col("doc_id").isNotNull && keep))
+    held(nw).flatMap { batch =>
+      val bands = batch.flatMap(_.bands).distinct
+      (if (bands.isEmpty) Some(Nil)
+        else indexRows(exists(col("bands"), _.isInCollection(bands))))
+        .map(batch -> _)
+    }.fold[Either[Seq[Long], DataFrame]](Right(distributed)) {
+      case (batch, shared) =>
+        admitAgainst(batch, shared, ids =>
+          indexRows(col("doc_id").isInCollection(ids)).map(_.groupBy(_.id)),
+          threshold, cap)(distributed)
+    }
+  }
+
+  /** A signature row held on the driver: its id, band keys and shingle
+    * set (built once, for the driver verify), its [[rowWeight]] as taken,
+    * and its origin — the batch id of the `batch-<id>` subdir that folded
+    * it back, −1 for a standing root. */
+  private[graft] final class HeldSig(val id: Long, val bands: Seq[Any],
+      val sh: Set[Any], val weight: Long, val origin: Long)
+
+  private[graft] object HeldSig {
+    /** The rows of a signature frame of `schema` (its `doc_id`, `bands`
+      * and `sh` columns, by name) as held signatures of `origin`. */
+    def of(rows: Seq[Row], schema: StructType,
+        origin: Row => Long): Seq[HeldSig] = {
+      val Seq(i, b, s) = Seq("doc_id", "bands", "sh").map(schema.fieldIndex)
+      rows.map { r =>
+        def arr(j: Int) = if (r.isNullAt(j)) null else r.getSeq[Any](j)
+        val (bands, sh) = (arr(b), arr(s))
+        new HeldSig(r.getLong(i), Option(bands).getOrElse(Nil),
+          Option(sh).map(_.toSet).orNull, rowWeight(r), origin(r))
       }
     }
-    boundedAdmit(spark, survivors, nw.schema, verify, cap, payloadCap)(
+  }
+
+  /** [[jaccard]] ≥ `threshold` on two held shingle sets: |A∩B| / |A∪B|
+    * as the same IEEE double division. A null or empty set passes
+    * nothing, as the Column's null does. */
+  private def passes(a: Set[Any], b: Set[Any], threshold: Double): Boolean =
+    a != null && b != null && {
+      val inter = (if (a.size <= b.size) a.count(b) else b.count(a)).toDouble
+      val union = a.size + b.size - inter
+      union > 0 && inter / union >= threshold
+    }
+
+  /** A near-dup signature index held on the driver for an ingest session:
+    * its rows with their origins ([[HeldSig]]), indexed by band and by
+    * id, deleted ids masked. [[landed]] folds a batch back, [[compacted]]
+    * mirrors a mid-stream tree fold. */
+  private[graft] final class IndexView(val sigs: Vector[HeldSig],
+      val tombstoned: Set[Long]) {
+    val weight: Long = sigs.iterator.map(_.weight).sum
+    lazy val byBand: Map[Any, Vector[Int]] = sigs.indices.toVector
+      .flatMap(i => sigs(i).bands.map(_ -> i)).groupMap(_._1)(_._2)
+    lazy val byId: Map[Long, Vector[HeldSig]] = sigs.groupBy(_.id)
+
+    /** The view after batch `batchId` folded back `rows` (its admitted
+      * signatures, which replace any earlier attempt's), None past
+      * [[BoundedPayload]]. */
+    def landed(batchId: Long, rows: Seq[HeldSig]): Option[IndexView] =
+      Some(new IndexView(sigs.filter(_.origin != batchId) ++
+          rows.filterNot(r => tombstoned(r.id)), tombstoned))
+        .filter(_.weight <= BoundedPayload)
+
+    /** The view after a fold of every row outside batch `keep`'s subdir
+      * into the standing root. */
+    def compacted(keep: Long): IndexView =
+      new IndexView(sigs.map(r => if (r.origin == keep) r
+        else new HeldSig(r.id, r.bands, r.sh, r.weight, -1L)), tombstoned)
+  }
+
+  private[graft] object IndexView {
+    /** The view of taken index rows of `schema` ([[HeldSig.of]]) minus
+      * the `tombstoned` ids and the null ids no probe can match. */
+    def apply(rows: Seq[Row], schema: StructType, origin: Row => Long,
+        tombstoned: Set[Long]): IndexView = {
+      val id = schema.fieldIndex("doc_id")
+      new IndexView(HeldSig.of(rows.filterNot(_.isNullAt(id)), schema, origin)
+        .filterNot(r => tombstoned(r.id)).toVector, tombstoned)
+    }
+  }
+
+  /** [[admitPrehashedBounded]] against a session's [[IndexView]] — the
+    * streaming loop's per-batch probe when its index is held: `nw`, the
+    * held signatures of a [[nearDupIndex]] frame, probes the view's rows
+    * of origin < `batchId` (a replayed batch never sees its own
+    * fold-back, nor a later batch's) through [[admitAgainst]], and runs
+    * no job. BoundedAdmissionSpec pins it ≡ [[admitPrehashed]]. */
+  private[graft] def admitHeld(nw: Seq[HeldSig], view: IndexView,
+      batchId: Long, threshold: Double, cap: Int = InBatchPairCap)(
+      distributed: => DataFrame): Either[Seq[Long], DataFrame] = {
+    val shared = nw.iterator.flatMap(_.bands).distinct
+      .flatMap(view.byBand.getOrElse(_, Vector.empty))
+      .filter(view.sigs(_).origin < batchId).toVector.distinct
+      .map(view.sigs)
+    admitAgainst(nw, shared, ids => Some(ids.map(o =>
+        o -> view.byId(o).filter(_.origin < batchId)).toMap),
+      threshold, cap)(distributed)
+  }
+
+  /** The one MinHash probe of a bounded admission, on held signatures:
+    * the batch `nw` against `shared`, the index rows that share a band
+    * with it. A batch and an index row sharing a band are a candidate
+    * (distinct id pairs — ≡ the band join); their count per shared band
+    * is checked against `cap` before any pair exists. A candidate
+    * verifies against the index id's band-sharing rows first, and those
+    * it leaves unmatched against every row of their ids (`rowsOf`, None
+    * past its bound), as the distributed verify join reads every row of
+    * an id: an id on several rows (a re-landed doc_id with new text) may
+    * have rows that share no band with the batch. The batch docs no
+    * index row matches then go through [[boundedAdmit]]. Every verify is
+    * [[passes]] on the held shingle sets. Past a bound, `distributed`
+    * comes back Right. */
+  private def admitAgainst(nw: Seq[HeldSig], shared: Seq[HeldSig],
+      rowsOf: Seq[Long] => Option[Map[Long, Seq[HeldSig]]],
+      threshold: Double, cap: Int)(
+      distributed: => DataFrame): Either[Seq[Long], DataFrame] = {
+    val byBand = idsByKey[HeldSig](nw, _.id, _.bands)
+    val ixByBand = idsByKey[HeldSig](shared, _.id, _.bands)
+    val byId = nw.groupBy(_.id)
+    def matches(as: Seq[HeldSig], bs: Seq[HeldSig]) =
+      as.exists(a => bs.exists(b => passes(a.sh, b.sh, threshold)))
+    def matched(pairs: Set[(Long, Long)], rows: Map[Long, Seq[HeldSig]]) =
+      pairs.filter { case (n, o) => matches(byId(n), rows.getOrElse(o, Nil)) }
+        .map(_._1)
+    val survivors =
+      if (ixByBand.iterator.map { case (k, os) =>
+          os.length.toLong * byBand.getOrElse(k, Nil).length }.sum > cap)
+        None
+      else {
+        val cand = ixByBand.iterator.flatMap { case (k, os) =>
+          for (n <- byBand.getOrElse(k, Nil); o <- os) yield (n, o)
+        }.toSet[(Long, Long)]
+        val hit = matched(cand, shared.groupBy(_.id))
+        val open = cand.filterNot(p => hit(p._1))
+        (if (open.isEmpty) Some(hit)
+          else rowsOf(open.map(_._2).toSeq.distinct.sorted)
+            .map(all => hit ++ matched(open, all)))
+          .map(rejected => nw.filterNot(r => rejected(r.id)))
+      }
+    boundedAdmit[HeldSig](survivors, _.id, _.bands, cap)((cand, rows) =>
+      Some(cand.filter { case (a, b) => matches(rows(a), rows(b)) }))(
       distributed)
   }
 
@@ -1737,7 +1868,7 @@ object Dedup {
     val (sv, pairs) = vecSurvivorPairs(asg, standing, threshold)
     val taken = sv.select(col("vec_id"), array(col("cell")).as("cells"),
       col("embedding"), col("c_norm"))
-    boundedAdmit(asg.sparkSession,
+    boundedAdmitRows(asg.sparkSession,
       if (sv.schema("vec_id").dataType == LongType)
         boundedRows(taken).filter(_.length <= cap)
       else None,

@@ -2,8 +2,16 @@ package graft.operators
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileContext, FileStatus, FileSystem, FileUtil, Options, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{FooterSchema, ParquetFooterReader}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.StructType
+
+import scala.jdk.CollectionConverters._
 
 /** Filesystem primitives for the artifact lifecycle (staged write-swaps,
   * tree sizing, marker files), on the Hadoop [[FileSystem]] API — so every
@@ -156,17 +164,74 @@ object Fs {
       catch { case _: java.io.IOException => false }
   }
 
-  /** Data bytes in the tree at `path`: recursive, skipping `_`/`.`-
-    * prefixed names (Spark's hidden-file rule) at every level. 0 when
-    * absent. */
+  /** Spark's hidden-file rule: a `_`/`.`-prefixed name holds no data. */
+  private def hidden(st: FileStatus): Boolean =
+    st.getPath.getName.startsWith("_") || st.getPath.getName.startsWith(".")
+
+  /** The footer of the parquet file `st`, read on the driver. */
+  private def footerOf(spark: SparkSession, st: FileStatus,
+      filter: ParquetMetadataConverter.MetadataFilter): ParquetMetadata =
+    ParquetFooterReader.readFooter(
+      HadoopInputFile.fromStatus(st, spark.sparkContext.hadoopConfiguration),
+      filter)
+
+  /** Data bytes in the tree at `path`: recursive, skipping hidden names
+    * at every level. 0 when absent. */
   def dataBytes(path: String): Long = {
     val (fs, p) = resolve(path)
     def walk(st: FileStatus): Long =
-      if (st.getPath.getName.startsWith("_") ||
-          st.getPath.getName.startsWith(".")) 0L
+      if (hidden(st)) 0L
       else if (st.isDirectory) fs.listStatus(st.getPath).map(walk).sum
       else st.getLen
     if (!fs.exists(p)) 0L else fs.listStatus(p).map(walk).sum
+  }
+
+  /** The weight of the parquet table at `path` as a bounded take counts
+    * it ([[Dedup.BoundedPayload]]: a row weighs one plus the elements of
+    * its array columns), summed on the driver from every data file's
+    * footer (walked like [[dataBytes]]), with no job: the row count plus
+    * the leaf values stored under the `arrays` columns. A null or empty
+    * array stores one value, so a take of those columns never weighs
+    * more. 0 when absent. */
+  def footerWeight(spark: SparkSession, path: String,
+      arrays: Set[String]): Long = {
+    val (fs, p) = resolve(path)
+    def walk(st: FileStatus): Long =
+      if (hidden(st)) 0L
+      else if (st.isDirectory) fs.listStatus(st.getPath).map(walk).sum
+      else if (st.getLen == 0) 0L
+      else footerOf(spark, st, ParquetMetadataConverter.NO_FILTER)
+        .getBlocks.asScala.iterator.map(b => b.getRowCount +
+          b.getColumns.asScala.iterator.filter(c => arrays(c.getPath.toArray.head))
+            .map(_.getValueCount).sum).sum
+    if (!fs.exists(p)) 0L else fs.listStatus(p).map(walk).sum
+  }
+
+  /** The schema of the parquet table at `path`, read on the driver from
+    * one footer — the first data file in sorted order (walked like
+    * [[dataBytes]]) — through Spark's own footer conversion under the
+    * session's converter settings, so it costs no job where a plain
+    * `spark.read.parquet(path).schema` runs a footer-reading job. The
+    * footer schema then goes through the reader, which attaches any
+    * `key=value` partition columns and the nullability inference gives.
+    * `recursive` reads the tree as `recursiveFileLookup` does (no
+    * partition columns). With no data file standing it is Spark's
+    * inference, which fails on a missing or empty table as a read does. */
+  def parquetSchema(spark: SparkSession, path: String,
+      recursive: Boolean = false): StructType = {
+    val (fs, root) = resolve(path)
+    def first(dir: Path): Option[FileStatus] =
+      fs.listStatus(dir).filterNot(hidden).sortBy(_.getPath.getName)
+        .iterator.flatMap(st =>
+          if (st.isDirectory) first(st.getPath)
+          else if (st.getLen > 0) Some(st) else None)
+        .nextOption()
+    val reader = spark.read.option("recursiveFileLookup", recursive.toString)
+    val footer = scala.util.Try(fs.getFileStatus(root)).toOption.flatMap(st =>
+      if (st.isDirectory) first(root) else Some(st))
+    footer.flatMap(st => FooterSchema.of(new Footer(st.getPath,
+        footerOf(spark, st, ParquetMetadataConverter.SKIP_ROW_GROUPS)), spark))
+      .fold(reader.parquet(path).schema)(reader.schema(_).parquet(path).schema)
   }
 
   /** Top-level entry names under `path` (empty when absent). */

@@ -809,9 +809,11 @@ object Similarity {
     require(Fs.exists(p),
       s"no centroid table at $p — not a writeIvfFlatIndex/writeIvfPqIndex " +
         "artifact (or a pointer root whose current generation lacks one)")
-    // nLists rows: sorted on the driver, which spares a range-partitioned
-    // orderBy its sampling job and its shuffle
-    spark.read.parquet(p).collect().toSeq.sortBy(_.getAs[Int]("cell"))
+    // nLists rows, read under their footer schema (no inference job):
+    // sorted on the driver, which spares a range-partitioned orderBy its
+    // sampling job and its shuffle
+    spark.read.schema(Fs.parquetSchema(spark, p)).parquet(p).collect().toSeq
+      .sortBy(_.getAs[Int]("cell"))
       .map(_.getAs[scala.collection.Seq[Double]]("centroid").toSeq)
   }
 
@@ -1009,7 +1011,7 @@ object Similarity {
       s"no codebook table at $p — not a writeIvfPqIndex artifact (a " +
         "writeIvfFlatIndex artifact has no PQ codebooks; probe it with " +
         "ivfFlatProbe)")
-    spark.read.parquet(p).collect()
+    spark.read.schema(Fs.parquetSchema(spark, p)).parquet(p).collect()
       .map(r => (r.getInt(0), r.getInt(1),
         r.getAs[scala.collection.Seq[Double]]("codeword").toSeq))
       .groupBy(_._1).toSeq.sortBy(_._1)

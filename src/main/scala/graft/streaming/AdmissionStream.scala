@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
@@ -24,14 +24,24 @@ import graft.operators.{Dedup, Fs}
   * re-shingle of history — which is what makes the loop viable when the
   * standing corpus is 100 TB and the stream is a firehose.
   *
-  * Per-trigger job budget (bounded path, no tombstones): the batch
-  * collect (the landing scan and hash — two jobs when the one-file
-  * batch is spread over the cores first), the index collect (one
-  * map-only scan), the two concurrent writes, and whatever the observer
-  * runs (one job for [[TopNStream.boardFold]]) — six in all, and one
-  * more index collect in a batch where a document shares a band with an
-  * index id but matches none of its band-sharing rows (the id's other
-  * rows verify too). Every verify runs on the driver
+  * Session-resident index view: the session collects the index once
+  * ([[Dedup.IndexView]], within [[Dedup.BoundedPayload]]), probes each
+  * batch against it on the driver ([[Dedup.admitHeld]]) and appends each
+  * batch's admitted signatures to it once its writes commit, so
+  * per-batch state reuses the last batch's work instead of re-scanning
+  * the tree. A view that would cross the bound, or a batch decided off
+  * it, drops it; the session then probes the tree per batch, as one
+  * whose index is too big from the start does (the tree's footers
+  * decide that before anything is taken).
+  *
+  * Per-trigger job budget (view held, no tombstones): the batch collect
+  * (the landing scan and hash — two jobs when the one-file batch is
+  * spread over the cores first), the two concurrent writes, and
+  * whatever the observer runs (one job for [[TopNStream.boardFold]]) —
+  * five in all. Probing the tree adds the index collect (one map-only
+  * scan) and one more in a batch where a document shares a band with
+  * an index id but matches none of its band-sharing rows (the id's
+  * other rows verify too); every verify still runs on the driver
   * ([[Dedup.admitPrehashedBounded]]).
   *
   * Exactly-once: the index append and the admissions append are both
@@ -44,7 +54,8 @@ import graft.operators.{Dedup, Fs}
   * with its own signatures; probing them would reject the whole replay
   * and the overwrite would then silently drop it). The self-exclusion
   * makes the admission decision a pure function of the batch and the
-  * PRIOR batches' index — replays, including a full re-invocation of
+  * PRIOR batches' index (the view applies the same rule to each held
+  * row's origin) — replays, including a full re-invocation of
   * [[runAdmission]] against the same dirs (fresh checkpoint restarts
   * batchIds at 0), land the same admissions. Both tables are read with
   * recursiveFileLookup (plain nested dirs, no partition-column
@@ -117,6 +128,37 @@ object AdmissionStream {
     StructField("doc_id", LongType),
     StructField("text", StringType)))
 
+  /** The index tree's top-level data entries, each with its origin: the
+    * id of a `batch-<id>` subdir, −1 for anything else (the seed,
+    * compacted flat files). Hidden entries (the tombstone table, markers)
+    * are never data roots — an EXPLICIT path bypasses Spark's
+    * hidden-file rule. */
+  private def treeEntries(spark: SparkSession,
+      indexPath: String): Seq[(String, Long)] = {
+    val base = new org.apache.hadoop.fs.Path(indexPath)
+    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.listStatus(base).toSeq.flatMap { st =>
+      val n = st.getPath.getName
+      val origin =
+        if (st.isDirectory && n.startsWith("batch-"))
+          scala.util.Try(n.stripPrefix("batch-").toLong).getOrElse(-1L)
+        else -1L
+      if (n.startsWith("_") || n.startsWith(".")) None
+      else Some(st.getPath.toString -> origin)
+    }
+  }
+
+  /** `paths` read as one index frame, with recursiveFileLookup under the
+    * session's pinned `indexSchema` (fold-backs append rows of the same
+    * shape, so re-inferring it per micro-batch would re-read footers for
+    * nothing). */
+  private def readIndex(spark: SparkSession, paths: Seq[String],
+      indexSchema: Option[StructType]): DataFrame = {
+    val reader = spark.read.option("recursiveFileLookup", "true")
+    indexSchema.foreach(reader.schema)
+    reader.parquet(paths: _*)
+  }
+
   /** The index tree minus the batch's own subdir AND any LATER batch's —
     * the replay-idempotence read (see the object scaladoc): the decision
     * for batch b must be a function of the batches strictly BEFORE b.
@@ -125,37 +167,64 @@ object AdmissionStream {
     * starts over at batch 0 with the prior run's later subdirs still
     * standing — probing those would change batch 0's decisions (a doc
     * can match a LATER admission it never saw in the first run). So:
-    * keep `batch-<id>` only for id < excludeBatchId; non-batch entries
-    * (the seed) always read. */
+    * keep the entries of origin < `excludeBatchId` ([[treeEntries]]; the
+    * seed always reads). Deleted-but-not-yet-compacted docs are masked,
+    * so a streamed document that matches ONLY deleted docs admits; the
+    * table was resolved ONCE per session (deletes are a between-sessions
+    * verb). */
   private def indexExcludingBatch(spark: SparkSession, indexPath: String,
       excludeBatchId: Long, tombstones: Option[DataFrame],
-      indexSchema: Option[StructType] = None): DataFrame = {
-    val base = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val paths = fs.listStatus(base)
-      .filterNot { st =>
-        val n = st.getPath.getName
-        // hidden entries (the tombstone table, markers) must never be
-        // listed as data roots — an EXPLICIT path bypasses Spark's
-        // hidden-file rule
-        n.startsWith("_") || n.startsWith(".") ||
-        (st.isDirectory && n.startsWith("batch-") &&
-          scala.util.Try(n.stripPrefix("batch-").toLong).toOption
-            .exists(_ >= excludeBatchId))
-      }
-      .map(_.getPath.toString)
-    // the index schema is CONSTANT under a running session (fold-backs
-    // append rows of the same shape), so the session resolves it once and
-    // pins it here — re-inferring it per micro-batch re-reads parquet
-    // footers over the whole tree, pure per-batch driver fixed cost
-    val reader = spark.read
-    indexSchema.foreach(reader.schema)
-    // deleted-but-not-yet-compacted docs are masked from the probed set,
-    // so a streamed document that matches ONLY deleted docs admits; the
-    // table was resolved ONCE per session (deletes are a between-sessions
-    // verb)
-    Fs.masked(reader.option("recursiveFileLookup", "true").parquet(paths: _*),
+      indexSchema: Option[StructType]): DataFrame =
+    Fs.masked(readIndex(spark, treeEntries(spark, indexPath)
+        .collect { case (p, o) if o < excludeBatchId => p }, indexSchema),
       tombstones, "doc_id", "doc_id")
+
+  /** The session's index view ([[Dedup.IndexView]]): the tree's
+    * (doc_id, bands, sh, p_*) rows, each tagged with its origin
+    * ([[treeEntries]]), brought back by one [[Dedup.boundedRows]] take,
+    * with the parameter fail-fast run over them; and the deleted ids,
+    * one more take when a tombstone table stands. Returns the view with
+    * the deletes masked, the tree's row count (the pressure denominator)
+    * and the distinct deleted ids (its numerator). None for non-long ids,
+    * or when either table weighs more than [[Dedup.BoundedPayload]] —
+    * decided from the footers ([[Fs.footerWeight]]) before anything is
+    * taken, so a session past the bound brings no index row to the
+    * driver: it probes the tree. */
+  private def indexView(spark: SparkSession, indexPath: String,
+      indexSchema: StructType, tombstones: Option[DataFrame], shingleN: Int,
+      k: Int, rowsPerBand: Int): Option[(Dedup.IndexView, Long, Long)] = {
+    val params = Seq("p_shingle_n", "p_k", "p_rows_per_band")
+      .filter(indexSchema.fieldNames.contains)
+    val longIds = (indexSchema +: tombstones.map(_.schema).toSeq)
+      .forall(_.find(_.name == "doc_id").exists(_.dataType == LongType))
+    val fits = longIds &&
+      Fs.footerWeight(spark, indexPath, Set("bands", "sh")) <=
+        Dedup.BoundedPayload &&
+      tombstones.forall(_ => Fs.footerWeight(spark,
+        s"$indexPath/${Fs.TombstonesSubdir}", Set.empty) <= Dedup.BoundedPayload)
+    val tombIds = if (!fits) None
+      else tombstones.fold(Option(Seq.empty[Row]))(Dedup.boundedRows(_))
+    tombIds.flatMap { tids =>
+      val frame = treeEntries(spark, indexPath).groupMap(_._2)(_._1).toSeq
+        .map { case (origin, paths) =>
+          readIndex(spark, paths, Some(indexSchema))
+            .select((Seq("doc_id", "bands", "sh") ++ params).map(col) :+
+              lit(origin).as("origin"): _*)
+        }.reduceOption(_ unionByName _)
+      val taken = frame.fold(Option(Seq.empty[Row]))(Dedup.boundedRows(_))
+      taken.map { rows =>
+        if (params.size == 3)
+          Dedup.requireIndexParams(rows.iterator
+            .filter(r => (3 to 5).forall(!r.isNullAt(_)))
+            .map(r => (r.getInt(3), r.getInt(4), r.getInt(5))).toSet,
+            shingleN, k, rowsPerBand)
+        val deleted = tids.map(r => Option(r.get(0))).distinct
+        (Dedup.IndexView(rows, frame.fold(indexSchema)(_.schema),
+            _.getLong(3 + params.size),
+            deleted.flatten.map(_.asInstanceOf[Long]).toSet),
+          rows.size.toLong, deleted.size.toLong)
+      }
+    }
   }
 
   /** Drop `batch-<id>` subdirs with id STRICTLY AFTER the run's last
@@ -284,45 +353,45 @@ object AdmissionStream {
       checkpointDir: Option[String] = None,
       onBatchAdmitted: Option[(DataFrame, Long) => Unit] = None): DataFrame = {
     // ---- ONE artifact-state resolution per session ----
-    // The session prologue previously paid one scan per VERB: the
-    // pressure policy counted the tombstones and the index, the
-    // parameter fail-fast re-scanned the index for its RLE'd constants,
-    // and the tombstone mask read the table a second time — four jobs
-    // where the artifact state is one tree + one side table. Now: the
-    // tombstone table is read ONCE (distinct + pinned — the distinct
-    // both dedups replayed deletes for the pressure numerator and
-    // shrinks the per-batch anti-join's build side), and the index pays
-    // ONE aggregate job carrying both the parameter evidence and the
-    // pressure denominator. The pre-fold evidence stands for the
+    // (Pointer-root discipline: resolve the CURRENT generation first —
+    // tombstones live inside it, and a root-level read would union every
+    // retained superseded generation.) The index schema comes from one
+    // footer on the driver and is pinned for every read of the tree
+    // (fold-backs append the same shape; a fired pressure fold carries
+    // every column through).
+    val pre = Fs.concrete(indexPath)
+    val sessionIndexSchema = scala.util.Try(
+      Fs.parquetSchema(spark, pre, recursive = true)).toOption
+    val tombs = Fs.tombstones(spark, pre, "doc_id")
+    // the session-resident view: one collect of the tree, which also
+    // carries the parameter evidence and both pressure counts
+    val viewed = sessionIndexSchema.flatMap(indexView(spark, pre, _, tombs,
+      shingleN, k, rowsPerBand))
+    // without a view, today's prologue: the tombstone table read ONCE
+    // (distinct + pinned — the distinct dedups replayed deletes for the
+    // pressure numerator and shrinks the per-batch anti-join's build
+    // side) and ONE aggregate over the tree for the parameter evidence
+    // and the pressure denominator. The pre-fold evidence stands for the
     // post-fold tree too: compaction carries the p_* columns through
     // unchanged, it only drops deleted rows.
-    // (Pointer-root discipline unchanged: resolve the CURRENT
-    // generation first — tombstones live inside it, and a root-level
-    // read would union every retained superseded generation.)
-    val pre = Fs.concrete(indexPath)
-    val preTombs = Fs.tombstones(spark, pre, "doc_id")
-      .map(_.distinct().localCheckpoint(true))
-    val preFrame = scala.util.Try(
-        spark.read.option("recursiveFileLookup", "true").parquet(pre))
-      .toOption
-    val standingRows = preFrame
-      .map(ix => Dedup.validateIndexParamsAndCount(ix, shingleN, k,
-        rowsPerBand,
-        needCount = compactWhenTombstoneRatio.isDefined && preTombs.nonEmpty))
-      .getOrElse(0L)
-    // the session's index schema, resolved once off the prologue read and
-    // pinned for every per-batch probe (fold-backs append the same shape;
-    // a fired pressure fold carries every column through) — see
-    // [[indexExcludingBatch]]'s per-batch footer-inference note
-    val sessionIndexSchema = preFrame.map(_.schema)
+    val preTombs = if (viewed.isEmpty)
+      tombs.map(_.distinct().localCheckpoint(true)) else None
+    val standingRows = viewed.fold(sessionIndexSchema.fold(0L)(sc =>
+      Dedup.validateIndexParamsAndCount(readIndex(spark, Seq(pre), Some(sc)),
+        shingleN, k, rowsPerBand,
+        needCount = compactWhenTombstoneRatio.isDefined && tombs.nonEmpty)))(
+      _._2)
     // tombstone-pressure fold (deletes are a between-sessions verb, so
     // the ratio is checked once at session start): a fired fold removes
     // the tombstone table WITH the deleted rows, so the session mask
-    // below is None; the tombstones are counted off the pinned distinct
-    // frame — no table re-read
-    val folded = compactWhenTombstoneRatio.exists(theta =>
-      preTombs.exists(tb => Fs.overPressure(tb.count(), standingRows, theta)))
+    // below is None, and every held row is standing after it
+    val folded = compactWhenTombstoneRatio.exists(theta => tombs.nonEmpty &&
+      Fs.overPressure(viewed.fold(preTombs.fold(0L)(_.count()))(_._3),
+        standingRows, theta))
     if (folded) Dedup.compactNearDupIndex(spark, indexPath, retain = Some(1))
+    var view = viewed.map { case (v, _, _) =>
+      if (folded) new Dedup.IndexView(v.compacted(-1L).sigs, Set.empty) else v
+    }
     val landingSchema = StateFold.landingSchema(spark, landingDir,
       schemaFallback, defaultLandingSchema)
     // the concrete tree this SESSION works under, resolved AFTER the
@@ -340,10 +409,14 @@ object AdmissionStream {
         "pointer-committed root (generations are immutable once " +
         "published); compact between sessions via compactNearDupIndex " +
         "or compactWhenTombstoneRatio instead")
-    // SESSION-scoped tombstone mask: the pinned pre-fold read (deletes
-    // cannot change under a running session; a fired fold has no table
-    // left to mask — re-resolving per micro-batch was pure fixed cost)
-    val sessionTombstones = if (folded) None else preTombs
+    // SESSION-scoped tombstone mask of the tree probe: the pre-fold
+    // deletes (they cannot change under a running session; a fired fold
+    // has no table left to mask) — the view's held ids as a local frame,
+    // or the pinned read
+    val sessionTombstones = if (folded) None else view.fold(preTombs)(v =>
+      Some(v.tombstoned.toSeq).filter(_.nonEmpty).map(ids =>
+        spark.createDataFrame(java.util.Arrays.asList(ids.map(Row(_)): _*),
+          StructType(Seq(StructField("doc_id", LongType))))))
     // the highest batch id this run processed feeds the stale-generation
     // sweep after the stream stops
     val lastBatchId = StateFold.runBounded(StateFold.landing(spark,
@@ -351,45 +424,53 @@ object AdmissionStream {
       (batch, batchId) =>
         // fold the standing index BEFORE probing once enough batch
         // subdirs accreted — never the current batch's own (see the
-        // index-lifecycle note above)
+        // index-lifecycle note above); the view mirrors the fold
         compactEvery.foreach { every =>
-          val base = new org.apache.hadoop.fs.Path(concrete)
-          val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          val standingBatches = fs.listStatus(base).count(st =>
-            st.isDirectory && st.getPath.getName.startsWith("batch-") &&
-              st.getPath.getName != s"batch-$batchId")
+          val standingBatches = treeEntries(spark, concrete)
+            .count { case (_, o) => o >= 0 && o != batchId }
           if (standingBatches >= every) {
             graft.operators.Maintenance.compactTree(spark, concrete,
               keepSubdirs = Set(s"batch-$batchId"))
-            ()
+            view = view.map(_.compacted(batchId))
           }
         }
         // the landing scan is cheap to re-run (one small parquet file per
         // trigger) — the EXPENSIVE shared work is the signature hash,
-        // held below; eagerly checkpointing the raw batch too was one
-        // more per-batch job for no saved compute
+        // held below
         val docs = batch.select(col("doc_id"), col("text"))
         // hash the batch ONCE (signatures feed the probe AND the index
-        // fold-back — rebuilding them per use would shingle the batch
-        // twice per micro-batch): the batch collect, one bounded take
-        // that brings the signature rows to the driver, where the probe
-        // reads them and the fold-back writes them (a LocalRelation — no
-        // plan re-runs the hash, and no pin needs a job or a release).
-        // The admitted SET is then driver-side when bounded (the common
-        // case — an in-batch admitted set is micro-batch-sized): the
-        // index collect plus a driver-side verify, and every consumer
-        // below filters with an isInCollection — no join, no broadcast
-        // job. A batch past Dedup's payload bound is pinned instead and
-        // goes straight to the distributed path (its take has already
-        // crossed the bound; taking it again would hash it twice), whose
-        // admitted frame the consumers semi-join against, pinned once.
+        // fold-back): the batch collect, one bounded take that brings the
+        // signature rows to the driver, where the probe reads them and
+        // the fold-back writes them (a LocalRelation — no plan re-runs
+        // the hash). With the view held the probe runs no job
+        // ([[Dedup.admitHeld]]); without it, the index collect plus a
+        // driver-side verify ([[Dedup.admitPrehashedBounded]]). Every
+        // consumer below filters with an isInCollection of the admitted
+        // ids — no join, no broadcast job. A batch past Dedup's payload
+        // bound is pinned instead and goes straight to the distributed
+        // path (its take has already crossed the bound; taking it again
+        // would hash it twice), whose admitted frame the consumers
+        // semi-join against, pinned once.
         val hashed = Dedup.nearDupIndex(docs, col("doc_id"), col("text"),
           shingleN, k, rowsPerBand)
-        val index = indexExcludingBatch(spark, concrete, batchId,
+        def index = indexExcludingBatch(spark, concrete, batchId,
           sessionTombstones, sessionIndexSchema)
-        val (sigs, admitted) = Dedup.heldLocally(hashed) match {
-          case Some(held) =>
-            (held, Dedup.admitPrehashedBounded(held, index, threshold))
+        val taken = Dedup.boundedRows(hashed)
+        // the batch's rows held for the view probe, which reads long ids
+        // (admitPrehashedBounded routes any other id type to the
+        // distributed path)
+        val held = for {
+          _ <- view; rows <- taken
+          if hashed.schema("doc_id").dataType == LongType
+        } yield Dedup.HeldSig.of(rows, hashed.schema, _ => batchId)
+        val (sigs, admitted) = taken match {
+          case Some(rows) =>
+            val local = Dedup.heldFrame(hashed, rows)
+            (local, view.zip(held).fold(
+              Dedup.admitPrehashedBounded(local, index, threshold)) {
+              case (v, nw) => Dedup.admitHeld(nw, v, batchId, threshold)(
+                Dedup.admitPrehashed(local, index, threshold))
+            })
           case None =>
             val pinned = hashed.localCheckpoint(false)
             (pinned, Right(Dedup.admitPrehashed(pinned, index, threshold)))
@@ -404,12 +485,22 @@ object AdmissionStream {
         // propagated, awaits bounded, both awaited before rethrow).
         // Fold-back = the SAME signature rows, filtered to the admitted
         // ids under the sigs schema (parameter columns ride along) — no
-        // re-shingle.
+        // re-shingle; held rows land as ONE file per batch (a held frame
+        // otherwise splits over the cores), so the tree, and a later
+        // session's view collect, read one file per fold-back.
+        val foldBack = keep(sigs)
         runConcurrentWrites(spark, Seq(
           () => keep(docs).write.mode("overwrite")
             .parquet(s"$outPath/batch-$batchId"),
-          () => keep(sigs)
+          () => (if (taken.isDefined) foldBack.coalesce(1) else foldBack)
             .write.mode("overwrite").parquet(s"$concrete/batch-$batchId")))
+        // the committed fold-back joins the view (its rows are already
+        // held); a batch decided off the view, or a view that would cross
+        // the payload bound, drops it and later batches probe the tree
+        view = for {
+          v <- view; nw <- held; ids <- admitted.left.toOption.map(_.toSet)
+          next <- v.landed(batchId, nw.filter(r => ids(r.id)))
+        } yield next
         // observer sees the admitted rows with EVERY landing column (the
         // raw batch, filtered to the admitted ids) — after the admission
         // state commits, so its view is never ahead of the tree

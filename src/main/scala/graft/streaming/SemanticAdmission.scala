@@ -122,13 +122,20 @@ object SemanticAdmission {
     val pre = Fs.concrete(indexPath)
     val preTombs = Fs.tombstones(spark, pre, "vec_id")
       .map(_.distinct().localCheckpoint(true))
+    // the seed assignments, read ONCE under their footer schema (no
+    // inference job): the pressure denominator counts this read and the
+    // seed mask below probes it
+    def assignments(dir: String) = {
+      val p = s"$dir/assignments"
+      spark.read.schema(Fs.parquetSchema(spark, p)).parquet(p)
+    }
+    val preAsg = scala.util.Try(assignments(pre)).toOption
     // a fired fold removes the tombstone table with the deleted rows,
     // so the seed mask below is None (tombstones counted off the pinned
     // distinct — no re-read)
     val folded = compactWhenTombstoneRatio.exists(theta =>
       preTombs.exists(tb => Fs.overPressure(tb.count(),
-        scala.util.Try(spark.read.parquet(s"$pre/assignments").count())
-          .getOrElse(0L), theta)))
+        preAsg.fold(0L)(_.count()), theta)))
     if (folded) compactStream(spark, indexPath)
     val landingSchema = StateFold.landingSchema(spark, landingDir,
       schemaFallback, defaultLandingSchema)
@@ -147,8 +154,10 @@ object SemanticAdmission {
     // artifact) are masked from the probed standing set, so a streamed
     // vector that matched ONLY deleted vectors admits; the pinned
     // pre-fold read — deletes are a between-sessions verb, like the
-    // centroids
-    val seedAsg = Fs.masked(spark.read.parquet(s"$concrete/assignments")
+    // centroids. A fired fold rewrote the table, which is then read
+    // afresh from the concrete tree.
+    val seedAsg = Fs.masked(
+      preAsg.filterNot(_ => folded).getOrElse(assignments(concrete))
         .select(col("cell"), col("vec_id"), col("embedding"), col("c_norm")),
       if (folded) None else preTombs, "vec_id", "vec_id")
     // the highest batch id this run processed feeds the stale-generation

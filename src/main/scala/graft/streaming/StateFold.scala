@@ -259,14 +259,14 @@ object StateFold {
         "the prior session's checkpointDir (or start a fresh state path)")
   }
 
-  /** The footer schema of the parquet files already in `landingDir` (a
-    * batch schema read, no data scan — probe, don't assume: a
-    * hard-coded schema silently mis-reads a re-encoded landing) or, for
-    * a dir with no file yet (a stream opened before its first file
-    * lands), `fallback`, else `default`. */
+  /** The footer schema of the parquet files already in `landingDir`
+    * ([[Fs.parquetSchema]]: one footer read on the driver, no job —
+    * probe, don't assume: a hard-coded schema silently mis-reads a
+    * re-encoded landing) or, for a dir with no file yet (a stream opened
+    * before its first file lands), `fallback`, else `default`. */
   private[streaming] def landingSchema(spark: SparkSession, landingDir: String,
       fallback: Option[StructType], default: StructType): StructType =
-    scala.util.Try(spark.read.parquet(landingDir).schema).toOption
+    scala.util.Try(Fs.parquetSchema(spark, landingDir)).toOption
       .orElse(fallback).getOrElse(default)
 
   /** `landingDir` as a parquet file stream of `schema`, at most

@@ -545,28 +545,27 @@ class AdmissionStreamSpec extends SparkSpecBase {
   test("a two-file admission run with a board observer against a " +
       "non-empty index takes a pinned number of Spark jobs") {
     val jobs = boardRunJobs(tombstoned = false)
-    // the session prologue — the index's schema inference, its
-    // parameter aggregate (two jobs under AQE) and the landing-schema
-    // probe: four — then six per trigger: the batch collect (the spread
-    // shuffle and the take), the index collect, the two writes and the
-    // board's one job; one trigger here also has a band-sharing
-    // candidate that none of the id's band-sharing rows match, so the
-    // id's other rows are collected too (one more job); the out tree is
-    // read under the schema it was written in. The parent commit of
-    // this pin measured 37 when run alone (its concurrent writes ran on
-    // pooled threads, which this count sees only when the pool is
-    // fresh).
-    jobs shouldBe 17
+    // the session prologue is the index view's one collect (the index
+    // and landing schemas come from footers, the parameter check and
+    // the pressure counts read the held rows), then five per trigger:
+    // the batch collect (the spread shuffle and the take), the two
+    // writes and the board's one job — the probe against the view runs
+    // none; the out tree is read under the schema it was written in.
+    // The parent commit measured 17: the index schema inference, the
+    // two-job parameter aggregate and the landing-schema probe in the
+    // prologue, and one index collect per trigger plus one more for a
+    // band-sharing candidate no band-sharing row matched.
+    jobs shouldBe 11
   }
 
   test("the same run with a tombstone table standing and the pressure " +
       "knob below its ratio takes a pinned number of Spark jobs") {
-    // eight more than the run above: the prologue reads the tombstone
-    // table (its schema inference), pins its distinct ids (a shuffle
-    // and the pin) and counts them for the pressure decision (two jobs
-    // under AQE); each index collect then broadcasts the pinned mask,
-    // one job per collect (three here: one per trigger and the extra
-    // collect). Measured equal at the parent commit.
-    boardRunJobs(tombstoned = true) shouldBe 25
+    // two more than the run above: the prologue reads the tombstone
+    // table (its schema inference) and takes its ids for the view's
+    // mask and the pressure count. The parent commit measured 25: it
+    // pinned the distinct ids (a shuffle and the pin), counted them
+    // (two jobs under AQE) and broadcast the pinned mask once per index
+    // collect.
+    boardRunJobs(tombstoned = true) shouldBe 13
   }
 }

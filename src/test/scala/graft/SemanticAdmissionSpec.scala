@@ -213,14 +213,17 @@ class SemanticAdmissionSpec extends SparkSpecBase {
     withTombstonedAnnIndex("graft_semadmit_tpin_") { (root, ix, landing) =>
       // the prologue's tombstone read, distinct pin and count, and its
       // assignment count for the pressure decision come on top of the
-      // session's own jobs; the centroid read is two (its schema
-      // inference and the collect, sorted on the driver).
+      // session's own jobs; the assignments are read once, and they, the
+      // centroids and the landing take their schemas from footers (no
+      // job). The parent commit measured 33: an inference job for each
+      // of the two assignment reads, the centroid read and the landing
+      // probe.
       jobsOf {
         SemanticAdmission.runAdmission(spark, landing, ix,
           root.resolve("out").toString, threshold = 0.35,
           maxFilesPerTrigger = Some(1), compactWhenTombstoneRatio = Some(0.9))
         ()
-      } shouldBe 33
+      } shouldBe 29
     }
   }
 }

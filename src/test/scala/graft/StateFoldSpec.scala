@@ -247,14 +247,16 @@ class StateFoldSpec extends SparkSpecBase {
         jobsOf(run(landing, state, None))
       }
     }
-    // the landing-schema probe where the runner has one, each batch's
-    // one fold job (plus its shuffle-map job under AQE where the fold
-    // shuffles — the board's per-partition top-n does not), the
-    // session-end flush, and the runner's own result read, under the
-    // schema it was written with (no footer-inference job). The parent
-    // commit of these pins measured top-N 7 and quota 10.
-    counts shouldBe Seq("top-N" -> 4, "quota" -> 9, "card" -> 5,
-      "model" -> 6, "gramian" -> 6, "cms" -> 6)
+    // each batch's one fold job (plus its shuffle-map job under AQE
+    // where the fold shuffles — the board's per-partition top-n does
+    // not), the session-end flush, and the runner's own result read,
+    // under the schema it was written with (no footer-inference job);
+    // the landing schema is a driver-side footer read (no job). The
+    // parent commit of these pins measured top-N 4, quota 9, model 6
+    // and gramian 6 (the landing probe was a job), and before it top-N
+    // 7 and quota 10.
+    counts shouldBe Seq("top-N" -> 3, "quota" -> 8, "card" -> 5,
+      "model" -> 5, "gramian" -> 5, "cms" -> 6)
   }
 
   test("a fold runner whose batch throws leaves no scratch checkpoint behind") {
