@@ -1565,22 +1565,6 @@ object Dedup {
       .select(col("comp"), col("id").as("keep_id"), col("score"))
   }
 
-  /** Work-unit counters for [[connectedComponentsStar]]'s contraction
-    * loop — filled only when a probe passes one in (the timed paths pass
-    * nothing, so the counting jobs never run there). `inputEdges` = the
-    * deduplicated initial edge set; `rounds` = contraction rounds to the
-    * star-forest fixpoint; `edgeRows` = Σ per-round post-contraction edge
-    * counts (the loop's total shuffled frontier — the quantity that would
-    * grow superlinearly if scale inflated either the graph or its
-    * convergence). Each count lands on an already-localCheckpointed
-    * frame, so a probe pays one cheap job per round, and the timed
-    * query's plan is untouched. */
-  final class StarStats {
-    var inputEdges: Long = -1L
-    var rounds: Int = 0
-    var edgeRows: Long = 0L
-  }
-
   /** Connected components by alternating large-star/small-star contraction
     * (Kiveris et al., "Connected Components in MapReduce and Beyond",
     * SoCC'14) — the scale path for POWER-LAW dedup graphs, where
@@ -1607,7 +1591,7 @@ object Dedup {
     * random graphs; q51 hash-checks it against the same recursive-CTE
     * oracle as q43). */
   def connectedComponentsStar(pairs: DataFrame, idA: Column, idB: Column,
-      maxIter: Int = 25, stats: StarStats = null): DataFrame = {
+      maxIter: Int = 25): DataFrame = {
     def largeStar(e: DataFrame): DataFrame = {
       val adj = e.unionByName(e.select(col("v").as("u"), col("u").as("v")))
       val mins = adj.groupBy("u")
@@ -1640,7 +1624,6 @@ object Dedup {
     // full round's contraction + convergence jobs)
     if (edges.isEmpty)
       return edges.select(col("u").as("id"), col("v").as("comp"))
-    if (stats != null) stats.inputEdges = edges.count()
     var converged = false
     var i = 0
     while (!converged && i < maxIter) {
@@ -1652,7 +1635,6 @@ object Dedup {
         .unionAll(edges.exceptAll(next)).isEmpty
       edges = next
       i += 1
-      if (stats != null) { stats.rounds = i; stats.edgeRows += edges.count() }
     }
     // star forest: every edge is (member, root); roots label themselves
     edges.select(col("u").as("id"), col("v").as("comp"))

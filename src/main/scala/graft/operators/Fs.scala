@@ -365,11 +365,14 @@ object Fs {
   /** The tombstone table under the concrete index directory `dir`, as
     * its one `idCol` column (`"*"` for whatever it holds); None when no
     * delete has landed. Rows may repeat (replayed deletes) — readers use
-    * it with set semantics. */
+    * it with set semantics. The schema comes from one footer
+    * ([[parquetSchema]]), so opening the table runs no job. */
   def tombstones(spark: SparkSession, dir: String,
       idCol: String): Option[DataFrame] = {
     val p = s"$dir/$TombstonesSubdir"
-    if (exists(p)) Some(spark.read.parquet(p).select(col(idCol))) else None
+    if (exists(p))
+      Some(spark.read.schema(parquetSchema(spark, p)).parquet(p).select(col(idCol)))
+    else None
   }
 
   /** `frame` minus its rows whose `frameId` is tombstoned (an anti-join

@@ -43,17 +43,9 @@ object Similarity {
     * cosine = dot/(|q|·|c|) in the exact same IEEE op order as the per-pair
     * formulation, so results stay oracle-comparable. */
   def bruteForceTopK(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame =
-    rankTopK(bruteScored(queries, corpus), k)
-
-  /** The brute-force scored pair set [[bruteForceTopK]] ranks —
-    * |queries|·(|corpus|−1) rows by construction. Exposed (package-
-    * private) so ScalePairsProbe counts the EXACT set the timed query
-    * reduces, through the same code path (no parallel reimplementation
-    * to drift). */
-  private[graft] def bruteScored(queries: DataFrame,
-      corpus: DataFrame): DataFrame =
-    scorePairs(exactSide(corpusVecs(corpus), "neighbor_id", "c_vec", "c_norm"),
-      exactSide(queries, "query_id", "q_vec", "q_norm"), None, exactCosine)
+    rankTopK(scorePairs(
+      exactSide(corpusVecs(corpus), "neighbor_id", "c_vec", "c_norm"),
+      exactSide(queries, "query_id", "q_vec", "q_norm"), None, exactCosine), k)
 
   /** The corpus (vec_id, embedding) rows a scoring pass runs over: the
     * N·Q pass inherits the corpus scan's partitioning, so it is guarded
@@ -106,15 +98,7 @@ object Similarity {
   /** Approximate top-k via SRP-LSH with 1-bit multi-probe. Returns the
     * same shape as [[bruteForceTopK]]; recall measured in tests. */
   def srpTopK(queries: DataFrame, corpus: DataFrame, k: Int,
-      nBits: Int = 8, dim: Int = 64, seed: Long = 42L): DataFrame =
-    rankTopK(srpScored(queries, corpus, nBits, dim, seed), k)
-
-  /** The deduped SRP candidate pair set [[srpTopK]] ranks — the
-    * multi-probe bucket join's output, the family's work-unit knob.
-    * Exposed (package-private) for ScalePairsProbe, same reason as
-    * [[bruteScored]]. */
-  private[graft] def srpScored(queries: DataFrame, corpus: DataFrame,
-      nBits: Int, dim: Int, seed: Long): DataFrame = {
+      nBits: Int = 8, dim: Int = 64, seed: Long = 42L): DataFrame = {
     val planes = V.randomPlanes(nBits, dim, seed)
     val c = corpusVecs(corpus)
       .select(col("vec_id").as("neighbor_id"),
@@ -130,9 +114,10 @@ object Similarity {
       V.srpBucketTable(col("embedding"), planes).as("q_bucket"))
       .withColumn("bucket", explode(probes))
       .drop("q_bucket")
-    scorePairs(c, q, Some("bucket"), V.cosine(col("q_vec"), col("c_vec")))
-      // a vector probed via multiple flipped buckets can pair twice
-      .dropDuplicates("query_id", "neighbor_id")
+    rankTopK(
+      scorePairs(c, q, Some("bucket"), V.cosine(col("q_vec"), col("c_vec")))
+        // a vector probed via multiple flipped buckets can pair twice
+        .dropDuplicates("query_id", "neighbor_id"), k)
   }
 
   /** Approximate top-k via IVF (inverted-file) search: a seeded KMeans

@@ -4,7 +4,7 @@ import java.util.concurrent.{Callable, ConcurrentLinkedQueue, Executors}
 
 import scala.util.Try
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.expressions.DeckKernel
 import graft.functions.{DomainFunctions => F, Hashing}
@@ -154,32 +154,7 @@ object SnapshotPipeline {
       .withColumn("opp_type", typed("opp_deck")))
   }
 
-  /** S5 as a real config-table SCAN: overrides read from a warehouse table
-    * `deck_type_overrides(deck_hash, deck_type)` each run — the reference
-    * re-reads it from Postgres on every refresh (etl:150-159) precisely so
-    * curated labels survive snapshot reloads (db/schema.sql:37-40). The
-    * table is config-sized (hundreds of rows), so it broadcast-left-joins
-    * against both side hashes; at NO scale does it shuffle the battle
-    * facts. Matches [[sideObservations]] exactly when the table holds the
-    * same pairs as the literal map (SnapshotPipelineSpec asserts this). */
-  def sideObservationsWithTable(battles: DataFrame, meta: CardMetadata.Meta,
-      overridesTable: DataFrame): DataFrame = {
-    val ovr = overridesTable
-      .select(col("deck_hash"), col("deck_type"))
-      // config hygiene: one label per hash even if the config table is
-      // dirty — deterministic min, mirroring the PK the warehouse enforces
-      .groupBy("deck_hash").agg(min("deck_type").as("ovr_type"))
-    def labelled(wide: DataFrame, deck: String): DataFrame = wide
-      .join(broadcast(ovr.select(col("deck_hash").as(s"${deck}_dh"),
-        col("ovr_type").as(s"${deck}_ovr"))),
-        col(s"${deck}_deck.deck_hash") === col(s"${deck}_dh"), "left")
-      .withColumn(s"${deck}_type",
-        coalesce(col(s"${deck}_ovr"), col(s"${deck}_deck.deck_type")))
-    finishSides(labelled(labelled(hashedWide(battles, meta), "team"), "opp"))
-  }
-
-  /** Dedup + one [[DeckKernel]] pass per side, shared by both override
-    * paths: (match_hash, team_tag, opp_tag, team_deck, opp_deck, win
+  /** Dedup + one [[DeckKernel]] pass per side: (match_hash, team_tag, opp_tag, team_deck, opp_deck, win
     * flags), where each `*_deck` is the kernel's struct<obs, deck_hash,
     * deck_type> — before override resolution. */
   private def hashedWide(battles: DataFrame, meta: CardMetadata.Meta): DataFrame =
@@ -235,14 +210,19 @@ object SnapshotPipeline {
       sideObservations(battles, meta, overrides))
 
   /** [[build]] with the overrides read from a config TABLE each run —
-    * the honest port of the reference's warehouse-backed
-    * `deck_type_overrides` (etl:150-159; see
-    * [[sideObservationsWithTable]]). */
+    * the port of the reference's warehouse-backed `deck_type_overrides`,
+    * re-read on every refresh so curated labels survive snapshot reloads
+    * (etl:150-159, db/schema.sql:37-40). The table is config-sized
+    * (hundreds of rows), so it is collected to the driver as the
+    * reference loads it into a dict, with one label per hash even if the
+    * table is dirty (the deterministic min, mirroring the PK the
+    * warehouse enforces), and becomes [[build]]'s literal map. */
   def buildWithOverridesTable(spark: SparkSession, battles: DataFrame,
       leaderboard: DataFrame, meta: CardMetadata.Meta, topN: Int,
       overridesTable: DataFrame): Snapshot =
-    assemble(BattleOps.topPlayers(leaderboard, topN),
-      sideObservationsWithTable(battles, meta, overridesTable))
+    build(spark, battles, leaderboard, meta, topN,
+      overridesTable.groupBy("deck_hash").agg(min("deck_type")).collect()
+        .collect { case Row(h: String, t: String) => h -> t }.toMap)
 
   private def assemble(players: DataFrame, sides0: DataFrame): Snapshot = {
     // one cached pass feeds six rollups (reference's single fold, §4)

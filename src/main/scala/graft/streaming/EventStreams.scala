@@ -468,41 +468,6 @@ object EventStreams {
       spark.sparkContext.parallelize(rows, math.max(1, rows.size / 1000 + 1)), schema)
   }
 
-  /** The production-shaped replay harness: APPEND-mode file sink instead
-    * of [[runToCompletion]]'s complete-mode memory sink — results land as
-    * a parquet table (exactly what a deployed stream writes), no driver
-    * collect, state bounded by the watermark (closed windows evict
-    * instead of being retained for re-emission).
-    *
-    * Append mode only emits a window once the watermark passes it, and a
-    * bounded replay's LAST windows would otherwise never emit. The flush
-    * is the standard heartbeat move: after the real files drain, one
-    * far-future sentinel event (`event_type` = `sentinelType`, +7 days)
-    * is appended to the landing dir, advancing the watermark past every
-    * real window. The sentinel's own window stays open forever, so it
-    * never reaches the sink; the result filter on `event_type` is a
-    * safety net for aggregations that pass it through (the contract:
-    * `agg` output must not mix sentinel rows into real groups — true for
-    * any event_type-keyed aggregation such as [[hourlyTypeCounts]]).
-    *
-    * The source file(s) are COPIED into a private landing dir (the
-    * original path is never mutated); landing + checkpoint dirs are
-    * removed on return, the `out` parquet dir backs the returned frame
-    * and is the caller's to keep or delete.
-    *
-    * `flushes` (default 1) is the number of staggered sentinel events
-    * (+7 days, +7 days 1 h, …). One suffices for every operator here —
-    * the post-sentinel no-data micro-batch re-evaluates window AND
-    * join state against the advanced watermark (verified for the outer
-    * interval join in EventStreamsSpec) — but the knob stays for
-    * stateful operators whose eviction only runs on data batches: each
-    * later sentinel's batch applies the previous one's watermark. Later
-    * sentinels stay 2 h inside the previous one's window horizon, so
-    * sentinel state never closes into the sink regardless of count.
-    * NOTE the contract this relies on: the agg must keep its
-    * event-time column flowing through the WATERMARK node for every
-    * input row, even rows its filters discard — see [[intervalJoin]]'s
-    * filter-placement comment. */
   /** Max event time (as long micros) of a bounded source, cached by the
     * source files' identity (path, size, mtime — content-stable key):
     * the sentinel-flush probe is one full scan of the source per replay,
@@ -513,10 +478,10 @@ object EventStreams {
     scala.collection.concurrent.TrieMap.empty[String, Option[Long]]
 
   /** Staged sentinel parquet FILE, cached by (ts physical type, sentinel
-    * micros, sentinel type): the one-row flush file is a pure function of
-    * those three, and the replay harness flushes the SAME fixture's
-    * watermark for every file-sink query — writing it fresh was one
-    * coalesce(1) Spark job per query per pass for identical bytes. Files
+    * micros): the one-row flush file is a pure function of the two, and
+    * the replay harness advances the SAME fixture's watermark for every
+    * file-sink query — writing it fresh was one coalesce(1) Spark job
+    * per query per pass for identical bytes. Files
     * live in harness scratch and are COPIED into each query's private
     * landing dir (the landing dir is deleted per run; the cached original
     * survives the session). */
@@ -552,159 +517,165 @@ object EventStreams {
     }
   }
 
+  /** The production-shaped replay harness: APPEND-mode file sink instead
+    * of [[runToCompletion]]'s complete-mode memory sink — results land as
+    * a parquet table (exactly what a deployed stream writes), no driver
+    * collect, state bounded by the watermark (closed windows evict
+    * instead of being retained for re-emission).
+    *
+    * Append mode only emits a window once the watermark passes it, and a
+    * bounded replay's LAST windows would otherwise never emit. The flush
+    * is the standard heartbeat move: one far-future sentinel event
+    * (`event_type` = `__graft_flush`, +7 days) lands with the real
+    * files, advancing the watermark past every real window. The
+    * sentinel's own window stays open forever, so it
+    * never reaches the sink; the result filter on `event_type` is a
+    * safety net for aggregations that pass it through (the contract:
+    * `agg` output must not mix sentinel rows into real groups — true for
+    * any event_type-keyed aggregation such as [[hourlyTypeCounts]]).
+    *
+    * The source file(s) are linked into a private landing dir (the
+    * original path is never mutated). Landing, checkpoint and `out` dirs
+    * are all removed on return: the result is pinned with an eager
+    * `localCheckpoint`, as [[graft.SparkEntry.Staged.run]] does, so no
+    * scratch tree outlives the call.
+    *
+    * One sentinel suffices for every operator here: the post-sentinel
+    * no-data micro-batch re-evaluates window AND join state against the
+    * advanced watermark (verified for the outer interval join in
+    * EventStreamsSpec). NOTE the contract this relies on: the agg must
+    * keep its event-time column flowing through the WATERMARK node for
+    * every input row, even rows its filters discard — see
+    * [[intervalJoin]]'s filter-placement comment. */
   def runToCompletionFileSink(spark: SparkSession, path: String,
-      agg: DataFrame => DataFrame,
-      sentinelType: String = "__graft_flush",
-      flushes: Int = 1): DataFrame = {
-    require(flushes >= 1 && flushes <= 4, "flushes must be in [1, 4]")
+      agg: DataFrame => DataFrame): DataFrame = {
     import java.nio.file.Files
+    val flushEvent = "__graft_flush"
     // landing + checkpoint + out are all harness scratch (tmpfs-backed —
-    // see scratchDir): `out` backs the RETURNED frame, whose lifetime is
-    // this session (callers persist real artifacts themselves; a
-    // deployed stream writes its sink to durable storage, which this
-    // bounded-replay harness is exactly not)
+    // see scratchDir), removed before returning
     val landing = scratchDir("graft_stream_land_")
-    val out = standingScratchDir("graft_stream_out_")
+    val out = scratchDir("graft_stream_out_")
     val ckpt = scratchDir("graft_stream_ckpt_")
-    val src = new java.io.File(path)
-    val srcFiles =
-      if (src.isFile) Seq(src)
-      else Option(src.listFiles()).getOrElse(Array.empty)
-        .filter(f => f.isFile && !f.getName.startsWith("_")
-          && !f.getName.startsWith(".")).toSeq
-    val srcKey = srcFiles.map(f =>
-      s"${f.getPath}:${f.length}:${f.lastModified}").sorted.mkString("|")
-    val stagedSrc = stagedCopy(path, srcKey, srcFiles)
-    Option(stagedSrc.toFile.listFiles()).getOrElse(Array.empty)
-      .foreach(f => Files.createLink(landing.resolve(f.getName), f.toPath))
-    val shufflePartitionsKey = "spark.sql.shuffle.partitions"
-    val prevShuffle = spark.conf.get(shufflePartitionsKey)
-    // watermark flush: sentinel event(s) 7 days past the max real event
-    // time, staged as parquet files the source picks up. The sentinel
-    // must carry the SAME physical ts encoding as the landing files (the
-    // source reads with the probed schema), so normalize max-ts to long
-    // micros, then re-encode per type. Both the max-ts probe and the
-    // one-row sentinel file are cached — pure functions of the fixture.
-    val tsType =
-      if (srcFiles.nonEmpty) probeTsType(spark, landing.toString)
-      else LongType
-    val tsAsMicros = tsType match {
-      case LongType => expr("ts div 1000") // raw nanos
-      case TimestampNTZType => unix_micros(col("ts").cast(TimestampType))
-      case _ => unix_micros(col("ts"))
-    }
-    val maxTs =
-      if (srcFiles.isEmpty) None
-      else maxTsCache.getOrElseUpdate(srcKey,
-        spark.read.schema(eventSchemaFor(tsType))
-          .parquet(landing.toString)
-          .agg(max(tsAsMicros)).collect().headOption
-          .flatMap(r => Option(r.get(0)).map(_.asInstanceOf[Long])))
-    def sentinelFile(sentMicros: Long): java.nio.file.Path =
-      sentinelFileCache.getOrElseUpdate(
-        s"${tsType.simpleString}:$sentMicros:$sentinelType", {
-          val sentTs = tsType match {
-            case LongType => lit(sentMicros * 1000L)
-            case TimestampNTZType =>
-              timestamp_micros(lit(sentMicros)).cast(TimestampNTZType)
-            case _ => timestamp_micros(lit(sentMicros))
-          }
-          val sentinel = spark.range(1).select(
-            lit(-1L).as("event_id"), sentTs.as("ts"), lit(-1L).as("user_id"),
-            lit(sentinelType).as("event_type"), lit(0.0).as("value"),
-            lit(null).cast(StringType).as("props"))
-          val tmp = scratchDir("graft_stream_sentinel_")
-          sentinel.coalesce(1).write
-            .mode("overwrite").parquet(tmp.resolve("s").toString)
-          val part = Option(tmp.resolve("s").toFile.listFiles())
-            .getOrElse(Array.empty)
-            .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-            .head
-          val keep = standingScratchDir("graft_stream_sentcache_")
-            .resolve("sentinel.parquet")
-          Files.move(part.toPath, keep)
-          Maintenance.rmTree(tmp.toFile)
-          keep
-        })
-    def sentMicrosFor(t: Long, n: Int): Long =
-      t + 7L * 24 * 3600 * 1000000L + (n - 1) * 3600L * 1000000L
-    // single-flush fast path: the sentinel rides the landing dir from the
-    // START, so one processAllAvailable covers the whole replay — batch 0
-    // reads real data + sentinel (watermark 0, nothing emits), and the
-    // trailing no-data micro-batch applies the sentinel-advanced
-    // watermark, closing every real window/join horizon into the sink.
-    // Equivalent output to the append-after loop below (the sentinel is
-    // just another event; event-time semantics don't order within a
-    // batch), minus one data batch + one state-commit round + one
-    // directory-listing cycle per query. Multi-flush keeps the staggered
-    // append-after loop: its contract is that each LATER sentinel's DATA
-    // batch applies the previous one's watermark, which pre-placement
-    // cannot express.
-    // INVARIANT: this pre-placement is only sound because the read below
-    // opens the stream with NO trigger limit (readEventStream is called
-    // without maxFilesPerTrigger), so batch 0 is guaranteed to contain
-    // every real file alongside the sentinel. Under a file-count limit,
-    // file pickup order is mtime-based and the cached sentinel inode is
-    // OLD — it could land in an early micro-batch and advance the
-    // watermark past later real batches, silently dropping them as
-    // late. Belt and braces: the link's mtime is bumped to now (links
-    // share the inode, so the cached copy ages forward too — harmless),
-    // keeping the sentinel LAST in any mtime order a future trigger
-    // limit would impose.
-    if (flushes == 1)
+    try {
+      val src = new java.io.File(path)
+      val srcFiles =
+        if (src.isFile) Seq(src)
+        else Option(src.listFiles()).getOrElse(Array.empty)
+          .filter(f => f.isFile && !f.getName.startsWith("_")
+            && !f.getName.startsWith(".")).toSeq
+      val srcKey = srcFiles.map(f =>
+        s"${f.getPath}:${f.length}:${f.lastModified}").sorted.mkString("|")
+      val stagedSrc = stagedCopy(path, srcKey, srcFiles)
+      Option(stagedSrc.toFile.listFiles()).getOrElse(Array.empty)
+        .foreach(f => Files.createLink(landing.resolve(f.getName), f.toPath))
+      val shufflePartitionsKey = "spark.sql.shuffle.partitions"
+      val prevShuffle = spark.conf.get(shufflePartitionsKey)
+      // watermark flush: one sentinel event 7 days past the max real event
+      // time, staged as a parquet file the source picks up. The sentinel
+      // must carry the SAME physical ts encoding as the landing files (the
+      // source reads with the probed schema), so normalize max-ts to long
+      // micros, then re-encode per type. Both the max-ts probe and the
+      // one-row sentinel file are cached — pure functions of the fixture.
+      val tsType =
+        if (srcFiles.nonEmpty) probeTsType(spark, landing.toString)
+        else LongType
+      val tsAsMicros = tsType match {
+        case LongType => expr("ts div 1000") // raw nanos
+        case TimestampNTZType => unix_micros(col("ts").cast(TimestampType))
+        case _ => unix_micros(col("ts"))
+      }
+      val maxTs =
+        if (srcFiles.isEmpty) None
+        else maxTsCache.getOrElseUpdate(srcKey,
+          spark.read.schema(eventSchemaFor(tsType))
+            .parquet(landing.toString)
+            .agg(max(tsAsMicros)).collect().headOption
+            .flatMap(r => Option(r.get(0)).map(_.asInstanceOf[Long])))
+      def sentinelFile(sentMicros: Long): java.nio.file.Path =
+        sentinelFileCache.getOrElseUpdate(
+          s"${tsType.simpleString}:$sentMicros", {
+            val sentTs = tsType match {
+              case LongType => lit(sentMicros * 1000L)
+              case TimestampNTZType =>
+                timestamp_micros(lit(sentMicros)).cast(TimestampNTZType)
+              case _ => timestamp_micros(lit(sentMicros))
+            }
+            val sentinel = spark.range(1).select(
+              lit(-1L).as("event_id"), sentTs.as("ts"), lit(-1L).as("user_id"),
+              lit(flushEvent).as("event_type"), lit(0.0).as("value"),
+              lit(null).cast(StringType).as("props"))
+            val tmp = scratchDir("graft_stream_sentinel_")
+            sentinel.coalesce(1).write
+              .mode("overwrite").parquet(tmp.resolve("s").toString)
+            val part = Option(tmp.resolve("s").toFile.listFiles())
+              .getOrElse(Array.empty)
+              .filter(f => f.isFile && f.getName.endsWith(".parquet"))
+              .head
+            val keep = standingScratchDir("graft_stream_sentcache_")
+              .resolve("sentinel.parquet")
+            Files.move(part.toPath, keep)
+            Maintenance.rmTree(tmp.toFile)
+            keep
+          })
+      // the sentinel rides the landing dir from the START, so one
+      // processAllAvailable covers the whole replay — batch 0 reads real
+      // data + sentinel (watermark 0, nothing emits), and the trailing
+      // no-data micro-batch applies the sentinel-advanced watermark,
+      // closing every real window/join horizon into the sink.
+      // INVARIANT: this pre-placement is only sound because the read below
+      // opens the stream with NO trigger limit (readEventStream is called
+      // without maxFilesPerTrigger), so batch 0 is guaranteed to contain
+      // every real file alongside the sentinel. Under a file-count limit,
+      // file pickup order is mtime-based and the cached sentinel inode is
+      // OLD — it could land in an early micro-batch and advance the
+      // watermark past later real batches, silently dropping them as
+      // late. Belt and braces: the link's mtime is bumped to now (links
+      // share the inode, so the cached copy ages forward too — harmless),
+      // keeping the sentinel LAST in any mtime order a future trigger
+      // limit would impose.
       maxTs.foreach { t =>
         val link = landing.resolve("zz_sentinel1.parquet")
-        Files.createLink(link, sentinelFile(sentMicrosFor(t, 1)))
+        Files.createLink(link, sentinelFile(t + 7L * 24 * 3600 * 1000000L))
         Files.setLastModifiedTime(link,
           java.nio.file.attribute.FileTime.fromMillis(
             System.currentTimeMillis()))
         ()
       }
-    // the streaming frame is built before start() so its schema is known
-    // even when the source turns out to be empty (see the guard below)
-    var aggSchema: org.apache.spark.sql.types.StructType = null
-    try {
-      spark.conf.set(shufflePartitionsKey,
-        math.min(2, prevShuffle.toInt).toString)
-      val aggDf = agg(readEventStream(spark, landing.toString))
-      aggSchema = aggDf.schema
-      val q = aggDf
-        .writeStream
-        .format("parquet")
-        .option("path", out.toString)
-        .option("checkpointLocation", ckpt.toString)
-        .outputMode("append")
-        .start()
-      // stop() on ALL exits: a throw from processAllAvailable (or the
-      // sentinel stage) must not leave the query running in the session
-      try {
-        q.processAllAvailable()
-        if (flushes > 1) maxTs.foreach { t =>
-          (1 to flushes).foreach { n =>
-            Files.createLink(landing.resolve(s"zz_sentinel$n.parquet"),
-              sentinelFile(sentMicrosFor(t, n)))
-            q.processAllAvailable()
-          }
-        }
-      } finally q.stop()
+      // the streaming frame is built before start() so its schema is known
+      // even when the source turns out to be empty (see the guard below)
+      val aggSchema = try {
+        spark.conf.set(shufflePartitionsKey,
+          math.min(2, prevShuffle.toInt).toString)
+        val aggDf = agg(readEventStream(spark, landing.toString))
+        val q = aggDf
+          .writeStream
+          .format("parquet")
+          .option("path", out.toString)
+          .option("checkpointLocation", ckpt.toString)
+          .outputMode("append")
+          .start()
+        // stop() on ALL exits: a throw from processAllAvailable must not
+        // leave the query running in the session
+        try q.processAllAvailable() finally q.stop()
+        aggDf.schema
+      } finally spark.conf.set(shufflePartitionsKey, prevShuffle)
+      // empty-source guard: append mode with no rows (or no closed windows)
+      // writes no data files, and reading the bare dir would throw "Unable
+      // to infer schema" — return an empty frame with the agg's schema.
+      val hasData = Option(out.toFile.listFiles()).getOrElse(Array.empty)
+        .exists(f => f.isFile && f.getName.endsWith(".parquet"))
+      val raw =
+        if (hasData) spark.read.parquet(out.toString)
+        else spark.createDataFrame(
+          java.util.Collections.emptyList[org.apache.spark.sql.Row](), aggSchema)
+      (if (raw.columns.contains("event_type"))
+        raw.filter(col("event_type") =!= flushEvent)
+      else raw).localCheckpoint(true)
     } finally {
-      spark.conf.set(shufflePartitionsKey, prevShuffle)
-      // landing/checkpoint are private scratch — removed on success AND
-      // failure (only `out` survives, as the caller's artifact)
+      // all three are private scratch — removed on success AND failure
       Maintenance.rmTree(landing.toFile)
       Maintenance.rmTree(ckpt.toFile)
+      Maintenance.rmTree(out.toFile)
     }
-    // empty-source guard: append mode with no rows (or no closed windows)
-    // writes no data files, and reading the bare dir would throw "Unable
-    // to infer schema" — return an empty frame with the agg's schema.
-    val hasData = Option(out.toFile.listFiles()).getOrElse(Array.empty)
-      .exists(f => f.isFile && f.getName.endsWith(".parquet"))
-    val raw =
-      if (hasData) spark.read.parquet(out.toString)
-      else spark.createDataFrame(
-        java.util.Collections.emptyList[org.apache.spark.sql.Row](), aggSchema)
-    if (raw.columns.contains("event_type"))
-      raw.filter(col("event_type") =!= sentinelType)
-    else raw
   }
 }

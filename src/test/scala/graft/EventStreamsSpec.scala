@@ -355,8 +355,18 @@ class EventStreamsSpec extends SparkSpecBase {
     // the production shape: append mode + parquet sink + watermark flush
     // via the far-future sentinel — must produce exactly the rows the
     // complete-mode memory sink (and therefore the batch oracle) yields
+    val scratchRoot = {
+      val probe = EventStreams.scratchDir("graft_probe_")
+      graft.operators.Maintenance.rmTree(probe.toFile)
+      probe.getParent.toFile
+    }
+    def outDirs = Option(scratchRoot.list()).getOrElse(Array.empty[String])
+      .filter(_.startsWith("graft_stream_out_")).toSet
+    val outBefore = outDirs
     val fileSink = EventStreams.runToCompletionFileSink(spark,
       "/root/testdata/sf0.001/events.parquet", EventStreams.hourlyTypeCounts)
+    // the sink's output tree is removed before the call returns
+    (outDirs -- outBefore) shouldBe empty
     val memSink = EventStreams.runToCompletion(spark,
       "/root/testdata/sf0.001/events.parquet", "es_filesink_spec",
       EventStreams.hourlyTypeCounts)

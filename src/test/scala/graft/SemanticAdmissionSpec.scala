@@ -211,19 +211,20 @@ class SemanticAdmissionSpec extends SparkSpecBase {
   test("a two-file admission session with a tombstone table standing and " +
       "the pressure knob below its ratio takes a pinned number of Spark jobs") {
     withTombstonedAnnIndex("graft_semadmit_tpin_") { (root, ix, landing) =>
-      // the prologue's tombstone read, distinct pin and count, and its
+      // the prologue's tombstone distinct pin and count, and its
       // assignment count for the pressure decision come on top of the
       // session's own jobs; the assignments are read once, and they, the
-      // centroids and the landing take their schemas from footers (no
-      // job). The parent commit measured 33: an inference job for each
-      // of the two assignment reads, the centroid read and the landing
-      // probe.
+      // tombstones, the centroids and the landing take their schemas
+      // from footers (no job). Earlier commits measured 29, with a
+      // tombstone schema-inference job, and 33: an inference job for
+      // each of the two assignment reads, the centroid read and the
+      // landing probe.
       jobsOf {
         SemanticAdmission.runAdmission(spark, landing, ix,
           root.resolve("out").toString, threshold = 0.35,
           maxFilesPerTrigger = Some(1), compactWhenTombstoneRatio = Some(0.9))
         ()
-      } shouldBe 29
+      } shouldBe 28
     }
   }
 }
