@@ -1,11 +1,19 @@
 package graft.operators
 
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 import java.util.concurrent.{Callable, ConcurrentLinkedQueue, Executors}
 
+import scala.collection.mutable
 import scala.util.Try
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.types.{ArrayType, LongType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 import graft.expressions.DeckKernel
 import graft.functions.{DomainFunctions => F, Hashing}
 import graft.sources.CardMetadata
@@ -25,15 +33,18 @@ import graft.sources.CardMetadata
   *     extraction, deck hash, classifier cascade), then both perspectives
   *     (U1) from one `inline` generator pass — rows double *after* dedup,
   *     still narrow, and nothing upstream runs twice;
-  *  4. each rollup is a partial-aggregate-friendly count/sum groupBy —
-  *     map-side combine collapses the per-partition cardinality to
-  *     |distinct keys| (archetypes: ~6; decks: bounded by distinct hashes)
-  *     so the final shuffles move tiny partial maps, not facts.
+  *  4. all rollups from ONE job over the side rows, the reference's
+  *     single-pass dict accumulators (SURVEY §4): each partition folds its
+  *     rows into per-key counters, the max card name and each deck's
+  *     representative, and ships them as a compact partial — its size is
+  *     |distinct keys| (archetypes: ~6; decks: bounded by distinct hashes),
+  *     not |facts|. The driver merges the partials and fans
+  *     player_type_cards out through the deck representatives.
   *
-  * The per-side observation frame is cached once and feeds all six rollups
-  * (the reference's single-pass dict accumulators, SURVEY §4);
-  * [[Snapshot.write]] fills that cache once, then overlaps the table
-  * writes.
+  * The driver then holds only output rows, and each warehouse table is a
+  * one-partition LocalRelation of them, so [[Snapshot.write]] is eleven
+  * one-task writes. The largest is the decks dimension with its cards,
+  * which a distributed fan-out would broadcast to every task anyway.
   */
 object SnapshotPipeline {
 
@@ -65,20 +76,15 @@ object SnapshotPipeline {
       * (etl_snapshot_topn.py:162-182; S6/S7/S8 degenerate to overwrite
       * after upstream dedup, SURVEY §2.1).
       *
-      * The decks table is written first and alone: in a [[build]]
-      * snapshot it reads the cached decks dim, itself over the cached
-      * side observations, so that one action fills both shared caches and
-      * the other writes read them instead of racing to compute them (a
-      * separate fill action would cost one more job). The other ten
-      * writes then run on a pool of `defaultParallelism` threads, so each
-      * write's driver-side planning and commit overlaps the others' jobs.
-      * Every write runs to its end; the first failure (decks first, then
-      * by table name) is rethrown as thrown, and no pool thread is left
+      * The eleven writes run on a pool of `defaultParallelism` threads,
+      * so each write's driver-side planning and commit overlaps the
+      * others' jobs; a [[build]] table is one local partition, so each
+      * write is one task. Every write runs to its end; the first failure
+      * by table name is rethrown as thrown, and no pool thread is left
       * running when this returns. */
     def write(outDir: String): Unit = {
       def writeTable(name: String): Option[Throwable] =
         Try(all(name).write.mode("overwrite").parquet(s"$outDir/$name")).failed.toOption
-      val primed = writeTable("decks")
       val threads = new ConcurrentLinkedQueue[Thread]()
       val pool = Executors.newFixedThreadPool(
         players.sparkSession.sparkContext.defaultParallelism, (r: Runnable) => {
@@ -87,7 +93,7 @@ object SnapshotPipeline {
           t
         })
       val failures = try {
-        val pending = (all.keySet - "decks").toSeq.sorted.map { name =>
+        val pending = all.keySet.toSeq.sorted.map { name =>
           val task: Callable[Option[Throwable]] = () => writeTable(name)
           pool.submit(task)
         }
@@ -96,17 +102,27 @@ object SnapshotPipeline {
         pool.shutdown()
         threads.forEach(_.join())
       }
-      (primed ++ failures).headOption.foreach(e => throw e)
+      failures.headOption.foreach(e => throw e)
     }
 
     /** The post-load invariants (reference validate_snapshot.py:49-206,
       * SURVEY §5) over the tables [[write]] put in `outDir`. Returns the
-      * message of each invariant that fails, in check order. */
+      * message of each invariant that fails, in check order. Each table
+      * is read under its frame's schema, so no read pays a
+      * schema-inference job, and meta_deck_types' three checks share one
+      * aggregate. */
     def validate(outDir: String, topN: Int): Seq[String] = {
       val spark = players.sparkSession
-      def table(name: String): DataFrame = spark.read.parquet(s"$outDir/$name")
+      def table(name: String): DataFrame =
+        spark.read.schema(all(name).schema).parquet(s"$outDir/$name")
       def total(df: DataFrame): Long =
         df.agg(coalesce(sum("uses"), lit(0L))).head().getLong(0)
+      // rows, uses, and the uses of 'Unknown' — the reference gates on
+      // 'Unknown' only (validate_snapshot.py:116-145)
+      lazy val meta = table("meta_deck_types").agg(count(lit(1)),
+        coalesce(sum("uses"), lit(0L)),
+        coalesce(sum(when(lower(col("deck_type")) === "unknown", col("uses"))), lit(0L)))
+        .head()
       val checks = Seq[(String, () => Boolean)](
         "deck_cards: every deck has exactly 8 rows" -> (() =>
           table("deck_cards").groupBy("deck_hash").count()
@@ -117,19 +133,16 @@ object SnapshotPipeline {
             .forall(t => table(t)
               .filter(col("wins") < 0 || col("uses") < 0 || col("wins") > col("uses"))
               .isEmpty)),
-        "meta_deck_types non-empty" -> (() =>
-          table("meta_deck_types").limit(1).count() == 1),
+        "meta_deck_types non-empty" -> (() => meta.getLong(0) > 0L),
         "player count <= topN" -> (() => table("player").count() <= topN),
         "topn_obs <= meta_obs <= 2*topn_obs" -> (() => {
           val topnObs = total(table("player_decks"))
-          val metaObs = total(table("meta_deck_types"))
+          val metaObs = meta.getLong(1)
           topnObs <= metaObs && metaObs <= 2 * topnObs
         }),
-        // the reference gates on 'Unknown' only (validate_snapshot.py:116-145)
         "unknown-archetype ratio <= 0.30" -> (() => {
-          val m = table("meta_deck_types")
-          val uses = total(m)
-          uses == 0L || total(m.filter(lower(col("deck_type")) === "unknown")).toDouble / uses <= 0.30
+          val uses = meta.getLong(1)
+          uses == 0L || meta.getLong(2).toDouble / uses <= 0.30
         }))
       checks.collect { case (name, ok) if !ok() => name }
     }
@@ -182,19 +195,20 @@ object SnapshotPipeline {
         // P5 — strict-crowns win flags; draw = neither side won (etl:293-294)
         F.isWin(col("t.crowns"), col("o.crowns")).as("team_won"),
         F.isWin(col("o.crowns"), col("t.crowns")).as("opp_won"))
-      .filter(col("team_tag") =!= "" && col("opp_tag") =!= "")
 
   /** U1 — both perspectives of the typed wide frame from one generator
     * pass over each match. A match is kept only when BOTH decks extract
-    * (etl:279-282); that check runs on the generated rows, so the
-    * optimizer cannot push it below the projection and run each kernel a
-    * second time inside the filter. */
+    * (etl:279-282) and both tags are non-empty; that check runs on the
+    * generated rows, so the optimizer cannot push it below the projection
+    * and run each kernel or tag normalization a second time inside the
+    * filter. */
   private def finishSides(wide: DataFrame): DataFrame = {
     def side(me: String, them: String): Column = struct(
       col(s"${me}_tag").as("player_tag"), col(s"${me}_deck.deck_hash").as("deck_hash"),
       col(s"${me}_type").as("deck_type"), col(s"${me}_deck.obs").as("cards"),
       col(s"${me}_won").as("won"), col(s"${them}_type").as("opp_deck_type"),
-      (col("team_deck").isNotNull && col("opp_deck").isNotNull).as("kept"))
+      (col("team_deck").isNotNull && col("opp_deck").isNotNull &&
+        col("team_tag") =!= "" && col("opp_tag") =!= "").as("kept"))
     wide.select(col("match_hash"), inline(array(side("team", "opp"), side("opp", "team"))))
       .filter(col("kept"))
       .drop("kept")
@@ -224,85 +238,242 @@ object SnapshotPipeline {
       overridesTable.groupBy("deck_hash").agg(min("deck_type")).collect()
         .collect { case Row(h: String, t: String) => h -> t }.toMap)
 
-  private def assemble(players: DataFrame, sides0: DataFrame): Snapshot = {
-    // one cached pass feeds six rollups (reference's single fold, §4)
-    val sides = sides0.cache()
+  /** The rollups as the reference computes them: one fold over the side
+    * observations (etl_snapshot_topn.py:304-345, SURVEY §4). One job folds
+    * each partition's side rows into a [[RollupFold]] and ships it as
+    * bytes; the driver merges the partials and lays every table out as a
+    * one-partition LocalRelation of its rows. The TopN tags the
+    * player_decks fact keeps come from one collect of the players dim,
+    * which is itself held the same way. */
+  private def assemble(players: DataFrame, sides: DataFrame): Snapshot = {
+    val spark = sides.sparkSession
+    val top = players.collect()
+    val tags = top.map(_.getAs[String]("player_tag")).toSet
+    val schema = sides.schema
+    val qe = sides.queryExecution
+    val partials = SQLExecution.withNewExecutionId(qe, Some("snapshot rollups")) {
+      qe.toRdd.mapPartitions { rows =>
+        val fold = new RollupFold(schema, tags.map(UTF8String.fromString))
+        rows.foreach(fold.add)
+        Iterator.single(fold.encode())
+      }.collect()
+    }
+    val merged = new RollupFold(schema, Set.empty)
+    partials.foreach(merged.merge)
+    merged.snapshot(spark.createDataFrame(java.util.Arrays.asList(top: _*), players.schema)
+      .coalesce(1))
+  }
 
-    val winsExpr = sum(when(col("won"), 1).otherwise(0)).cast("long").as("wins")
-    val usesExpr = count(lit(1)).as("uses")
+  /** The reference's accumulators (etl:304-345) over the side rows of one
+    * partition, or over several partitions' merged: uses/wins per key of
+    * the five stats tables (player_decks only for the TopN `tags`), the
+    * max non-empty name per card id, and each deck's representative, the
+    * observation with the least (match_hash, player_tag) — so its type
+    * and cards always come from one observation (ADVICE r01).
+    *
+    * Every string is interned once (an id indexes `strs`; -1 is null),
+    * and each counter key is two ids packed in a Long, so a partial ships
+    * as a string table and flat records ([[encode]]), not as a graph of
+    * boxed tuples for the Java serializer. */
+  private final class RollupFold(sides: StructType, tags: Set[UTF8String]) {
+    import RollupFold._
 
-    // A1 — per-archetype uses/wins over both sides (etl:322-323)
-    val metaDeckTypes = sides.groupBy("deck_type").agg(usesExpr, winsExpr)
+    private val Seq(matchAt, tagAt, hashAt, typeAt, cardsAt, wonAt, oppAt) =
+      Seq("match_hash", "player_tag", "deck_hash", "deck_type", "cards", "won",
+        "opp_deck_type").map(sides.fieldIndex)
+    private val strs = mutable.ArrayBuffer.empty[UTF8String]
+    private val strIds = mutable.HashMap.empty[UTF8String, Int]
+    // (card_id, card_variant id) → the card part of a meta_type_cards key
+    private val cardKeys = mutable.ArrayBuffer.empty[(Long, Int)]
+    private val cardIds = mutable.HashMap.empty[(Long, Int), Int]
+    // uses, wins per key: (deck_type, 0), (deck_type, deck_hash),
+    // (deck_type, card), (player_tag, deck_hash), (deck_type, opp_deck_type)
+    private val counters = Array.fill(5)(mutable.LongMap.empty[Array[Long]])
+    private val Array(typeUses, typeDeckUses, typeCardUses, playerDeckUses, matchupUses) =
+      counters
+    private val names = mutable.LongMap.empty[Int] // card_id → name id
+    private val reps = mutable.LongMap.empty[Rep]  // deck_hash id → rep
 
-    // A2 — per (type, deck) (etl:325-326)
-    val metaTypeDeckIds = sides.groupBy("deck_type", "deck_hash").agg(usesExpr, winsExpr)
+    /** The id of `s`, which may sit in a reused row buffer: it is copied
+      * only when first seen. */
+    private def intern(s: UTF8String): Int =
+      if (s == null) -1
+      else strIds.getOrElse(s, {
+        val owned = s.copy()
+        strIds.update(owned, strs.length)
+        strs += owned
+        strs.length - 1
+      })
 
-    // A3 — explode-then-aggregate per (type, card, variant) (etl:328-330)
-    val metaTypeCards = sides
-      .select(col("deck_type"), explode(col("cards")).as("c"), col("won"))
-      .groupBy(col("deck_type"), col("c.card_id").as("card_id"),
-        col("c.card_variant").as("card_variant"))
-      .agg(usesExpr, winsExpr)
+    private def str(id: Int): UTF8String = if (id < 0) null else strs(id)
 
-    // A4 + J9 — player facts restricted to TopN tags via left-semi join
-    // (etl:332-335). Players dim is tiny → Catalyst broadcasts the semi.
-    val playerDecks = sides
-      .join(players.select("player_tag"), Seq("player_tag"), "left_semi")
-      .groupBy("player_tag", "deck_hash").agg(usesExpr, winsExpr)
+    private def card(id: Long, variant: Int): Int =
+      cardIds.getOrElseUpdate((id, variant), { cardKeys += ((id, variant)); cardKeys.length - 1 })
 
-    // A5 — directional matchup matrix: sides already carries both
-    // directions (one row per match per perspective), so a single groupBy
-    // yields the two directed rows per match (etl:296-302).
-    val metaTypeMatchups = sides
-      .groupBy(col("deck_type"), col("opp_deck_type")).agg(usesExpr, winsExpr)
+    private def bump(m: mutable.LongMap[Array[Long]], key: Long, uses: Long, wins: Long): Unit = {
+      val c = m.getOrElseUpdate(key, new Array[Long](2))
+      c(0) += uses
+      c(1) += wins
+    }
 
-    // A7 — cards dim: distinct card_id → a deterministic representative
-    // name (reference keeps last-writer-wins dict order; deck contents make
-    // this unique in practice — we pin max() for determinism, SURVEY A7).
-    val cards = sides
-      .select(explode(col("cards")).as("c"))
-      .select(col("c.card_id").as("card_id"), col("c.card_name").as("card_name"))
-      .filter(col("card_name") =!= "")
-      .groupBy("card_id").agg(max("card_name").as("card_name"))
+    private def keepName(id: Long, name: Int): Unit =
+      if (names.get(id).forall(n => str(name).binaryCompare(str(n)) > 0)) names(id) = name
 
-    // A8 — decks dim: one row per deck_hash, represented by ONE observation
-    // (reference: first-seen, etl:312-314). deck_type and cards are taken
-    // together from the min_by (match_hash, player_tag) row — a unique total
-    // order — so the dim can never mix the type of one observation with the
-    // cards of another (same hash can carry different backfilled names and
-    // classify differently; ADVICE r01).
-    val decks = sides
-      .groupBy("deck_hash")
-      .agg(min_by(
-        struct(col("deck_type").as("deck_type"), col("cards").as("cards")),
-        struct(col("match_hash"), col("player_tag"))).as("rep"))
-      .select(col("deck_hash"), col("rep.deck_type").as("deck_type"),
-        col("rep.cards").as("cards"))
-      .cache()
+    /** Whether (matchHash, tag) orders before deck `hash`'s current
+      * representative, if it has one. */
+    private def beforeRep(hash: Int, matchHash: UTF8String, tag: Int): Boolean =
+      reps.get(hash).forall { r =>
+        val c = matchHash.binaryCompare(r.matchHash)
+        c < 0 || c == 0 && str(tag).binaryCompare(str(r.tag)) < 0
+      }
 
-    // deck_cards bridge — exactly 8 rows/deck (db/schema.sql:47-60)
-    val deckCards = decks
-      .select(col("deck_hash"), explode(col("cards")).as("c"))
-      .select(col("deck_hash"), col("c.card_id").as("card_id"),
-        col("c.card_variant").as("card_variant"), col("c.slot").as("slot"))
+    def add(row: InternalRow): Unit = {
+      val tag = row.getUTF8String(tagAt)
+      val t = intern(tag)
+      val h = intern(row.getUTF8String(hashAt))
+      val typ = intern(row.getUTF8String(typeAt))
+      val won = if (row.getBoolean(wonAt)) 1L else 0L
+      bump(typeUses, pack(typ, 0), 1L, won)
+      bump(typeDeckUses, pack(typ, h), 1L, won)
+      bump(matchupUses, pack(typ, intern(row.getUTF8String(oppAt))), 1L, won)
+      if (tags.contains(tag)) bump(playerDeckUses, pack(t, h), 1L, won)
+      val arr = row.getArray(cardsAt)
+      val obs = Array.tabulate(arr.numElements()) { j =>
+        // DeckKernel.obsType: card_id, card_name, card_variant, slot
+        val c = arr.getStruct(j, 4)
+        val o = Card(c.getLong(0), intern(c.getUTF8String(2)), c.getInt(3))
+        bump(typeCardUses, pack(typ, card(o.id, o.variant)), 1L, won)
+        val name = c.getUTF8String(1)
+        if (name != null && name.numBytes > 0) keepName(o.id, intern(name))
+        o
+      }
+      val matchHash = row.getUTF8String(matchAt)
+      if (beforeRep(h, matchHash, t)) reps(h) = Rep(matchHash.copy(), t, typ, obs)
+    }
 
-    // A9 — deck_types label dim (etl:367)
-    val deckTypes = decks.select("deck_type").distinct().orderBy("deck_type")
+    /** This fold as bytes: the string table, then flat records that
+      * refer to it by id. [[merge]] reads them back. */
+    def encode(): Array[Byte] = {
+      val bytes = new ByteArrayOutputStream()
+      val out = new DataOutputStream(bytes)
+      def utf8(s: UTF8String): Unit = { out.writeInt(s.numBytes); s.writeTo(out) }
+      out.writeInt(strs.length)
+      strs.foreach(utf8)
+      out.writeInt(cardKeys.length)
+      cardKeys.foreach { case (id, variant) => out.writeLong(id); out.writeInt(variant) }
+      counters.foreach { m =>
+        out.writeInt(m.size)
+        m.foreachEntry { (k, c) => out.writeLong(k); out.writeLong(c(0)); out.writeLong(c(1)) }
+      }
+      out.writeInt(names.size)
+      names.foreachEntry { (id, n) => out.writeLong(id); out.writeInt(n) }
+      out.writeInt(reps.size)
+      reps.foreachEntry { (h, r) =>
+        out.writeInt(h.toInt); utf8(r.matchHash); out.writeInt(r.tag); out.writeInt(r.typ)
+        out.writeInt(r.cards.length)
+        r.cards.foreach { c =>
+          out.writeLong(c.id); out.writeInt(c.variant); out.writeInt(c.slot)
+        }
+      }
+      out.close()
+      bytes.toByteArray
+    }
 
-    // A6/J7 — player_type_cards: fan deck-level uses/wins out through the
-    // 8-card composition then re-aggregate (etl:337-345). decks is small
-    // relative to facts → broadcast join keeps this shuffle-free up to the
-    // final groupBy.
-    val playerTypeCards = playerDecks
-      .join(broadcast(decks), Seq("deck_hash"))
-      .select(col("player_tag"), col("deck_type"), explode(col("cards")).as("c"),
-        col("uses"), col("wins"))
-      .groupBy(col("player_tag"), col("deck_type"),
-        col("c.card_id").as("card_id"), col("c.card_variant").as("card_variant"))
-      .agg(sum("uses").cast("long").as("uses"), sum("wins").cast("long").as("wins"))
+    /** Folds one [[encode]]d partial into this one. */
+    def merge(bytes: Array[Byte]): Unit = {
+      val in = new DataInputStream(new ByteArrayInputStream(bytes))
+      def utf8(): UTF8String = {
+        val b = new Array[Byte](in.readInt())
+        in.readFully(b)
+        UTF8String.fromBytes(b)
+      }
+      def n[T: scala.reflect.ClassTag](f: => T): Array[T] = Array.fill(in.readInt())(f)
+      val strId = n(intern(utf8()))
+      def s(i: Int): Int = if (i < 0) -1 else strId(i)
+      val cardId = n { val id = in.readLong(); card(id, s(in.readInt())) }
+      // the second key part: 0 in (deck_type, 0), a card, or a string
+      Seq[Int => Int](identity, s, cardId(_), s, s).zip(counters).foreach { case (second, m) =>
+        n {
+          val k = in.readLong()
+          bump(m, pack(s(hi(k)), second(lo(k))), in.readLong(), in.readLong())
+        }
+      }
+      n { val id = in.readLong(); keepName(id, s(in.readInt())) }
+      n {
+        val h = s(in.readInt())
+        val (matchHash, tag, typ) = (utf8(), s(in.readInt()), s(in.readInt()))
+        val rep = Rep(matchHash, tag, typ, n(Card(in.readLong(), s(in.readInt()), in.readInt())))
+        if (beforeRep(h, matchHash, tag)) reps(h) = rep
+      }
+      ()
+    }
 
-    Snapshot(players, cards, decks.select("deck_hash", "deck_type"), deckCards,
-      playerDecks, deckTypes, metaDeckTypes, metaTypeDeckIds, metaTypeCards,
-      playerTypeCards, metaTypeMatchups)
+    /** The eleven tables of this fold, each a one-partition LocalRelation
+      * with the schema the distributed rollups had: group keys keep the
+      * side columns' nullability, a deck's type and cards come from its
+      * representative, and a sum is nullable where a count is not. */
+    def snapshot(players: DataFrame): Snapshot = {
+      val spark = players.sparkSession
+      def f(name: String): StructField = sides(name)
+      val obs = sides("cards").dataType.asInstanceOf[ArrayType].elementType.asInstanceOf[StructType]
+      val repType = f("deck_type").copy(nullable = true)
+      val uses = StructField("uses", LongType, nullable = false)
+      val wins = StructField("wins", LongType)
+      def frame(fields: StructField*)(rows: Iterator[Seq[Any]]): DataFrame =
+        ColumnBridge.localFrame(spark, StructType(fields),
+          rows.map(vs => new GenericInternalRow(vs.toArray): InternalRow).toVector).coalesce(1)
+      def counts(m: mutable.LongMap[Array[Long]])(key: Long => Seq[Any]): Iterator[Seq[Any]] =
+        m.iterator.map { case (k, c) => key(k) ++ Seq(c(0), c(1)) }
+      val fanOut = mutable.HashMap.empty[(Long, Int), Array[Long]]
+      playerDeckUses.foreachEntry { (k, c) =>
+        reps.get(lo(k)).foreach(r => r.cards.foreach { o =>
+          val sum = fanOut.getOrElseUpdate((pack(hi(k), r.typ), card(o.id, o.variant)),
+            new Array[Long](2))
+          sum(0) += c(0)
+          sum(1) += c(1)
+        })
+      }
+      val nullsFirst: Ordering[UTF8String] = (a, b) =>
+        if (a == null || b == null) java.lang.Boolean.compare(b == null, a == null)
+        else a.binaryCompare(b)
+      Snapshot(
+        players,
+        frame(obs("card_id"), obs("card_name").copy(nullable = true))(
+          names.iterator.map { case (id, n) => Seq(id, str(n)) }),
+        frame(f("deck_hash"), repType)(
+          reps.iterator.map { case (h, r) => Seq(str(h.toInt), str(r.typ)) }),
+        frame(f("deck_hash"), obs("card_id"), obs("card_variant"), obs("slot"))(
+          reps.iterator.flatMap { case (h, r) =>
+            r.cards.iterator.map(o => Seq(str(h.toInt), o.id, str(o.variant), o.slot)) }),
+        frame(f("player_tag"), f("deck_hash"), uses, wins)(
+          counts(playerDeckUses)(k => Seq(str(hi(k)), str(lo(k))))),
+        frame(repType)(reps.valuesIterator.map(r => str(r.typ)).distinct.toSeq
+          .sorted(nullsFirst).iterator.map(Seq(_))),
+        frame(f("deck_type"), uses, wins)(counts(typeUses)(k => Seq(str(hi(k))))),
+        frame(f("deck_type"), f("deck_hash"), uses, wins)(
+          counts(typeDeckUses)(k => Seq(str(hi(k)), str(lo(k))))),
+        frame(f("deck_type"), obs("card_id"), obs("card_variant"), uses, wins)(
+          counts(typeCardUses) { k =>
+            val (id, variant) = cardKeys(lo(k))
+            Seq(str(hi(k)), id, str(variant))
+          }),
+        frame(f("player_tag"), repType, obs("card_id"), obs("card_variant"),
+            uses.copy(nullable = true), wins)(
+          fanOut.iterator.map { case ((k, cardKey), c) =>
+            val (id, variant) = cardKeys(cardKey)
+            Seq(str(hi(k)), str(lo(k)), id, str(variant), c(0), c(1))
+          }),
+        frame(f("deck_type"), f("opp_deck_type"), uses, wins)(
+          counts(matchupUses)(k => Seq(str(hi(k)), str(lo(k))))))
+    }
+  }
+
+  private object RollupFold {
+    final case class Card(id: Long, variant: Int, slot: Int)
+    final case class Rep(matchHash: UTF8String, tag: Int, typ: Int, cards: Array[Card])
+
+    def pack(hi: Int, lo: Int): Long = (hi.toLong << 32) | (lo & 0xffffffffL)
+    def hi(key: Long): Int = (key >> 32).toInt
+    def lo(key: Long): Int = key.toInt
   }
 }

@@ -85,10 +85,11 @@ object AnnIngest {
         // two driver-latency jobs for one session-start decision
         import org.apache.spark.sql.functions.{count, lit, when}
         val tombsSide = tb.distinct().select(lit(true).as("is_tomb"))
-        val dataSide = scala.util.Try(
-            spark.read.parquet(s"$concrete/assignments")
-              .select(lit(false).as("is_tomb")))
-          .toOption
+        val dataSide = scala.util.Try {
+            val p = s"$concrete/assignments"
+            spark.read.schema(Fs.parquetSchema(spark, p)).parquet(p)
+              .select(lit(false).as("is_tomb"))
+          }.toOption
         val r = dataSide.map(tombsSide.unionByName(_)).getOrElse(tombsSide)
           .agg(count(when(col("is_tomb"), lit(1))).as("tombs"),
             count(when(!col("is_tomb"), lit(1))).as("data"))

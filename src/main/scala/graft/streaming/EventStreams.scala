@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
 
-import graft.operators.Maintenance
+import graft.operators.{Dedup, Fs, Maintenance}
 
 /** Structured Streaming extension of the snapshot pipeline (SURVEY §2.11):
   * the batch engine's event aggregations re-expressed as an incremental
@@ -536,9 +536,12 @@ object EventStreams {
     *
     * The source file(s) are linked into a private landing dir (the
     * original path is never mutated). Landing, checkpoint and `out` dirs
-    * are all removed on return: the result is pinned with an eager
-    * `localCheckpoint`, as [[graft.SparkEntry.Staged.run]] does, so no
-    * scratch tree outlives the call.
+    * are all removed on return, so no scratch tree outlives the call: the
+    * result is read under its footer's schema (no inference job) and held
+    * on the driver from one bounded take
+    * ([[graft.operators.Dedup.boundedRows]]), so a collect of it runs no
+    * job; past the bound it is pinned with an eager `localCheckpoint`, as
+    * [[graft.SparkEntry.Staged.run]] does.
     *
     * One sentinel suffices for every operator here: the post-sentinel
     * no-data micro-batch re-evaluates window AND join state against the
@@ -665,12 +668,15 @@ object EventStreams {
       val hasData = Option(out.toFile.listFiles()).getOrElse(Array.empty)
         .exists(f => f.isFile && f.getName.endsWith(".parquet"))
       val raw =
-        if (hasData) spark.read.parquet(out.toString)
+        if (hasData)
+          spark.read.schema(Fs.parquetSchema(spark, out.toString)).parquet(out.toString)
         else spark.createDataFrame(
           java.util.Collections.emptyList[org.apache.spark.sql.Row](), aggSchema)
-      (if (raw.columns.contains("event_type"))
-        raw.filter(col("event_type") =!= flushEvent)
-      else raw).localCheckpoint(true)
+      val result =
+        if (raw.columns.contains("event_type")) raw.filter(col("event_type") =!= flushEvent)
+        else raw
+      Dedup.boundedRows(result)
+        .fold(result.localCheckpoint(true))(Dedup.heldFrame(result, _))
     } finally {
       // all three are private scratch — removed on success AND failure
       Maintenance.rmTree(landing.toFile)

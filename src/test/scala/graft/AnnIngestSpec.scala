@@ -530,18 +530,18 @@ class AnnIngestSpec extends SparkSpecBase {
   test("a two-file ingest session with a tombstone table standing and the " +
       "pressure knob below its ratio takes a pinned number of Spark jobs") {
     withTombstonedAnnIndex("graft_annin_tpin_") { (_, ix, landing) =>
-      // four of these are the pressure decision: the schema inference
-      // of the assignment table and the one tagged aggregate (three jobs
-      // under AQE) — the tombstone table's schema comes from a footer;
-      // the centroid read is one collect (its schema comes from a
-      // footer, the rows are sorted on the driver), and the landing
-      // schema is a footer read too. Earlier commits measured 8, with a
-      // tombstone schema-inference job, and 10: the centroid and landing
+      // three of these are the pressure decision: the one tagged
+      // aggregate (three jobs under AQE) — the tombstone and assignment
+      // tables' schemas come from a footer each; the centroid read is one
+      // collect (its schema comes from a footer, the rows are sorted on
+      // the driver), and the landing schema is a footer read too. Earlier
+      // commits measured 7, with an assignment schema-inference job, 8,
+      // with a tombstone one too, and 10: the centroid and landing
       // schemas were inferred by a job each.
       jobsOf {
         AnnIngest.runIngest(spark, landing, ix, maxFilesPerTrigger = Some(1),
           compactWhenTombstoneRatio = Some(0.9))
-      } shouldBe 7
+      } shouldBe 6
     }
   }
 }

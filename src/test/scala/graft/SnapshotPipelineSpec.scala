@@ -192,13 +192,30 @@ class SnapshotPipelineSpec extends SparkSpecBase {
     // 3,735 analyzed expression nodes here in the higher-order form
     val nodes = sides.queryExecution.analyzed.flatMap(_.expressions.flatMap(_.collect { case e => e }))
     nodes.size should be < 1000
+    // the tag check rides the generated rows' kept flag: no filter below
+    // the generator normalizes a tag a second time
+    import org.apache.spark.sql.execution.{FilterExec, GenerateExec}
+    val generators = executed.collect { case g: GenerateExec => g }
+    generators should have size 1
+    generators.flatMap(g => helper.collect(g.child) { case f: FilterExec => f })
+      .flatMap(_.condition.collect { case e @ (_: Upper | _: StringTrim) => e }) shouldBe empty
   }
 
   test("build + write runs no more Spark jobs than the serial write did") {
     val dir = tempDir()
-    // 32 jobs at the serial-write parent commit, measured by this spec
+    // 32 jobs at the serial-write parent commit and with the eleven
+    // distributed rollups; 15 with the one rollup fold, measured by this spec
     jobsOf(SnapshotPipeline.build(spark, battles, leaderboard, meta, topN = 2).write(dir)) should
-      be <= 32
+      be <= 15
+  }
+
+  test("validate reads every table with no schema-inference job") {
+    val dir = tempDir()
+    snap.write(dir)
+    // 32 jobs with an inferred schema per read and a job per total; 14
+    // under the frames' schemas with meta_deck_types' checks in one
+    // aggregate, measured by this spec
+    jobsOf(snap.validate(dir, topN = 2)) should be <= 14
   }
 
   test("a failing table write surfaces its own error; the other ten are written") {
