@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 import graft.operators.SnapshotPipeline
 import graft.sources.{CardMetadata, Tables}
 
@@ -40,14 +38,9 @@ object SnapshotRunner {
       snap.write(outDir)
 
       // a Hybrid-heavy meta (our fallback label) is reported but not fatal
-      val m = spark.read.parquet(s"$outDir/meta_deck_types")
-      val total = m.agg(coalesce(sum("uses"), lit(0L))).head().getLong(0)
-      if (total > 0L) {
-        val hybrid = m.filter(lower(col("deck_type")) === "hybrid")
-          .agg(coalesce(sum("uses"), lit(0L))).head().getLong(0).toDouble / total
-        if (hybrid > 0.30)
-          System.err.println(f"[validate] warn: Hybrid fallback ratio $hybrid%.2f")
-      }
+      val hybrid = hybridShare(snap)
+      if (hybrid > 0.30)
+        System.err.println(f"[validate] warn: Hybrid fallback ratio $hybrid%.2f")
       (snap.all.size, snap.validate(outDir, topN))
     } finally spark.stop()
 
@@ -56,5 +49,17 @@ object SnapshotRunner {
       sys.exit(1)
     }
     println(s"[snapshot] wrote $tables tables to $outDir; all invariants hold")
+  }
+
+  /** The share of meta_deck_types uses labelled Hybrid (the classifier's
+    * fallback), 0 with no uses. Read from the table's held rows, so it
+    * runs no job after [[SnapshotPipeline.build]]. */
+  def hybridShare(snap: SnapshotPipeline.Snapshot): Double = {
+    val rows = snap.metaDeckTypes.select("deck_type", "uses").collect()
+    def uses(keep: String => Boolean): Long =
+      rows.iterator.filter(r => keep(r.getString(0))).map(_.getLong(1)).sum
+    val total = uses(_ => true)
+    if (total == 0L) 0.0
+    else uses(t => t != null && t.toLowerCase(java.util.Locale.ROOT) == "hybrid").toDouble / total
   }
 }

@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 import graft.expressions.{DeckKernel, DeckMeta}
 import graft.functions.{DomainFunctions => F}
 import graft.sources.CardMetadata
@@ -121,27 +122,37 @@ object BattleOps {
 
   /** P10/W1 — TopN leaderboard head: normalize tags, coalesce ladder value,
     * rank from the API with a positional fallback
-    * (etl_snapshot_topn.py:203-216). The fallback is the row's position in
-    * the trophy-ordered board (tag-tiebroken for determinism — the
-    * reference relies on API arrival order, SURVEY §2.12).
+    * (etl_snapshot_topn.py:203-216). The fallback is the row's 1-based
+    * position in the trophy-ordered board (tag-tiebroken for determinism
+    * — the reference relies on API arrival order, SURVEY §2.12). The head
+    * is the first `topN` rows by `rank_global`, then trophies desc, then
+    * `player_tag`: that order breaks a rank tie at the cutoff, and the
+    * rows come back in it.
     *
-    * Scale: a single global `row_number` window implies one-partition sort;
-    * fine for a leaderboard (≤ thousands of rows), by design not used on
-    * fact tables.
+    * A leaderboard is config-sized (≤ thousands of rows), so one job
+    * scans it and the driver ranks it; the result is held on the driver
+    * (a LocalRelation in `leaderboardSchema`'s types, `rank_global` an
+    * int), and reading it runs no job. BattleOpsSpec keeps the
+    * `row_number` window form as the reference.
     */
   def topPlayers(leaderboard: DataFrame, topN: Int): DataFrame = {
-    val w = Window.orderBy(desc("trophies"), asc("player_tag"))
-    leaderboard
+    val board = leaderboard
       .select(
         F.normalizeTag(col("tag")).as("player_tag"),
         trim(coalesce(col("name"), lit(""))).as("player_name"),
         F.ladderValue(col("trophies"), col("eloRating")).as("trophies"),
-        col("rank").as("api_rank"))
+        nullif(col("rank").cast("int"), lit(0)).as("api_rank"))
       .filter(col("player_tag") =!= "")
-      .withColumn("rank_global",
-        coalesce(nullif(col("api_rank"), lit(0)), row_number().over(w)))
-      .drop("api_rank")
-      .orderBy("rank_global")
-      .limit(topN)
+    // Spark's orders: trophies desc, then tags by their UTF-8 bytes
+    val byTrophies = Ordering.by((r: Row) => (r.getInt(2), UTF8String.fromString(r.getString(0))))(
+      Ordering.Tuple2(Ordering.Int.reverse, Ordering[UTF8String]))
+    val ranked = board.collect().toSeq.sorted(byTrophies).zipWithIndex.map { case (r, i) =>
+      Row(r.get(0), r.get(1), r.get(2), if (r.isNullAt(3)) i + 1 else r.getInt(3))
+    }
+    // a stable sort: rows of one rank_global keep the trophy order
+    val head = ranked.sortBy(_.getInt(3)).take(topN)
+    board.sparkSession.createDataFrame(java.util.Arrays.asList(head: _*),
+      StructType(board.schema.fields.take(3) :+
+        StructField("rank_global", IntegerType, nullable = false)))
   }
 }

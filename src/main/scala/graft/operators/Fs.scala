@@ -2,12 +2,16 @@ package graft.operators
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileContext, FileStatus, FileSystem, FileUtil, Options, Path}
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.Footer
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.datasources.parquet.{FooterSchema, ParquetFooterReader}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.datasources.parquet.{FooterSchema, ParquetFileFormat, ParquetFooterReader}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 
@@ -232,6 +236,45 @@ object Fs {
     footer.flatMap(st => FooterSchema.of(new Footer(st.getPath,
         footerOf(spark, st, ParquetMetadataConverter.SKIP_ROW_GROUPS)), spark))
       .fold(reader.parquet(path).schema)(reader.schema(_).parquet(path).schema)
+  }
+
+  /** TRUNCATE+reload of the parquet table at `path` with `df`'s rows,
+    * written from the driver as ONE file, with no job when `df` is held
+    * (a LocalRelation's rows come back from its plan as they are; any
+    * other plan runs its collect). The file goes through Spark's own
+    * `ParquetFileFormat.prepareWrite` → `OutputWriter` under the
+    * session's settings (compression, timestamp and legacy formats, the
+    * Spark row metadata in the footer), so it reads back as a Spark
+    * write of the same frame does. It is written under a `_` name, which
+    * every reader skips, then every other entry under `path` is removed
+    * and the file renamed into place. A frame whose rows fail to compute
+    * leaves `path` as it was. For a frame whose rows fit on the driver:
+    * the snapshot tables, which the rollup fold already holds there. */
+  def overwriteParquet(df: DataFrame, path: String): Unit = {
+    val spark = df.sparkSession
+    val qe = df.queryExecution
+    val rows = SQLExecution.withNewExecutionId(qe, Some(s"rows of $path"))(
+      qe.executedPlan.executeCollect())
+    // the session's Hadoop configuration as a Spark write builds it
+    val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
+    spark.conf.getAll.foreach { case (k, v) => conf.set(k, v) }
+    val job = Job.getInstance(conf)
+    job.setOutputKeyClass(classOf[Void])
+    job.setOutputValueClass(classOf[InternalRow])
+    val factory = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, df.schema)
+    val task = new TaskAttemptContextImpl(job.getConfiguration, new TaskAttemptID())
+    val name = s"part-00000-${java.util.UUID.randomUUID()}-c000${factory.getFileExtension(task)}"
+    val (fs, dir) = resolve(path)
+    val tmp = new Path(dir, "_" + name)
+    fs.mkdirs(dir)
+    try {
+      val writer = factory.newInstance(tmp.toString, df.schema, task)
+      try rows.foreach(writer.write) finally writer.close()
+      fs.listStatus(dir).filter(_.getPath.getName != tmp.getName)
+        .foreach(st => fs.delete(st.getPath, true))
+      if (!fs.rename(tmp, new Path(dir, name)))
+        throw new java.io.IOException(s"could not rename $tmp into $dir")
+    } finally { fs.delete(tmp, false); () }
   }
 
   /** Top-level entry names under `path` (empty when absent). */

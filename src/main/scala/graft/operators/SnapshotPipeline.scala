@@ -10,6 +10,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, LongType, StructField, StructType}
@@ -26,9 +27,11 @@ import graft.sources.CardMetadata
   *  1. narrow stage: filter ranked-1v1 and compute match_hash (its side
   *     payloads are the native [[graft.expressions.MatchSide]]), fused
   *     into the scan in generated code;
-  *  2. `dropDuplicates(match_hash)` — the ONE global shuffle keyed on a
-  *     sha1 hex (uniform, unskewable key: hash partitioning is perfectly
-  *     balanced);
+  *  2. dedup on match_hash — the ONE global shuffle, keyed on a sha1 hex
+  *     (uniform, unskewable key: hash partitioning is perfectly
+  *     balanced), then ONE sort within each partition keeps the first
+  *     row of each run of equal hashes (a spilling sort, so memory stays
+  *     bounded at any scale);
   *  3. one native [[graft.expressions.DeckKernel]] call per side (8-card
   *     extraction, deck hash, classifier cascade), then both perspectives
   *     (U1) from one `inline` generator pass — rows double *after* dedup,
@@ -42,9 +45,12 @@ import graft.sources.CardMetadata
   *     player_type_cards out through the deck representatives.
   *
   * The driver then holds only output rows, and each warehouse table is a
-  * one-partition LocalRelation of them, so [[Snapshot.write]] is eleven
-  * one-task writes. The largest is the decks dimension with its cards,
-  * which a distributed fan-out would broadcast to every task anyway.
+  * LocalRelation of them, so [[Snapshot.write]] writes each as one
+  * parquet file from the driver and runs no job. The largest is the
+  * decks dimension with its cards, which a distributed fan-out would
+  * broadcast to every task anyway. The TopN head is ranked on the
+  * driver too ([[BattleOps.topPlayers]]: one leaderboard scan), so a
+  * refresh runs the scan, the fold and nothing else.
   */
 object SnapshotPipeline {
 
@@ -76,15 +82,15 @@ object SnapshotPipeline {
       * (etl_snapshot_topn.py:162-182; S6/S7/S8 degenerate to overwrite
       * after upstream dedup, SURVEY §2.1).
       *
-      * The eleven writes run on a pool of `defaultParallelism` threads,
-      * so each write's driver-side planning and commit overlaps the
-      * others' jobs; a [[build]] table is one local partition, so each
-      * write is one task. Every write runs to its end; the first failure
-      * by table name is rethrown as thrown, and no pool thread is left
-      * running when this returns. */
+      * A [[build]] table is held on the driver, so each table is one
+      * parquet file written from the driver ([[Fs.overwriteParquet]]),
+      * and the eleven writes run no Spark job. They run on a pool of
+      * `defaultParallelism` threads, since a write's time is the
+      * writer's set-up and the file system's calls, not its rows. Every
+      * write runs to its end; the first failure by table name is
+      * rethrown as thrown, and no pool thread is left running when this
+      * returns. */
     def write(outDir: String): Unit = {
-      def writeTable(name: String): Option[Throwable] =
-        Try(all(name).write.mode("overwrite").parquet(s"$outDir/$name")).failed.toOption
       val threads = new ConcurrentLinkedQueue[Thread]()
       val pool = Executors.newFixedThreadPool(
         players.sparkSession.sparkContext.defaultParallelism, (r: Runnable) => {
@@ -94,7 +100,8 @@ object SnapshotPipeline {
         })
       val failures = try {
         val pending = all.keySet.toSeq.sorted.map { name =>
-          val task: Callable[Option[Throwable]] = () => writeTable(name)
+          val task: Callable[Option[Throwable]] = () =>
+            Try(Fs.overwriteParquet(all(name), s"$outDir/$name")).failed.toOption
           pool.submit(task)
         }
         pending.flatMap(_.get())
@@ -186,7 +193,13 @@ object SnapshotPipeline {
         // not the array around it
         element_at(col("team"), 1).as("t"),
         element_at(col("opponent"), 1).as("o"))
-      .dropDuplicates("match_hash")
+      // keep any one row per hash: the first of each run of equal
+      // hashes once the exchange's partitions are sorted (a lag window:
+      // one exchange, one sort, and no aggregate over the payload
+      // structs on either side of the shuffle)
+      .withColumn("prev", lag(col("match_hash"), 1).over(
+        Window.partitionBy("match_hash").orderBy("match_hash")))
+      .filter(col("prev").isNull)
       .select(col("match_hash"),
         F.normalizeTag(col("t.tag")).as("team_tag"),
         F.normalizeTag(col("o.tag")).as("opp_tag"),
@@ -242,13 +255,10 @@ object SnapshotPipeline {
     * observations (etl_snapshot_topn.py:304-345, SURVEY §4). One job folds
     * each partition's side rows into a [[RollupFold]] and ships it as
     * bytes; the driver merges the partials and lays every table out as a
-    * one-partition LocalRelation of its rows. The TopN tags the
-    * player_decks fact keeps come from one collect of the players dim,
-    * which is itself held the same way. */
+    * LocalRelation of its rows. The TopN tags the player_decks fact keeps
+    * come from the held players dim. */
   private def assemble(players: DataFrame, sides: DataFrame): Snapshot = {
-    val spark = sides.sparkSession
-    val top = players.collect()
-    val tags = top.map(_.getAs[String]("player_tag")).toSet
+    val tags = players.collect().map(_.getAs[String]("player_tag")).toSet
     val schema = sides.schema
     val qe = sides.queryExecution
     val partials = SQLExecution.withNewExecutionId(qe, Some("snapshot rollups")) {
@@ -260,8 +270,7 @@ object SnapshotPipeline {
     }
     val merged = new RollupFold(schema, Set.empty)
     partials.foreach(merged.merge)
-    merged.snapshot(spark.createDataFrame(java.util.Arrays.asList(top: _*), players.schema)
-      .coalesce(1))
+    merged.snapshot(players)
   }
 
   /** The reference's accumulators (etl:304-345) over the side rows of one
@@ -408,8 +417,8 @@ object SnapshotPipeline {
       ()
     }
 
-    /** The eleven tables of this fold, each a one-partition LocalRelation
-      * with the schema the distributed rollups had: group keys keep the
+    /** The eleven tables of this fold, each a LocalRelation with the
+      * schema the distributed rollups had: group keys keep the
       * side columns' nullability, a deck's type and cards come from its
       * representative, and a sum is nullable where a count is not. */
     def snapshot(players: DataFrame): Snapshot = {
@@ -421,7 +430,7 @@ object SnapshotPipeline {
       val wins = StructField("wins", LongType)
       def frame(fields: StructField*)(rows: Iterator[Seq[Any]]): DataFrame =
         ColumnBridge.localFrame(spark, StructType(fields),
-          rows.map(vs => new GenericInternalRow(vs.toArray): InternalRow).toVector).coalesce(1)
+          rows.map(vs => new GenericInternalRow(vs.toArray): InternalRow).toVector)
       def counts(m: mutable.LongMap[Array[Long]])(key: Long => Seq[Any]): Iterator[Seq[Any]] =
         m.iterator.map { case (k, c) => key(k) ++ Seq(c(0), c(1)) }
       val fanOut = mutable.HashMap.empty[(Long, Int), Array[Long]]

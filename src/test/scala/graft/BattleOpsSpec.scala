@@ -1,7 +1,9 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.{DomainFunctions => F}
 import graft.operators.BattleOps
 import graft.sources.Tables
 
@@ -138,5 +140,55 @@ class BattleOpsSpec extends SparkSpecBase {
     // 3200 > B 3100 ⇒ 2); the reference keeps API ranks as-is, so the
     // fallback may duplicate an existing rank — exactly like arrival order
     out("#A")._2 shouldBe 2
+  }
+
+  /** The reference: `topPlayers` as a `row_number` window over the
+    * leaderboard, with the cutoff tie-break it documents (rank_global,
+    * then trophies desc, then player_tag) as the head's sort. */
+  private def topPlayersWindow(leaderboard: DataFrame, topN: Int): DataFrame = {
+    val w = Window.orderBy(desc("trophies"), asc("player_tag"))
+    leaderboard
+      .select(
+        F.normalizeTag(col("tag")).as("player_tag"),
+        trim(coalesce(col("name"), lit(""))).as("player_name"),
+        F.ladderValue(col("trophies"), col("eloRating")).as("trophies"),
+        col("rank").as("api_rank"))
+      .filter(col("player_tag") =!= "")
+      .withColumn("rank_global",
+        coalesce(nullif(col("api_rank"), lit(0)), row_number().over(w)))
+      .drop("api_rank")
+      .orderBy(col("rank_global"), desc("trophies"), col("player_tag"))
+      .limit(topN)
+  }
+
+  test("topPlayers ranks on the driver as the window form does, at every cutoff") {
+    def player(tag: String, name: String, rank: Integer, trophies: Integer, elo: Integer) =
+      Row(tag, name, rank, trophies, elo)
+    val lb = spark.createDataFrame(spark.sparkContext.parallelize(Seq(
+      player("#p1", "A", null, 3000, 0),      // null api rank → position
+      player("p2", "B", 0, 3000, 0),          // rank 0 → position; trophy tie
+      player("#p3", null, 5, 2900, 0),        // null name → ""
+      player("  ", "Blank", 1, 4000, 0),      // blank tag: dropped
+      player(null, "Null", 2, 3900, 0),       // null tag: dropped
+      player("", "Empty", 3, 3800, 0),        // empty tag: dropped
+      player("#p4", "D", null, 0, 3100),      // trophies 0 → eloRating
+      player("#p5", "E", 3, 2800, 0),         // api rank 3 twice …
+      player("#p6", "F", 3, 2800, 0),         // … broken by tag
+      player("#p7", "G", null, 2800, 0),
+      player("#p8", "H", 0, null, null),      // ladder value 0
+      player("#p9", "I", 2, 1000, 0),         // api rank = a position
+      player("\uFF21x", "J", null, 1000, 0),  // U+FF21 orders before …
+      player("\uD83D\uDE00y", "K", null, 1000, 0), // … U+1F600 in UTF-8
+      player("#p10", "L", 4, 500, 0)), 3), Tables.leaderboardSchema)
+    val kept = 12
+    for (topN <- 0 to kept + 1) withClue(s"topN $topN") {
+      val held = BattleOps.topPlayers(lb, topN)
+      val reference = topPlayersWindow(lb, topN)
+      held.schema shouldBe reference.schema
+      var rows = Array.empty[Row]
+      jobsOf { rows = held.collect() } shouldBe 0
+      rows.toSeq shouldBe reference.collect().toSeq
+      rows.length shouldBe math.min(topN, kept)
+    }
   }
 }

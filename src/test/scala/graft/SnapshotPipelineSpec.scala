@@ -199,14 +199,85 @@ class SnapshotPipelineSpec extends SparkSpecBase {
     generators should have size 1
     generators.flatMap(g => helper.collect(g.child) { case f: FilterExec => f })
       .flatMap(_.condition.collect { case e @ (_: Upper | _: StringTrim) => e }) shouldBe empty
+    // the match dedup is a keep-any: one exchange on match_hash and one
+    // sort within partitions, no aggregate buffering first(struct)
+    import org.apache.spark.sql.execution.aggregate.SortAggregateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    executed.collect { case a: SortAggregateExec => a } shouldBe empty
+    executed.collect { case e: ShuffleExchangeExec => e } should have size 1
   }
 
   test("build + write runs no more Spark jobs than the serial write did") {
     val dir = tempDir()
     // 32 jobs at the serial-write parent commit and with the eleven
-    // distributed rollups; 15 with the one rollup fold, measured by this spec
+    // distributed rollups; 15 with the one rollup fold and one-task
+    // writes; 2 (the fold's shuffle stage and its result) with the
+    // driver-side writes and TopN ranking, measured by this spec, whose
+    // leaderboard is a local frame
     jobsOf(SnapshotPipeline.build(spark, battles, leaderboard, meta, topN = 2).write(dir)) should
-      be <= 15
+      be <= 2
+  }
+
+  /** Each table of `dir` as Spark reads it back: schema and rows. */
+  private def readBack(dir: String): Map[String, DataFrame] =
+    snap.all.keys.map(t => t -> spark.read.parquet(s"$dir/$t")).toMap
+
+  test("the driver write reads back as Spark's writer does: rows and schema") {
+    val driver = tempDir()
+    val spark0 = tempDir()
+    snap.write(driver)
+    for ((t, df) <- snap.all) df.write.mode("overwrite").parquet(s"$spark0/$t")
+    val expected = readBack(spark0)
+    for ((t, got) <- readBack(driver)) withClue(t) {
+      got.schema shouldBe expected(t).schema
+      got.count() shouldBe snap.all(t).count()
+      got.exceptAll(expected(t)).count() shouldBe 0L
+      expected(t).exceptAll(got).count() shouldBe 0L
+    }
+    jobsOf(snap.write(driver)) shouldBe 0
+  }
+
+  test("overwriting stale files leaves one data file and no temp file") {
+    val dir = tempDir()
+    val stale = s"$dir/decks"
+    spark.range(5).toDF("deck_hash").write.parquet(stale)
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(stale, "_temporary", "0"))
+    for (f <- Seq("_SUCCESS", ".hidden", "_part-old.snappy.parquet"))
+      java.nio.file.Files.write(java.nio.file.Paths.get(stale, f), Array[Byte](1))
+    snap.write(dir)
+    for (t <- snap.all.keys) withClue(t) {
+      val names = new java.io.File(s"$dir/$t").list().toSeq
+      val data = names.filterNot(n => n.startsWith("_") || n.startsWith("."))
+      data should have size 1
+      data.head should endWith(".parquet")
+      // only the data file's checksum sidecar, as the local filesystem
+      // keeps one beside every file it writes
+      names.filter(n => n.startsWith("_") || n.startsWith("."))
+        .filterNot(_ == s".${data.head}.crc") shouldBe empty
+    }
+    val decks = spark.read.parquet(stale)
+    decks.exceptAll(snap.decks).count() shouldBe 0L
+    snap.decks.exceptAll(decks).count() shouldBe 0L
+  }
+
+  test("a 0-row table reads back with its schema") {
+    val empty = SnapshotPipeline.build(spark, battles.limit(0), leaderboard, meta, topN = 2)
+    val dir = tempDir()
+    empty.write(dir)
+    for ((t, df) <- empty.all) withClue(t) {
+      val got = spark.read.parquet(s"$dir/$t")
+      got.schema.map(f => (f.name, f.dataType, f.nullable)) shouldBe
+        df.schema.map(f => (f.name, f.dataType, true))
+      got.count() shouldBe (if (t == "player") 2L else 0L)
+    }
+  }
+
+  test("the Hybrid share reads the held meta_deck_types rows: no job") {
+    // Siege 2 uses, Hybrid 2 uses
+    val held = snap
+    var share = -1.0
+    jobsOf { share = SnapshotRunner.hybridShare(held) } shouldBe 0
+    share shouldBe 0.5
   }
 
   test("validate reads every table with no schema-inference job") {
